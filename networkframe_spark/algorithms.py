@@ -7,6 +7,27 @@ is a driver-side Python loop issuing DataFrame jobs — the classic
 iterative-Spark pattern: cache the loop-carried table, localCheckpoint
 periodically to truncate lineage, check convergence with a cheap action.
 
+Three shared kernels carry the loops and joins that several operators
+need:
+
+- :func:`_bfs_waves` — the distributed BFS frontier loop, its frontier
+  keyed by ``keys + ["id"]`` so many BFS trees advance together.  Used
+  by :func:`hop_distances` (one tree; also :func:`reachable_from` and
+  :func:`k_hop_reachable`, which keep its ids),
+  :func:`multi_source_hop_distances` (a tree per seed; also
+  :func:`harmonic_centrality`) and :func:`k_hop_pair_table` for
+  ``k >= 2`` (a tree per node).
+- :func:`_triangles` — the degree-ordered triangle enumeration over the
+  simple projection (:func:`_simple_edges`, :func:`_simple_degrees`),
+  with per-edge counts from :func:`_edge_support`.  Used by
+  :func:`triangle_counts` (and :func:`local_clustering`),
+  :func:`k_truss` and :func:`edge_jaccard`.
+- :func:`_fixpoint` — step, lazily checkpoint, and stop when a
+  signature action repeats.  Used by :func:`k_core` and :func:`k_truss`
+  (``count`` of a shrinking set), and by :func:`core_numbers` and the
+  shuffled rounds of :func:`_weak_component_min_labels`
+  (:func:`_fingerprint` of the state).
+
 Scale notes (100 TB):
 - Loop-carried state is one row per node (labels, frontiers) — small
   relative to edges; every join against the edge table shuffles on the
@@ -21,6 +42,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import itertools
 from typing import Any, Union
 
 from pyspark.sql import DataFrame
@@ -146,64 +168,135 @@ def _seed_df(frame, node_id: Any) -> DataFrame:
     return _as_id_df(frame.spark, node_id, frame.nodes)
 
 
+def _fingerprint(df: DataFrame, *cols: str) -> Any:
+    """Order-independent hash of ``df``'s rows over ``cols`` (one
+    aggregate job): ``bit_xor`` of row xxhash64s — exact and
+    overflow-free in plain codegen, where a SUM of 64-bit hashes is not
+    under ANSI and a DECIMAL(38,0) hash sum runs interpreted.  None for
+    an empty table."""
+    return df.agg(F.bit_xor(F.xxhash64(*cols)).alias("f")).collect()[0]["f"]
+
+
+def _fixpoint(
+    state: DataFrame,
+    step,
+    signature,
+    max_rounds: int | None,
+) -> DataFrame:
+    """Apply ``step`` to ``state`` until ``signature`` repeats, or for
+    at most ``max_rounds`` rounds (None = until it repeats).
+
+    Each new state is lazily checkpointed, so lineage stays O(1), and
+    the one ``signature`` action per round also materializes that
+    checkpoint.  The caller checkpoints the initial state; its
+    signature is the first action, and zero rounds run no action at
+    all.  ``signature`` must detect the fixpoint exactly: ``count`` for
+    a set that only shrinks, :func:`_fingerprint` for a state that
+    changes values in place.
+    """
+    if max_rounds == 0:
+        return state
+    sig = signature(state)
+    rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    for _ in rounds:
+        state = step(state).localCheckpoint(eager=False)
+        nxt = signature(state)
+        if nxt == sig:
+            break
+        sig = nxt
+    return state
+
+
 # ---------------------------------------------------------------------------
 # BFS reachability
 # ---------------------------------------------------------------------------
+def _bfs_waves(
+    edges: DataFrame,
+    seed: DataFrame,
+    keys: list,
+    directed: bool,
+    max_hops: int | None,
+) -> DataFrame:
+    """The distributed BFS frontier loop shared by every hop-distance
+    operator: ``keys + [id, dist]`` rows for everything ``seed`` (the
+    ``dist = 0`` rows) reaches within ``max_hops``, one wave per hop.
+    The frontier is keyed by ``keys + ["id"]``, so one round advances
+    every BFS tree (one per distinct key) a hop together and the
+    per-round shuffles carry all trees' frontiers in the same exchange.
+
+    ``edges`` is the caller's cached pair table, hash-partitioned on
+    ``source`` so each round shuffles only the (shrinking) frontier to
+    it.  Each wave is stamped with its hop number before it joins the
+    visited set, so ``dist`` is the minimum hop count by construction
+    (a node is claimed by the first wave that reaches it).  The single
+    action per round is the wave count, which also materializes the
+    wave's lazy checkpoint; rounds are bounded by the graph diameter
+    (or ``max_hops``).
+    """
+    seed = seed.localCheckpoint(eager=True)
+    cols = keys + ["id"]
+    waves = [seed]
+    frontier = seed.select(*cols)
+    prev, prev2 = frontier, None
+    visited = frontier
+    limit = _MAX_ITER if max_hops is None else max_hops
+    for d in range(1, limit + 1):
+        cand = (
+            edges.join(
+                frontier.withColumnRenamed("id", "source"),
+                on="source",
+                # a key-less frontier carries no column to keep
+                how="inner" if keys else "left_semi",
+            )
+            .select(*keys, F.col("target").alias("id"))
+            .distinct()
+        )
+        if directed:
+            # a directed edge can reach arbitrarily old waves, so the
+            # anti-join needs the full visited set; keep it compacted
+            # (one checkpointed table, not a union of D waves)
+            seen = visited
+        else:
+            # undirected BFS invariant (per tree): neighbors of wave d-1
+            # sit at distance d-2, d-1, or d — the anti-join only ever
+            # needs the LAST TWO waves, so per-round work is
+            # frontier-sized regardless of how much is already visited
+            seen = prev if prev2 is None else prev.union(prev2)
+        nxt = (
+            cand.join(seen, on=cols, how="left_anti")
+            .select(*cols, F.lit(d).alias("dist"))
+        ).localCheckpoint(eager=False)
+        if nxt.count() == 0:
+            break
+        waves.append(nxt)
+        frontier = nxt.select(*cols)
+        prev2, prev = prev, frontier
+        if directed:
+            visited = visited.union(frontier).localCheckpoint(eager=False)
+    out = waves[0]
+    for w in waves[1:]:
+        out = out.union(w)
+    return out
+
+
 def reachable_from(frame, node_id: Any, directed: bool = True) -> DataFrame:
     """IDs reachable from ``node_id`` (including itself).
 
     Reference: networkframe.py:962-998 computes this with a scipy
-    ``shortest_path`` from one source; here a BFS frontier-expansion
-    loop — one semi/anti-join round per hop.  The edge table is cached
-    hash-partitioned on ``source`` so each round only shuffles the
-    (small) frontier; the frontier count is the single action per round
-    and materializes the lazy checkpoint as a side effect.
+    ``shortest_path`` from one source; here the reachable rows of
+    :func:`hop_distances`.
     """
-    edges = _edge_pairs(frame, directed, partition_by_source=True).cache()
-    visited = _seed_df(frame, node_id).localCheckpoint(eager=True)
-    frontier = visited
-    for it in range(_MAX_ITER):
-        nxt = (
-            edges.join(
-                frontier.withColumnRenamed("id", "source"), on="source", how="left_semi"
-            )
-            .select(F.col("target").alias("id"))
-            .distinct()
-            .join(visited, on="id", how="left_anti")
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    edges.unpersist()
-    return visited
+    return hop_distances(frame, node_id, directed=directed).select("id")
 
 
 def k_hop_reachable(frame, node_id: Any, k: int, directed: bool = False) -> DataFrame:
     """IDs within k hops of ``node_id`` (including itself).
 
     Reference: networkframe.py:1241-1277 (single-source dijkstra with
-    ``limit=k``, unweighted); here the BFS loop bounded at k rounds,
-    same per-round plan shape as :func:`reachable_from`.
+    ``limit=k``, unweighted); here :func:`hop_distances` bounded at k
+    hops.
     """
-    edges = _edge_pairs(frame, directed, partition_by_source=True).cache()
-    visited = _seed_df(frame, node_id).localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(k):
-        nxt = (
-            edges.join(
-                frontier.withColumnRenamed("id", "source"), on="source", how="left_semi"
-            )
-            .select(F.col("target").alias("id"))
-            .distinct()
-            .join(visited, on="id", how="left_anti")
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    edges.unpersist()
-    return visited
+    return hop_distances(frame, node_id, directed=directed, max_hops=k).select("id")
 
 
 def k_hop_pair_table(
@@ -214,9 +307,9 @@ def k_hop_pair_table(
     boolean mask (networkframe.py:1279-1307, flagged O(n^2) memory in
     BASELINE.md).
 
-    k rounds of ``pairs ⋈ edges`` with dedup; each round one shuffle
-    join keyed on the expanding frontier's ``neighbor`` column.
-    k=1 short-circuits to the distinct (symmetrized) edge list itself.
+    k rounds of :func:`_bfs_waves` with every node seeding its own BFS
+    tree (frontier keyed by ``(node, id)``).  k=1 short-circuits to the
+    distinct (symmetrized) edge list itself.
     """
     if k == 1:
         pairs = _edge_pairs(frame, directed).select(
@@ -231,26 +324,13 @@ def k_hop_pair_table(
                 )
             ).distinct()
         return pairs
-    edges = (
-        _edge_pairs(frame, directed)
-        .withColumnRenamed("source", "neighbor")
-        .repartition("neighbor")
-        .cache()
+    edges = _edge_pairs(frame, directed, partition_by_source=True).cache()
+    seed = frame.nodes.select(
+        F.col("id").alias("node"), "id", F.lit(0).alias("dist")
     )
-    base = frame.nodes.select(F.col("id").alias("node"), F.col("id").alias("neighbor"))
-    visited = base.localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(k):
-        nxt = (
-            frontier.join(edges, on="neighbor")
-            .select("node", F.col("target").alias("neighbor"))
-            .distinct()
-            .join(visited, on=["node", "neighbor"], how="left_anti")
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=False)
-        frontier = nxt
+    visited = _bfs_waves(edges, seed, ["node"], directed, k).select(
+        "node", F.col("id").alias("neighbor")
+    )
     edges.unpersist()
     if drop_self:
         visited = visited.filter(F.col("node") != F.col("neighbor"))
@@ -385,14 +465,8 @@ def _weak_component_min_labels(frame) -> DataFrame:
         ).coalesce(parts)
         mapping = _local_contract(pairs).localCheckpoint(eager=False)
         solved = parts == 1
-    prev_sum = None
-    for it in range(0 if solved else _MAX_ITER):
-        cur_sum = mapping.agg(
-            F.bit_xor(F.xxhash64("id", "comp")).alias("s")
-        ).collect()[0]["s"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+
+    def _round(mapping: DataFrame) -> DataFrame:
         links = mapping.filter(F.col("id") != F.col("comp"))
         pairs = (
             links.select(
@@ -410,7 +484,14 @@ def _weak_component_min_labels(frame) -> DataFrame:
             .repartition("k")
             .drop("k")
         )
-        mapping = _local_contract(pairs).localCheckpoint(eager=False)
+        return _local_contract(pairs)
+
+    mapping = _fixpoint(
+        mapping,
+        _round,
+        lambda m: _fingerprint(m, "id", "comp"),
+        0 if solved else _MAX_ITER,
+    )
     # isolated nodes keep their own id as the component label
     return frame.nodes.select("id").join(mapping, on="id", how="left").select(
         "id", F.coalesce("comp", "id").alias("comp")
@@ -439,9 +520,7 @@ def _max_label_fixpoint(e: DataFrame, init: DataFrame, label: str) -> DataFrame:
     Per-round cost control: the edge table is hash-partitioned on the
     join key ONCE before the loop (localCheckpoint preserves the
     partitioning, so only the label/pointer tables shuffle each
-    round), and the convergence fingerprint is ``bit_xor`` of row
-    hashes — exact, order-independent and overflow-free in plain
-    codegen, where a DECIMAL(38,0) hash sum runs interpreted.
+    round), and convergence is one :func:`_fingerprint` per round.
     Unique column names in the self-joins: a same-name self-join here
     trips Catalyst attribute dedup under localCheckpoint.
     """
@@ -465,9 +544,7 @@ def _max_label_fixpoint(e: DataFrame, init: DataFrame, label: str) -> DataFrame:
     )
     prev_sum = None
     while True:
-        cur_sum = labels.agg(
-            F.bit_xor(F.xxhash64("id", label)).alias("s")
-        ).collect()[0]["s"]
+        cur_sum = _fingerprint(labels, "id", label)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -1099,35 +1176,46 @@ def pagerank(
     return pr.select("id", F.round("pr", 6).alias("pagerank"))
 
 
-def triangle_counts(frame) -> DataFrame:
-    """Per-node triangle counts over the undirected simple projection
-    of the graph (self-loops and duplicate/parallel edges collapsed).
-    Returns ``(id, triangles)`` for every node, zeros included.
-
-    Scale design — degree-ordered orientation (the node-iterator++
-    compact-forward algorithm): every undirected edge is directed from
-    its lower-``(degree, id)`` endpoint, so each triangle is counted
-    exactly once at its lowest-degree corner and the wedge self-join
-    materializes only ``sum_v C(outdeg(v), 2)`` rows — O(m^1.5) total
-    for any graph, instead of the O(sum deg^2) a naive wedge join pays
-    on skewed (power-law) degree distributions.  All three joins are
-    keyed equi-joins (no cross products); the closing-edge join is on
-    the composite (b, c) pair key.
-    """
-    ids = frame.nodes.select("id")
+def _simple_edges(frame) -> DataFrame:
+    """``(u, v)`` with ``u < v``: the undirected simple projection of
+    the edge table (self-loops dropped; direction and parallel edges
+    collapsed)."""
     e = frame.edges.select("source", "target").filter(
         F.col("source") != F.col("target")
     )
-    und = e.select(
+    return e.select(
         F.least("source", "target").alias("u"),
         F.greatest("source", "target").alias("v"),
     ).distinct()
-    deg = (
+
+
+def _simple_degrees(und: DataFrame) -> DataFrame:
+    """``(id, deg)``: node degrees in the ``(u, v)`` pair table ``und``
+    (nodes without an edge are absent)."""
+    return (
         und.select(F.col("u").alias("id"))
         .unionAll(und.select(F.col("v").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+
+
+def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Every triangle of the ``(u, v)`` pair table ``und`` exactly
+    once, as ``(a, b1, b2)`` rows; ``deg`` is :func:`_simple_degrees`
+    of ``und``.
+
+    Degree-ordered orientation (the node-iterator++ compact-forward
+    algorithm): every undirected edge is directed from its
+    lower-``(degree, id)`` endpoint, so each triangle is found exactly
+    once at its lowest-degree corner ``a`` and the wedge self-join
+    materializes only ``sum_v C(outdeg(v), 2)`` rows — O(m^1.5) total
+    for any graph, instead of the O(sum deg^2) a naive wedge join (or
+    common-neighbor join) pays on skewed (power-law) degree
+    distributions.  All three joins are keyed equi-joins (no cross
+    products); the closing-edge join is on the composite (b, c) pair
+    key.
+    """
     w = und.join(
         deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), on="u"
     ).join(deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), on="v")
@@ -1146,7 +1234,43 @@ def triangle_counts(frame) -> DataFrame:
         | ((F.col("db1") == F.col("db2")) & (F.col("b1") < F.col("b2")))
     )
     closing = oriented.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
-    tri = wedges.join(closing, on=["b1", "b2"]).select("a", "b1", "b2")
+    return wedges.join(closing, on=["b1", "b2"]).select("a", "b1", "b2")
+
+
+def _edge_support(tri: DataFrame) -> DataFrame:
+    """``(u, v, c)`` with ``u < v``: the number of :func:`_triangles`
+    rows each edge belongs to — each triangle votes for its 3 edges
+    (edges in no triangle are absent)."""
+    tri_edges = tri.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.least("a", "b1").alias("u"), F.greatest("a", "b1").alias("v")
+                ),
+                F.struct(
+                    F.least("a", "b2").alias("u"), F.greatest("a", "b2").alias("v")
+                ),
+                F.struct(
+                    F.least("b1", "b2").alias("u"),
+                    F.greatest("b1", "b2").alias("v"),
+                ),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+    return tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
+
+
+def triangle_counts(frame) -> DataFrame:
+    """Per-node triangle counts over the undirected simple projection
+    of the graph (self-loops and duplicate/parallel edges collapsed).
+    Returns ``(id, triangles)`` for every node, zeros included.
+
+    Scale design: the degree-ordered enumeration of :func:`_triangles`
+    (O(m^1.5) wedges), then one per-corner hash aggregate.
+    """
+    ids = frame.nodes.select("id")
+    und = _simple_edges(frame)
+    tri = _triangles(und, _simple_degrees(und))
     # one explode, not a 3-way union of projections: Catalyst has no
     # common-subtree elimination across union branches, so the union
     # form re-executes the expensive wedge join three times (measured
@@ -1231,16 +1355,11 @@ def hop_distances(
 
     Reference: networkframe.py:962-998 runs scipy ``shortest_path``
     from one source and keeps the finite rows; this is the distance
-    vector that computation produces, unweighted.  Same frontier loop
-    as :func:`reachable_from` but each wave is stamped with its hop
-    number before being folded into the visited set, so ``dist`` is
-    the minimum hop count by construction (a node is claimed by the
-    first wave that reaches it).
+    vector that computation produces, unweighted.
 
-    Scale design: the edge table is cached hash-partitioned on
-    ``source`` once; each round shuffles only the (shrinking) frontier
-    to it, and the single action per round is the frontier count.
-    Rounds are bounded by graph diameter (or ``max_hops``).
+    Scale design: graphs past the local guard below run
+    :func:`_bfs_waves` with a key-less frontier over the pair table,
+    cached hash-partitioned on ``source`` once.
     """
     pairs = _edge_pairs(frame, directed, partition_by_source=True).cache()
     if pairs.count() <= _BFS_LOCAL_MAX_EDGES:
@@ -1252,56 +1371,10 @@ def hop_distances(
         # distributed loop below stays the path for genuinely large
         # graphs.
         out = _bfs_local(frame, pairs, node_id, max_hops)
-        pairs.unpersist()
-        return out
-    edges = pairs  # already hash-partitioned on source by _edge_pairs
-    seed = (
-        _seed_df(frame, node_id)
-        .select("id", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    waves = [seed]
-    frontier = seed.select("id")
-    prev, prev2 = seed.select("id"), None
-    visited = seed.select("id")
-    limit = _MAX_ITER if max_hops is None else max_hops
-    for d in range(1, limit + 1):
-        cand = (
-            edges.join(
-                frontier.withColumnRenamed("id", "source"),
-                on="source",
-                how="left_semi",
-            )
-            .select(F.col("target").alias("id"))
-            .distinct()
-        )
-        if directed:
-            # a directed edge can reach arbitrarily old waves, so the
-            # anti-join needs the full visited set; keep it compacted
-            # (one checkpointed table, not a union of D waves)
-            seen = visited
-        else:
-            # undirected BFS invariant: neighbors of wave d-1 sit at
-            # distance d-2, d-1, or d — the anti-join only ever needs
-            # the LAST TWO waves, so per-round work is frontier-sized
-            # regardless of how much of the graph is already visited
-            seen = prev if prev2 is None else prev.union(prev2)
-        nxt = (
-            cand.join(seen, on="id", how="left_anti")
-            .select("id", F.lit(d).alias("dist"))
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        waves.append(nxt)
-        prev2, prev = prev, nxt.select("id")
-        frontier = nxt.select("id")
-        if directed:
-            visited = visited.union(frontier).localCheckpoint(eager=False)
-    edges.unpersist()
+    else:
+        seed = _seed_df(frame, node_id).select("id", F.lit(0).alias("dist"))
+        out = _bfs_waves(pairs, seed, [], directed, max_hops)
     pairs.unpersist()
-    out = waves[0]
-    for w in waves[1:]:
-        out = out.union(w)
     return out
 
 
@@ -1321,43 +1394,29 @@ def k_core(frame, k: int, max_iter: int = 50) -> DataFrame:
     (degrees) and two semi-joins (drop adjacency rows whose endpoint
     was peeled) — all keyed equi-joins on the node id, uniform
     shuffles.  The adjacency is halved rows-per-round in the worst
-    case and lazily checkpointed, so lineage stays O(1); the per-round
-    action is a single count used both for convergence and to
-    materialize the checkpoint.  Rounds are bounded by the peel depth
+    case; :func:`_fixpoint` runs the peel with ``count`` as its exact
+    convergence signature.  Rounds are bounded by the peel depth
     (<= max core number steps, typically << diameter).
     """
-    e = frame.edges.select("source", "target").filter(
-        F.col("source") != F.col("target")
-    )
-    und = e.select(
-        F.least("source", "target").alias("u"),
-        F.greatest("source", "target").alias("v"),
-    ).distinct()
+    und = _simple_edges(frame)
     nb = (
         und.select(F.col("u").alias("id"), F.col("v").alias("nb"))
         .unionAll(und.select(F.col("v").alias("id"), F.col("u").alias("nb")))
         .localCheckpoint(eager=False)
     )
-    n_rows = nb.count()
-    for _ in range(max_iter):
+
+    def _peel(nb: DataFrame) -> DataFrame:
         keep = (
             nb.groupBy("id")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
             .select("id")
         )
-        nb2 = (
-            nb.join(keep, on="id", how="left_semi")
-            .join(
-                keep.withColumnRenamed("id", "nb"), on="nb", how="left_semi"
-            )
-            .localCheckpoint(eager=False)
+        return nb.join(keep, on="id", how="left_semi").join(
+            keep.withColumnRenamed("id", "nb"), on="nb", how="left_semi"
         )
-        n2 = nb2.count()
-        nb = nb2
-        if n2 == n_rows:
-            break
-        n_rows = n2
+
+    nb = _fixpoint(nb, _peel, DataFrame.count, max_iter)
     return (
         nb.groupBy("id")
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -1552,19 +1611,7 @@ def local_clustering(frame) -> DataFrame:
     uniform hash agg + one keyed join.  Rounds to 6 dp.
     """
     tri = triangle_counts(frame)
-    e = frame.edges.select("source", "target").filter(
-        F.col("source") != F.col("target")
-    )
-    und = e.select(
-        F.least("source", "target").alias("u"),
-        F.greatest("source", "target").alias("v"),
-    ).distinct()
-    deg = (
-        und.select(F.col("u").alias("id"))
-        .unionAll(und.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _simple_degrees(_simple_edges(frame))
     wedges = F.col("deg") * (F.col("deg") - 1) / 2
     return (
         tri.join(deg, on="id", how="left")
@@ -2074,79 +2121,22 @@ def multi_source_hop_distances(
     sources: list,
     directed: bool = False,
     max_hops: int | None = None,
-    early_exit: bool = True,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """BFS hop distances from EVERY node in ``sources`` at once:
-    ``(seed, id, dist)`` — k BFS trees in one frontier loop, the
-    frontier keyed by ``(seed, id)`` so one round advances all trees a
-    hop together (k x fewer Spark jobs than k sequential
-    :func:`hop_distances` calls; the per-round shuffles carry all
-    seeds' frontiers in the same exchange).
-
-    The undirected two-wave anti-join invariant from
-    :func:`hop_distances` holds per seed — neighbors of wave d-1 sit
-    at d-2, d-1, or d within that seed's own tree — so per-round state
-    is two frontier-sized tables, not the full visited set.
+    ``(seed, id, dist)`` — k BFS trees in one :func:`_bfs_waves` loop
+    with the frontier keyed by ``(seed, id)`` (k x fewer Spark jobs
+    than k sequential :func:`hop_distances` calls).
     """
     if not sources:
         raise ValueError("multi_source_hop_distances: empty source list")
-    if not early_exit and max_hops is None:
-        raise ValueError(
-            "early_exit=False requires a fixed max_hops — otherwise the "
-            "loop would run _MAX_ITER rounds with no stop condition"
-        )
-    # callers that already hold the (symmetrized) distinct pair table
-    # — ideally repartitioned on source and checkpointed — pass it in
-    # so it is neither recomputed nor re-cached (betweenness shares
-    # ONE materialization across BFS, sigma, and delta joins)
-    if pairs is None:
-        edges = _edge_pairs(frame, directed, partition_by_source=True).cache()
-    else:
-        edges = pairs
+    edges = _edge_pairs(frame, directed, partition_by_source=True).cache()
     seed = (
         frame.nodes.select("id")
         .filter(F.col("id").isin(list(sources)))
         .select(F.col("id").alias("seed"), "id", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
     )
-    waves = [seed]
-    frontier = seed.select("seed", "id")
-    prev, prev2 = frontier, None
-    visited = frontier
-    limit = _MAX_ITER if max_hops is None else max_hops
-    for d in range(1, limit + 1):
-        cand = (
-            edges.join(
-                frontier.withColumnRenamed("id", "source"), on="source"
-            )
-            .select("seed", F.col("target").alias("id"))
-            .distinct()
-        )
-        if directed:
-            seen = visited
-        else:
-            seen = prev if prev2 is None else prev.union(prev2)
-        nxt = (
-            cand.join(seen, on=["seed", "id"], how="left_anti")
-            .select("seed", "id", F.lit(d).alias("dist"))
-        ).localCheckpoint(eager=False)
-        # early_exit=False drops the per-round count action — callers
-        # with a small FIXED max_hops (betweenness) save one job
-        # barrier per round; an already-empty frontier just makes the
-        # remaining rounds empty joins
-        if early_exit and nxt.count() == 0:
-            break
-        waves.append(nxt)
-        prev2, prev = prev, nxt.select("seed", "id")
-        frontier = nxt.select("seed", "id")
-        if directed:
-            visited = visited.union(frontier).localCheckpoint(eager=False)
-    if pairs is None:
-        edges.unpersist()
-    out = waves[0]
-    for w in waves[1:]:
-        out = out.union(w)
+    out = _bfs_waves(edges, seed, ["seed"], directed, max_hops)
+    edges.unpersist()
     return out
 
 
@@ -2738,7 +2728,6 @@ def betweenness_approx(
     sources: list,
     directed: bool = False,
     max_hops: int = 3,
-    _reuse_expansions: bool = True,
 ) -> DataFrame:
     """Sampled betweenness centrality (Brandes 2001 accumulation from
     a seed sample — the standard estimator; exact betweenness is n
@@ -2800,19 +2789,14 @@ def betweenness_approx(
     # checkpoint each expansion once and reuse it, saving one
     # edge-table join + its frontier shuffle per backward round
     # (storage is frontier-incident-edge-sized, the same rows the
-    # forward shuffle already moves).  _reuse_expansions=False is the
-    # measurement baseline for this lever (tools/bench_betweenness.py):
-    # skip the checkpoint and let the backward phase re-derive each
-    # expansion join from the level table.
+    # forward shuffle already moves).
     expansions: list[DataFrame] = []
     for lvl in range(1, max_hops + 1):
         exp = (
             levels[-1]
             .join(e.withColumnRenamed("source", "id"), on="id")
             .select("seed", "id", "sigma", F.col("target").alias("w"))
-        )
-        if _reuse_expansions:
-            exp = exp.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         expansions.append(exp)
         agg = (
             exp.select("seed", F.col("w").alias("id"), "sigma")
@@ -2852,18 +2836,8 @@ def betweenness_approx(
                 F.col("delta").alias("delta_w"),
             )
         )
-        if _reuse_expansions:
-            exp_lvl = expansions[lvl]  # reused forward expansion
-        else:
-            exp_lvl = (
-                levels[lvl]
-                .join(e.withColumnRenamed("source", "id"), on="id")
-                .select(
-                    "seed", "id", "sigma", F.col("target").alias("w")
-                )
-            )
         terms = (
-            exp_lvl
+            expansions[lvl]  # reused forward expansion
             .join(sig_w, on=["seed", "w"])
             .select(
                 "seed",
@@ -4078,99 +4052,27 @@ def k_truss(frame, k: int = 3, max_rounds: int | None = None) -> DataFrame:
     driver query pins so the DuckDB oracle can unroll the same number
     of rounds.
 
-    Scale design: per-round support comes from the degree-ordered
-    oriented triangle enumeration (the same O(m^1.5) wedge shape as
-    :func:`triangle_counts` — NOT the naive common-neighbor join,
-    which pays O(Σ deg²) on power-law hubs): each triangle is found
-    once at its lowest-degree corner, exploded into its three
-    undirected edges, and hash-aggregated per edge.  Every join is a
-    keyed equi-join; the edge set shrinks monotonically and is lazily
-    checkpointed per round so lineage stays O(1); the only action per
-    round is one count used both for convergence and checkpoint
-    materialization.
+    Scale design: per-round support is :func:`_edge_support` over the
+    degree-ordered :func:`_triangles` enumeration (O(m^1.5) wedges —
+    NOT the naive common-neighbor join, which pays O(Σ deg²) on
+    power-law hubs).  The edge set only shrinks, so :func:`_fixpoint`
+    runs the peel with ``count`` as its exact convergence signature.
     """
     if k < 2:
         raise ValueError("k_truss: k must be >= 2")
-    e = frame.edges.select("source", "target").filter(
-        F.col("source") != F.col("target")
-    )
-    und = (
-        e.select(
-            F.least("source", "target").alias("u"),
-            F.greatest("source", "target").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _simple_edges(frame).localCheckpoint(eager=False)
 
     def _support(edges: DataFrame) -> DataFrame:
-        """Per-edge triangle support on ``edges`` (u < v): oriented
-        wedge enumeration, then each triangle votes for its 3 edges."""
-        deg = (
-            edges.select(F.col("u").alias("id"))
-            .unionAll(edges.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        w = edges.join(
-            deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), on="u"
-        ).join(
-            deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), on="v"
-        )
-        lt = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        oriented = w.select(
-            F.when(lt, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(lt, F.col("v")).otherwise(F.col("u")).alias("b"),
-            F.when(lt, F.col("dv")).otherwise(F.col("du")).alias("db"),
-        )
-        e1 = oriented.select("a", F.col("b").alias("b1"), F.col("db").alias("db1"))
-        e2 = oriented.select("a", F.col("b").alias("b2"), F.col("db").alias("db2"))
-        wedges = e1.join(e2, on="a").filter(
-            (F.col("db1") < F.col("db2"))
-            | ((F.col("db1") == F.col("db2")) & (F.col("b1") < F.col("b2")))
-        )
-        closing = oriented.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
-        tri = wedges.join(closing, on=["b1", "b2"]).select("a", "b1", "b2")
-        tri_edges = tri.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("a", "b1").alias("u"),
-                        F.greatest("a", "b1").alias("v"),
-                    ),
-                    F.struct(
-                        F.least("a", "b2").alias("u"),
-                        F.greatest("a", "b2").alias("v"),
-                    ),
-                    F.struct(
-                        F.least("b1", "b2").alias("u"),
-                        F.greatest("b1", "b2").alias("v"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-        return tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
+        return _edge_support(_triangles(edges, _simple_degrees(edges)))
 
-    n_rows = und.count()
-    r = 0
-    while True:
-        if max_rounds is not None and r >= max_rounds:
-            break
-        sup = _support(und)
-        und2 = (
-            und.join(sup, on=["u", "v"], how="left")
+    def _peel(und: DataFrame) -> DataFrame:
+        return (
+            und.join(_support(und), on=["u", "v"], how="left")
             .filter(F.coalesce(F.col("c"), F.lit(0)) >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
-        n2 = und2.count()
-        und = und2
-        r += 1
-        if n2 == n_rows:
-            break
-        n_rows = n2
+
+    und = _fixpoint(und, _peel, DataFrame.count, max_rounds)
     sup = _support(und)
     return (
         und.join(sup, on=["u", "v"], how="left")
@@ -4204,16 +4106,11 @@ def core_numbers(
     adjacency, partitioned on the neighbor id) and one windowed
     h-index per node — the window is keyed by node (never global),
     state is node-sized, and the adjacency is built once and lazily
-    checkpointed.  Convergence is a single xxhash64 fingerprint
-    aggregate per round (bounded scalar), not a collect.
+    checkpointed.  :func:`_fixpoint` runs the rounds with one
+    :func:`_fingerprint` aggregate (bounded scalar) per round as the
+    convergence signature.
     """
-    e = frame.edges.select("source", "target").filter(
-        F.col("source") != F.col("target")
-    )
-    und = e.select(
-        F.least("source", "target").alias("u"),
-        F.greatest("source", "target").alias("v"),
-    ).distinct()
+    und = _simple_edges(frame)
     nb = (
         und.select(F.col("u").alias("id"), F.col("v").alias("nb"))
         .unionAll(und.select(F.col("v").alias("id"), F.col("u").alias("nb")))
@@ -4229,24 +4126,13 @@ def core_numbers(
         eager=False
     )
 
-    def _fingerprint(df: DataFrame) -> int:
-        # bit_xor of row hashes: exact, order-independent, and
-        # overflow-free under ANSI (a SUM of 64-bit hashes is not)
-        row = df.agg(
-            F.bit_xor(F.xxhash64(F.col("id"), F.col("est"))).alias("f")
-        ).collect()[0]
-        return row["f"] or 0
-
     from pyspark.sql import Window
 
-    fp = _fingerprint(est)
-    r = 0
     w = Window.partitionBy("id").orderBy(
         F.col("nb_est").desc(), F.col("nb").asc()
     )
-    while True:
-        if max_rounds is not None and r >= max_rounds:
-            break
+
+    def _h_index(est: DataFrame) -> DataFrame:
         ranked = (
             nb.join(
                 est.select(F.col("id").alias("nb"), F.col("est").alias("nb_est")),
@@ -4259,19 +4145,13 @@ def core_numbers(
                 F.row_number().over(w).alias("rk"),
             )
         )
-        new_est = (
-            ranked.groupBy("id")
-            .agg(
-                F.max(F.least(F.col("rk"), F.col("nb_est"))).alias("est")
-            )
-            .localCheckpoint(eager=False)
+        return ranked.groupBy("id").agg(
+            F.max(F.least(F.col("rk"), F.col("nb_est"))).alias("est")
         )
-        fp2 = _fingerprint(new_est)
-        est = new_est
-        r += 1
-        if fp2 == fp:
-            break
-        fp = fp2
+
+    est = _fixpoint(
+        est, _h_index, lambda df: _fingerprint(df, "id", "est"), max_rounds
+    )
     return (
         frame.nodes.select("id")
         .join(est, on="id", how="left")
@@ -4292,62 +4172,14 @@ def edge_jaccard(frame, min_jaccard: float = 0.0) -> DataFrame:
     clustering), complementing :func:`link_prediction` which scores
     NON-adjacent pairs.
 
-    Scale design: the common count reuses the degree-ordered oriented
-    triangle enumeration (O(m^1.5) wedges — never the naive
-    common-neighbor join), degrees join in as two keyed lookups, and
+    Scale design: the common count is :func:`_edge_support` over the
+    degree-ordered :func:`_triangles` enumeration (O(m^1.5) wedges —
+    never the naive common-neighbor join), degrees join in as two keyed lookups, and
     ``jaccard = c / (deg_u + deg_v - c)`` is a codegen'd expression.
     """
-    e = frame.edges.select("source", "target").filter(
-        F.col("source") != F.col("target")
-    )
-    und = e.select(
-        F.least("source", "target").alias("u"),
-        F.greatest("source", "target").alias("v"),
-    ).distinct()
-    # triangle support per edge via the oriented enumeration (same
-    # wedge shape as k_truss's per-round support)
-    deg = (
-        und.select(F.col("u").alias("id"))
-        .unionAll(und.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    w = und.join(
-        deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), on="u"
-    ).join(deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), on="v")
-    lt = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = w.select(
-        F.when(lt, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(lt, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(lt, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    )
-    e1 = oriented.select("a", F.col("b").alias("b1"), F.col("db").alias("db1"))
-    e2 = oriented.select("a", F.col("b").alias("b2"), F.col("db").alias("db2"))
-    wedges = e1.join(e2, on="a").filter(
-        (F.col("db1") < F.col("db2"))
-        | ((F.col("db1") == F.col("db2")) & (F.col("b1") < F.col("b2")))
-    )
-    closing = oriented.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
-    tri = wedges.join(closing, on=["b1", "b2"]).select("a", "b1", "b2")
-    tri_edges = tri.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.least("a", "b1").alias("u"), F.greatest("a", "b1").alias("v")
-                ),
-                F.struct(
-                    F.least("a", "b2").alias("u"), F.greatest("a", "b2").alias("v")
-                ),
-                F.struct(
-                    F.least("b1", "b2").alias("u"),
-                    F.greatest("b1", "b2").alias("v"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    sup = tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
+    und = _simple_edges(frame)
+    deg = _simple_degrees(und)
+    sup = _edge_support(_triangles(und, deg))
     base = (
         und.join(sup, on=["u", "v"], how="left")
         .join(deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), on="u")

@@ -39,10 +39,6 @@ from .expr import to_sql_predicate
 AxisType = Literal["source", "target", "both"]
 
 
-def _ids_only(df: DataFrame, col: str = "id") -> DataFrame:
-    return df.select(col)
-
-
 def _as_id_df(spark: SparkSession, ids: Any, like: DataFrame) -> DataFrame:
     """Build a single-column ``id`` DataFrame from a python list/scalar or
     pass through an existing DataFrame, casting to the node-ID type."""

@@ -155,11 +155,3 @@ def sample_video_frames(df: DataFrame, every_n: int = 8) -> DataFrame:
         ).alias("frame_idx"),
     )
     return frames
-
-
-def decode_audio(df: DataFrame):
-    """Audio decode is NOT implemented in this container (no codec
-    libraries).  The call signature and schema are the contract."""
-    raise NotImplementedError(
-        "audio decoding requires codec libraries not present in this environment"
-    )

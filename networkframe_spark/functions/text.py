@@ -193,13 +193,6 @@ def fingerprint_col(col: str | Column = "text") -> Column:
     return F.md5(normalized_text_col(col))
 
 
-def fingerprint64_col(col: str | Column = "text") -> Column:
-    """60-bit integer fingerprint: first 15 hex chars of the md5 parsed
-    base-16 (fits a signed 64-bit integer; portable to DuckDB via
-    ``('0x' || substr(md5(x),1,15))::BIGINT``)."""
-    return F.conv(F.substring(fingerprint_col(col), 1, 15), 16, 10).cast("long")
-
-
 def add_fingerprint(
     df: DataFrame, text_col: str = "text", out_col: str = "fingerprint"
 ) -> DataFrame:

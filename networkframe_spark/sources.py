@@ -101,10 +101,6 @@ def read_table_at(
     raise ValueError(f"unsupported format: {fmt!r}")
 
 
-def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
-
-
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table with a proper timestamp column.
 

@@ -296,9 +296,13 @@ def neardup_increment(
                 lambda d: d.localCheckpoint(eager=True), (docs2, bands2)
             )
         # the batch's band rows, re-sliced from the checkpointed band
-        # table instead of re-hashing the batch: band ids are a subset
-        # of doc ids by construction, and new ids were anti-joined
-        # against the old docs, so "bands2 rows with a new id" IS nb
+        # table instead of re-hashing the batch: new ids were
+        # anti-joined against the old docs, and band ids are a subset
+        # of doc ids, so "bands2 rows with a new id" IS nb.  The one
+        # exception is the replay of a torn write (bands persisted,
+        # docs not): the old bands then already hold the batch's rows,
+        # nb comes out with duplicate rows, and the pairs they yield
+        # are absorbed by cand.distinct() and the pairs anti-join.
         nb = bands2.join(
             new_docs.select(id_col).withColumnRenamed(id_col, "id"),
             on="id",

@@ -361,7 +361,10 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
     answers to the driver-local BFS on both orientations, including the
     two-wave anti-join optimization for undirected and the cumulative
     visited set for directed (a directed back-edge to an old wave must
-    not resurrect it)."""
+    not resurrect it).  Every operator built on the shared BFS kernel —
+    k-hop pairs, k-hop neighborhood, single-source component and
+    multi-source distances — is checked against hand values on both
+    orientations, with the guard forced to 0 and left at its default."""
     from networkframe_spark import NetworkFrame, algorithms
 
     nodes = spark.createDataFrame([(i,) for i in range(8)], "id long")
@@ -388,6 +391,57 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
     monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
     got = {r["id"]: r["dist"] for r in nf.hop_distances(0).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 5: 2, 3: 3, 4: 4}
+    monkeypatch.undo()
+
+    everyone = set(range(6))
+    want = {
+        True: {
+            "pairs2": {
+                0: {1, 2, 5}, 1: {2, 3, 5}, 2: {3, 4},
+                3: {0, 4}, 4: {0, 1}, 5: {3, 4},
+            },
+            "hood1": {0, 1},
+            "hood2": {0, 1, 2, 5},
+            "from0": {0: 0, 1: 1, 2: 2, 5: 2, 3: 3, 4: 4},
+            "from5": {5: 0, 3: 1, 4: 2, 0: 3, 1: 4, 2: 5},
+        },
+        False: {
+            # every node of 0..5 is within 2 undirected hops of the rest
+            "pairs2": {v: everyone - {v} for v in everyone},
+            "hood1": {0, 1, 4},
+            "hood2": everyone,
+            "from0": {0: 0, 1: 1, 4: 1, 2: 2, 3: 2, 5: 2},
+            "from5": {5: 0, 1: 1, 3: 1, 0: 2, 2: 2, 4: 2},
+        },
+    }
+    for guard in (None, 0):
+        if guard is not None:
+            monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", guard)
+        for directed in (True, False):
+            w, tag = want[directed], (guard, directed)
+            pairs = {}
+            for r in nf.k_hop_pairs(2, directed=directed).collect():
+                pairs.setdefault(r["node"], set()).add(r["neighbor"])
+            assert pairs == w["pairs2"], tag
+            for k in (1, 2):
+                hood = nf.k_hop_neighborhood(0, k, directed=directed)
+                assert set(ids(hood.nodes)) == w[f"hood{k}"], (tag, k)
+            comp = nf.select_component_from_node(0, directed=directed)
+            assert set(ids(comp.nodes)) == everyone, tag
+            assert comp.edges.count() == 7, tag
+            alone = nf.select_component_from_node(6, directed=directed)
+            assert ids(alone.nodes) == [6] and alone.edges.count() == 0, tag
+            multi = {
+                (r["seed"], r["id"]): r["dist"]
+                for r in algorithms.multi_source_hop_distances(
+                    nf, [0, 5], directed=directed
+                ).collect()
+            }
+            assert multi == {
+                **{(0, v): d for v, d in w["from0"].items()},
+                **{(5, v): d for v, d in w["from5"].items()},
+            }, tag
+        monkeypatch.undo()
 
 
 def test_k_core(spark):

@@ -83,16 +83,32 @@ def test_triangle_counts_known_graph(spark):
 
 
 def test_triangle_counts_ignores_direction_dupes_loops(spark):
+    """The whole triangle family shares one enumeration over the simple
+    projection, so each must see exactly one triangle here."""
     nodes = spark.createDataFrame([(i,) for i in range(3)], "id long")
     # triangle encoded with mixed directions, a duplicate edge and a loop
     edges = spark.createDataFrame(
         [(0, 1), (1, 0), (1, 2), (2, 0), (1, 1)], "source long, target long"
     )
-    got = {
-        r["id"]: r["triangles"]
-        for r in NetworkFrame(nodes, edges).triangle_counts().collect()
-    }
+    nf = NetworkFrame(nodes, edges)
+    got = {r["id"]: r["triangles"] for r in nf.triangle_counts().collect()}
     assert got == {0: 1, 1: 1, 2: 1}
+    clus = {
+        r["id"]: (r["triangles"], r["clustering"])
+        for r in nf.local_clustering().collect()
+    }
+    assert clus == {0: (1, 1.0), 1: (1, 1.0), 2: (1, 1.0)}
+    # each edge: 1 common neighbor out of a 3-node union
+    jac = {
+        (r["source"], r["target"]): (r["n_common"], r["jaccard"])
+        for r in nf.edge_jaccard().collect()
+    }
+    assert jac == {e: (1, round(1 / 3, 6)) for e in [(0, 1), (0, 2), (1, 2)]}
+    truss = {
+        (r["source"], r["target"]): r["support"]
+        for r in nf.k_truss(3).collect()
+    }
+    assert truss == {(0, 1): 1, (0, 2): 1, (1, 2): 1}
 
 
 def test_triangle_plan_has_no_cartesian(spark):
@@ -100,9 +116,16 @@ def test_triangle_plan_has_no_cartesian(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 0)], "source long, target long"
     )
-    plan = NetworkFrame(nodes, edges).triangle_counts()._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nf = NetworkFrame(nodes, edges)
+    for df in (
+        nf.triangle_counts(),
+        nf.edge_jaccard(),
+        nf.local_clustering(),
+        nf.k_truss(3),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 # ---------------------------------------------------------------------------
