@@ -19,6 +19,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import shuffle_partitions
+from ..store import (
+    append_once,
+    check_family,
+    exists,
+    read_manifest,
+    write_manifest,
+)
 
 from .text import fingerprint_col, normalized_text_col, tokens_col
 
@@ -1356,11 +1363,7 @@ def dedup_corpus(
         import os as _os
 
         spark = df.sparkSession
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        meta_dir = HPath(_os.path.join(index_path, "meta"))
-        if not meta_dir.getFileSystem(hconf).exists(meta_dir):
+        if not exists(spark, _os.path.join(index_path, "meta")):
             build_minhash_index(
                 df,
                 index_path,
@@ -1779,9 +1782,9 @@ def build_minhash_index(
     Compact after adds with
     :func:`~networkframe_spark.functions.similarity.index_compact`;
     health via :func:`~networkframe_spark.functions.similarity.
-    index_stats` (both know this layout).
+    index_stats` (both know this layout:
+    ``networkframe_spark.store.INDEX_DATA_LAYOUT``).
     """
-    import json as _json
     import os as _os
 
     if n_perm % bands:
@@ -1799,24 +1802,8 @@ def build_minhash_index(
         "max_df": max_df,
         "n_kmod": n_kmod,
     }
-    (
-        corpus.sparkSession.createDataFrame(
-            [(_json.dumps(meta),)], "meta string"
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .json(_os.path.join(path, "meta"))
-    )
+    write_manifest(corpus.sparkSession, path, "meta", meta, mode)
     return meta
-
-
-def _mh_meta(spark, path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    return _json.loads(
-        spark.read.json(_os.path.join(path, "meta")).collect()[0]["meta"]
-    )
 
 
 def minhash_index_add(
@@ -1844,21 +1831,19 @@ def minhash_index_add(
     """
     import os as _os
 
-    meta = _mh_meta(spark, path)
+    check_family(spark, path, "minhash", "minhash_index_add")
+    meta = read_manifest(spark, path, "meta")
     rows = _mh_band_rows(
         new_docs, id_col, text_col, int(meta["n_perm"]), int(meta["bands"]),
         int(meta["shingle_n"]), meta.get("max_df"), int(meta["n_kmod"]),
     )
-    store = _os.path.join(path, "mbands")
-    if dedupe:
-        existing = (
-            spark.read.parquet(store)
-            .filter(F.col("band") == 0)
-            .select("doc_id")
-        )
-        rows = rows.join(existing, on="doc_id", how="left_anti")
-        rows = rows.localCheckpoint(eager=True)
-    rows.write.mode("append").partitionBy("band", "kmod").parquet(store)
+    # all of band 0, NOT pruned to the batch's kmod cells: a re-add of
+    # an existing id with changed text lands in other kmod directories,
+    # and only the unpruned scan still sees (and drops) it
+    append_once(
+        spark, rows, _os.path.join(path, "mbands"), ("band", "kmod"),
+        "doc_id", dedupe, home={"band": 0}, prune_cols=(),
+    )
 
 
 def minhash_index_decontaminate(
@@ -1892,7 +1877,7 @@ def minhash_index_decontaminate(
     """
     import os as _os
 
-    meta = _mh_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_perm = int(meta["n_perm"])
     ev = _mh_band_rows(
         eval_df, id_col, text_col, n_perm, int(meta["bands"]),
@@ -1996,7 +1981,7 @@ def minhash_index_duplicates(
     """
     import os as _os
 
-    meta = _mh_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_perm = int(meta["n_perm"])
     store_path = _os.path.join(path, "mbands")
 

@@ -14,6 +14,14 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..store import (
+    check_family,
+    delete,
+    exists,
+    read_manifest,
+    subdirs,
+    write_manifest,
+)
 from .text import tokens_col
 
 
@@ -175,15 +183,6 @@ def _text_postings(
     return postings, doclens
 
 
-def _text_meta(spark, path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    return _json.loads(
-        spark.read.json(_os.path.join(path, "meta")).collect()[0]["meta"]
-    )
-
-
 def _text_id_type(spark, path: str) -> str:
     """The stored doc-id type, from the ``doclens`` store's parquet
     footer (one schema read, no data scan).  Empty-result branches use
@@ -198,18 +197,6 @@ def _text_id_type(spark, path: str) -> str:
         spark.read.parquet(_os.path.join(path, "doclens"))
         .schema["doc_id"]
         .dataType.simpleString()
-    )
-
-
-def _write_text_meta(spark, path: str, meta: dict, mode: str) -> None:
-    import json as _json
-    import os as _os
-
-    (
-        spark.createDataFrame([(_json.dumps(meta),)], "meta string")
-        .coalesce(1)
-        .write.mode(mode)
-        .json(_os.path.join(path, "meta"))
     )
 
 
@@ -271,7 +258,8 @@ def build_text_index(
     hash-agg over the pruned read — and it therefore self-heals
     under :func:`~networkframe_spark.functions.similarity.
     index_remove` with no stored-stat invalidation.  The lifecycle
-    tools know this layout (``_INDEX_DATA_LAYOUT``): ``index_stats``
+    tools know this layout (``networkframe_spark.store.
+    INDEX_DATA_LAYOUT``): ``index_stats``
     / ``index_compact`` / ``index_remove`` / ``index_maintain`` all
     work; after a remove, run :func:`text_index_refresh_stats` to
     re-derive ``(n_docs, sdl)`` from ``doclens`` (remove + refresh ≡
@@ -311,7 +299,7 @@ def build_text_index(
         "positions": bool(positions),
         "tokenizer": tokenizer,
     }
-    _write_text_meta(corpus.sparkSession, path, meta, mode)
+    write_manifest(corpus.sparkSession, path, "meta", meta, mode)
     return meta
 
 
@@ -343,23 +331,15 @@ def text_index_repair(spark, path: str) -> int:
     index maintenance.  Returns the number of markers processed."""
     import os as _os
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
     pend = _os.path.join(path, "_pending")
-    fs = HPath(pend).getFileSystem(hconf)
-    if not fs.exists(HPath(pend)):
+    if not exists(spark, pend):
         return 0
-    markers = [
-        st.getPath().toString()
-        for st in fs.listStatus(HPath(pend))
-        if st.isDirectory()
-    ]
+    markers = subdirs(spark, pend)
     if not markers:
         return 0
     from .similarity import index_remove
 
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_kmod = int(meta["n_kmod"])
     for m in markers:
         try:
@@ -370,7 +350,7 @@ def text_index_repair(spark, path: str) -> int:
             # Marker write itself crashed midway → nothing was
             # appended yet (the marker is written BEFORE any append);
             # just drop the partial marker.
-            fs.delete(HPath(m), True)
+            delete(spark, m)
             continue
         dmods = [
             r["d"]
@@ -389,7 +369,7 @@ def text_index_repair(spark, path: str) -> int:
         if orphans.limit(1).count() > 0:
             index_remove(spark, path, orphans, id_col="doc_id")
         text_index_refresh_stats(spark, path)
-        fs.delete(HPath(m), True)
+        delete(spark, m)
     return len(markers)
 
 
@@ -426,8 +406,9 @@ def text_index_add(
     import os as _os
     import uuid as _uuid
 
+    check_family(spark, path, "text", "text_index_add")
     text_index_repair(spark, path)
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_kmod = int(meta["n_kmod"])
     docs = new_docs
     if dedupe:
@@ -482,12 +463,8 @@ def text_index_add(
     )
     meta["n_docs"] = int(meta["n_docs"]) + n_new
     meta["sdl"] = int(meta["sdl"]) + int(tot["sdl"] or 0)
-    _write_text_meta(spark, path, meta, "overwrite")
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    HPath(marker).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    ).delete(HPath(marker), True)
+    write_manifest(spark, path, "meta", meta, "overwrite")
+    delete(spark, marker)
     return n_new
 
 
@@ -502,7 +479,7 @@ def text_index_refresh_stats(spark, path: str) -> dict:
     (contract-tested)."""
     import os as _os
 
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     tot = (
         spark.read.parquet(_os.path.join(path, "doclens"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"))
@@ -510,7 +487,7 @@ def text_index_refresh_stats(spark, path: str) -> dict:
     )
     meta["n_docs"] = int(tot["n"])
     meta["sdl"] = int(tot["sdl"] or 0)
-    _write_text_meta(spark, path, meta, "overwrite")
+    write_manifest(spark, path, "meta", meta, "overwrite")
     return meta
 
 
@@ -543,7 +520,7 @@ def text_index_search(
     same never-a-global-window shape as the transient path."""
     import os as _os
 
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_kmod = int(meta["n_kmod"])
     n_docs = int(meta["n_docs"])
     if n_docs == 0 or not query_terms:
@@ -644,7 +621,7 @@ def text_index_phrase_search(
     """
     import os as _os
 
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     if not meta.get("positions", False):
         raise ValueError(
             "text_index_phrase_search: index was built without"
@@ -763,7 +740,7 @@ def text_index_search_batch(
     ordered by (score desc, id asc)."""
     import os as _os
 
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_kmod = int(meta["n_kmod"])
     n_docs = int(meta["n_docs"])
     tok_mode = meta.get("tokenizer", "ws")

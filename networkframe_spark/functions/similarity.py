@@ -16,6 +16,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..session import shuffle_partitions
 
 
@@ -293,6 +294,34 @@ def _probe_assign(queries, query_id_col: str, emb_col: str, C, n_probe: int):
     d2 = c2[None, :] - 2.0 * (Q @ C.T)
     order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
     return qpdf, order
+
+
+def _probe_pairs(spark, qpdf, order, qid_type, where: str):
+    """The ``(query_id, list_id)`` probe-pair frame for a routed query
+    batch (:func:`_probe_assign`'s ``qpdf`` and ``order``), and the set
+    of list ids it probes.  ``qid_type`` follows the caller's query-id
+    column (string and int ids alike).  The driver-built table is
+    size-guarded by :func:`_guard_probe_rows` before it is built."""
+    from pyspark.sql import types as T
+
+    _guard_probe_rows(
+        order.size, where, f"{len(qpdf)} queries × {order.shape[1]} probes"
+    )
+    rows = [
+        (qid, int(li))
+        for qid, lists in zip(qpdf["query_id"].tolist(), order)
+        for li in lists
+    ]
+    probes = spark.createDataFrame(
+        rows,
+        T.StructType(
+            [
+                T.StructField("query_id", qid_type),
+                T.StructField("list_id", T.IntegerType()),
+            ]
+        ),
+    )
+    return probes, {li for _, li in rows}
 
 
 def _hyperplane_signs(n_planes: int, dim: int, seed: int = 42) -> list[list[int]]:
@@ -853,7 +882,6 @@ def build_ivf_index(
     :func:`ivf_top_k` re-partitions per call; this amortizes the
     k-means + assignment across every future query batch.)
     """
-    import json as _json
     import os as _os
 
     centroids = ivf_fit_centroids(
@@ -871,15 +899,7 @@ def build_ivf_index(
     cells.write.mode(mode).partitionBy("list_id").parquet(
         _os.path.join(path, "cells")
     )
-    spark = corpus.sparkSession
-    (
-        spark.createDataFrame(
-            [(_json.dumps(centroids),)], "centroids string"
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .json(_os.path.join(path, "centroids"))
-    )
+    store.write_manifest(corpus.sparkSession, path, "centroids", centroids, mode)
     return centroids
 
 
@@ -1065,14 +1085,10 @@ def ivf_index_add(
     ``dedupe=False`` only when the caller guarantees ids are fresh
     (saves the pruned scan).
     """
-    import json as _json
     import os as _os
 
-    centroids = _json.loads(
-        spark.read.json(_os.path.join(path, "centroids")).collect()[0][
-            "centroids"
-        ]
-    )
+    centroids, tags = store.read_manifest(spark, path, "centroids", tags=True)
+    store.check_family(spark, path, "ivf", "ivf_index_add", tags)
     cells = ivf_assign(
         new_vectors.select(
             F.col(id_col).alias("vec_id"),
@@ -1082,26 +1098,13 @@ def ivf_index_add(
         centroids,
         emb_col="c_emb",
     )
-    cells_path = _os.path.join(path, "cells")
-    if dedupe:
-        # Partition-pruned retry guard: list the cells this batch
-        # touches (bounded by n_cells — a small manifest collect),
-        # scan ONLY those partition dirs' vec_id column, and drop
-        # already-present ids.  A full replay of a committed batch
-        # appends zero rows.
-        touched = [
-            r["list_id"]
-            for r in cells.select("list_id").distinct().collect()
-        ]
-        existing = (
-            spark.read.parquet(cells_path)
-            .filter(F.col("list_id").isin(touched))
-            .select("vec_id")
-        )
-        cells = cells.join(existing, on="vec_id", how="left_anti")
-        # materialize before writing into the directory the plan reads
-        cells = cells.localCheckpoint(eager=True)
-    cells.write.mode("append").partitionBy("list_id").parquet(cells_path)
+    # Partition-pruned retry guard: list the cells this batch touches
+    # (bounded by n_cells — a small collect) and scan ONLY those
+    # partition dirs' vec_id column.
+    store.append_once(
+        spark, cells, _os.path.join(path, "cells"), ("list_id",), "vec_id",
+        dedupe,
+    )
 
 
 def ivf_index_search(
@@ -1124,16 +1127,13 @@ def ivf_index_search(
     driver-side against the (tiny) centroid table; the probe itself is
     one broadcast join of the query batch against the pruned cells.
     """
-    import json as _json
     import os as _os
 
-    centroids = _json.loads(
-        spark.read.json(_os.path.join(path, "centroids")).collect()[0][
-            "centroids"
-        ]
-    )
     import numpy as np
 
+    from pyspark.sql import types as T
+
+    centroids = store.read_manifest(spark, path, "centroids")
     C = np.asarray(centroids, dtype=np.float64)
     # one GEMM assigns all queries at once; batch loudly size-guarded
     qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
@@ -1144,34 +1144,15 @@ def ivf_index_search(
     # doubles that is the difference between a 4 GB and a 0.5 GB
     # exchange.  Joining both onto the pruned cells reproduces the
     # exact same scored rows (same cosine expression tree).
-    _guard_probe_rows(
-        len(qpdf) * n_probe,
-        "ivf_index_search",
-        f"{len(qpdf)} queries × {n_probe} probes",
+    qid_type = queries.schema[query_id_col].dataType
+    probes, wanted = _probe_pairs(
+        spark, qpdf, order, qid_type, "ivf_index_search"
     )
-    probe_rows = []
-    wanted: set[int] = set()
-    qids = qpdf["query_id"].tolist()
-    qembs = qpdf["q_emb"].tolist()
     q_rows = []
-    for i in range(len(qpdf)):
-        x = np.asarray(qembs[i], dtype=np.float64)
-        q_rows.append(
-            (qids[i], list(map(float, x)), float(np.linalg.norm(x)))
-        )
-        for li in order[i]:
-            wanted.add(int(li))
-            probe_rows.append((qids[i], int(li)))
-    from pyspark.sql import types as T
-
-    # query-id type follows the caller's column (string/int ids alike)
-    qid_field = T.StructField(
-        "query_id", queries.schema[query_id_col].dataType
-    )
-    probes = spark.createDataFrame(
-        probe_rows,
-        T.StructType([qid_field, T.StructField("list_id", T.IntegerType())]),
-    )
+    for qid, emb in zip(qpdf["query_id"].tolist(), qpdf["q_emb"].tolist()):
+        x = np.asarray(emb, dtype=np.float64)
+        q_rows.append((qid, list(map(float, x)), float(np.linalg.norm(x))))
+    qid_field = T.StructField("query_id", qid_type)
     q = spark.createDataFrame(
         q_rows,
         T.StructType(
@@ -1288,7 +1269,6 @@ def build_ivf_sq_index(
     what is stored, never routing), so recall loss is purely the int8
     rounding that :func:`ivf_sq_search` scores through.
     """
-    import json as _json
     import os as _os
 
     centroids = ivf_fit_centroids(
@@ -1303,15 +1283,9 @@ def build_ivf_sq_index(
     cells.write.mode(mode).partitionBy("list_id").parquet(
         _os.path.join(path, "cells")
     )
-    spark = corpus.sparkSession
-    (
-        spark.createDataFrame(
-            [(_json.dumps(centroids), "sq8")],
-            "centroids string, quantize string",
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .json(_os.path.join(path, "centroids"))
+    store.write_manifest(
+        corpus.sparkSession, path, "centroids", centroids, mode,
+        quantize="sq8",
     )
     return centroids
 
@@ -1333,34 +1307,20 @@ def ivf_sq_index_add(
     column only), so a replayed/retried add appends zero rows —
     post-add search is identical to a rebuild over the union.
     """
-    import json as _json
     import os as _os
 
-    centroids = _json.loads(
-        spark.read.json(_os.path.join(path, "centroids")).collect()[0][
-            "centroids"
-        ]
-    )
+    centroids, tags = store.read_manifest(spark, path, "centroids", tags=True)
+    store.check_family(spark, path, "ivf_sq", "ivf_sq_index_add", tags)
     cells = _sq_assign_quantize(
         new_vectors.select(F.col(id_col).alias("vec_id"), F.col(emb_col)),
         centroids,
         id_col="vec_id",
         emb_col=emb_col,
     )
-    cells_path = _os.path.join(path, "cells")
-    if dedupe:
-        touched = [
-            r["list_id"]
-            for r in cells.select("list_id").distinct().collect()
-        ]
-        existing = (
-            spark.read.parquet(cells_path)
-            .filter(F.col("list_id").isin(touched))
-            .select("vec_id")
-        )
-        cells = cells.join(existing, on="vec_id", how="left_anti")
-        cells = cells.localCheckpoint(eager=True)
-    cells.write.mode("append").partitionBy("list_id").parquet(cells_path)
+    store.append_once(
+        spark, cells, _os.path.join(path, "cells"), ("list_id",), "vec_id",
+        dedupe,
+    )
 
 
 def ivf_sq_search(
@@ -1390,44 +1350,26 @@ def ivf_sq_search(
     6-dp cosine descending.  The cell filter is a partition-column
     ``IN`` predicate, pruned at file listing (plan-guarded).
     """
-    import json as _json
     import os as _os
 
     import numpy as np
 
-    if metric not in ("cosine", "l2"):
-        raise ValueError("ivf_sq_search: metric must be 'cosine' or 'l2'")
-    centroids = _json.loads(
-        spark.read.json(_os.path.join(path, "centroids")).collect()[0][
-            "centroids"
-        ]
-    )
-    C = np.asarray(centroids, dtype=np.float64)
-    qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
-    _guard_probe_rows(
-        len(qpdf) * n_probe,
-        "ivf_sq_search",
-        f"{len(qpdf)} queries × {n_probe} probes",
-    )
     from pyspark.sql import types as T
 
-    qid_field = T.StructField(
-        "query_id", queries.schema[query_id_col].dataType
+    if metric not in ("cosine", "l2"):
+        raise ValueError("ivf_sq_search: metric must be 'cosine' or 'l2'")
+    centroids = store.read_manifest(spark, path, "centroids")
+    C = np.asarray(centroids, dtype=np.float64)
+    qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
+    qid_type = queries.schema[query_id_col].dataType
+    probes, wanted = _probe_pairs(
+        spark, qpdf, order, qid_type, "ivf_sq_search"
     )
-    probe_rows = []
-    wanted: set[int] = set()
-    qids = qpdf["query_id"].tolist()
-    qembs = qpdf["q_emb"].tolist()
-    q_rows = []
-    for i in range(len(qpdf)):
-        q_rows.append((qids[i], list(map(float, qembs[i]))))
-        for li in order[i]:
-            wanted.add(int(li))
-            probe_rows.append((qids[i], int(li)))
-    probes = spark.createDataFrame(
-        probe_rows,
-        T.StructType([qid_field, T.StructField("list_id", T.IntegerType())]),
-    )
+    q_rows = [
+        (qid, list(map(float, emb)))
+        for qid, emb in zip(qpdf["query_id"].tolist(), qpdf["q_emb"].tolist())
+    ]
+    qid_field = T.StructField("query_id", qid_type)
     # q_self computed as a Spark expression (not driver-side numpy) so
     # the float summation order matches the SQL twin's sequential
     # list_dot_product exactly — numpy's pairwise summation can differ
@@ -2148,7 +2090,6 @@ def build_ivfpq_index(
     construction (``n_lists × dim`` + ``m × k_codes × dim/m``
     floats).  Returns ``{"centroids": ..., "codebook": ...}``.
     """
-    import json as _json
     import os as _os
 
     if coarse_init not in ("first_ids", "kmeans"):
@@ -2242,12 +2183,7 @@ def build_ivfpq_index(
         ("codebook", codebook),
         ("meta", meta),
     ):
-        (
-            spark.createDataFrame([(_json.dumps(obj),)], f"{name} string")
-            .coalesce(1)
-            .write.mode(mode)
-            .json(_os.path.join(path, name))
-        )
+        store.write_manifest(spark, path, name, obj, mode)
     return {"centroids": centroids, "codebook": codebook, "meta": meta}
 
 
@@ -2262,19 +2198,11 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
     through the Hadoop FileSystem API so s3://, hdfs://, file://
     resolve the way the reader will.
     """
-    import json as _json
     import os as _os
 
-    mpath = _os.path.join(path, "meta")
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(mpath)
-    fs = hpath.getFileSystem(hconf)
-    if not fs.exists(hpath):
+    if not store.exists(spark, _os.path.join(path, "meta")):
         return {"residual": False}  # pre-round-12 layout: no manifest
-    return _json.loads(
-        spark.read.json(mpath).collect()[0]["meta"]
-    )
+    return store.read_manifest(spark, path, "meta")
 
 
 def ivfpq_search(
@@ -2306,23 +2234,14 @@ def ivfpq_search(
     joins, one keyed hash aggregate, and a per-query top-k window —
     the full-precision vectors are never touched online.
     """
-    import json as _json
     import os as _os
 
     import numpy as np
 
     from pyspark.sql import types as T
 
-    centroids = _json.loads(
-        spark.read.json(_os.path.join(path, "centroids")).collect()[0][
-            "centroids"
-        ]
-    )
-    codebook = _json.loads(
-        spark.read.json(_os.path.join(path, "codebook")).collect()[0][
-            "codebook"
-        ]
-    )
+    centroids = store.read_manifest(spark, path, "centroids")
+    codebook = store.read_manifest(spark, path, "codebook")
     meta = _read_ivfpq_meta(spark, path)
     residual = bool(meta.get("residual", False))
     if meta.get("rotation") is not None:
@@ -2335,9 +2254,7 @@ def ivfpq_search(
     C = np.asarray(centroids, dtype=np.float64)
     # one GEMM assigns all queries at once; batch loudly size-guarded
     qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
-    wanted: set[int] = set()
-    qids = qpdf["query_id"].tolist()
-    qembs = qpdf["q_emb"].tolist()
+    qid_type = queries.schema[query_id_col].dataType
     if residual:
         # IVFADC: each probed cell sees the query's residual against
         # THAT cell's centroid, so the ADC table is keyed by
@@ -2353,7 +2270,10 @@ def ivfpq_search(
                 "residual probing pays the n_probe factor the "
                 "no-residual mode doesn't)"
             )
+        wanted: set[int] = set()
         pr_rows = []
+        qids = qpdf["query_id"].tolist()
+        qembs = qpdf["q_emb"].tolist()
         for i in range(len(qpdf)):
             x = np.asarray(qembs[i], dtype=np.float64)
             for li in order[i]:
@@ -2363,9 +2283,7 @@ def ivfpq_search(
                 )
         pr_schema = T.StructType(
             [
-                T.StructField(
-                    "query_id", queries.schema[query_id_col].dataType
-                ),
+                T.StructField("query_id", qid_type),
                 T.StructField("list_id", T.IntegerType()),
                 T.StructField("q_res", T.ArrayType(T.DoubleType())),
             ]
@@ -2373,25 +2291,9 @@ def ivfpq_search(
         pr = spark.createDataFrame(pr_rows, pr_schema)
         lut = _pq_lut(pr, codebook, "query_id", "q_res", extra_cols=("list_id",))
     else:
-        _guard_probe_rows(
-            len(qpdf) * n_probe,
-            "ivfpq_search",
-            f"{len(qpdf)} queries × {n_probe} probes",
+        probes, wanted = _probe_pairs(
+            spark, qpdf, order, qid_type, "ivfpq_search"
         )
-        probe_rows = []
-        for i in range(len(qpdf)):
-            for li in order[i]:
-                wanted.add(int(li))
-                probe_rows.append((qids[i], int(li)))
-        probe_schema = T.StructType(
-            [
-                T.StructField(
-                    "query_id", queries.schema[query_id_col].dataType
-                ),
-                T.StructField("list_id", T.IntegerType()),
-            ]
-        )
-        probes = spark.createDataFrame(probe_rows, probe_schema)
         lut = _pq_lut(
             queries.select(
                 F.col(query_id_col).alias("query_id"), F.col(emb_col)
@@ -2459,19 +2361,11 @@ def ivfpq_index_add(
     ``mapInPandas`` encode pass over the new batch (both
     shuffle-free), then an append of only the new files.
     """
-    import json as _json
     import os as _os
 
-    centroids = _json.loads(
-        spark.read.json(_os.path.join(path, "centroids")).collect()[0][
-            "centroids"
-        ]
-    )
-    codebook = _json.loads(
-        spark.read.json(_os.path.join(path, "codebook")).collect()[0][
-            "codebook"
-        ]
-    )
+    store.check_family(spark, path, "ivfpq", "ivfpq_index_add")
+    centroids = store.read_manifest(spark, path, "centroids")
+    codebook = store.read_manifest(spark, path, "codebook")
     meta = _read_ivfpq_meta(spark, path)
     if meta.get("rotation") is not None:
         # OPQ index: new vectors rotate into the stored index's space
@@ -2506,21 +2400,10 @@ def ivfpq_index_add(
         )
     codes = pq_encode(enc_src, codebook, id_col="vec_id", emb_col="__enc")
     codes = codes.join(enc_src.select("vec_id", "list_id"), on="vec_id")
-    codes_path = _os.path.join(path, "codes")
-    if dedupe:
-        touched = [
-            r["list_id"]
-            for r in codes.select("list_id").distinct().collect()
-        ]
-        existing = (
-            spark.read.parquet(codes_path)
-            .filter(F.col("list_id").isin(touched))
-            .select("vec_id")
-        )
-        codes = codes.join(existing, on="vec_id", how="left_anti")
-        # materialize before writing into the directory the plan reads
-        codes = codes.localCheckpoint(eager=True)
-    codes.write.mode("append").partitionBy("list_id").parquet(codes_path)
+    store.append_once(
+        spark, codes, _os.path.join(path, "codes"), ("list_id",), "vec_id",
+        dedupe,
+    )
 
 
 def knn_label_check(
@@ -3374,7 +3257,6 @@ def build_lsh_index(
     <= ~12 for a partitioned store (beyond that, band tables belong
     inside a coarser layout).
     """
-    import json as _json
     import os as _os
 
     if dim is None:
@@ -3382,40 +3264,23 @@ def build_lsh_index(
         dim = first["d"] if first else 0
     else:
         _validate_dim(corpus, emb_col, dim, "build_lsh_index")
-    tables = [
-        _hyperplane_signs(n_planes, dim, seed=42 + 1000 * t)
-        for t in range(n_tables)
-    ]
-    banded = _band_rows(corpus, tables, id_col, emb_col)
+    meta = {"n_planes": n_planes, "n_tables": n_tables, "dim": dim}
+    banded = _band_rows(corpus, _lsh_tables(meta), id_col, emb_col)
     banded.write.mode(mode).partitionBy("table", "bucket").parquet(
         _os.path.join(path, "bands")
     )
-    meta = {"n_planes": n_planes, "n_tables": n_tables, "dim": dim}
-    (
-        corpus.sparkSession.createDataFrame(
-            [(_json.dumps(meta),)], "meta string"
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .json(_os.path.join(path, "meta"))
-    )
+    store.write_manifest(corpus.sparkSession, path, "meta", meta, mode)
     return meta
 
 
-def _lsh_meta_tables(spark, path: str):
-    import json as _json
-    import os as _os
-
-    meta = _json.loads(
-        spark.read.json(_os.path.join(path, "meta")).collect()[0]["meta"]
-    )
-    tables = [
+def _lsh_tables(meta: dict):
+    """The stored plane manifest's hyperplanes, one list per table."""
+    return [
         _hyperplane_signs(
             int(meta["n_planes"]), int(meta["dim"]), seed=42 + 1000 * t
         )
         for t in range(int(meta["n_tables"]))
     ]
-    return meta, tables
 
 
 def lsh_index_add(
@@ -3438,29 +3303,14 @@ def lsh_index_add(
     """
     import os as _os
 
-    meta, tables = _lsh_meta_tables(spark, path)
+    store.check_family(spark, path, "lsh", "lsh_index_add")
+    tables = _lsh_tables(store.read_manifest(spark, path, "meta"))
     banded = _band_rows(new_vectors, tables, id_col, emb_col)
-    bands_path = _os.path.join(path, "bands")
-    if dedupe:
-        # table 0 membership is definitive (every vector appears in
-        # every table), so the retry guard prunes to table 0's
-        # touched buckets only
-        touched = [
-            r["bucket"]
-            for r in banded.filter(F.col("table") == 0)
-            .select("bucket")
-            .distinct()
-            .collect()
-        ]
-        existing = (
-            spark.read.parquet(bands_path)
-            .filter((F.col("table") == 0) & F.col("bucket").isin(touched))
-            .select("vec_id")
-        )
-        banded = banded.join(existing, on="vec_id", how="left_anti")
-        banded = banded.localCheckpoint(eager=True)
-    banded.write.mode("append").partitionBy("table", "bucket").parquet(
-        bands_path
+    # table 0 membership is definitive (every vector appears in every
+    # table), so the retry guard prunes to table 0's touched buckets
+    store.append_once(
+        spark, banded, _os.path.join(path, "bands"), ("table", "bucket"),
+        "vec_id", dedupe, home={"table": 0}, prune_cols=("bucket",),
     )
 
 
@@ -3496,7 +3346,8 @@ def lsh_index_search(
     """
     import os as _os
 
-    meta, tables = _lsh_meta_tables(spark, path)
+    meta = store.read_manifest(spark, path, "meta")
+    tables = _lsh_tables(meta)
     n_planes = int(meta["n_planes"])
     n_tables = int(meta["n_tables"])
     if not 0 <= n_probe_bits <= n_planes:
@@ -3624,41 +3475,18 @@ def lsh_index_search(
     )
 
 
-#: Persisted-index data stores and their partition columns — the
-#: directories :func:`index_compact` knows how to rewrite.
-_INDEX_DATA_LAYOUT = {
-    "cells": ("list_id",),        # build_ivf_index / build_ivf_sq_index
-    "codes": ("list_id",),        # build_ivfpq_index
-    "bands": ("table", "bucket"),  # build_lsh_index
-    "mbands": ("band", "kmod"),   # dedup.build_minhash_index
-    "postings": ("kmod",),        # search.build_text_index (inverted)
-    "doclens": ("dmod",),         # search.build_text_index (membership)
-}
-
-#: Preferred within-file sort columns per store (after the partition
-#: columns).  Stores not listed fall back to whichever of
-#: ``vec_id`` / ``doc_id`` they carry.  ``postings`` MUST lead with
-#: ``term``: build_text_index documents the (term, doc_id) file sort
-#: as the basis for parquet row-group min/max pruning of the probe's
-#: ``term IN (...)`` filter — a compaction that sorted by doc_id
-#: alone would silently degrade probe cost (ADVICE r15).
-_INDEX_SORT_COLS = {
-    "postings": ("term", "doc_id"),
-}
-
-
 def index_compact(
     spark,
     path: str,
     target_records_per_file: int = 1_000_000,
     stores: "set[str] | None" = None,
 ) -> dict:
-    """Compact a persisted ANN index's partitioned data store in
-    place.  Every incremental add (:func:`ivf_index_add`,
+    """Compact a persisted index's partitioned data stores in place.
+    Every incremental add (:func:`ivf_index_add`,
     :func:`ivf_sq_index_add`, :func:`ivfpq_index_add`,
-    :func:`lsh_index_add`) and every ``stream_index_add`` micro-batch
-    APPENDS files into the ``list_id`` / ``(table, bucket)``
-    directories — at streaming cadence each partition accumulates
+    :func:`lsh_index_add`, ``minhash_index_add``, ``text_index_add``)
+    and every ``stream_index_add`` micro-batch APPENDS files into the
+    store's partition directories — at streaming cadence each partition accumulates
     thousands of KB-scale parquet files, and the file-listing prune
     that justifies the whole partitioned-index design erodes (listing
     time and per-file footer reads grow linearly with add count).
@@ -3667,7 +3495,8 @@ def index_compact(
     results bit-identical (contract-tested).
 
     Mechanics: detects which of the known stores (``cells`` /
-    ``codes`` / ``bands``) exist under ``path``, reads each, range-
+    ``codes`` / ``bands`` / ``mbands`` / ``postings`` / ``doclens``)
+    exist under ``path``, reads each, range-
     repartitions on ``(partition_cols..., vec_id)`` into
     ``ceil(rows / target_records_per_file)`` tasks — so an oversized
     cell still parallelizes across writers instead of bottlenecking
@@ -3690,25 +3519,15 @@ def index_compact(
     import math as _math
     import os as _os
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-
     def _count_files(p: str) -> int:
-        fs = HPath(p).getFileSystem(hconf)
-        it, n = fs.listFiles(HPath(p), True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
+        return sum(1 for _ in store.parquet_files(spark, p))
 
     report: dict = {}
-    for sub, part_cols in _INDEX_DATA_LAYOUT.items():
+    for sub, part_cols in store.INDEX_DATA_LAYOUT.items():
         if stores is not None and sub not in stores:
             continue
         data = _os.path.join(path, sub)
-        fs = HPath(data).getFileSystem(hconf)
-        if not fs.exists(HPath(data)):
+        if not store.exists(spark, data):
             continue
         before = _count_files(data)
         df = spark.read.parquet(data)
@@ -3725,7 +3544,7 @@ def index_compact(
             }
             continue
         n_tasks = max(1, _math.ceil(n / target_records_per_file))
-        pref = _INDEX_SORT_COLS.get(sub)
+        pref = store.INDEX_SORT_COLS.get(sub)
         if pref is not None:
             sort_cols = list(part_cols) + [c for c in pref if c in df.columns]
         else:
@@ -3733,7 +3552,6 @@ def index_compact(
                 c for c in ("vec_id", "doc_id") if c in df.columns
             ][:1]
         tmp = data + ".__compact_tmp__"
-        old = data + ".__compact_old__"
         (
             df.repartitionByRange(n_tasks, *[F.col(c) for c in sort_cols])
             .sortWithinPartitions(*sort_cols)
@@ -3742,14 +3560,7 @@ def index_compact(
             .partitionBy(*part_cols)
             .parquet(tmp)
         )
-        if fs.exists(HPath(old)):
-            fs.delete(HPath(old), True)
-        if not fs.rename(HPath(data), HPath(old)):
-            raise IOError(f"index_compact: could not move {data} aside")
-        if not fs.rename(HPath(tmp), HPath(data)):
-            fs.rename(HPath(old), HPath(data))  # roll back, store intact
-            raise IOError(f"index_compact: swap failed for {data}")
-        fs.delete(HPath(old), True)
+        store.swap_dir(spark, data, tmp)
         report[sub] = {
             "files_before": before,
             "files_after": _count_files(data),
@@ -3774,24 +3585,14 @@ def index_stats(spark, path: str) -> dict:
     """
     import os as _os
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-
     report: dict = {}
-    for sub in _INDEX_DATA_LAYOUT:
+    for sub in store.INDEX_DATA_LAYOUT:
         data = _os.path.join(path, sub)
-        fs = HPath(data).getFileSystem(hconf)
-        if not fs.exists(HPath(data)):
+        if not store.exists(spark, data):
             continue
         per_part: dict[str, int] = {}
         n_files = n_bytes = 0
-        it = fs.listFiles(HPath(data), True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.endswith(".parquet"):
-                continue
+        for st in store.parquet_files(spark, data):
             n_files += 1
             n_bytes += st.getLen()
             # partition dir = path between the store root and the file
@@ -3903,22 +3704,14 @@ def index_recall_check(
     :func:`ann_recall_report`; the balance summary is one hash
     aggregate over the store's partition column (column-pruned scan).
     """
-    import json as _json
     import os as _os
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-
-    def _exists(sub: str) -> bool:
-        p = _os.path.join(path, sub)
-        return HPath(p).getFileSystem(hconf).exists(HPath(p))
-
+    family = store.index_family(spark, path)
     qs = probes.select(
         F.col(query_id_col).alias("query_id"), F.col(emb_col)
     )
-    if _exists("codes"):
-        family, store_sub, part_col = "ivfpq", "codes", "list_id"
+    if family == "ivfpq":
+        store_sub, part_col = "codes", "list_id"
         if corpus is None:
             raise ValueError(
                 "index_recall_check: the IVF-PQ family needs the raw"
@@ -3933,8 +3726,8 @@ def index_recall_check(
             query_id_col="query_id", emb_col=emb_col,
         )
         metric = "l2"
-    elif _exists("bands"):
-        family, store_sub, part_col = "lsh", "bands", "bucket"
+    elif family == "lsh":
+        store_sub, part_col = "bands", "bucket"
         truth_corpus = (
             spark.read.parquet(_os.path.join(path, "bands"))
             .select("vec_id", F.col("c_emb").alias("embedding"))
@@ -3946,13 +3739,10 @@ def index_recall_check(
             exclude_self=False,
         )
         metric = "cosine"
-    elif _exists("cells"):
-        man = spark.read.json(_os.path.join(path, "centroids")).collect()[0]
-        quantized = "quantize" in man.asDict() and man["quantize"] == "sq8"
+    elif family in ("ivf", "ivf_sq"):
         cells = spark.read.parquet(_os.path.join(path, "cells"))
         part_col, store_sub = "list_id", "cells"
-        if quantized:
-            family = "ivf_sq"
+        if family == "ivf_sq":
             truth_corpus = cells.select(
                 "vec_id",
                 dequantize_expr(
@@ -3966,7 +3756,6 @@ def index_recall_check(
             )
             metric = "l2"
         else:
-            family = "ivf"
             truth_corpus = cells.select(
                 "vec_id", F.col("c_emb").alias("embedding")
             )
@@ -4062,30 +3851,11 @@ def index_rebuild(
     rebuild actually used).  Single-writer assumption as for all
     index maintenance; searches racing the overwrite should retry.
     """
-    import json as _json
-    import os as _os
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-
-    def _exists(sub: str) -> bool:
-        p = _os.path.join(path, sub)
-        return HPath(p).getFileSystem(hconf).exists(HPath(p))
-
-    def _centroid_count() -> int:
-        return len(
-            _json.loads(
-                spark.read.json(
-                    _os.path.join(path, "centroids")
-                ).collect()[0]["centroids"]
-            )
-        )
-
-    if _exists("codes"):
+    family = store.index_family(spark, path)
+    if family == "ivfpq":
         meta = _read_ivfpq_meta(spark, path)
         params = {
-            "n_lists": _centroid_count(),
+            "n_lists": len(store.read_manifest(spark, path, "centroids")),
             "m": int(meta["m"]),
             "k_codes": int(meta["k_codes"]),
             "residual": bool(meta.get("residual", False)),
@@ -4098,12 +3868,8 @@ def index_rebuild(
             mode="overwrite", **params,
         )
         return {"family": "ivfpq", "params": params}
-    if _exists("bands"):
-        meta = _json.loads(
-            spark.read.json(_os.path.join(path, "meta")).collect()[0][
-                "meta"
-            ]
-        )
+    if family == "lsh":
+        meta = store.read_manifest(spark, path, "meta")
         params = {
             "n_planes": int(meta["n_planes"]),
             "n_tables": int(meta["n_tables"]),
@@ -4114,24 +3880,17 @@ def index_rebuild(
             mode="overwrite", **params,
         )
         return {"family": "lsh", "params": params}
-    if _exists("cells"):
-        man = spark.read.json(
-            _os.path.join(path, "centroids")
-        ).collect()[0]
-        quantized = (
-            "quantize" in man.asDict() and man["quantize"] == "sq8"
-        )
-        params = {"n_lists": _centroid_count()}
+    if family in ("ivf", "ivf_sq"):
+        params = {
+            "n_lists": len(store.read_manifest(spark, path, "centroids"))
+        }
         params.update(overrides)
-        builder = build_ivf_sq_index if quantized else build_ivf_index
+        builder = build_ivf_sq_index if family == "ivf_sq" else build_ivf_index
         builder(
             corpus, path, id_col=id_col, emb_col=emb_col,
             mode="overwrite", **params,
         )
-        return {
-            "family": "ivf_sq" if quantized else "ivf",
-            "params": params,
-        }
+        return {"family": family, "params": params}
     raise ValueError(
         f"index_rebuild: no ANN data store found under {path}"
     )
@@ -4142,8 +3901,9 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
     retraction / right-to-be-forgotten half of the maintenance loop
     (:func:`index_compact` repairs file counts, :func:`index_stats`
     observes, this removes content).  Works on every store layout in
-    ``_INDEX_DATA_LAYOUT`` (ivf/ivf_sq ``cells``, ivfpq ``codes``, lsh
-    ``bands``, minhash ``mbands``); manifests (centroids / planes /
+    ``store.INDEX_DATA_LAYOUT`` (ivf/ivf_sq ``cells``, ivfpq
+    ``codes``, lsh ``bands``, minhash ``mbands``, text ``postings`` /
+    ``doclens``); manifests (centroids / planes /
     codebooks / minhash params) are untouched — they are trained
     artifacts, not per-row state, so post-remove search behaves
     exactly as pre-remove search with the removed ids absent from
@@ -4151,9 +3911,10 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
     manifests — LSH planes, MinHash params — remove-then-probe is
     BIT-IDENTICAL to a rebuild over the remaining corpus).
 
-    ``ids`` is a single-column DataFrame or a Python list.  ``id_col``
-    defaults per store to whichever of ``vec_id`` / ``doc_id`` the
-    store carries.
+    ``ids`` is a single-column DataFrame or a Python list (an empty
+    list reports zero removals without running a Spark job).
+    ``id_col`` defaults per store to whichever of ``vec_id`` /
+    ``doc_id`` the store carries.
 
     Scale shape: one column-pruned scan of the store's id column
     semi-joined to the removal set finds the TOUCHED partition
@@ -4173,38 +3934,36 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
     """
     import os as _os
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-
+    zero = {"rows_removed": 0, "partitions_rewritten": 0, "partitions_deleted": 0}
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], ["__rm_id"])
+        ids = [(i,) for i in ids]
+        if not ids:
+            # nothing to remove (and no schema to infer): run no job
+            return {
+                sub: dict(zero)
+                for sub in store.INDEX_DATA_LAYOUT
+                if store.exists(spark, _os.path.join(path, sub))
+            }
+        ids = spark.createDataFrame(ids, ["__rm_id"])
     else:
         ids = ids.select(F.col(ids.columns[0]).alias("__rm_id"))
     ids = F.broadcast(ids.distinct())
 
     report: dict = {}
-    for sub, part_cols in _INDEX_DATA_LAYOUT.items():
+    for sub, part_cols in store.INDEX_DATA_LAYOUT.items():
         data = _os.path.join(path, sub)
-        fs = HPath(data).getFileSystem(hconf)
-        if not fs.exists(HPath(data)):
+        if not store.exists(spark, data):
             continue
-        store = spark.read.parquet(data)
-        rid = id_col or (
-            "vec_id" if "vec_id" in store.columns else "doc_id"
-        )
-        hit = store.join(ids, on=store[rid] == F.col("__rm_id"), how="inner")
+        sdf = spark.read.parquet(data)
+        rid = id_col or ("vec_id" if "vec_id" in sdf.columns else "doc_id")
+        hit = sdf.join(ids, on=sdf[rid] == F.col("__rm_id"), how="inner")
         touched = [
             tuple(r[c] for c in part_cols)
             for r in hit.select(*part_cols).distinct().collect()
         ]
         n_removed = hit.count()
         if not touched:
-            report[sub] = {
-                "rows_removed": 0,
-                "partitions_rewritten": 0,
-                "partitions_deleted": 0,
-            }
+            report[sub] = dict(zero)
             continue
         def _part_pred(parts):
             p = None
@@ -4217,8 +3976,8 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
             return p
 
         kept = (
-            store.filter(_part_pred(touched))
-            .join(ids, on=store[rid] == F.col("__rm_id"), how="left_anti")
+            sdf.filter(_part_pred(touched))
+            .join(ids, on=sdf[rid] == F.col("__rm_id"), how="left_anti")
             .localCheckpoint(eager=True)
         )
         kept_parts = {
@@ -4245,10 +4004,10 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
             )
         emptied = [t for t in touched if t not in kept_parts]
         for t in emptied:
-            d = _os.path.join(
-                data, *[f"{c}={v}" for c, v in zip(part_cols, t)]
+            store.delete(
+                spark,
+                _os.path.join(data, *[f"{c}={v}" for c, v in zip(part_cols, t)]),
             )
-            fs.delete(HPath(d), True)
         if emptied and not kept_parts:
             # Full-retraction guard (ADVICE r14): if every row of the
             # store was removed, the partition-dir deletions above can
@@ -4260,12 +4019,7 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
             # directory (a root-level file would conflict with partition
             # discovery on the next add), so the store reads back as
             # schema-stable and empty.
-            it, n_left = fs.listFiles(HPath(data), True), 0
-            while it.hasNext():
-                if it.next().getPath().getName().endswith(".parquet"):
-                    n_left += 1
-                    break
-            if n_left == 0:
+            if next(store.parquet_files(spark, data), None) is None:
                 from pyspark.sql.types import StructType
 
                 t0 = emptied[0]
@@ -4273,7 +4027,7 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
                     data, *[f"{c}={v}" for c, v in zip(part_cols, t0)]
                 )
                 data_schema = StructType(
-                    [f for f in store.schema.fields if f.name not in part_cols]
+                    [f for f in sdf.schema.fields if f.name not in part_cols]
                 )
                 spark.createDataFrame([], data_schema).write.mode(
                     "overwrite"

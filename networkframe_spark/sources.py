@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .frame import NetworkFrame
+from .store import read_manifest, write_manifest
 
 TABLES = (
     "region",
@@ -290,8 +291,6 @@ def save_graph(
     on a column (a layer/date key) so reads with a filter on it prune
     whole directories.
     """
-    import json as _json
-
     edges = nf.edges
     if edge_buckets:
         edges = edges.repartition(edge_buckets, "source")
@@ -307,21 +306,12 @@ def save_graph(
         "edge_buckets": edge_buckets,
         "partition_edges_by": partition_edges_by,
     }
-    spark = nf.spark
-    (
-        spark.createDataFrame([(_json.dumps(manifest),)], "manifest string")
-        .coalesce(1)
-        .write.mode(mode)
-        .json(os.path.join(path, "_graph"))
-    )
+    write_manifest(nf.spark, path, "_graph", manifest, mode)
 
 
 def load_graph(spark: SparkSession, path: str, validate: bool = False) -> NetworkFrame:
     """Load a graph written by :func:`save_graph`."""
-    import json as _json
-
-    manifest_df = spark.read.json(os.path.join(path, "_graph"))
-    manifest = _json.loads(manifest_df.collect()[0]["manifest"])
+    manifest = read_manifest(spark, path, "_graph")
     nodes = spark.read.parquet(os.path.join(path, "nodes"))
     edges = spark.read.parquet(os.path.join(path, "edges"))
     return NetworkFrame(

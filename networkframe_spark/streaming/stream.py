@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import normalize_event_time
+from ..store import exists, index_family
 
 
 def stream_events_windowed(
@@ -415,18 +416,6 @@ def stream_upsert_parquet(
     """
     from ..functions.pipeline import merge_incremental
 
-    def _table_exists(spark, p: str) -> bool:
-        # Probe through the Hadoop FileSystem API so s3://, hdfs://,
-        # file:// all resolve the way the executor-side reader will —
-        # a driver-local os.path.exists would be always-false for any
-        # remote URI and silently discard existing table state on the
-        # first micro-batch after a restart.
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(hconf)
-        return bool(fs.exists(hpath))
-
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
@@ -438,7 +427,10 @@ def stream_upsert_parquet(
             ts_col=ts_col,
             tiebreak_col=tiebreak_col,
         )
-        if _table_exists(spark, path):
+        # probed through the Hadoop FileSystem (store.exists): a
+        # driver-local os.path check is always false for a remote URI
+        # and would silently discard the table's state after a restart
+        if exists(spark, path):
             existing = spark.read.parquet(path)
             merged = merge_incremental(
                 existing,
@@ -652,10 +644,7 @@ def stream_neardup_parquet(
     paths = {k: os.path.join(out_dir, k) for k in ("docs", "bands", "pairs")}
 
     def _read(spark, key: str) -> DataFrame | None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(paths[key])
-        if not hpath.getFileSystem(hconf).exists(hpath):
+        if not exists(spark, paths[key]):
             return None
         return spark.read.parquet(paths[key])
 
@@ -711,7 +700,6 @@ def stream_index_add(
     df: DataFrame,
     path: str,
     checkpoint: str,
-    index: str = "lsh",
     id_col: str | None = None,
     emb_col: str = "embedding",
     text_col: str = "text",
@@ -720,19 +708,23 @@ def stream_index_add(
     max_files_per_partition: int = 32,
 ):
     """Streaming ingestion into a persisted ANN or text index: every
-    micro-batch is absorbed by the index family's incremental add
-    (``index`` = ``"lsh"`` | ``"ivf"`` | ``"ivf_sq"`` | ``"ivfpq"``
-    over ``(id, embedding)`` rows —
+    micro-batch is absorbed by the incremental add of the index family
+    stored under ``path``, so the index a batch search probes is
+    always current without an offline rebuild.  The family is read
+    from the store once, when the query starts
+    (:func:`~networkframe_spark.store.index_family`) — it is a fact
+    of the store, not a choice for the caller.  The embedding families
+    (``lsh`` / ``ivf`` / ``ivf_sq`` / ``ivfpq``) take ``(id,
+    embedding)`` rows —
     :func:`~networkframe_spark.functions.similarity.lsh_index_add`
-    and siblings — or ``"minhash"`` / ``"text"`` over ``(id, text)``
+    and siblings; ``minhash`` and ``text`` take ``(id, text)``
     documents —
     :func:`~networkframe_spark.functions.dedup.minhash_index_add`
     (the decontamination/self-dedup store) and
     :func:`~networkframe_spark.functions.search.text_index_add`
-    (the BM25 inverted index)), so the index a batch
-    search probes is always current without an offline rebuild.
-    ``id_col`` defaults per family: ``vec_id`` for the embedding
-    indexes, ``doc_id`` for ``minhash``.  At streaming cadence each
+    (the BM25 inverted index).  ``id_col`` defaults per family:
+    ``vec_id`` for the embedding indexes, ``doc_id`` for ``minhash``
+    and ``text``.  At streaming cadence each
     partition directory accumulates a file per touched micro-batch —
     pass ``maintain_every=N`` to run
     :func:`~networkframe_spark.functions.similarity.index_maintain`
@@ -775,41 +767,26 @@ def stream_index_add(
         lsh_index_add,
     )
 
-    adders = {
+    family = index_family(df.sparkSession, path)
+    add = {
         "lsh": lsh_index_add,
         "ivf": ivf_index_add,
         "ivf_sq": ivf_sq_index_add,
         "ivfpq": ivfpq_index_add,
         "minhash": minhash_index_add,
         "text": text_index_add,
-    }
-    if index not in adders:
-        raise ValueError(
-            "stream_index_add: index must be lsh|ivf|ivf_sq|ivfpq|minhash|text"
-        )
-    add = adders[index]
-    rid = id_col or ("doc_id" if index in ("minhash", "text") else "vec_id")
+    }[family]
+    if family in ("minhash", "text"):
+        rid, cols = id_col or "doc_id", {"text_col": text_col}
+    else:
+        rid, cols = id_col or "vec_id", {"emb_col": emb_col}
 
     def _absorb(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():
-            if index in ("minhash", "text"):
-                add(
-                    batch_df.sparkSession,
-                    path,
-                    batch_df,
-                    id_col=rid,
-                    text_col=text_col,
-                    dedupe=True,
-                )
-            else:
-                add(
-                    batch_df.sparkSession,
-                    path,
-                    batch_df,
-                    id_col=rid,
-                    emb_col=emb_col,
-                    dedupe=True,
-                )
+            add(
+                batch_df.sparkSession, path, batch_df, id_col=rid,
+                dedupe=True, **cols,
+            )
         if maintain_every and batch_id > 0 and batch_id % maintain_every == 0:
             from ..functions.similarity import index_maintain
 

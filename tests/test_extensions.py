@@ -254,9 +254,9 @@ def test_text_index_remove_refresh_equals_rebuild(spark, tmp_path):
     assert rep["doclens"]["rows_removed"] == rm.count()
     meta = text_index_refresh_stats(spark, full)
     build_text_index(docs.filter("doc_id % 5 != 1"), part, n_kmod=16)
-    from networkframe_spark.functions.search import _text_meta
+    from networkframe_spark.store import read_manifest
 
-    assert meta == _text_meta(spark, part)
+    assert meta == read_manifest(spark, part, "meta")
     terms = ["spark", "hash", "vector"]
     srch = lambda p: sorted(
         map(tuple, text_index_search(spark, p, terms, k=10).collect())
@@ -351,12 +351,10 @@ def _simulate_crashed_add(spark, path, batch, after_doclens=False):
 
     from pyspark.sql import functions as F
 
-    from networkframe_spark.functions.search import (
-        _text_meta,
-        _text_postings,
-    )
+    from networkframe_spark.functions.search import _text_postings
+    from networkframe_spark.store import read_manifest
 
-    meta = _text_meta(spark, path)
+    meta = read_manifest(spark, path, "meta")
     n_kmod = int(meta["n_kmod"])
     postings, doclens = _text_postings(batch, "doc_id", "text", n_kmod)
     (
@@ -424,12 +422,12 @@ def test_text_index_add_retry_after_doclens_crash_converges(
     ingest zero docs while the repair heals the stale meta from
     doclens — add-after-crash ≡ rebuild bit-for-bit."""
     from networkframe_spark.functions.search import (
-        _text_meta,
         build_text_index,
         text_index_add,
         text_index_search,
     )
     from networkframe_spark.sources import read_table
+    from networkframe_spark.store import read_manifest
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents")
     inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
@@ -438,7 +436,7 @@ def test_text_index_add_retry_after_doclens_crash_converges(
     _simulate_crashed_add(spark, inc, batch, after_doclens=True)
     assert text_index_add(spark, inc, batch) == 0  # replay: all dupes
     build_text_index(docs, full, n_kmod=8)
-    assert _text_meta(spark, inc) == _text_meta(spark, full)
+    assert read_manifest(spark, inc, "meta") == read_manifest(spark, full, "meta")
     terms = ["spark", "hash", "vector"]
     srch = lambda p: sorted(
         map(tuple, text_index_search(spark, p, terms, k=10).collect())
@@ -451,12 +449,12 @@ def test_text_index_repair_direct_restores_pre_add_state(spark, tmp_path):
     postings-only crash back to 'batch fully absent': search and meta
     ≡ the pre-add index bit-for-bit."""
     from networkframe_spark.functions.search import (
-        _text_meta,
         build_text_index,
         text_index_repair,
         text_index_search,
     )
     from networkframe_spark.sources import read_table
+    from networkframe_spark.store import read_manifest
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents")
     inc, half = str(tmp_path / "inc"), str(tmp_path / "half")
@@ -464,7 +462,7 @@ def test_text_index_repair_direct_restores_pre_add_state(spark, tmp_path):
     _simulate_crashed_add(spark, inc, docs.filter("doc_id % 2 = 1"))
     assert text_index_repair(spark, inc) == 1
     build_text_index(docs.filter("doc_id % 2 = 0"), half, n_kmod=8)
-    assert _text_meta(spark, inc) == _text_meta(spark, half)
+    assert read_manifest(spark, inc, "meta") == read_manifest(spark, half, "meta")
     terms = ["spark", "hash", "vector"]
     srch = lambda p: sorted(
         map(tuple, text_index_search(spark, p, terms, k=10).collect())

@@ -3823,6 +3823,20 @@ def test_index_remove_contract(spark, tmp_path):
     l1, l2 = str(tmp_path / "l1"), str(tmp_path / "l2")
     build_lsh_index(emb, l1, n_planes=4, n_tables=2)
     index_remove(spark, l1, emb.filter("vec_id % 3 = 0").select("vec_id"))
+    # an empty id list removes nothing and runs no Spark job (it used
+    # to fail schema inference on the empty list)
+    last_job = lambda: max(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1
+    )
+    before = last_job()
+    assert index_remove(spark, l1, []) == {
+        "bands": {
+            "rows_removed": 0,
+            "partitions_rewritten": 0,
+            "partitions_deleted": 0,
+        }
+    }
+    assert last_job() == before
     build_lsh_index(emb.filter("vec_id % 3 != 0"), l2, n_planes=4, n_tables=2)
     qs = emb.filter("vec_id < 5")
     srch = lambda p: sorted(
@@ -4214,6 +4228,36 @@ def test_index_recall_check_family_detection(spark, tmp_path):
         spark, pq, probes, k=5, n_probe=4, corpus=emb, min_recall=0.0
     )
     assert chk["family"] == "ivfpq" and chk["n_queries"] == 5
+
+
+def test_index_add_rejects_wrong_family(spark, tmp_path):
+    """An add of the wrong family raises and leaves the store as it
+    was: an IVF add on an IVF-SQ store would append raw-float rows the
+    int8 search ranks first with d2 = None, and an LSH add on a
+    MinHash store would band vectors into a document store."""
+    import pytest
+
+    from networkframe_spark.functions.dedup import build_minhash_index
+    from networkframe_spark.functions.similarity import (
+        build_ivf_sq_index,
+        ivf_index_add,
+        lsh_index_add,
+    )
+    from networkframe_spark.sources import read_embeddings, read_table
+
+    emb = read_embeddings(spark, SF_DIR).filter("vec_id < 40")
+    sq = str(tmp_path / "sq")
+    build_ivf_sq_index(emb.filter("vec_id < 30"), sq, n_lists=2, n_iter=1)
+    with pytest.raises(ValueError, match="ivf_sq.*ivf|ivf.*ivf_sq"):
+        ivf_index_add(spark, sq, emb.filter("vec_id >= 30"))
+    assert spark.read.parquet(sq + "/cells").count() == 30
+
+    docs = read_table(spark, SF_DIR, "documents")
+    mh = str(tmp_path / "mh")
+    build_minhash_index(docs.filter("doc_id < 30"), mh, n_perm=4, bands=2)
+    with pytest.raises(ValueError, match="minhash.*lsh|lsh.*minhash"):
+        lsh_index_add(spark, mh, emb)
+    assert spark.read.parquet(mh + "/mbands").count() == 2 * 30
 
 
 def test_index_rebuild_retrains_with_stored_params(spark, tmp_path):

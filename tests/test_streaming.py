@@ -1000,50 +1000,89 @@ def test_asof_join_fractional_tolerance(spark):
     assert out["far"] is None  # 600 ms > 500 ms tolerance
 
 
-def test_ivf_index_add_retry_idempotent(spark, tmp_path):
-    """Restart semantics for incremental index maintenance: an add
+@pytest.mark.parametrize("family", ["ivf", "ivf_sq", "ivfpq", "lsh", "minhash"])
+def test_index_add_retry_idempotent(spark, tmp_path, family):
+    """Restart semantics for incremental index maintenance, for every
+    family whose add runs the shared append-once guard: an add
     replayed after a (simulated) crash converges — re-appending the
     same batch inserts zero rows and search results are unchanged,
     the same at-least-once contract stream_upsert_parquet proves for
     its table."""
-    from networkframe_spark.functions.similarity import (
-        build_ivf_index,
-        ivf_index_add,
-        ivf_index_search,
-    )
+    import networkframe_spark.functions.dedup as dd
+    import networkframe_spark.functions.similarity as sim
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.filter("vec_id % 3 = 0")
-    delta = emb.filter("vec_id % 3 = 1")
-    path = str(tmp_path / "idx")
-    build_ivf_index(base, path, n_lists=4, n_iter=1, mode="overwrite")
+    if family == "minhash":
+        # the documents table of the same fixture directory
+        docs_path = emb.inputFiles()[0].replace("embeddings", "documents")
+        corpus = spark.read.parquet(docs_path).filter("doc_id < 120")
+        rid, sub, copies = "doc_id", "mbands", 2  # one row per band
 
-    ivf_index_add(spark, path, delta)
-    n_after_first = spark.read.parquet(path + "/cells").count()
-    assert n_after_first == base.count() + delta.count()
-    qs = emb.filter("vec_id < 5")
-    first = sorted(
-        map(tuple, ivf_index_search(spark, path, qs, k=4, n_probe=4).collect())
-    )
+        def build(df, p):
+            dd.build_minhash_index(df, p, n_perm=8, bands=2, n_kmod=8)
+
+        add = dd.minhash_index_add
+        search = lambda p: dd.minhash_index_duplicates(
+            spark, p, threshold=0.25
+        )
+    else:
+        corpus = emb.filter("vec_id < 120")
+        rid, sub, copies = "vec_id", "cells", 1
+        qs = corpus.filter("vec_id < 5")
+        if family == "ivf":
+            build = lambda df, p: sim.build_ivf_index(df, p, n_lists=4, n_iter=1)
+            add = sim.ivf_index_add
+            search = lambda p: sim.ivf_index_search(spark, p, qs, k=4)
+        elif family == "ivf_sq":
+            build = lambda df, p: sim.build_ivf_sq_index(
+                df, p, n_lists=4, n_iter=1
+            )
+            add = sim.ivf_sq_index_add
+            search = lambda p: sim.ivf_sq_search(spark, p, qs, k=4)
+        elif family == "ivfpq":
+            sub = "codes"
+            build = lambda df, p: sim.build_ivfpq_index(
+                df, p, n_lists=4, m=4, k_codes=8, n_iter=1
+            )
+            add = sim.ivfpq_index_add
+            search = lambda p: sim.ivfpq_search(
+                spark, p, qs, k=4, query_id_col="vec_id"
+            )
+        else:
+            sub, copies = "bands", 2  # one row per table
+            build = lambda df, p: sim.build_lsh_index(
+                df, p, n_planes=4, n_tables=2
+            )
+            add = sim.lsh_index_add
+            search = lambda p: sim.lsh_index_search(
+                spark, p, qs, k=4, n_probe_bits=1
+            )
+
+    base = corpus.filter(f"{rid} % 3 = 0")
+    delta = corpus.filter(f"{rid} % 3 = 1")
+    path = str(tmp_path / "idx")
+    build(base, path)
+    n_rows = lambda: spark.read.parquet(f"{path}/{sub}").count()
+
+    add(spark, path, delta)
+    n_after_first = n_rows()
+    assert n_after_first == copies * (base.count() + delta.count())
+    first = sorted(map(tuple, search(path).collect()))
 
     # full retry of the committed batch: a no-op
-    ivf_index_add(spark, path, delta)
-    assert spark.read.parquet(path + "/cells").count() == n_after_first
-    again = sorted(
-        map(tuple, ivf_index_search(spark, path, qs, k=4, n_probe=4).collect())
-    )
-    assert again == first
+    add(spark, path, delta)
+    assert n_rows() == n_after_first
+    assert sorted(map(tuple, search(path).collect())) == first
 
     # partial-commit retry: half the batch already present (as if the
     # append died between partition directories) — the replay tops the
     # index up to exactly-once content
-    delta2 = emb.filter("vec_id % 3 = 2")
-    half = delta2.filter("vec_id % 2 = 0")
-    ivf_index_add(spark, path, half)
-    ivf_index_add(spark, path, delta2)  # replay of the "full" batch
-    cells = spark.read.parquet(path + "/cells")
-    assert cells.count() == emb.count()
-    assert cells.select("vec_id").distinct().count() == emb.count()
+    delta2 = corpus.filter(f"{rid} % 3 = 2")
+    add(spark, path, delta2.filter(f"{rid} % 2 = 0"))
+    add(spark, path, delta2)  # replay of the "full" batch
+    stored = spark.read.parquet(f"{path}/{sub}")
+    assert stored.count() == copies * corpus.count()
+    assert stored.select(rid).distinct().count() == corpus.count()
 
 
 def test_stream_index_add_lsh_equals_rebuild(spark, tmp_path):
@@ -1076,7 +1115,7 @@ def test_stream_index_add_lsh_equals_rebuild(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_index_add(stream, inc, ckpt, index="lsh")
+    q = stream_index_add(stream, inc, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -1128,7 +1167,7 @@ def test_stream_index_add_ivf_sq_then_compact(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_index_add(stream, inc, ckpt, index="ivf_sq")
+    q = stream_index_add(stream, inc, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -1205,7 +1244,7 @@ def test_stream_index_add_minhash_equals_rebuild(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_index_add(stream, inc, ckpt, index="minhash")
+    q = stream_index_add(stream, inc, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -1248,11 +1287,11 @@ def test_stream_index_add_text_equals_rebuild(spark, tmp_path):
     membership anti-join), so meta's exact-integer corpus stats
     converge to the rebuild's."""
     from networkframe_spark.functions.search import (
-        _text_meta,
         build_text_index,
         text_index_search,
     )
     from networkframe_spark.sources import read_table
+    from networkframe_spark.store import read_manifest
     from networkframe_spark.streaming.stream import stream_index_add
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents")
@@ -1271,13 +1310,13 @@ def test_stream_index_add_text_equals_rebuild(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_index_add(stream, inc, ckpt, index="text")
+    q = stream_index_add(stream, inc, ckpt)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     build_text_index(docs, full, n_kmod=16)
-    assert _text_meta(spark, inc) == _text_meta(spark, full)
+    assert read_manifest(spark, inc, "meta") == read_manifest(spark, full, "meta")
     terms = ["spark", "hash", "vector"]
     srch = lambda p: sorted(
         map(tuple, text_index_search(spark, p, terms, k=10).collect())
@@ -1310,7 +1349,7 @@ def test_stream_index_add_maintain_cadence(spark, tmp_path):
         .parquet(src)
     )
     q = stream_index_add(
-        stream, inc, ckpt, index="text",
+        stream, inc, ckpt,
         maintain_every=2, max_files_per_partition=2,
     )
     try:
