@@ -7,7 +7,7 @@ is a driver-side Python loop issuing DataFrame jobs — the classic
 iterative-Spark pattern: cache the loop-carried table, localCheckpoint
 periodically to truncate lineage, check convergence with a cheap action.
 
-Three shared kernels carry the loops and joins that several operators
+Four shared kernels carry the loops and joins that several operators
 need:
 
 - :func:`_bfs_waves` — the distributed BFS frontier loop, its frontier
@@ -27,6 +27,12 @@ need:
   (``count`` of a shrinking set), and by :func:`core_numbers` and the
   shuffled rounds of :func:`_weak_component_min_labels`
   (:func:`_fingerprint` of the state).
+- :func:`_move_round` and :func:`_q_scaled` — one synchronous
+  local-move round with the exact integer gain test, and the exact
+  scaled-modularity accept of several labelings in one collect.  Used
+  by :func:`modularity_refine` and :func:`_louvain_phase`, whose
+  :func:`_level_ladder` runs the phase / refine / aggregate levels of
+  :func:`louvain_communities` and :func:`leiden_communities`.
 
 Scale notes (100 TB):
 - Loop-carried state is one row per node (labels, frontiers) — small
@@ -2989,6 +2995,177 @@ def community_quality(
     )
 
 
+# r16 NEGATIVE RESULT (interleaved A/B at sf0.1): a fused-kvc accept
+# test — checkpoint one (node, neighbor-community) weight aggregate per
+# round and derive BOTH the internal-pair weight (sum of matched __k,
+# bit-identical to the double decoration in _q_scaled) and the next
+# round's move candidates from it — measured +7% on modularity_refine,
+# +23% on louvain_communities, +16% on leiden.  At this scale the label
+# table BROADCASTS, so the two decorations are map-side-only scans of
+# the pair table, while the fused form pays a real aggregate exchange +
+# checkpoint write per accept.  The fusion only pays once labels exceed
+# the broadcast threshold (the 100 TB case); local bench keeps the
+# broadcast shape.
+def _q_scaled(wedges: DataFrame, deg: DataFrame, m2: int, labs: dict) -> dict:
+    """Exact Q·4m² = 2m·(ordered internal weight) − Σ vol_c² for each
+    ``(id, community)`` labeling in ``labs`` (tag -> labels), over the
+    weighted ordered-pair table ``wedges`` ``(source, target, w)`` with
+    per-node degrees ``deg`` ``(id, __deg)``.
+
+    All legs run in ONE collect (r16 fused one labeling's two legs into
+    one job; r17 extends the union across labelings so a phase-initial Q
+    rides round 1's accept collect, and fuses every labeling's internal
+    sum onto ONE decorated pass over the pair table — the edge-scale
+    term — instead of one full scan per labeling).  A labeling's
+    internal weight is the null-skipping sum of label-matched ``w``,
+    identical to the old filter+sum as a long before the decimal cast.
+    """
+    from decimal import Decimal
+
+    tags = list(labs)
+    dec_df = wedges
+    for tag in tags:
+        lab = labs[tag]
+        dec_df = dec_df.join(
+            lab.select(
+                F.col("id").alias("source"),
+                F.col("community").alias("__la_" + tag),
+            ),
+            on="source",
+        ).join(
+            lab.select(
+                F.col("id").alias("target"),
+                F.col("community").alias("__lb_" + tag),
+            ),
+            on="target",
+        )
+    internal_row = dec_df.agg(
+        *[
+            F.sum(
+                F.when(
+                    F.col("__la_" + tag) == F.col("__lb_" + tag),
+                    F.col("w"),
+                )
+            )
+            .cast("decimal(38,0)")
+            .alias("i_" + tag)
+            for tag in tags
+        ]
+    )
+    kv = []
+    for tag in tags:
+        kv += [F.lit("i:" + tag), F.col("i_" + tag)]
+    legs = internal_row.select(F.explode(F.create_map(*kv)).alias("k", "v"))
+    for tag in tags:
+        legs = legs.unionByName(
+            labs[tag]
+            .join(deg, on="id", how="left")
+            .groupBy("community")
+            .agg(F.sum(F.coalesce("__deg", F.lit(0))).alias("__vol"))
+            .agg(
+                F.sum(
+                    F.col("__vol").cast("decimal(38,0)") * F.col("__vol")
+                ).alias("v")
+            )
+            .select(F.lit("v:" + tag).alias("k"), "v")
+        )
+    got = {r["k"]: r["v"] for r in legs.collect()}
+    return {
+        tag: Decimal(m2) * Decimal(int(got.get("i:" + tag) or 0))
+        - (got.get("v:" + tag) or Decimal(0))
+        for tag in labs
+    }
+
+
+def _move_round(
+    wedges: DataFrame, deg: DataFrame, cur: DataFrame, m2: int, allowed
+) -> DataFrame:
+    """One synchronous local-move round over the weighted ordered-pair
+    table ``wedges`` ``(source, target, w)``: every node of ``cur``
+    ``(id, community)`` moves to the neighboring community ``__nc`` with
+    the best exact integer gain ``2m·(k_vb − k_va) − deg_v·(vol_b −
+    vol_a + deg_v) > 0``, among the candidates the ``allowed`` predicate
+    (over ``__nc`` and ``community``) admits; ties break to the smallest
+    community id.  Self rows (source == target) count toward degree and
+    volume but are never move candidates.  Returns the next labels,
+    NOT checkpointed — the caller owns checkpoint and accept.
+    """
+    from pyspark.sql import Window
+
+    vol = (
+        cur.join(deg, on="id", how="left")
+        .groupBy("community")
+        .agg(F.sum(F.coalesce("__deg", F.lit(0))).alias("__vol"))
+    )
+    # k_vc: edge weight from each node into each neighboring community
+    kvc = (
+        wedges.filter(F.col("source") != F.col("target"))
+        .join(
+            cur.select(
+                F.col("id").alias("source"), F.col("community").alias("__nc")
+            ),
+            on="source",
+        )
+        .groupBy(F.col("target").alias("id"), "__nc")
+        .agg(F.sum("w").alias("__k"))
+    )
+    # r17 (measured by job count, bit-identical moves): the old shape
+    # joined kvc TWICE — once on (id, community) for the own-community
+    # weight __ka, once on id for the candidates — costing kvc two
+    # different exchanges.  One window over id derives __ka on the SAME
+    # kvc rows (at most one row per (id, __nc), so max-of-the-match IS
+    # the value), the window's exchange doubles as the moves groupBy's
+    # partitioning, and at scale kvc crosses the network once instead
+    # of twice.  18 -> 15 jobs on the bench graph; exceptAll-verified
+    # equal.
+    wid = Window.partitionBy("id")
+    enriched = (
+        kvc.join(cur, on="id")
+        .join(deg, on="id", how="left")
+        .select(
+            "id",
+            "community",
+            "__nc",
+            "__k",
+            F.coalesce("__deg", F.lit(0)).alias("__deg"),
+        )
+        .withColumn(
+            "__ka",
+            F.coalesce(
+                F.max(
+                    F.when(F.col("__nc") == F.col("community"), F.col("__k"))
+                ).over(wid),
+                F.lit(0).cast("bigint"),
+            ),
+        )
+    )
+    cand = (
+        enriched.filter(allowed)
+        .join(vol.withColumnRenamed("__vol", "__vola"), on="community")
+        .join(
+            vol.select(
+                F.col("community").alias("__nc"),
+                F.col("__vol").alias("__volb"),
+            ),
+            on="__nc",
+        )
+        .withColumn(
+            "__gain",
+            F.lit(m2).cast("decimal(38,0)")
+            * (F.col("__k") - F.col("__ka"))
+            - F.col("__deg").cast("decimal(38,0)")
+            * (F.col("__volb") - F.col("__vola") + F.col("__deg")),
+        )
+        .filter(F.col("__gain") > 0)
+    )
+    moves = cand.groupBy("id").agg(
+        F.expr("min_by(__nc, struct(-__gain, __nc))").alias("__new")
+    )
+    return cur.join(moves, on="id", how="left").select(
+        "id", F.coalesce("__new", "community").alias("community")
+    )
+
+
 def modularity_refine(
     frame,
     labels: DataFrame,
@@ -3037,11 +3214,12 @@ def modularity_refine(
         .filter(F.col("source") != F.col("target"))
         .cache()
     )
-    deg = sym.groupBy(F.col("source").alias("id")).agg(
-        F.count(F.lit(1)).alias("__deg")
+    wedges = sym.select("source", "target", F.lit(1).cast("bigint").alias("w"))
+    deg = wedges.groupBy(F.col("source").alias("id")).agg(
+        F.sum("w").alias("__deg")
     )
-    m2_row = sym.agg(F.count(F.lit(1)).alias("m2")).first()
-    m2 = int(m2_row["m2"])  # = 2m ordered pairs
+    m2_row = wedges.agg(F.sum("w").alias("m2")).first()
+    m2 = int(m2_row["m2"] or 0)  # = 2m ordered pairs
     cur = (
         frame.nodes.select("id")
         .join(labels.select("id", F.col(label_col).alias("community")), on="id", how="left")
@@ -3052,169 +3230,16 @@ def modularity_refine(
         sym.unpersist()
         return cur
 
-    # r16 NEGATIVE RESULT (interleaved A/B at sf0.1): a fused-kvc
-    # accept test — checkpoint one (node, neighbor-community) weight
-    # aggregate per round and derive BOTH the internal-pair count (sum
-    # of matched __k, bit-identical to this double decoration) and the
-    # next round's move candidates from it — measured +7% here, +23%
-    # on louvain_communities, +16% on leiden.  At this scale the label
-    # table BROADCASTS, so the two decorations below are map-side-only
-    # scans of the cached pair table, while the fused form pays a real
-    # aggregate exchange + checkpoint write per accept.  The fusion
-    # only pays once labels exceed the broadcast threshold (the 100 TB
-    # case); local bench keeps the broadcast shape.
-    def _q_scaled_multi(labs: dict) -> dict:
-        """Exact Q·4m² = 2m·(ordered internal pairs) − Σ vol_c² per
-        labeling — all legs in ONE collect (r16 fused one labeling's
-        two legs into one job; r17 extends the union across labelings
-        so the up-front Q of the input labels rides round 1's accept
-        collect, and fuses every labeling's internal count onto ONE
-        decorated pass over the pair table — the edge-scale term —
-        instead of one full scan per labeling.  A labeling's internal
-        pair count is the null-skipping sum of label-matched 1s,
-        identical to the old filter+count as a long before the
-        decimal cast)."""
-        from decimal import Decimal
-
-        tags = list(labs)
-        dec_df = sym
-        for tag in tags:
-            lab = labs[tag]
-            dec_df = dec_df.join(
-                lab.select(
-                    F.col("id").alias("source"),
-                    F.col("community").alias("__la_" + tag),
-                ),
-                on="source",
-            ).join(
-                lab.select(
-                    F.col("id").alias("target"),
-                    F.col("community").alias("__lb_" + tag),
-                ),
-                on="target",
-            )
-        internal_row = dec_df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.col("__la_" + tag) == F.col("__lb_" + tag),
-                        F.lit(1).cast("bigint"),
-                    )
-                )
-                .cast("decimal(38,0)")
-                .alias("i_" + tag)
-                for tag in tags
-            ]
-        )
-        kv = []
-        for tag in tags:
-            kv += [F.lit("i:" + tag), F.col("i_" + tag)]
-        legs = internal_row.select(
-            F.explode(F.create_map(*kv)).alias("k", "v")
-        )
-        for tag in tags:
-            legs = legs.unionByName(
-                labs[tag]
-                .join(deg, on="id", how="left")
-                .groupBy("community")
-                .agg(F.sum(F.coalesce("__deg", F.lit(0))).alias("__vol"))
-                .agg(
-                    F.sum(
-                        F.col("__vol").cast("decimal(38,0)") * F.col("__vol")
-                    ).alias("v")
-                )
-                .select(F.lit("v:" + tag).alias("k"), "v")
-            )
-        got = {r["k"]: r["v"] for r in legs.collect()}
-        return {
-            tag: Decimal(m2) * Decimal(int(got.get("i:" + tag) or 0))
-            - (got.get("v:" + tag) or Decimal(0))
-            for tag in labs
-        }
-
     q_before = None
     for _ in range(n_rounds):
-        vol = (
-            cur.join(deg, on="id", how="left")
-            .groupBy("community")
-            .agg(F.sum(F.coalesce("__deg", F.lit(0))).alias("__vol"))
-        )
-        # k_vc: edges from each node into each neighboring community
-        kvc = (
-            sym.join(
-                cur.select(
-                    F.col("id").alias("source"),
-                    F.col("community").alias("__nc"),
-                ),
-                on="source",
-            )
-            .groupBy(F.col("target").alias("id"), "__nc")
-            .agg(F.count(F.lit(1)).alias("__k"))
-        )
-        # r17: same one-exchange kvc shape as _louvain_phase — __ka by
-        # max-over-id window on the unfiltered kvc rows (at most one
-        # row per (id, __nc), so max-of-the-match IS the value); the
-        # window's exchange doubles as the moves groupBy partitioning,
-        # and kvc crosses the network once instead of twice at scale.
-        from pyspark.sql import Window
-
-        wid = Window.partitionBy("id")
-        enriched = (
-            kvc.join(cur, on="id")
-            .join(deg, on="id", how="left")
-            .select(
-                "id",
-                "community",
-                "__nc",
-                "__k",
-                F.coalesce("__deg", F.lit(0)).alias("__deg"),
-            )
-            .withColumn(
-                "__ka",
-                F.coalesce(
-                    F.max(
-                        F.when(
-                            F.col("__nc") == F.col("community"), F.col("__k")
-                        )
-                    ).over(wid),
-                    F.lit(0).cast("bigint"),
-                ),
-            )
-        )
-        cand = (
-            enriched.filter(F.col("__nc") != F.col("community"))
-            .join(vol.withColumnRenamed("__vol", "__vola"), on="community")
-            .join(
-                vol.select(
-                    F.col("community").alias("__nc"),
-                    F.col("__vol").alias("__volb"),
-                ),
-                on="__nc",
-            )
-            .withColumn(
-                "__gain",
-                F.lit(m2).cast("decimal(38,0)")
-                * (F.col("__k") - F.col("__ka"))
-                - F.col("__deg").cast("decimal(38,0)")
-                * (F.col("__volb") - F.col("__vola") + F.col("__deg")),
-            )
-            .filter(F.col("__gain") > 0)
-        )
-        moves = cand.groupBy("id").agg(
-            F.expr("min_by(__nc, struct(-__gain, __nc))").alias("__new")
-        )
-        nxt = (
-            cur.join(moves, on="id", how="left")
-            .select("id", F.coalesce("__new", "community").alias("community"))
-            .localCheckpoint(eager=True)
-        )
-        if q_before is None:
-            # round 1: the input labels' Q legs ride the same collect —
-            # the moves above never read Q, so deferring it is exact
-            qs = _q_scaled_multi({"a": cur, "b": nxt})
-            q_before, q_after = qs["a"], qs["b"]
-        else:
-            q_after = _q_scaled_multi({"b": nxt})["b"]
+        nxt = _move_round(
+            wedges, deg, cur, m2, F.col("__nc") != F.col("community")
+        ).localCheckpoint(eager=True)
+        # round 1: the input labels' Q legs ride the same collect — the
+        # moves above never read Q, so deferring it is exact
+        labs = {"b": nxt} if q_before is not None else {"a": cur, "b": nxt}
+        qs = _q_scaled(wedges, deg, m2, labs)
+        q_before, q_after = qs.get("a", q_before), qs["b"]
         if q_after < q_before:
             # conflicting synchronous moves lowered Q — reject the
             # round and stop (replaying would repeat the same moves)
@@ -3288,191 +3313,38 @@ def _louvain_phase(
     barrier per phase).  Returns ``(labels, q_final)`` so callers can
     chain the Q.
     """
-    from decimal import Decimal
-
     deg = wedges.groupBy(F.col("source").alias("id")).agg(
         F.sum("w").alias("__deg")
     )
-    cross = wedges.filter(F.col("source") != F.col("target"))
     cur = _cut_lineage(nodes.select("id", F.col("id").alias("community")))
-
-    # r16 NEGATIVE RESULT: the fused-kvc accept test (see the NOTE in
-    # modularity_refine) measured +23% on louvain_communities and +16%
-    # on leiden at sf0.1 — labels broadcast at this scale, so the two
-    # decorations below are map-side scans while the fused aggregate
-    # pays a real exchange + checkpoint write per accept; kept the
-    # broadcast shape for the local bench.
-    def _q_scaled_multi(labs: dict) -> dict:
-        """Exact Q·4m² per labeling — all legs in ONE collect (r16
-        fused the two legs of one labeling into one job; r17 extends
-        the union across labelings so the phase-initial Q rides round
-        1's accept collect, and fuses every labeling's internal sum
-        onto ONE decorated pass over the wedge table — the edge-scale
-        term — instead of one full scan per labeling.  A labeling's
-        internal weight is the null-skipping sum of label-matched w,
-        identical to the old filter+sum as a long before the decimal
-        cast)."""
-        tags = list(labs)
-        dec_df = wedges
-        for tag in tags:
-            lab = labs[tag]
-            dec_df = dec_df.join(
-                lab.select(
-                    F.col("id").alias("source"),
-                    F.col("community").alias("__la_" + tag),
-                ),
-                on="source",
-            ).join(
-                lab.select(
-                    F.col("id").alias("target"),
-                    F.col("community").alias("__lb_" + tag),
-                ),
-                on="target",
-            )
-        internal_row = dec_df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.col("__la_" + tag) == F.col("__lb_" + tag),
-                        F.col("w"),
-                    )
-                )
-                .cast("decimal(38,0)")
-                .alias("i_" + tag)
-                for tag in tags
-            ]
-        )
-        kv = []
-        for tag in tags:
-            kv += [F.lit("i:" + tag), F.col("i_" + tag)]
-        legs = internal_row.select(
-            F.explode(F.create_map(*kv)).alias("k", "v")
-        )
-        for tag in tags:
-            legs = legs.unionByName(
-                labs[tag]
-                .join(deg, on="id", how="left")
-                .groupBy("community")
-                .agg(F.sum(F.coalesce("__deg", F.lit(0))).alias("__vol"))
-                .agg(
-                    F.sum(
-                        F.col("__vol").cast("decimal(38,0)") * F.col("__vol")
-                    ).alias("v")
-                )
-                .select(F.lit("v:" + tag).alias("k"), "v")
-            )
-        got = {r["k"]: r["v"] for r in legs.collect()}
-        return {
-            tag: Decimal(m2) * Decimal(int(got.get("i:" + tag) or 0))
-            - (got.get("v:" + tag) or Decimal(0))
-            for tag in labs
-        }
-
     q_before = q0
     for rnd in range(n_rounds):
-        vol = (
-            cur.join(deg, on="id", how="left")
-            .groupBy("community")
-            .agg(F.sum(F.coalesce("__deg", F.lit(0))).alias("__vol"))
-        )
-        kvc = (
-            cross.join(
-                cur.select(
-                    F.col("id").alias("source"), F.col("community").alias("__nc")
-                ),
-                on="source",
-            )
-            .groupBy(F.col("target").alias("id"), "__nc")
-            .agg(F.sum("w").alias("__k"))
-        )
-        # r17 (measured by job count, bit-identical moves): the old
-        # shape joined kvc TWICE — once on (id, community) for the
-        # own-community weight __ka, once on id for the candidates —
-        # costing kvc two different exchanges.  One window over id
-        # derives __ka on the SAME kvc rows (at most one row per (id,
-        # __nc), so max-of-the-match IS the value), the window's
-        # exchange doubles as the moves groupBy's partitioning, and at
-        # scale kvc crosses the network once instead of twice.
-        # 18 -> 15 jobs on the bench graph; exceptAll-verified equal.
-        from pyspark.sql import Window
-
-        wid = Window.partitionBy("id")
-        enriched = (
-            kvc.join(cur, on="id")
-            .join(deg, on="id", how="left")
-            .select(
-                "id",
-                "community",
-                "__nc",
-                "__k",
-                F.coalesce("__deg", F.lit(0)).alias("__deg"),
-            )
-            .withColumn(
-                "__ka",
-                F.coalesce(
-                    F.max(
-                        F.when(
-                            F.col("__nc") == F.col("community"), F.col("__k")
-                        )
-                    ).over(wid),
-                    F.lit(0).cast("bigint"),
-                ),
-            )
-        )
-        direction = (
+        # ALTERNATE-DIRECTION rounds: even rounds move only toward
+        # strictly SMALLER community ids, odd rounds toward strictly
+        # LARGER.  A free-for-all synchronous round deadlocks at scale
+        # (mutual-best pairs SWAP labels, cyclic label chases cancel, Q
+        # drops, the accept rejects the whole round — measured: the
+        # 5M-edge supergraph phase no-opped entirely), while
+        # one-directional-only merging FREEZES early mistakes (a node
+        # can never leave a smaller-id community it joined by a noise
+        # edge — measured: Q plateaued at 0.39 on a 0.89-planted graph).
+        # Alternating keeps every round swap- and cycle-free (all moves
+        # point one way in id order) yet lets any node escape in the
+        # next round.  (Total-order staging is the standard
+        # parallel-Louvain conflict fix; alternating it restores
+        # bidirectional mobility.)
+        allowed = (
             (F.col("__nc") < F.col("community"))
             if rnd % 2 == 0
             else (F.col("__nc") > F.col("community"))
         )
-        cand = (
-            # ALTERNATE-DIRECTION rounds: even rounds move only toward
-            # strictly SMALLER community ids, odd rounds toward
-            # strictly LARGER.  A free-for-all synchronous round
-            # deadlocks at scale (mutual-best pairs SWAP labels,
-            # cyclic label chases cancel, Q drops, the accept rejects
-            # the whole round — measured: the 5M-edge supergraph phase
-            # no-opped entirely), while one-directional-only merging
-            # FREEZES early mistakes (a node can never leave a
-            # smaller-id community it joined by a noise edge —
-            # measured: Q plateaued at 0.39 on a 0.89-planted graph).
-            # Alternating keeps every round swap- and cycle-free (all
-            # moves point one way in id order) yet lets any node
-            # escape in the next round.  (Total-order staging is the
-            # standard parallel-Louvain conflict fix; alternating it
-            # restores bidirectional mobility.)
-            enriched.filter(direction)
-            .join(vol.withColumnRenamed("__vol", "__vola"), on="community")
-            .join(
-                vol.select(
-                    F.col("community").alias("__nc"),
-                    F.col("__vol").alias("__volb"),
-                ),
-                on="__nc",
-            )
-            .withColumn(
-                "__gain",
-                F.lit(m2).cast("decimal(38,0)")
-                * (F.col("__k") - F.col("__ka"))
-                - F.col("__deg").cast("decimal(38,0)")
-                * (F.col("__volb") - F.col("__vola") + F.col("__deg")),
-            )
-            .filter(F.col("__gain") > 0)
-        )
-        moves = cand.groupBy("id").agg(
-            F.expr("min_by(__nc, struct(-__gain, __nc))").alias("__new")
-        )
-        nxt = _cut_lineage(
-            cur.join(moves, on="id", how="left")
-            .select("id", F.coalesce("__new", "community").alias("community"))
-        )
-        if q_before is None:
-            # round 1 with unknown singleton Q: both labelings' legs in
-            # one union collect — the moves above never read Q, so
-            # deferring the singleton Q into the accept job is exact
-            qs = _q_scaled_multi({"a": cur, "b": nxt})
-            q_before, q_after = qs["a"], qs["b"]
-        else:
-            q_after = _q_scaled_multi({"b": nxt})["b"]
+        nxt = _cut_lineage(_move_round(wedges, deg, cur, m2, allowed))
+        # round 1 with unknown singleton Q: both labelings' legs in one
+        # union collect — the moves above never read Q, so deferring
+        # the singleton Q into the accept job is exact
+        labs = {"b": nxt} if q_before is not None else {"a": cur, "b": nxt}
+        qs = _q_scaled(wedges, deg, m2, labs)
+        q_before, q_after = qs.get("a", q_before), qs["b"]
         # accept-or-revert per round, NO early break: a rejected round
         # is not a fixed point here — the next round's direction flips,
         # so different moves become available (unlike modularity_refine
@@ -3480,6 +3352,115 @@ def _louvain_phase(
         if q_after >= q_before:
             cur, q_before = nxt, q_after
     return cur, q_before
+
+
+def _modularity_pairs(frame, weight_col: str | None) -> DataFrame:
+    """The level-0 weighted ordered-pair table ``(source, target, w)`` of
+    :func:`louvain_communities` and :func:`leiden_communities`: both
+    directions of every non-loop edge, ``w`` the integer weight.
+
+    r16 NEGATIVE RESULT (interleaved A/B at sf0.1): a source-partitioned
+    CACHED pair table (partition_by_source=True + .cache() instead of
+    this unordered-first build + the caller's checkpoint) measured +15%
+    on louvain_communities and +34% on leiden — phase labels broadcast
+    at this scale, so the per-round joins never shuffle the pair side,
+    while the fused build pushes 2x the raw rows through its one
+    exchange and the columnar cache build is extra cost.  The
+    partitioned layout only pays once labels exceed the broadcast
+    threshold (the 100 TB case).
+    """
+    if weight_col is None:
+        return (
+            _edge_pairs(frame, False)
+            .filter(F.col("source") != F.col("target"))
+            .select("source", "target", F.lit(1).cast("bigint").alias("w"))
+        )
+    # weighted mode: parallel-edge-collapsed DECIMAL(28,6) weights
+    # quantized to 1e-6 integer units — every downstream quantity
+    # (degrees, volumes, gains, scaled Q) stays an exact integer,
+    # exactly as in the unweighted path, just in finer units.  Edges
+    # whose collapsed weight is not positive are dropped
+    # (negative-weight modularity is undefined).
+    return (
+        _weighted_pairs(frame, False, weight_col)
+        .filter(F.col("source") != F.col("target"))
+        .select(
+            "source",
+            "target",
+            (F.col("w") * 1_000_000).cast("bigint").alias("w"),
+        )
+        .filter(F.col("w") > 0)
+    )
+
+
+def _level_ladder(
+    frame, n_levels: int, n_rounds: int, weight_col: str | None, refine=None
+) -> DataFrame:
+    """The multilevel pipeline of :func:`louvain_communities` and
+    :func:`leiden_communities`: per level a :func:`_louvain_phase`, then
+    ``refine(labels, wedges)`` if given, the node -> community mapping
+    update, and — unless this was the last level or the level moved no
+    node — aggregation of the pair table into the supergraph
+    (communities become supernodes, inter-community weight becomes edge
+    weight, internal weight becomes self-row weight).  Returns ``(id,
+    community)`` for the original nodes.
+    """
+    wedges = _cut_lineage(_modularity_pairs(frame, weight_col))
+    nodes = frame.nodes.select("id")
+    mapping = nodes.select("id", F.col("id").alias("node"))
+    m2_row = wedges.agg(F.sum("w").alias("m2")).first()
+    m2 = int(m2_row["m2"] or 0)
+    if m2 == 0:
+        return mapping.select("id", F.col("node").alias("community"))
+
+    q_level = None
+    for level in range(int(n_levels)):
+        # r17: thread the accepted Q through the levels — aggregation
+        # preserves Q exactly (same integer internal weight and
+        # volumes), so the next phase's singleton Q needs no collect
+        labels, q_level = _louvain_phase(
+            nodes, wedges, m2, n_rounds, q0=q_level
+        )
+        if refine is not None:
+            # refinement changes the partition, so the aggregated
+            # graph's singleton Q is NOT the phase's accepted Q — the
+            # next phase merges its singleton-Q legs into round 1's
+            # accept collect instead
+            labels, q_level = _cut_lineage(refine(labels, wedges)), None
+        mapping = _cut_lineage(
+            mapping.join(labels.withColumnRenamed("id", "node"), on="node")
+            .select("id", F.col("community").alias("node"))
+        )
+        # last level first: the moved count is read only when another
+        # level would follow
+        if level == int(n_levels) - 1:
+            break
+        if labels.filter(F.col("id") != F.col("community")).count() == 0:
+            break
+        wedges = (
+            wedges.join(
+                labels.select(
+                    F.col("id").alias("source"), F.col("community").alias("__ca")
+                ),
+                on="source",
+            )
+            .join(
+                labels.select(
+                    F.col("id").alias("target"), F.col("community").alias("__cb")
+                ),
+                on="target",
+            )
+            .groupBy(
+                F.col("__ca").alias("source"), F.col("__cb").alias("target")
+            )
+            .agg(F.sum("w").alias("w"))
+        )
+        wedges = _cut_lineage(wedges)
+        # lazy on purpose (r17): the phase checkpoints its singleton
+        # state immediately, so an eager checkpoint here was a whole
+        # extra driver barrier for a one-scan distinct
+        nodes = labels.select(F.col("community").alias("id")).distinct()
+    return mapping.select("id", F.col("node").alias("community"))
 
 
 def louvain_communities(
@@ -3519,85 +3500,7 @@ def louvain_communities(
     """
     if n_levels < 1 or n_rounds < 1:
         raise ValueError("louvain_communities: n_levels and n_rounds >= 1")
-    # r16 NEGATIVE RESULT (interleaved A/B at sf0.1): a source-
-    # partitioned CACHED level-0 pair table (partition_by_source=True
-    # + .cache() instead of this unordered-first build + checkpoint)
-    # measured +15% here and +34% on leiden — phase labels broadcast
-    # at this scale, so the per-round joins never shuffle the pair
-    # side, while the fused build pushes 2x the raw rows through its
-    # one exchange and the columnar cache build is extra cost.  The
-    # partitioned layout only pays once labels exceed the broadcast
-    # threshold (the 100 TB case).
-    if weight_col is None:
-        pairs = (
-            _edge_pairs(frame, False)
-            .filter(F.col("source") != F.col("target"))
-            .select("source", "target", F.lit(1).cast("bigint").alias("w"))
-        )
-    else:
-        # weighted mode: parallel-edge-collapsed DECIMAL(28,6) weights
-        # quantized to 1e-6 integer units — every downstream quantity
-        # (degrees, volumes, gains, scaled Q) stays an exact integer,
-        # exactly as in the unweighted path, just in finer units.
-        # Edges whose collapsed weight is not positive are dropped
-        # (negative-weight modularity is undefined).
-        pairs = (
-            _weighted_pairs(frame, False, weight_col)
-            .filter(F.col("source") != F.col("target"))
-            .select(
-                "source",
-                "target",
-                (F.col("w") * 1_000_000).cast("bigint").alias("w"),
-            )
-            .filter(F.col("w") > 0)
-        )
-    wedges = _cut_lineage(pairs)
-    nodes = frame.nodes.select("id")
-    mapping = nodes.select("id", F.col("id").alias("node"))
-    m2_row = wedges.agg(F.sum("w").alias("m2")).first()
-    m2 = int(m2_row["m2"] or 0)
-    if m2 == 0:
-        return mapping.select("id", F.col("node").alias("community"))
-
-    q_level = None
-    for level in range(int(n_levels)):
-        # r17: thread the accepted Q through the levels — aggregation
-        # preserves Q exactly (same integer internal weight and
-        # volumes), so the next phase's singleton Q needs no collect
-        labels, q_level = _louvain_phase(
-            nodes, wedges, m2, n_rounds, q0=q_level
-        )
-        moved = labels.filter(F.col("id") != F.col("community")).count()
-        mapping = _cut_lineage(
-            mapping.join(labels.withColumnRenamed("id", "node"), on="node")
-            .select("id", F.col("community").alias("node"))
-        )
-        if moved == 0 or level == int(n_levels) - 1:
-            break
-        wedges = (
-            wedges.join(
-                labels.select(
-                    F.col("id").alias("source"), F.col("community").alias("__ca")
-                ),
-                on="source",
-            )
-            .join(
-                labels.select(
-                    F.col("id").alias("target"), F.col("community").alias("__cb")
-                ),
-                on="target",
-            )
-            .groupBy(
-                F.col("__ca").alias("source"), F.col("__cb").alias("target")
-            )
-            .agg(F.sum("w").alias("w"))
-        )
-        wedges = _cut_lineage(wedges)
-        # lazy on purpose (r17): the phase checkpoints its singleton
-        # state immediately, so an eager checkpoint here was a whole
-        # extra driver barrier for a one-scan distinct
-        nodes = labels.select(F.col("community").alias("id")).distinct()
-    return mapping.select("id", F.col("node").alias("community"))
+    return _level_ladder(frame, n_levels, n_rounds, weight_col)
 
 
 def _refine_connected(labels: DataFrame, wedges: DataFrame) -> DataFrame:
@@ -3691,72 +3594,9 @@ def leiden_communities(
     """
     if n_levels < 1 or n_rounds < 1:
         raise ValueError("leiden_communities: n_levels and n_rounds >= 1")
-    # r16 NEGATIVE RESULT: the source-partitioned cached pair table
-    # measured +34% here (see the NOTE in louvain_communities) — the
-    # unordered-first build + checkpoint stays.
-    if weight_col is None:
-        pairs = (
-            _edge_pairs(frame, False)
-            .filter(F.col("source") != F.col("target"))
-            .select("source", "target", F.lit(1).cast("bigint").alias("w"))
-        )
-    else:
-        pairs = (
-            _weighted_pairs(frame, False, weight_col)
-            .filter(F.col("source") != F.col("target"))
-            .select(
-                "source",
-                "target",
-                (F.col("w") * 1_000_000).cast("bigint").alias("w"),
-            )
-            .filter(F.col("w") > 0)
-        )
-    wedges = _cut_lineage(pairs)
-    nodes = frame.nodes.select("id")
-    mapping = nodes.select("id", F.col("id").alias("node"))
-    m2_row = wedges.agg(F.sum("w").alias("m2")).first()
-    m2 = int(m2_row["m2"] or 0)
-    if m2 == 0:
-        return mapping.select("id", F.col("node").alias("community"))
-
-    for level in range(int(n_levels)):
-        # q0 stays None here: refinement below changes the partition,
-        # so the aggregated graph's singleton Q is NOT the phase's
-        # accepted Q — each level's phase merges its singleton-Q legs
-        # into round 1's accept collect instead (see _louvain_phase)
-        phase, _ = _louvain_phase(nodes, wedges, m2, n_rounds)
-        labels = _cut_lineage(_refine_connected(phase, wedges))
-        moved = labels.filter(F.col("id") != F.col("community")).count()
-        mapping = _cut_lineage(
-            mapping.join(labels.withColumnRenamed("id", "node"), on="node")
-            .select("id", F.col("community").alias("node"))
-        )
-        if moved == 0 or level == int(n_levels) - 1:
-            break
-        wedges = (
-            wedges.join(
-                labels.select(
-                    F.col("id").alias("source"), F.col("community").alias("__ca")
-                ),
-                on="source",
-            )
-            .join(
-                labels.select(
-                    F.col("id").alias("target"), F.col("community").alias("__cb")
-                ),
-                on="target",
-            )
-            .groupBy(
-                F.col("__ca").alias("source"), F.col("__cb").alias("target")
-            )
-            .agg(F.sum("w").alias("w"))
-        )
-        wedges = _cut_lineage(wedges)
-        # lazy on purpose (r17): the phase checkpoints its singleton
-        # state immediately, so an eager checkpoint here was a whole
-        # extra driver barrier for a one-scan distinct
-        nodes = labels.select(F.col("community").alias("id")).distinct()
-    return mapping.select("id", F.col("node").alias("community"))
+    return _level_ladder(
+        frame, n_levels, n_rounds, weight_col, refine=_refine_connected
+    )
 
 
 def neighbor_sample(

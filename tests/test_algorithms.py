@@ -1320,6 +1320,8 @@ def test_modularity_refine_never_decreases_q(spark):
     # fixed point: refining the refinement changes nothing further
     again = modularity_refine(nf, ref, n_rounds=1)
     assert ref.exceptAll(again).isEmpty() and again.exceptAll(ref).isEmpty()
+    with pytest.raises(ValueError):
+        modularity_refine(nf, bad, n_rounds=0)
 
 
 def test_pagerank_personalized_batch_equals_per_seed_calls(spark):
@@ -1430,25 +1432,27 @@ def test_louvain_isolated_nodes_stay_singleton(spark):
     assert out[0] == out[1] == out[2]
 
 
-def test_louvain_deterministic_and_validates(spark):
-    import pytest as _pytest
-
+@pytest.mark.parametrize("algo", ["louvain_communities", "leiden_communities"])
+def test_louvain_deterministic_and_validates(spark, algo):
     nf = _three_clique_frame(spark)
-    a = sorted(map(tuple, nf.louvain_communities(2, 2).collect()))
-    b = sorted(map(tuple, nf.louvain_communities(2, 2).collect()))
+    run = getattr(nf, algo)
+    a = sorted(map(tuple, run(2, 2).collect()))
+    b = sorted(map(tuple, run(2, 2).collect()))
     assert a == b
-    with _pytest.raises(ValueError):
-        nf.louvain_communities(n_levels=0)
-    with _pytest.raises(ValueError):
-        nf.louvain_communities(n_rounds=0)
+    with pytest.raises(ValueError):
+        run(n_levels=0)
+    with pytest.raises(ValueError):
+        run(n_rounds=0)
 
 
-def test_louvain_weighted_weights_steer_merges(spark):
+@pytest.mark.parametrize("algo", ["louvain_communities", "leiden_communities"])
+def test_louvain_weighted_weights_steer_merges(spark, algo):
     """Two heavy triangles {0,1,2} and {3,4,5} (weight 10) joined by a
     light complete bipartite mesh (weight 0.1): by edge COUNT the
     graph is near-complete (unweighted Louvain sees little structure),
-    but by weight the triangles dominate — weighted Louvain must
-    recover exactly the two heavy cliques."""
+    but by weight the triangles dominate — weighted Louvain (and Leiden,
+    which runs the same levels) must recover exactly the two heavy
+    cliques."""
     from networkframe_spark import NetworkFrame
 
     heavy = [(0, 1), (0, 2), (1, 2), (3, 4), (3, 5), (4, 5)]
@@ -1460,7 +1464,7 @@ def test_louvain_weighted_weights_steer_merges(spark):
     )
     nf = NetworkFrame(nodes, edges)
     wgt = {r["id"]: r["community"]
-           for r in nf.louvain_communities(2, 4, weight_col="weight").collect()}
+           for r in getattr(nf, algo)(2, 4, weight_col="weight").collect()}
     assert wgt[0] == wgt[1] == wgt[2]
     assert wgt[3] == wgt[4] == wgt[5]
     assert wgt[0] != wgt[3]

@@ -9,8 +9,8 @@ Run it from a worktree checked out at an older commit to capture
 `before` plans.  Note: iterative queries execute their rounds during
 construction (eager checkpoints), so their full-query plan shows the
 final assembly over checkpointed waves — the per-round exchange
-evidence lives in the hand-built subplan pairs
-(tools/capture_r16_*.py).
+evidence lives in the hand-built subplan pairs recorded under
+plans/r16/ and plans/r17/ (the scripts that built them were removed).
 """
 
 from __future__ import annotations

@@ -16,6 +16,13 @@ Usage:
 ROUND-CLOSING RULE: --check must pass, OR every changed fingerprint is
 explained in SCALE.md (an intentional plan improvement is exactly what
 should change a fingerprint).
+
+The session is pinned to ``local[32]`` with 32 shuffle partitions, the
+size the committed file was written at: some plans carry a partition
+count sized from the session's parallelism (e.g. the ``coalesce`` of
+``weak_components``), so a session sized from the host's cores would
+report host-dependent changes.  The pinned session only runs threads;
+it does not need 32 cores.
 """
 
 from __future__ import annotations
@@ -30,6 +37,8 @@ sys.path.insert(0, "/root/repo")
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(REPO, "PLAN_FINGERPRINTS.json")
+#: session parallelism the committed fingerprints were written at
+CORES = 32
 
 _STRIP = [
     # expression ids: l_orderkey#123L, sum(x#4)#99 -> #
@@ -97,7 +106,9 @@ def build(sf_dir: str) -> dict:
 
     from networkframe_spark.session import get_spark
 
-    spark = get_spark("plan_fingerprint")
+    spark = get_spark(
+        "plan_fingerprint", master=f"local[{CORES}]", shuffle_partitions=CORES
+    )
     qs = entry_mod.queries()
     fps: dict[str, dict] = {}
     for name in COMMON18 + HEAVY10:
