@@ -7,8 +7,7 @@ is a driver-side Python loop issuing DataFrame jobs — the classic
 iterative-Spark pattern: cache the loop-carried table, localCheckpoint
 periodically to truncate lineage, check convergence with a cheap action.
 
-Four shared kernels carry the loops and joins that several operators
-need:
+Shared kernels carry the loops and joins that several operators need:
 
 - :func:`_bfs_waves` — the distributed BFS frontier loop, its frontier
   keyed by ``keys + ["id"]`` so many BFS trees advance together.  Used
@@ -22,17 +21,29 @@ need:
   with per-edge counts from :func:`_edge_support`.  Used by
   :func:`triangle_counts` (and :func:`local_clustering`),
   :func:`k_truss` and :func:`edge_jaccard`.
-- :func:`_fixpoint` — step, lazily checkpoint, and stop when a
-  signature action repeats.  Used by :func:`k_core` and :func:`k_truss`
-  (``count`` of a shrinking set), and by :func:`core_numbers` and the
-  shuffled rounds of :func:`_weak_component_min_labels`
-  (:func:`_fingerprint` of the state).
+- :func:`_fixpoint` — the driver of every single-state loop: step,
+  lazily checkpoint, and stop when a signature action repeats
+  (``count`` in :func:`k_core` and :func:`k_truss`; :func:`_fingerprint`
+  in :func:`core_numbers`, :func:`_weak_component_min_labels`,
+  :func:`shortest_paths`, :func:`topological_levels` and the SCC
+  :func:`_max_label_fixpoint`), or run fixed rounds with no action
+  (:func:`pagerank`, its batch and :func:`label_propagation`).
+- :func:`_relax` — one min/max relax round, for :func:`shortest_paths`
+  and :func:`topological_levels`.
+- :func:`_rank_shares` and :func:`_rank_round` — the exact share table
+  and one PageRank round (one join, one aggregate), for
+  :func:`pagerank` and :func:`pagerank_personalized_batch`.
 - :func:`_move_round` and :func:`_q_scaled` — one synchronous
   local-move round with the exact integer gain test, and the exact
   scaled-modularity accept of several labelings in one collect.  Used
   by :func:`modularity_refine` and :func:`_louvain_phase`, whose
   :func:`_level_ladder` runs the phase / refine / aggregate levels of
   :func:`louvain_communities` and :func:`leiden_communities`.
+
+Not on :func:`_fixpoint`, which carries one table: :func:`hits` and
+:func:`maximal_independent_set` (two state tables), the distributed
+:func:`spectral_scores` loop (two scalars per round), and the walk,
+sample, BFS and betweenness loops (per-step outputs).
 
 Scale notes (100 TB):
 - Loop-carried state is one row per node (labels, frontiers) — small
@@ -188,9 +199,11 @@ def _fixpoint(
     step,
     signature,
     max_rounds: int | None,
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """Apply ``step`` to ``state`` until ``signature`` repeats, or for
-    at most ``max_rounds`` rounds (None = until it repeats).
+    at most ``max_rounds`` rounds (None = until it repeats).  Returns
+    ``(state, converged)``; ``converged`` is True only when the
+    signature repeated.
 
     Each new state is lazily checkpointed, so lineage stays O(1), and
     the one ``signature`` action per round also materializes that
@@ -198,19 +211,25 @@ def _fixpoint(
     signature is the first action, and zero rounds run no action at
     all.  ``signature`` must detect the fixpoint exactly: ``count`` for
     a set that only shrinks, :func:`_fingerprint` for a state that
-    changes values in place.
+    changes values in place.  ``signature=None`` runs exactly
+    ``max_rounds`` fixed rounds and no action: the caller's first
+    action on the result materializes every round's checkpoint.
     """
+    if signature is None:
+        for _ in range(max_rounds):
+            state = step(state).localCheckpoint(eager=False)
+        return state, False
     if max_rounds == 0:
-        return state
+        return state, False
     sig = signature(state)
     rounds = itertools.count() if max_rounds is None else range(max_rounds)
     for _ in rounds:
         state = step(state).localCheckpoint(eager=False)
         nxt = signature(state)
         if nxt == sig:
-            break
+            return state, True
         sig = nxt
-    return state
+    return state, False
 
 
 # ---------------------------------------------------------------------------
@@ -492,7 +511,7 @@ def _weak_component_min_labels(frame) -> DataFrame:
         )
         return _local_contract(pairs)
 
-    mapping = _fixpoint(
+    mapping, _ = _fixpoint(
         mapping,
         _round,
         lambda m: _fingerprint(m, "id", "comp"),
@@ -519,18 +538,18 @@ def _max_label_fixpoint(e: DataFrame, init: DataFrame, label: str) -> DataFrame:
     Branching ancestry that a single pointer chain misses is still
     covered by the per-round neighbor pull, which alone guarantees the
     exact fixpoint; pointers only accelerate.  Labels are monotone
-    non-decreasing, so an xxhash64 fingerprint detects the fixpoint;
-    the loop is uncapped because stopping early would return a silently
-    wrong coloring.
+    non-decreasing, so an xxhash64 fingerprint of ``(id, label)``
+    detects the fixpoint; :func:`_fixpoint` runs uncapped because
+    stopping early would return a silently wrong coloring.
 
-    Per-round cost control: the edge table is hash-partitioned on the
+    Per-round cost control: the state is ONE table ``(id, label,
+    __p)``, so ``label(p(v))`` and ``p(p(v))`` both come from one
+    self-join on ``__p``; the edge table is hash-partitioned on the
     join key ONCE before the loop (localCheckpoint preserves the
-    partitioning, so only the label/pointer tables shuffle each
-    round), and convergence is one :func:`_fingerprint` per round.
-    Unique column names in the self-joins: a same-name self-join here
-    trips Catalyst attribute dedup under localCheckpoint.
+    partitioning, so only the state shuffles each round).  Unique
+    column names in the self-joins: a same-name self-join here trips
+    Catalyst attribute dedup under localCheckpoint.
     """
-    labels = init.localCheckpoint(eager=False)
     # r16 NEGATIVE RESULT (interleaved A/B at sf0.1, via
     # strong_components): .cache() instead of the checkpoint measured
     # +15% — the label table broadcasts at this scale, so the edge
@@ -538,48 +557,44 @@ def _max_label_fixpoint(e: DataFrame, init: DataFrame, label: str) -> DataFrame:
     # small and short-lived (2 fixpoints per SCC peel round), making
     # the columnar cache build pure overhead.
     e = e.repartition("source").localCheckpoint(eager=False)
-    p = (
-        init.select("id")
-        .join(
+    state = (
+        init.join(
             e.groupBy(F.col("target").alias("id")).agg(F.max("source").alias("__p")),
             on="id",
             how="left",
         )
-        .select("id", F.coalesce("__p", F.col("id")).alias("__p"))
+        .select("id", label, F.coalesce("__p", F.col("id")).alias("__p"))
         .localCheckpoint(eager=False)
     )
-    prev_sum = None
-    while True:
-        cur_sum = _fingerprint(labels, "id", label)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-        nbr = e.join(labels.withColumnRenamed("id", "source"), on="source").select(
-            F.col("target").alias("id"), label
+
+    def _round(s: DataFrame) -> DataFrame:
+        nbr = e.join(
+            s.select(F.col("id").alias("source"), label), on="source"
+        ).select(F.col("target").alias("id"), label)
+        merged = (
+            s.select("id", label)
+            .union(nbr)
+            .groupBy("id")
+            .agg(F.max(label).alias(label))
         )
-        merged = labels.union(nbr).groupBy("id").agg(F.max(label).alias(label))
-        # fold in the accumulated max of the 2^k-th ancestor
-        pl = p.join(
-            labels.select(F.col("id").alias("__p"), F.col(label).alias("__p_label")),
-            on="__p",
-        ).select("id", "__p_label")
-        labels = (
-            merged.join(pl, on="id", how="left")
-            .select(
-                "id",
-                F.greatest(
-                    F.col(label), F.coalesce("__p_label", label)
-                ).alias(label),
-            )
-        ).localCheckpoint(eager=False)
-        # pointer jumping: p <- p(p)
-        hop = p.select(F.col("id").alias("__p"), F.col("__p").alias("__pp"))
-        p = (
-            p.join(hop, on="__p", how="left")
-            .select("id", F.coalesce("__pp", "__p").alias("__p"))
-            .localCheckpoint(eager=False)
+        # one self-join on the pointer: the 2^k-th ancestor's
+        # accumulated label, and the pointer jump p <- p(p)
+        anc = s.select(
+            F.col("id").alias("__p"),
+            F.col(label).alias("__p_label"),
+            F.col("__p").alias("__pp"),
         )
-    return labels
+        hop = s.join(anc, on="__p", how="left").select(
+            "id", "__p_label", F.coalesce("__pp", "__p").alias("__p")
+        )
+        return merged.join(hop, on="id", how="left").select(
+            "id",
+            F.greatest(F.col(label), F.coalesce("__p_label", label)).alias(label),
+            "__p",
+        )
+
+    state, _ = _fixpoint(state, _round, lambda s: _fingerprint(s, "id", label), None)
+    return state.select("id", label)
 
 
 _SCC_LOCAL_MAX_EDGES = 2_000_000
@@ -1058,6 +1073,51 @@ def aggregate_over_graph(
 # ---------------------------------------------------------------------------
 # centrality / motifs (scale-extension: beyond the reference's surface)
 # ---------------------------------------------------------------------------
+def _rank_shares(frame, weight_col: str | None) -> DataFrame:
+    """``(source, target, share)``: each edge's fraction of its source's
+    out-weight.  Weights quantize to 6 dp so the DECIMAL(28,6)
+    out-weight normalizer sums them losslessly — the shares are then
+    order-independent even though the division itself is floating."""
+    w = (
+        F.col(weight_col).cast("decimal(28,6)").cast("double")
+        if weight_col
+        else F.lit(1.0)
+    )
+    edges = frame.edges.select("source", "target", w.alias("w"))
+    out_w = edges.groupBy("source").agg(
+        F.sum(F.col("w").cast("decimal(28,6)")).cast("double").alias("w_out")
+    )
+    return edges.join(out_w, on="source").select(
+        "source", "target", (F.col("w") / F.col("w_out")).alias("share")
+    )
+
+
+def _rank_round(
+    e: DataFrame, pr: DataFrame, floor: DataFrame, keys: list, damping: float
+) -> DataFrame:
+    """One PageRank round over ``keys + [id, pr]`` state: contributions
+    ``c`` (1e-18-scaled longs, ``b = 0.0``) and the ``floor`` rows
+    (``c = 0``, ``b`` = restart) meet in ONE aggregate, ``round(sum(b)
+    + d * sum(c) / 1e18, 12)``; ``sum(b)`` is exact, as every ``b`` but
+    the floor row's is 0.0."""
+    return (
+        e.join(pr.withColumnRenamed("id", "source"), on="source")
+        .select(
+            *keys,
+            F.col("target").alias("id"),
+            F.floor(F.col("pr") * F.col("share") * F.lit(1e18)).alias("c"),
+            F.lit(0.0).alias("b"),
+        )
+        .unionByName(floor)
+        .groupBy(*keys, "id")
+        .agg(
+            F.round(
+                F.sum("b") + F.lit(damping) * (F.sum("c") / F.lit(1e18)), 12
+            ).alias("pr")
+        )
+    )
+
+
 def pagerank(
     frame,
     damping: float = 0.85,
@@ -1074,8 +1134,11 @@ def pagerank(
     and the initial distribution concentrate uniformly on the seeds
     instead of all nodes (personalized PageRank / random walk with
     restart — the similarity ranking behind "related nodes" features).
-    The seed set is assumed small (an ``isin`` literal predicate); for
-    large seed sets join a seeds table instead.
+    Duplicates collapse; an empty list raises ``ValueError``; a seed
+    absent from the node table still counts in the ``1/k`` split (its
+    share of the mass is dropped).  The seed
+    set is assumed small (an ``isin`` literal predicate); for large
+    seed sets join a seeds table instead.
 
     Multigraph semantics: parallel edges each contribute (``W_out``
     counts multiplicity); ``weight_col`` switches to weighted shares —
@@ -1086,9 +1149,10 @@ def pagerank(
 
     Scale design: the per-iteration work is one keyed join
     (edges ⋈ ranks on ``source``) and one partial+final hash aggregate
-    on ``target`` — both uniform-shuffle, AQE-skew-splittable; the
-    out-weight table is joined once up front and checkpointed so its
-    lineage isn't replayed per round.
+    on ``target`` (:func:`_rank_round`) — both uniform-shuffle,
+    AQE-skew-splittable; the out-weight table is joined once up front
+    (:func:`_rank_shares`) and checkpointed so its lineage isn't
+    replayed per round.
 
     Determinism without BigDecimal: contributions are floored to
     1e-18-resolution scaled LONGS and summed as integers — exact and
@@ -1101,21 +1165,15 @@ def pagerank(
     bit-reproducible across engines, run-to-run and at any parallelism.
     Per-round lazy checkpoints keep lineage O(1) in ``n_iter``.
     """
+    if personalize is not None:
+        seeds = list(dict.fromkeys(personalize))
+        if not seeds:
+            raise ValueError("pagerank: empty personalize list")
     nodes = frame.nodes.select("id")
     n = len(frame)
     if n == 0:
         return nodes.select("id", F.lit(0.0).alias("pagerank"))
-    w = (
-        # 6-dp quantization so the decimal normalizer sum below is
-        # lossless on these exact values
-        F.col(weight_col).cast("decimal(28,6)").cast("double")
-        if weight_col
-        else F.lit(1.0)
-    )
-    edges = frame.edges.select("source", "target", w.alias("w"))
-    out_w = edges.groupBy("source").agg(
-        F.sum(F.col("w").cast("decimal(28,6)")).cast("double").alias("w_out")
-    )
+    e = _rank_shares(frame, weight_col)
     # r16, measured mode-split (interleaved A/B at sf0.1): in WEIGHTED
     # mode, hash-partitioning the share table on the per-round join
     # key and .cache()-ing it measured −15..−26% across three
@@ -1129,9 +1187,6 @@ def pagerank(
     # per round and the extra repartition + columnar cache build are
     # pure cost; the unweighted path keeps the RDD-scoped checkpoint.
     # Cache is per-query scope; bench/callers clear it.
-    e = edges.join(out_w, on="source").select(
-        "source", "target", (F.col("w") / F.col("w_out")).alias("share")
-    )
     if weight_col is None:
         e = e.localCheckpoint(eager=False)
     else:
@@ -1140,8 +1195,8 @@ def pagerank(
         base_col = F.lit((1.0 - damping) / n)
         init_col = F.lit(1.0 / n)
     else:
-        k = len(personalize)
-        in_seeds = F.col("id").isin(list(personalize))
+        k = len(seeds)
+        in_seeds = F.col("id").isin(seeds)
         base_col = F.when(in_seeds, F.lit((1.0 - damping) / k)).otherwise(
             F.lit(0.0)
         )
@@ -1153,32 +1208,17 @@ def pagerank(
     # groupBy — partial aggregation absorbs it map-side) yields the
     # identical sum for every id while guaranteeing every node a row,
     # so the join (and its node-table re-scan) disappears from all
-    # n_iter rounds; the zero table is checkpointed once up front.
+    # n_iter rounds; the zero table (which also carries each node's
+    # restart base as ``b``) is checkpointed once up front.
     # Relies on the induced contract (edge endpoints ⊆ nodes, frame.py
     # C1): a stray target id would now surface as a row instead of
     # being silently dropped by the old left join.
     zeros = nodes.select(
-        "id", F.lit(0).cast("bigint").alias("c")
+        "id", F.lit(0).cast("bigint").alias("c"), base_col.alias("b")
     ).localCheckpoint(eager=False)
-    for _ in range(n_iter):
-        pr = (
-            e.join(pr.withColumnRenamed("id", "source"), on="source")
-            .select(
-                F.col("target").alias("id"),
-                F.floor(F.col("pr") * F.col("share") * F.lit(1e18)).alias("c"),
-            )
-            .unionByName(zeros)
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-            .select(
-                "id",
-                F.round(
-                    base_col + F.lit(damping) * (F.col("s") / F.lit(1e18)),
-                    12,
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    pr, _ = _fixpoint(
+        pr, lambda pr: _rank_round(e, pr, zeros, [], damping), None, n_iter
+    )
     return pr.select("id", F.round("pr", 6).alias("pagerank"))
 
 
@@ -1422,7 +1462,7 @@ def k_core(frame, k: int, max_iter: int = 50) -> DataFrame:
             keep.withColumnRenamed("id", "nb"), on="nb", how="left_semi"
         )
 
-    nb = _fixpoint(nb, _peel, DataFrame.count, max_iter)
+    nb, _ = _fixpoint(nb, _peel, DataFrame.count, max_iter)
     return (
         nb.groupBy("id")
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -1634,6 +1674,20 @@ def local_clustering(frame) -> DataFrame:
     )
 
 
+def _relax(e: DataFrame, state: DataFrame, col: str, cand, agg) -> DataFrame:
+    """One synchronous relax round over ``(id, col)`` state: ``e ⋈
+    state`` on ``source`` proposes ``cand`` at each ``target``, and one
+    ``agg`` (``F.min`` / ``F.max``) aggregate per ``id`` keeps the
+    better of the proposals and the node's current value."""
+    return (
+        e.join(state.withColumnRenamed("id", "source"), on="source")
+        .select(F.col("target").alias("id"), cand.alias(col))
+        .unionByName(state)
+        .groupBy("id")
+        .agg(agg(col).alias(col))
+    )
+
+
 def _bellman_ford_local(
     frame, e: DataFrame, node_id: Any, max_rounds: int
 ) -> DataFrame:
@@ -1703,10 +1757,11 @@ def shortest_paths(
 
     Scale design: the weighted edge table is cached hash-partitioned
     on ``source``; each round shuffles only the current distance
-    table (node-sized) into one keyed join + one min-aggregate, with
-    lineage cut by a checkpoint per round.  Convergence is one count
-    comparison on the changed set; rounds are bounded by the weighted
-    hop diameter.
+    table (node-sized) into one keyed join + one min-aggregate
+    (:func:`_relax`), with lineage cut by a checkpoint per round.
+    Convergence is one :func:`_fingerprint` of the distance table per
+    round (distances only fall, so a repeated fingerprint is the
+    fixpoint); rounds are bounded by the weighted hop diameter.
     """
     if directed:
         e = frame.edges.select("source", "target", F.col(weight_col).alias("w"))
@@ -1739,36 +1794,14 @@ def shortest_paths(
     dist = (
         _seed_df(frame, node_id)
         .select("id", F.lit(0.0).alias("dist"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    for _ in range(max_rounds):
-        relaxed = (
-            e.join(dist.withColumnRenamed("id", "source"), on="source")
-            .select(
-                F.col("target").alias("id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            .unionByName(dist)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        # converged when no node improved (count is the one action per
-        # round and materializes the checkpoint)
-        n_changed = (
-            relaxed.join(
-                dist.withColumnRenamed("dist", "__old"), on="id", how="left"
-            )
-            .filter(
-                F.col("__old").isNull() | (F.col("dist") < F.col("__old"))
-            )
-            .count()
-        )
-        old = dist
-        dist = relaxed
-        if n_changed == 0:
-            dist = old
-            break
+    dist, _ = _fixpoint(
+        dist,
+        lambda d: _relax(e, d, "dist", F.col("dist") + F.col("w"), F.min),
+        lambda d: _fingerprint(d, "id", "dist"),
+        max_rounds,
+    )
     e.unpersist()
     return dist.select("id", F.round("dist", 6).alias("dist"))
 
@@ -1840,7 +1873,8 @@ def label_propagation(
     labels = frame.nodes.select(
         "id", F.col("id").alias("community")
     ).localCheckpoint(eager=True)
-    for _ in range(n_iter):
+
+    def _round(labels: DataFrame) -> DataFrame:
         votes = (
             pairs.join(
                 labels.select(
@@ -1875,9 +1909,9 @@ def label_propagation(
         # gone too: the lazy checkpoint materializes inside the next
         # round's first job (same compute, one fewer job barrier per
         # round).
-        labels = winner.select(
-            "id", F.col("__new").alias("community")
-        ).localCheckpoint(eager=False)
+        return winner.select("id", F.col("__new").alias("community"))
+
+    labels, _ = _fixpoint(labels, _round, None, n_iter)
     return labels
 
 
@@ -1947,64 +1981,38 @@ def pagerank_personalized_batch(
     Scale design: state is the SPARSE (seed, id, pr) table — k x
     |reachable| rows, grown frontier-wise, never k x N dense; each
     round is one keyed join (edges x state on ``source``, the same
-    uniform shuffle as :func:`pagerank`) and one (seed, target) hash
-    aggregate with map-side partials.  The share table is
-    checkpointed once; round lineage is cut lazily.  Hub seeds cost
-    what their reachable set costs — there is no per-seed driver
-    loop anywhere.
+    uniform shuffle as :func:`pagerank`) and ONE (seed, target) hash
+    aggregate with map-side partials that also folds in the seed's
+    restart base — the shared :func:`_rank_round`.  The share table is
+    cached once; round lineage is cut lazily.  Hub seeds cost what
+    their reachable set costs — there is no per-seed driver loop
+    anywhere.
     """
     if not seeds:
         raise ValueError("pagerank_personalized_batch: empty seed list")
-    nodes = frame.nodes.select("id")
-    w = (
-        F.col(weight_col).cast("decimal(28,6)").cast("double")
-        if weight_col
-        else F.lit(1.0)
-    )
-    edges = frame.edges.select("source", "target", w.alias("w"))
-    out_w = edges.groupBy("source").agg(
-        F.sum(F.col("w").cast("decimal(28,6)")).cast("double").alias("w_out")
-    )
     # r16: source-partitioned cached share table — same rationale as
     # pagerank (the old checkpoint re-exchanged it every round)
-    e = (
-        edges.join(out_w, on="source")
-        .select("source", "target", (F.col("w") / F.col("w_out")).alias("share"))
-        .repartition("source")
-        .cache()
-    )
+    e = _rank_shares(frame, weight_col).repartition("source").cache()
     seed_rows = (
-        nodes.filter(F.col("id").isin(list(set(seeds))))
+        frame.nodes.filter(F.col("id").isin(list(set(seeds))))
         .select(F.col("id").alias("seed"))
         .localCheckpoint(eager=True)
     )
-    base = seed_rows.select(
-        "seed", F.col("seed").alias("id"), F.lit(1.0 - damping).alias("v")
+    floor = seed_rows.select(
+        "seed",
+        F.col("seed").alias("id"),
+        F.lit(0).cast("bigint").alias("c"),
+        F.lit(1.0 - damping).alias("b"),
     )
     pr = seed_rows.select("seed", F.col("seed").alias("id"), F.lit(1.0).alias("pr"))
-    for _ in range(n_iter):
-        contrib = (
-            e.join(pr.withColumnRenamed("id", "source"), on="source")
-            .select(
-                "seed",
-                F.col("target").alias("id"),
-                F.floor(F.col("pr") * F.col("share") * F.lit(1e18)).alias("c"),
-            )
-            .groupBy("seed", "id")
-            .agg(F.sum("c").alias("s"))
-        )
-        pr = (
-            contrib.select(
-                "seed",
-                "id",
-                (F.lit(damping) * (F.col("s") / F.lit(1e18))).alias("v"),
-            )
-            .unionByName(base)
-            .groupBy("seed", "id")
-            .agg(F.round(F.sum("v"), 12).alias("pr"))
-            .filter(F.col("pr") > 0)
-            .localCheckpoint(eager=False)
-        )
+    pr, _ = _fixpoint(
+        pr,
+        lambda pr: _rank_round(e, pr, floor, ["seed"], damping).filter(
+            F.col("pr") > 0
+        ),
+        None,
+        n_iter,
+    )
     return pr.select("seed", "id", F.round("pr", 6).alias("pagerank"))
 
 
@@ -2518,9 +2526,11 @@ def topological_levels(frame, max_rounds: int = 64) -> DataFrame:
     Scale design: the same shape as :func:`shortest_paths` with max
     instead of min — the distinct edge table cached hash-partitioned
     on ``source``, one keyed join + one max-aggregate per round over
-    node-sized state, lineage cut per round, convergence = one count
-    of changed rows.  Rounds are bounded by the DAG depth, not the
-    node count.
+    node-sized state (:func:`_relax`), lineage cut per round,
+    convergence = one :func:`_fingerprint` of the level table per
+    round (levels only rise, so a repeated fingerprint is the
+    fixpoint).  Rounds are bounded by the DAG depth, not the node
+    count.
     """
     e = (
         frame.edges.select("source", "target")
@@ -2534,32 +2544,14 @@ def topological_levels(frame, max_rounds: int = 64) -> DataFrame:
         .cache()
     )
     lv = frame.nodes.select("id", F.lit(0).alias("level")).localCheckpoint(
-        eager=True
+        eager=False
     )
-    converged = False
-    for _ in range(max_rounds):
-        raised = (
-            e.join(lv.withColumnRenamed("id", "source"), on="source")
-            .select(
-                F.col("target").alias("id"),
-                (F.col("level") + 1).alias("level"),
-            )
-            .unionByName(lv)
-            .groupBy("id")
-            .agg(F.max("level").alias("level"))
-            .localCheckpoint(eager=False)
-        )
-        n_changed = (
-            raised.join(
-                lv.withColumnRenamed("level", "__old"), on="id"
-            )
-            .filter(F.col("level") > F.col("__old"))
-            .count()
-        )
-        lv = raised
-        if n_changed == 0:
-            converged = True
-            break
+    lv, converged = _fixpoint(
+        lv,
+        lambda lv: _relax(e, lv, "level", F.col("level") + 1, F.max),
+        lambda lv: _fingerprint(lv, "id", "level"),
+        max_rounds,
+    )
     e.unpersist()
     if not converged:
         raise ValueError(
@@ -3912,7 +3904,7 @@ def k_truss(frame, k: int = 3, max_rounds: int | None = None) -> DataFrame:
             .select("u", "v")
         )
 
-    und = _fixpoint(und, _peel, DataFrame.count, max_rounds)
+    und, _ = _fixpoint(und, _peel, DataFrame.count, max_rounds)
     sup = _support(und)
     return (
         und.join(sup, on=["u", "v"], how="left")
@@ -3989,7 +3981,7 @@ def core_numbers(
             F.max(F.least(F.col("rk"), F.col("nb_est"))).alias("est")
         )
 
-    est = _fixpoint(
+    est, _ = _fixpoint(
         est, _h_index, lambda df: _fingerprint(df, "id", "est"), max_rounds
     )
     return (

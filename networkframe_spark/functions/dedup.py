@@ -514,6 +514,7 @@ def simhash_duplicates(
 #: Target bucket density for the LSH auto-plane policy (rows per
 #: bucket per table).  Measured on the clustered non-replicated 64-dim
 #: fixture at 500k and 2M (tools/bench_planes_sweep.py, SCALE.md r16):
+#: the script has since been removed; the numbers recorded there stand.
 #: wall falls monotonically as density drops across the whole measured
 #: range (488 -> 30 rows: 641s -> 124s at 500k; 2036s -> 382s at 2M)
 #: because the candidate join's pair count is quadratic per bucket,
@@ -717,7 +718,8 @@ def _embedding_duplicates_lsh(
         _validate_dim(df, emb_col, dim, "embedding_duplicates")
     if verify == "auto":
         # A/B'd and REJECTED as a default (SCALE.md r15,
-        # tools/bench_arrow_verify.py): at dims 64/256 on the
+        # tools/bench_arrow_verify.py, since removed; its recorded
+        # numbers stand): at dims 64/256 on the
         # clustered 2M fixture the Arrow verify is a wash at 500k
         # (0.99x / 1.02x) and LOSES 10% at 2M — the banded verify is
         # bounded by the candidate join's shuffle width (2 x dim

@@ -653,7 +653,8 @@ def lsh_top_k(
     # shuffle width: dedup-first moves both embeddings (2 x dim
     # doubles) per candidate through the exchange; score-first moves
     # (query_id, vec_id, cosine).  Measured at 500k x 64-dim with
-    # 1-bit probes (tools/bench_multiprobe_synth.py): 279s -> the
+    # 1-bit probes (tools/bench_multiprobe_synth.py, since removed; its
+    # recorded numbers stand): 279s -> the
     # narrow-shuffle plan, because the band join's output never
     # re-shuffles wide rows.  Norms ride from the banded rows
     # (interpreted HOF folds cost per evaluation — one dot per

