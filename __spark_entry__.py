@@ -2118,7 +2118,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["hybrid_search"] = q_hybrid_search
 
     # hybrid retrieval with the QUANTIZED vector leg (r15 verdict task
-    # 2): vector_index="ivf_sq" rides the int8 IVF store — the 100 TB
+    # 2): the vector leg rides the int8 IVF store — the 100 TB
     # memory answer — instead of LSH.  Exhaustive probe (n_probe =
     # n_lists) makes the leg equal brute L2 over the DEQUANTIZED
     # corpus (the sq_topk oracle arithmetic), so the whole fusion is
@@ -2166,7 +2166,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             k=10,
             lexical_k=5,
             vector_k=3,
-            vector_index="ivf_sq",
             n_probe=8,  # = n_lists: exhaustive, vector leg == sq-brute
             exclude_self=False,
         )

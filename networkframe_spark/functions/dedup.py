@@ -649,7 +649,7 @@ def _embedding_duplicates_exact(
 ) -> DataFrame:
     """All-pairs scoring, guarded: correctness baseline for small /
     pre-blocked inputs only."""
-    from .similarity import dot_expr, norm_expr
+    from .similarity import dot_expr, norm_expr, pair_score
 
     if check and df.limit(exact_max_rows + 1).count() > exact_max_rows:
         raise ValueError(
@@ -677,11 +677,9 @@ def _embedding_duplicates_exact(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cosine",
-            F.round(
-                dot_expr(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                6,
-            ),
+            pair_score(
+                dot_expr(F.col("emb_a"), F.col("emb_b")), "norm_a", "norm_b"
+            )[1],
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -706,6 +704,7 @@ def _embedding_duplicates_lsh(
         _hyperplane_signs,
         dot_expr,
         norm_expr,
+        pair_score,
         signature_col,
     )
 
@@ -837,13 +836,13 @@ def _embedding_duplicates_lsh(
         cand.select(
             "id_a",
             "id_b",
-            F.round(
+            pair_score(
                 # dim resolved above -> codegen unroll (r14: the
                 # interpreted fold was the 2M-corpus verify bottleneck)
-                dot_expr(F.col("emb_a"), F.col("emb_b"), dim)
-                / (F.col("norm_a") * F.col("norm_b")),
-                6,
-            ).alias("cosine"),
+                dot_expr(F.col("emb_a"), F.col("emb_b"), dim),
+                "norm_a",
+                "norm_b",
+            )[1].alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         .groupBy("id_a", "id_b")
@@ -952,9 +951,8 @@ def semantic_dedup(
       6 dp; they agree except for pairs whose true cosine sits within
       float-noise of the threshold.
     """
-    from pyspark.sql import Window
-
-    from .similarity import cosine_expr
+    from .similarity import dot_expr, norm_expr, pair_score
+    from .stats import _top_k
 
     if init not in ("first_ids", "kmeans"):
         raise ValueError("init must be 'first_ids' or 'kmeans'")
@@ -983,6 +981,7 @@ def semantic_dedup(
     if score == "arrow":
         assigned = _assign_cells_arrow(df, seeds, id_col, emb_col)
     else:
+        emb, seed = F.col(emb_col), F.col("__seed_emb")
         scored = df.select(
             F.col(id_col), F.col(emb_col)
         ).crossJoin(F.broadcast(seeds)).select(
@@ -992,21 +991,13 @@ def semantic_dedup(
             # 6-dp rounding before the argmax: engine float-sum order
             # can differ below ~1e-7, and equal-rounded sims tie-break
             # on the seed id identically everywhere — portable
-            F.round(
-                cosine_expr(F.col(emb_col), F.col("__seed_emb")), 6
-            ).alias("__sim"),
+            pair_score(
+                dot_expr(emb, seed), norm_expr(emb), norm_expr(seed)
+            )[1].alias("__sim"),
         )
-        w = Window.partitionBy(id_col).orderBy(
-            F.desc("__sim"), F.asc("__seed_id")
-        )
-        assigned = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                F.col(id_col),
-                F.col(emb_col),
-                F.col("__seed_id").alias("cluster"),
-            )
+        order = [F.desc("__sim"), F.asc("__seed_id")]
+        assigned = _top_k(scored, 1, [id_col], order, "__rn").select(
+            F.col(id_col), F.col(emb_col), F.col("__seed_id").alias("cluster")
         )
     if exact_max_cluster_rows is not None:
         # localCheckpoint (not persist): the guard job materializes the
@@ -1034,12 +1025,10 @@ def semantic_dedup(
     if score == "arrow":
         return _cell_pairs_arrow(assigned, id_col, emb_col, threshold)
     # norms precompute PER ROW, not per pair: higher-order-function
-    # folds (zip_with/aggregate) run interpreted, so the naive
-    # cosine_expr costs three folds per pair — one dot per pair plus
+    # folds (zip_with/aggregate) run interpreted, so norms inside the
+    # pair expression cost three folds per pair — one dot per pair plus
     # two norms per row is ~3x cheaper on the O(Σ n_c²) pair set, and
     # dot/(na*nb) is the bit-identical expression tree
-    from .similarity import dot_expr, norm_expr
-
     a = assigned.select(
         F.col("cluster"),
         F.col(id_col).alias("id_a"),
@@ -1057,11 +1046,9 @@ def semantic_dedup(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cosine",
-            F.round(
-                dot_expr(F.col("__emb_a"), F.col("__emb_b"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ),
+            pair_score(
+                dot_expr(F.col("__emb_a"), F.col("__emb_b")), "__na", "__nb"
+            )[1],
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cluster", "cosine")

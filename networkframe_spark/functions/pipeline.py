@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..session import shuffle_partitions
 
+from .stats import _top_k
 from .text import tokens_col
 
 _HASH_MOD = 1_000_000
@@ -259,8 +260,6 @@ def tf_idf_top_terms(
     df and skew nothing since the agg is still keyed per term.
     Returns ``(id_col, term, tf, tfidf, rank)``.
     """
-    from pyspark.sql import Window
-
     n_docs = df.count()
     terms = (
         df.select(F.col(id_col).alias("id"), F.explode(tokens_col(text_col)).alias("term"))
@@ -274,11 +273,8 @@ def tf_idf_top_terms(
             F.col("tf") * F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)), 6
         ),
     )
-    w = Window.partitionBy("id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("id").alias(id_col), "term", "tf", "tfidf", "rank")
+    return _top_k(scored, k, ["id"], [F.desc("tfidf"), F.asc("term")]).select(
+        F.col("id").alias(id_col), "term", "tf", "tfidf", "rank"
     )
 
 
@@ -621,15 +617,9 @@ def cap_per_group(
     ``n / count``, then run this exact pass on the survivors (orders
     of magnitude fewer rows through the window).
     """
-    from pyspark.sql import Window
-
     b = _bucket_col(F.col(key_col), seed, method)
-    w = Window.partitionBy(group_col).orderBy(b.asc(), F.col(key_col).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
-        .drop("__rn")
-    )
+    order = [b.asc(), F.col(key_col).asc()]
+    return _top_k(df, n, [group_col], order, "__rn").drop("__rn")
 
 
 def split_by_cluster(
@@ -1863,22 +1853,12 @@ def gumbel_topk_sample(
     TakeOrdered — per-partition heaps, no full sort, no global
     window); the rank window runs over only the n surviving rows.
     """
-    from pyspark.sql import Window
-
     u = (_bucket_col(F.col(key_col), seed, method) + 0.5) / float(_HASH_MOD)
     g = F.col(weight_col).cast("double") - F.log(-F.log(u))
-    top = (
-        df.select(F.col(key_col), F.col(weight_col), g.alias("__g"))
-        .orderBy(F.desc("__g"), F.asc(key_col))
-        .limit(n)
-    )
-    w = Window.orderBy(F.desc("__g"), F.asc(key_col))  # n rows only
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select(
-            key_col,
-            weight_col,
-            F.round(F.col("__g"), 6).alias("gumbel_key"),
-            "rank",
-        )
+    keyed = df.select(F.col(key_col), F.col(weight_col), g.alias("__g"))
+    return _top_k(keyed, n, [], [F.desc("__g"), F.asc(key_col)]).select(
+        key_col,
+        weight_col,
+        F.round(F.col("__g"), 6).alias("gumbel_key"),
+        "rank",
     )

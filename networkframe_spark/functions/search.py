@@ -5,23 +5,32 @@ graph-frame library).  Design rules match the rest of ``functions/``:
 pure JVM column expressions, uniform-keyed shuffles, float determinism
 via per-term rounding + exact DECIMAL summation so the DuckDB oracle
 hash-matches.
+
+Every ranking here ends in the one ranked cut,
+:func:`~networkframe_spark.functions.stats._top_k` (score descending,
+ties to the lower id): its global form for a single query, its
+per-query form for batches and RRF fusion.  The vector leg of
+:func:`hybrid_search_batch` scores through
+:func:`~networkframe_spark.functions.similarity.pair_score`.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..store import (
     check_family,
     delete,
     exists,
+    index_family,
     read_manifest,
     subdirs,
     write_manifest,
 )
+from .stats import _top_k
 from .text import tokens_col
 
 
@@ -107,11 +116,8 @@ def bm25_top_docs(
     scored = per_term.groupBy("id").agg(
         F.round(F.sum("ts").cast("double"), 6).alias("score")
     )
-    top = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("id"))  # k rows only
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select(F.col("id").alias(id_col), "score", "rank")
+    return _top_k(scored, k, [], [F.desc("score"), F.asc("id")]).select(
+        F.col("id").alias(id_col), "score", "rank"
     )
 
 
@@ -574,11 +580,8 @@ def text_index_search(
     scored = per_term.groupBy("id").agg(
         F.round(F.sum("ts").cast("double"), 6).alias("score")
     )
-    top = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("id"))  # k rows only
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select(F.col("id").alias(id_col), "score", "rank")
+    return _top_k(scored, k, [], [F.desc("score"), F.asc("id")]).select(
+        F.col("id").alias(id_col), "score", "rank"
     )
 
 
@@ -695,11 +698,8 @@ def text_index_phrase_search(
             6,
         ).alias("score"),
     )
-    top = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("id"))  # k rows only
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select(F.col("id").alias(id_col), "score", "rank")
+    return _top_k(scored, k, [], [F.desc("score"), F.asc("id")]).select(
+        F.col("id").alias(id_col), "score", "rank"
     )
 
 
@@ -815,11 +815,9 @@ def text_index_search_batch(
     scored = per_term.groupBy("query_id", "id").agg(
         F.round(F.sum("ts").cast("double"), 6).alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("id").alias(id_col), "score", "rank")
+    order = [F.desc("score"), F.asc("id")]
+    return _top_k(scored, k, ["query_id"], order).select(
+        "query_id", F.col("id").alias(id_col), "score", "rank"
     )
 
 
@@ -838,7 +836,6 @@ def hybrid_search_batch(
     n_probe_bits: int = 0,
     exclude_self: bool = False,
     id_col: str = "doc_id",
-    vector_index: str = "lsh",
     n_probe: int = 4,
     vector_metric: str = "l2",
 ) -> DataFrame:
@@ -851,10 +848,13 @@ def hybrid_search_batch(
     combiner).  ``queries`` carries one row per query:
     ``(query_id, terms array<string>, embedding array)``.
 
-    ``vector_index`` picks the vector leg — all three persisted
-    families that carry a batch probe:
+    The vector leg is the family of the store under
+    ``vector_index_path`` (:func:`~networkframe_spark.store.index_family`,
+    existence checks only for lsh and ivfpq; an int8 cell store also
+    reads its centroid manifest) — the three persisted families that
+    carry a batch probe:
 
-    - ``"lsh"`` (default) —
+    - ``"lsh"`` —
       :func:`~networkframe_spark.functions.similarity.lsh_index_search`,
       cosine multi-probe via ``n_probe_bits``;
     - ``"ivf_sq"`` —
@@ -867,6 +867,8 @@ def hybrid_search_batch(
       PQ ADC scoring (m-byte codes, 4-32× smaller), ``n_probe``
       cells per query (l2-rank by construction; ``exclude_self`` is
       not supported on this leg — PQ probes have no self notion).
+
+    A store of any other family raises ``ValueError`` naming it.
 
     Each leg contributes only its RANKS to the fusion, so swapping
     the vector family never changes the fusion arithmetic — the
@@ -888,6 +890,7 @@ def hybrid_search_batch(
     tie-breaks), and RRF sums 12-dp reciprocal terms through
     DECIMAL(38,12) — bit-reproducible at any parallelism.
     """
+    family = index_family(spark, vector_index_path)
     lex = text_index_search_batch(
         spark,
         queries.select(query_id_col, terms_col),
@@ -897,7 +900,7 @@ def hybrid_search_batch(
         k=lexical_k,
         id_col=id_col,
     ).select(F.col("query_id"), F.col(id_col), F.col("rank"))
-    if vector_index == "lsh":
+    if family == "lsh":
         from .similarity import lsh_index_search
 
         vec = lsh_index_search(
@@ -910,7 +913,7 @@ def hybrid_search_batch(
             emb_col=emb_col,
             exclude_self=exclude_self,
         )
-    elif vector_index == "ivf_sq":
+    elif family == "ivf_sq":
         from .similarity import ivf_sq_search
 
         vec = ivf_sq_search(
@@ -924,11 +927,11 @@ def hybrid_search_batch(
             metric=vector_metric,
             exclude_self=exclude_self,
         )
-    elif vector_index == "ivfpq":
+    elif family == "ivfpq":
         if exclude_self:
             raise ValueError(
-                "hybrid_search_batch: exclude_self is not supported with"
-                " vector_index='ivfpq' (PQ probes carry no self notion);"
+                "hybrid_search_batch: exclude_self is not supported on an"
+                " ivfpq store (PQ probes carry no self notion);"
                 " retrieve with external query ids"
             )
         from .similarity import ivfpq_search
@@ -944,8 +947,8 @@ def hybrid_search_batch(
         )
     else:
         raise ValueError(
-            "hybrid_search_batch: vector_index must be 'lsh', 'ivf_sq'"
-            f" or 'ivfpq', got {vector_index!r}"
+            f"hybrid_search_batch: {vector_index_path} holds a {family}"
+            " index; the vector leg needs an lsh, ivf_sq or ivfpq store"
         )
     vec = vec.select(
         F.col("query_id"), F.col("vec_id").alias(id_col), F.col("rank")
@@ -1012,10 +1015,5 @@ def rrf_fuse(
     )
     if query_col is None:
         return fused
-    w = Window.partitionBy(query_col).orderBy(
-        F.desc("rrf_score"), F.asc(id_col)
-    )
-    fused = fused.withColumn("fused_rank", F.row_number().over(w))
-    if top_k is not None:
-        fused = fused.filter(F.col("fused_rank") <= top_k)
-    return fused
+    order = [F.desc("rrf_score"), F.asc(id_col)]
+    return _top_k(fused, top_k, [query_col], order, "fused_rank")

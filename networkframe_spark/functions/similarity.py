@@ -1,8 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
+Every exact pair score here is :func:`pair_score` (6-dp cosine
+descending or 6-dp squared L2 ascending, from a dot product and two
+per-row :func:`self_term` values), and every searcher ends in the one
+ranked cut, :func:`~networkframe_spark.functions.stats._top_k` (rank
+per query, ties to the lower id, keep the first k).
+
 - ``brute_force_top_k``: exact cosine top-k — the correctness baseline.
   Query side broadcast, dot products via ``F.zip_with``/``F.aggregate``
-  (JVM-side, no Python), window row_number for top-k.
+  (JVM-side, no Python).
 - ``lsh_top_k``: random-hyperplane LSH — the scale path.  Signatures
   from deterministic Rademacher (+/-1) hyperplanes; only same-bucket
   pairs get exact scoring.  At 100 TB the bucket join replaces the
@@ -13,11 +19,12 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import store
 from ..session import shuffle_partitions
+from .stats import _top_k
 
 
 def round_half_up(x, decimals: int = 6):
@@ -79,8 +86,29 @@ def norm_expr(a: Column, dim: int | None = None) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot_expr(a, b, dim) / (norm_expr(a, dim) * norm_expr(b, dim))
+def self_term(c: Column, metric: str, dim: int | None = None) -> Column:
+    """The per-row term :func:`pair_score` pairs with a dot product:
+    the norm for cosine, the self-dot for L2 (computed directly, NOT
+    norm^2, so the tree matches the SQL twin's list_dot_product(v, v)
+    term exactly).  Computed once per row instead of once per pair."""
+    return norm_expr(c, dim) if metric == "cosine" else dot_expr(c, c, dim)
+
+
+def pair_score(
+    dot: Column, a_self, b_self, metric: str = "cosine"
+) -> tuple[str, Column, Column]:
+    """The 6-dp pair score every exact search ranks on, from a dot
+    product and the two rows' :func:`self_term` (columns or column
+    names).  Returns ``(name, score, order)``: ``"cosine"``,
+    ``round(dot / (a_self * b_self), 6)``, descending; or ``"d2"``,
+    ``round(a_self - 2*dot + b_self, 6)``, ascending.  Rounding to 6 dp
+    makes near-equal scores tie exactly, so every engine breaks them
+    on the id the same way."""
+    a = F.col(a_self) if isinstance(a_self, str) else a_self
+    b = F.col(b_self) if isinstance(b_self, str) else b_self
+    if metric == "cosine":
+        return "cosine", F.round(dot / (a * b), 6), F.desc("cosine")
+    return "d2", F.round(a - 2.0 * dot + b, 6), F.asc("d2")
 
 
 def _validate_dim(df: DataFrame, emb_col: str, dim: int | None, fn: str) -> None:
@@ -151,54 +179,30 @@ def brute_force_top_k(
         raise ValueError("brute_force_top_k: metric must be 'cosine' or 'l2'")
     _validate_dim(corpus, emb_col, dim, "brute_force_top_k")
     query_id_col = query_id_col or id_col
-    # norms are per-row: compute once per side instead of per pair, and
     # spread the corpus so scoring parallelizes even from a single
     # parquet partition
     n_part = shuffle_partitions(corpus.sparkSession)
-    # per-side self-products: norm for cosine, squared norm for L2
-    # (computed directly — NOT norm^2 — so the expression tree matches
-    # the SQL twin's list_dot_product(v, v) term exactly)
     # pass dim for the codegen unroll at corpus scale (r14); default
     # None keeps the interpreted-fold expression tree (and therefore
     # the registered queries' plan fingerprints) unchanged
-    q_self = (
-        norm_expr(F.col(emb_col), dim)
-        if metric == "cosine"
-        else dot_expr(F.col(emb_col), F.col(emb_col), dim)
-    )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(emb_col).alias("q_emb"),
-        q_self.alias("q_self"),
+        self_term(F.col(emb_col), metric, dim).alias("q_self"),
     )
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).alias("c_emb"),
-        (
-            norm_expr(F.col(emb_col), dim)
-            if metric == "cosine"
-            else dot_expr(F.col(emb_col), F.col(emb_col), dim)
-        ).alias("c_self"),
+        self_term(F.col(emb_col), metric, dim).alias("c_self"),
     ).repartition(n_part)
-    dot = dot_expr(F.col("q_emb"), F.col("c_emb"), dim)
-    if metric == "cosine":
-        score_col, score = "cosine", F.round(
-            dot / (F.col("q_self") * F.col("c_self")), 6
-        )
-        order = F.desc(score_col)
-    else:
-        score_col, score = "d2", F.round(
-            F.col("q_self") - 2.0 * dot + F.col("c_self"), 6
-        )
-        order = F.asc(score_col)
+    score_col, score, order = pair_score(
+        dot_expr(F.col("q_emb"), F.col("c_emb"), dim), "q_self", "c_self", metric
+    )
     scored = c.join(F.broadcast(q)).withColumn(score_col, score)
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", score_col, "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", score_col, "rank"
     )
 
 
@@ -509,25 +513,18 @@ def ivf_top_k(
         "query_id",
         F.explode(F.transform(probes, lambda s: s["i"])).alias("list_id"),
     )
+    _, score, order = pair_score(
+        dot_expr(F.col("q_emb"), F.col("c_emb"), dim), "q_norm", "c_norm"
+    )
     scored = (
         c.join(F.broadcast(pairs), on="list_id")
         .join(F.broadcast(qbase), on="query_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                dot_expr(F.col("q_emb"), F.col("c_emb"), dim)
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ),
-        )
+        .withColumn("cosine", score)
     )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 
@@ -658,8 +655,8 @@ def lsh_top_k(
     # narrow-shuffle plan, because the band join's output never
     # re-shuffles wide rows.  Norms ride from the banded rows
     # (interpreted HOF folds cost per evaluation — one dot per
-    # candidate beats three folds per pair); dot/(qn*cn) is the
-    # bit-identical expression tree of cosine_expr.
+    # candidate beats three folds per pair); dot/(qn*cn) is
+    # bit-identical to norms computed per pair.
     # dedup via max-aggregate rather than dropDuplicates: the values
     # are identical per pair so max() IS the value (bit-exact), the
     # aggregate partially combines map-side BEFORE the exchange
@@ -667,27 +664,18 @@ def lsh_top_k(
     # it sidesteps a Spark 4.1 internal error
     # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) when exceptAll rewrites a
     # window-over-Deduplicate-over-aliased-projection plan
+    # resolved dim -> codegen unroll (r14): the interpreted fold was
+    # the per-candidate bottleneck at 2M-corpus banded verify
+    _, score, order = pair_score(
+        dot_expr(F.col("q_emb"), F.col("c_emb"), dim), "q_norm", "c_norm"
+    )
     scored = (
-        cand.select(
-            "query_id",
-            "vec_id",
-            F.round(
-                # resolved dim -> codegen unroll (r14): the interpreted
-                # fold was the per-candidate bottleneck at 2M-corpus
-                # banded verify
-                dot_expr(F.col("q_emb"), F.col("c_emb"), dim)
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
-        )
+        cand.select("query_id", "vec_id", score.alias("cosine"))
         .groupBy("query_id", "vec_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 
@@ -957,11 +945,10 @@ def semantic_decontaminate(
         norm_expr(F.col(emb_col)).alias("e_norm"),
     )
     def _cos_expr():
-        return F.round(
-            dot_expr(F.col("t_emb"), F.col("e_emb"))
-            / (F.col("t_norm") * F.col("e_norm")),
-            6,
-        ).alias("cosine")
+        _, score, _ = pair_score(
+            dot_expr(F.col("t_emb"), F.col("e_emb")), "t_norm", "e_norm"
+        )
+        return score.alias("cosine")
 
     if method == "brute":
         n_part = shuffle_partitions(train.sparkSession)
@@ -1167,26 +1154,21 @@ def ivf_index_search(
     cells = spark.read.parquet(_os.path.join(path, "cells")).filter(
         F.col("list_id").isin(sorted(wanted))
     )
+    _, score, order = pair_score(
+        # manifest dim -> codegen unroll (r14)
+        dot_expr(F.col("q_emb"), F.col("c_emb"), len(centroids[0])),
+        "q_norm",
+        "c_norm",
+    )
     scored = (
         cells.join(F.broadcast(probes), on="list_id")
         .join(F.broadcast(q), on="query_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                # manifest dim -> codegen unroll (r14)
-                dot_expr(F.col("q_emb"), F.col("c_emb"), len(centroids[0]))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ),
-        )
+        .withColumn("cosine", score)
     )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 
@@ -1375,17 +1357,12 @@ def ivf_sq_search(
     # the float summation order matches the SQL twin's sequential
     # list_dot_product exactly — numpy's pairwise summation can differ
     # in the 6th decimal on long vectors
-    q_self_expr = (
-        norm_expr(F.col("q_emb"))
-        if metric == "cosine"
-        else dot_expr(F.col("q_emb"), F.col("q_emb"))
-    )
     q = spark.createDataFrame(
         q_rows,
         T.StructType(
             [qid_field, T.StructField("q_emb", T.ArrayType(T.DoubleType()))]
         ),
-    ).withColumn("q_self", q_self_expr)
+    ).withColumn("q_self", self_term(F.col("q_emb"), metric))
     deq = F.transform(
         F.col("qembedding"), lambda v: v.cast("double") * F.col("scale")
     )
@@ -1398,35 +1375,20 @@ def ivf_sq_search(
         spark.read.parquet(_os.path.join(path, "cells"))
         .filter(F.col("list_id").isin(sorted(wanted)))
         .withColumn("deq", deq)
-        .withColumn(
-            "c_self",
-            norm_expr(F.col("deq"))
-            if metric == "cosine"
-            else dot_expr(F.col("deq"), F.col("deq")),
-        )
+        .withColumn("c_self", self_term(F.col("deq"), metric))
     )
-    scored = cells.join(F.broadcast(probes), on="list_id").join(
-        F.broadcast(q), on="query_id"
+    score_col, score, order = pair_score(
+        dot_expr(F.col("q_emb"), F.col("deq")), "q_self", "c_self", metric
     )
-    dot = dot_expr(F.col("q_emb"), F.col("deq"))
-    if metric == "cosine":
-        score_col = "cosine"
-        score = F.round(dot / (F.col("q_self") * F.col("c_self")), 6)
-        order_by = F.desc(score_col)
-    else:
-        score_col = "d2"
-        score = F.round(
-            F.col("q_self") - 2.0 * dot + F.col("c_self"), 6
-        )
-        order_by = F.asc(score_col)
-    scored = scored.withColumn(score_col, score)
+    scored = (
+        cells.join(F.broadcast(probes), on="list_id")
+        .join(F.broadcast(q), on="query_id")
+        .withColumn(score_col, score)
+    )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(order_by, F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", score_col, "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", score_col, "rank"
     )
 
 
@@ -1898,17 +1860,9 @@ def pq_search(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("__d").cast("double").alias("approx_d2"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_d2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.select(
-            query_id_col,
-            id_col,
-            F.row_number().over(w).alias("rank"),
-            "approx_d2",
-        )
-        .filter(F.col("rank") <= k)
+    order = [F.col("approx_d2").asc(), F.col(id_col).asc()]
+    return _top_k(scored, k, [query_id_col], order).select(
+        query_id_col, id_col, "rank", "approx_d2"
     )
 
 
@@ -2322,17 +2276,9 @@ def ivfpq_search(
             .groupBy("query_id", "vec_id")
             .agg(F.sum("__d").cast("double").alias("approx_d2"))
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.select(
-            "query_id",
-            "vec_id",
-            F.row_number().over(w).alias("rank"),
-            "approx_d2",
-        )
-        .filter(F.col("rank") <= k)
+    order = [F.col("approx_d2").asc(), F.col("vec_id").asc()]
+    return _top_k(scored, k, ["query_id"], order).select(
+        "query_id", "vec_id", "rank", "approx_d2"
     )
 
 
@@ -2538,17 +2484,13 @@ def mine_hard_negatives(
             norm_expr(F.col(emb_col)).alias("c_norm"),
             F.col(label_col).alias("neg_label"),
         ).repartition(n_part)
+        _, score, _ = pair_score(
+            dot_expr(F.col("q_emb"), F.col("c_emb")), "q_norm", "c_norm"
+        )
         scored = (
             c.join(F.broadcast(q))
             .filter(F.col("anchor_label") != F.col("neg_label"))
-            .withColumn(
-                "cosine",
-                F.round(
-                    dot_expr(F.col("q_emb"), F.col("c_emb"))
-                    / (F.col("q_norm") * F.col("c_norm")),
-                    6,
-                ),
-            )
+            .withColumn("cosine", score)
         )
     elif method in ("lsh", "ivf"):
         scorer = lsh_top_k if method == "lsh" else ivf_top_k
@@ -2585,15 +2527,10 @@ def mine_hard_negatives(
         raise ValueError("method must be 'brute', 'lsh', or 'ivf'")
     if min_cosine is not None:
         scored = scored.filter(F.col("cosine") >= min_cosine)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neg_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neg_id", "anchor_label", "neg_label", "cosine", "rank"
-        )
+    return _top_k(
+        scored, k, ["query_id"], [F.desc("cosine"), F.asc("neg_id")]
+    ).select(
+        "query_id", "neg_id", "anchor_label", "neg_label", "cosine", "rank"
     )
 
 
@@ -2635,11 +2572,11 @@ def embedding_outliers(
         .select(
             F.col(id_col),
             F.col(label_col),
-            F.round(
-                dot_expr(v, F.col("centroid"))
-                / (norm_expr(v) * norm_expr(F.col("centroid"))),
-                6,
-            ).alias("cos_centroid"),
+            pair_score(
+                dot_expr(v, F.col("centroid")),
+                norm_expr(v),
+                norm_expr(F.col("centroid")),
+            )[1].alias("cos_centroid"),
         )
     )
     pf = (
@@ -2717,9 +2654,7 @@ def mmr_rerank(
         F.col(emb_col).alias("__emb"),
         norm_expr(F.col(emb_col)).alias("__norm"),
     ).localCheckpoint(eager=False)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__mmr"), F.asc("vec_id")
-    )
+    order = [F.desc("__mmr"), F.asc("vec_id")]
     selected = None
     for step in range(1, k + 1):
         if selected is None:
@@ -2727,6 +2662,9 @@ def mmr_rerank(
                 "__mmr", (F.lit(num) * F.col("__rel6")).cast("long")
             )
         else:
+            _, sim, _ = pair_score(
+                dot_expr(F.col("__emb"), F.col("__semb")), "__norm", "__snorm"
+            )
             sims = (
                 cand.join(
                     selected.select(
@@ -2739,14 +2677,7 @@ def mmr_rerank(
                 .groupBy("query_id", "vec_id")
                 .agg(
                     F.max(
-                        F.round(
-                            F.round(
-                                dot_expr(F.col("__emb"), F.col("__semb"))
-                                / (F.col("__norm") * F.col("__snorm")),
-                                6,
-                            )
-                            * F.lit(1e6)
-                        ).cast("long")
+                        F.round(sim * F.lit(1e6)).cast("long")
                     ).alias("__sim6")
                 )
             )
@@ -2758,8 +2689,7 @@ def mmr_rerank(
                 ).cast("long"),
             )
         pick = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
+            _top_k(scored, 1, ["query_id"], order, rank_col="__rn")
             .select(
                 "query_id",
                 "vec_id",
@@ -2837,29 +2767,18 @@ def cell_pruned_top_k(
     def assign(
         df: DataFrame, idc: str, out_id: str, keep_rank: int
     ) -> DataFrame:
-        scored = (
-            df.select(
-                F.col(idc).alias(out_id),
-                F.col(emb_col).alias("__emb"),
-                norm_expr(F.col(emb_col)).alias("__norm"),
-            )
-            .crossJoin(F.broadcast(seeds))
-            .withColumn(
-                "__sim",
-                F.round(
-                    dot_expr(F.col("__emb"), F.col("s_emb"))
-                    / (F.col("__norm") * F.col("s_norm")),
-                    6,
-                ),
-            )
+        pairs = df.select(
+            F.col(idc).alias(out_id),
+            F.col(emb_col).alias("__emb"),
+            norm_expr(F.col(emb_col)).alias("__norm"),
+        ).crossJoin(F.broadcast(seeds))
+        _, sim, _ = pair_score(
+            dot_expr(F.col("__emb"), F.col("s_emb")), "__norm", "s_norm"
         )
-        w = Window.partitionBy(out_id).orderBy(
-            F.desc("__sim"), F.asc("sid")
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= keep_rank)
-            .select(out_id, "__emb", "__norm", F.col("sid").alias("cell"))
+        scored = pairs.withColumn("__sim", sim)
+        order = [F.desc("__sim"), F.asc("sid")]
+        return _top_k(scored, keep_rank, [out_id], order, "__rn").select(
+            out_id, "__emb", "__norm", F.col("sid").alias("cell")
         )
 
     cells = assign(corpus, id_col, "vec_id", 1)
@@ -2880,24 +2799,16 @@ def cell_pruned_top_k(
     # 2 probed cells) IS the value — bit-exact — and the hash
     # aggregate partially combines map-side (same plan shape as
     # lsh_top_k above).
+    _, score, order = pair_score(
+        dot_expr(F.col("q_emb"), F.col("__emb")), "q_norm", "__norm"
+    )
     scored = (
-        cand.select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot_expr(F.col("q_emb"), F.col("__emb"))
-                / (F.col("q_norm") * F.col("__norm")),
-                6,
-            ).alias("cosine"),
-        )
+        cand.select("query_id", "vec_id", score.alias("cosine"))
         .groupBy("query_id", "vec_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 
@@ -3078,37 +2989,26 @@ def ann_rerank(
     ).dropDuplicates(["query_id", "vec_id"])
     if broadcast_candidates:
         pairs = F.broadcast(pairs)
-    self_of = (
-        (lambda c: norm_expr(c))
-        if metric == "cosine"
-        else (lambda c: dot_expr(c, c))
-    )
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).alias("c_emb"),
-        self_of(F.col(emb_col)).alias("c_self"),
+        self_term(F.col(emb_col), metric).alias("c_self"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(emb_col).alias("q_emb"),
-        self_of(F.col(emb_col)).alias("q_self"),
+        self_term(F.col(emb_col), metric).alias("q_self"),
     )
-    scored = c.join(pairs, on="vec_id").join(F.broadcast(q), on="query_id")
-    dot = dot_expr(F.col("q_emb"), F.col("c_emb"))
-    if metric == "cosine":
-        score_col = "cosine"
-        score = F.round(dot / (F.col("q_self") * F.col("c_self")), 6)
-        order = F.desc(score_col)
-    else:
-        score_col = "d2"
-        score = F.round(F.col("q_self") - 2.0 * dot + F.col("c_self"), 6)
-        order = F.asc(score_col)
-    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
-    return (
-        scored.withColumn(score_col, score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", score_col, "rank")
+    score_col, score, order = pair_score(
+        dot_expr(F.col("q_emb"), F.col("c_emb")), "q_self", "c_self", metric
+    )
+    scored = (
+        c.join(pairs, on="vec_id")
+        .join(F.broadcast(q), on="query_id")
+        .withColumn(score_col, score)
+    )
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", score_col, "rank"
     )
 
 
@@ -3452,27 +3352,19 @@ def lsh_index_search(
     )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("vec_id"))
+    _, score, order = pair_score(
+        # stored-plane dim -> codegen unroll (r14)
+        dot_expr(F.col("q_emb"), F.col("c_emb"), dim),
+        "q_norm",
+        "c_norm",
+    )
     scored = (
-        scored.select(
-            "query_id",
-            "vec_id",
-            F.round(
-                # stored-plane dim -> codegen unroll (r14)
-                dot_expr(F.col("q_emb"), F.col("c_emb"), dim)
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
-        )
+        scored.select("query_id", "vec_id", score.alias("cosine"))
         .groupBy("query_id", "vec_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import shuffle_partitions
@@ -89,11 +89,37 @@ def top_k_per_group(
     order = (
         F.col(order_col).desc() if descending else F.col(order_col).asc()
     )
-    w = Window.partitionBy(group_col).orderBy(order, F.col(tie_col).asc())
-    return (
-        df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(df, k, [group_col], [order, F.col(tie_col).asc()])
+
+
+def _top_k(
+    df: DataFrame,
+    k: int | None,
+    by: Sequence[str],
+    order: Sequence[Column],
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The ranked cut every search and ranking operator ends in: a
+    1-based ``row_number`` in ``rank_col`` over ``order`` (which must
+    end in a unique tie-break column, so ranks are deterministic),
+    keeping ranks ``<= k``.
+
+    With ``by``, the window is partitioned on those keys: one hash
+    exchange plus an in-partition sort, and the cut prunes after the
+    window (Spark plans it as a per-group limit); ``k=None`` ranks
+    without cutting.  Without ``by``, the cut comes first:
+    ``orderBy(...).limit(k)`` is a distributed TakeOrdered
+    (per-partition heaps, never a global single-partition sort) and
+    the unpartitioned rank window runs over only the ``k`` surviving
+    rows — the one unpartitioned rank window in ``functions/``.
+    """
+    if not by:
+        top = df.orderBy(*order).limit(k)
+        w = Window.orderBy(*order)  # k rows only
+        return top.withColumn(rank_col, F.row_number().over(w))
+    w = Window.partitionBy(*by).orderBy(*order)
+    ranked = df.withColumn(rank_col, F.row_number().over(w))
+    return ranked if k is None else ranked.filter(F.col(rank_col) <= k)
 
 
 def robust_outliers(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .stats import _top_k
+
 # A compact multilingual stopword table for the language-ID heuristic.
 # (Public knowledge; top function words per language.)
 STOPWORDS = {
@@ -637,27 +639,18 @@ def build_vocab(
         )
     )
     total = tf.agg(F.sum("n_occurrences").alias("__total"))
-    top = (
-        tf.orderBy(F.desc("n_occurrences"), F.asc("tok"))
-        .limit(size)
-    )
-    w = (
-        Window.orderBy(F.desc("n_occurrences"), F.asc("tok"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        top.crossJoin(F.broadcast(total))
-        .select(
-            F.row_number()
-            .over(Window.orderBy(F.desc("n_occurrences"), F.asc("tok")))
-            .alias("rank"),
-            F.col("tok").alias("token"),
-            "n_occurrences",
-            "n_docs",
-            F.round(
-                F.sum("n_occurrences").over(w) / F.col("__total"), 6
-            ).alias("coverage"),
-        )
+    top = _top_k(tf, size, [], [F.desc("n_occurrences"), F.asc("tok")])
+    # running sum over the ranked rows only; rank is unique, so the
+    # frame is exactly the rows at or above this one
+    w = Window.orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
+    return top.crossJoin(F.broadcast(total)).select(
+        "rank",
+        F.col("tok").alias("token"),
+        "n_occurrences",
+        "n_docs",
+        F.round(F.sum("n_occurrences").over(w) / F.col("__total"), 6).alias(
+            "coverage"
+        ),
     )
 
 
@@ -755,8 +748,6 @@ def zipf_fit(
     only the ``top_n`` surviving rows, and the vocabulary size rides
     along as a 1-row broadcast.
     """
-    from pyspark.sql import Window
-
     freq = (
         df.select(F.explode(tokens_col(text_col)).alias("tok"))
         .filter(F.col("tok") != "")
@@ -764,10 +755,8 @@ def zipf_fit(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     n_distinct = freq.agg(F.count(F.lit(1)).alias("n_distinct_tokens"))
-    top = freq.orderBy(F.desc("n"), F.asc("tok")).limit(top_n)
-    w = Window.orderBy(F.desc("n"), F.asc("tok"))
-    ranked = top.select(
-        F.row_number().over(w).alias("rank"), F.col("n")
+    ranked = _top_k(freq, top_n, [], [F.desc("n"), F.asc("tok")]).select(
+        "rank", "n"
     )
     dec = "decimal(14,6)"
     x = F.round(F.log(F.col("rank").cast("double")), 6).cast(dec)

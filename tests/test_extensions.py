@@ -1385,10 +1385,11 @@ def test_hybrid_search_batch_equals_leg_composition(spark, tmp_path):
 
 
 def test_hybrid_search_batch_vector_leg_dispatch(spark, tmp_path):
-    """vector_index='ivf_sq'/'ivfpq' swaps the vector leg for the
-    quantized stores (the 100 TB memory answer) with the fusion
-    arithmetic unchanged: hybrid == rrf_fuse(lexical leg, chosen
-    probe) composed by hand, bit-for-bit, for both families."""
+    """An ivf_sq or ivfpq store at the vector path swaps the vector
+    leg for the quantized stores (the 100 TB memory answer) with the
+    fusion arithmetic unchanged: hybrid == rrf_fuse(lexical leg,
+    detected family's probe) composed by hand, bit-for-bit, for both
+    families; a store of another family is refused by name."""
     import pytest as _pytest
 
     from networkframe_spark.functions.search import (
@@ -1404,6 +1405,7 @@ def test_hybrid_search_batch_vector_leg_dispatch(spark, tmp_path):
         ivfpq_search,
     )
     from networkframe_spark.sources import read_embeddings, read_table
+    from networkframe_spark.store import index_family
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents")
     emb = read_embeddings(spark, "/root/testdata/sf0.001").limit(100)
@@ -1442,7 +1444,7 @@ def test_hybrid_search_batch_vector_leg_dispatch(spark, tmp_path):
             hybrid_search_batch(
                 spark, queries, tix, sq,
                 k=10, lexical_k=5, vector_k=3,
-                vector_index="ivf_sq", n_probe=2, exclude_self=False,
+                n_probe=2, exclude_self=False,
             ).collect(),
         )
     )
@@ -1467,7 +1469,7 @@ def test_hybrid_search_batch_vector_leg_dispatch(spark, tmp_path):
             hybrid_search_batch(
                 spark, queries, tix, pq,
                 k=10, lexical_k=5, vector_k=3,
-                vector_index="ivfpq", n_probe=2,
+                n_probe=2,
             ).collect(),
         )
     )
@@ -1478,11 +1480,15 @@ def test_hybrid_search_batch_vector_leg_dispatch(spark, tmp_path):
         )
     )
     assert got_pq == want_pq and len(got_pq) > 0
+    # the leg is read from the store by existence checks alone
+    last_job = lambda: max(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1
+    )
+    before = last_job()
+    assert index_family(spark, pq) == "ivfpq"
+    assert last_job() == before
 
     with _pytest.raises(ValueError, match="exclude_self"):
-        hybrid_search_batch(
-            spark, queries, tix, pq,
-            vector_index="ivfpq", exclude_self=True,
-        )
-    with _pytest.raises(ValueError, match="vector_index"):
-        hybrid_search_batch(spark, queries, tix, pq, vector_index="hnsw")
+        hybrid_search_batch(spark, queries, tix, pq, exclude_self=True)
+    with _pytest.raises(ValueError, match="holds a text index"):
+        hybrid_search_batch(spark, queries, tix, tix)

@@ -159,6 +159,58 @@ def test_brute_force_top_k(spark):
     assert len(per_query[0]) == 2
 
 
+def test_vector_top_k_ties_break_to_lower_id(spark):
+    """Duplicate embeddings score equal at 6 dp; every vector operator
+    then ranks exactly 1..k per query and breaks the tie to the lower
+    vec_id: brute force (cosine and l2), exhaustive IVF and the exact
+    rerank of all pairs."""
+    from networkframe_spark.functions.similarity import (
+        ann_rerank,
+        brute_force_top_k,
+        ivf_top_k,
+    )
+
+    groups = [
+        ((9, 5, 1), [1.0, 0.0]),
+        ((7, 3), [0.6, 0.8]),
+        ((8, 2), [0.0, 1.0]),
+        ((6, 4), [-1.0, 0.0]),
+    ]
+    rows = [(i, v) for ids, v in groups for i in ids]  # descending ids
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qs = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (101, [0.0, 1.0])],
+        "query_id long, embedding array<double>",
+    )
+    k = 4
+    # by hand: q100's top-4 is the three [1, 0] copies, then 3 of
+    # {3, 7}; q101's is {2, 8}, then 3 of {3, 7}
+    want = {100: [1, 5, 9, 3], 101: [2, 8, 3, 7]}
+
+    def ranked(df):
+        got = {}
+        for r in df.collect():
+            got.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"]))
+        for qid, pairs in got.items():
+            assert [r for r, _ in sorted(pairs)] == list(range(1, k + 1))
+        return {qid: [v for _, v in sorted(p)] for qid, p in got.items()}
+
+    pairs = qs.select("query_id").crossJoin(corpus.select("vec_id"))
+    for metric in ("cosine", "l2"):
+        brute = brute_force_top_k(
+            corpus, qs, k=k, query_id_col="query_id",
+            exclude_self=False, metric=metric,
+        )
+        assert ranked(brute) == want, metric
+        rerank = ann_rerank(pairs, corpus, qs, k=k, metric=metric)
+        assert ranked(rerank) == want, metric
+    ivf = ivf_top_k(
+        corpus, qs, k=k, n_lists=2, n_probe=2, query_id_col="query_id",
+        exclude_self=False, centroids=[[1.0, 0.0], [0.0, 1.0]],
+    )
+    assert ranked(ivf) == want
+
+
 def test_lsh_top_k_recall(spark):
     # clustered vectors: LSH must recover the exact nearest neighbor
     # for most queries when planes/tables are generous

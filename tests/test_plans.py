@@ -687,3 +687,96 @@ def test_no_raw_shuffle_partitions_conf_reads():
         "raw shuffle-partitions conf read (use session.shuffle_partitions): "
         f"{offenders}"
     )
+
+
+def _global_windows(df) -> list[bool]:
+    """Execute ``df`` and return, per unpartitioned ``Window`` node of
+    its final plan, whether it is bounded: every path from it down to
+    a leaf crosses a limit, ``TakeOrderedAndProject`` or key-less
+    aggregate.  An unbounded one is a global window whose input grows
+    with the data.  Leaves (scans, local rows) never count as bounded,
+    so a few-row input cannot hide a missing cut."""
+    df.collect()
+
+    def kids(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return [node.executedPlan()]
+        if name.endswith("QueryStageExec"):
+            return [node.plan()]
+        if name == "ReusedExchangeExec":
+            return [node.child()]
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def bounded(node):
+        name = node.nodeName()
+        if name in ("TakeOrderedAndProject", "GlobalLimit", "CollectLimit"):
+            return True
+        if name.endswith("Aggregate") and node.groupingExpressions().isEmpty():
+            return True
+        below = kids(node)
+        return bool(below) and all(bounded(k) for k in below)
+
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            found.append(all(bounded(k) for k in kids(node)))
+        for k in kids(node):
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_global_windows_sit_above_a_bound(spark, tmp_path):
+    """Every operator that plans an unpartitioned window ranks only
+    rows that already passed a limit, top-k or key-less aggregate, so
+    no global window ever sorts corpus-sized data in one task."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from networkframe_spark.functions.pipeline import gumbel_topk_sample
+    from networkframe_spark.functions.search import (
+        bm25_top_docs,
+        build_text_index,
+        text_index_phrase_search,
+        text_index_search,
+    )
+    from networkframe_spark.functions.temporal import funnel_steps
+    from networkframe_spark.functions.text import build_vocab, zipf_fit
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark hash data data"),
+            (2, "vector data spark"),
+            (3, "hash join spark spark"),
+            (4, "the data of the vector"),
+        ],
+        "doc_id long, text string",
+    )
+    tix = str(tmp_path / "tix")
+    build_text_index(docs, tix, n_kmod=1, positions=True)
+    ev = spark.createDataFrame(
+        [(1, "a", 0), (1, "b", 60), (2, "a", 0)],
+        "user_id long, event_type string, sec long",
+    ).selectExpr("user_id", "event_type", "CAST(sec AS TIMESTAMP) AS ts")
+    weighted = docs.withColumn("weight", F.col("doc_id").cast("double"))
+    ops = {
+        "bm25_top_docs": bm25_top_docs(docs, ["spark", "data"], k=2),
+        "text_index_search": text_index_search(spark, tix, ["spark", "data"], k=2),
+        "text_index_phrase_search": text_index_phrase_search(
+            spark, tix, ["vector", "data"], k=2
+        ),
+        "gumbel_topk_sample": gumbel_topk_sample(weighted, 2),
+        "build_vocab": build_vocab(docs, size=3),
+        "zipf_fit": zipf_fit(docs, top_n=3),
+        "funnel_steps": funnel_steps(ev, ["a", "b"]),
+    }
+    for name, df in ops.items():
+        windows = _global_windows(df)
+        assert windows and all(windows), (name, windows)
+    # the lint itself catches a global rank over the raw input
+    raw = docs.withColumn("r", F.row_number().over(Window.orderBy("doc_id")))
+    assert _global_windows(raw) == [False]

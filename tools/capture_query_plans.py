@@ -3,14 +3,15 @@
 Usage:
     python tools/capture_query_plans.py <plans_subdir> <suffix> <query> [...]
 
-e.g. `python tools/capture_query_plans.py r16 after betweenness_approx`
-writes plans/r16/betweenness_approx_after.txt from the CURRENT tree.
+e.g. `python tools/capture_query_plans.py r18 after betweenness_approx`
+writes plans/r18/betweenness_approx_after.txt from the CURRENT tree.
 Run it from a worktree checked out at an older commit to capture
 `before` plans.  Note: iterative queries execute their rounds during
 construction (eager checkpoints), so their full-query plan shows the
 final assembly over checkpointed waves — the per-round exchange
-evidence lives in the hand-built subplan pairs recorded under
-plans/r16/ and plans/r17/ (the scripts that built them were removed).
+evidence lived in hand-built subplan pairs under plans/r16/ and
+plans/r17/ (plans/r16/ and plans/r17/ have since been removed; the
+numbers recorded in OPTIMIZATION_r16.md and OPTIMIZATION_r17.md stand).
 """
 
 from __future__ import annotations
