@@ -65,6 +65,8 @@ from typing import Any, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_table
+
 _MAX_ITER = 200
 # hierarchical-contraction guard: max mapping rows per post-coalesce
 # partition for a narrow union-find level (~a few GB of numpy state);
@@ -1134,11 +1136,13 @@ def pagerank(
     and the initial distribution concentrate uniformly on the seeds
     instead of all nodes (personalized PageRank / random walk with
     restart — the similarity ranking behind "related nodes" features).
-    Duplicates collapse; an empty list raises ``ValueError``; a seed
-    absent from the node table still counts in the ``1/k`` split (its
-    share of the mass is dropped).  The seed
-    set is assumed small (an ``isin`` literal predicate); for large
-    seed sets join a seeds table instead.
+    Duplicates collapse; a seed absent from the node table is ignored,
+    as in :func:`pagerank_personalized_batch` and networkx (``k``
+    counts the present seeds, in the same aggregate that counts the
+    nodes); an empty list, or one with no seed in the node table,
+    raises ``ValueError``.  The seed set is assumed small (an ``isin``
+    literal predicate); for large seed sets join a seeds table
+    instead.
 
     Multigraph semantics: parallel edges each contribute (``W_out``
     counts multiplicity); ``weight_col`` switches to weighted shares —
@@ -1170,9 +1174,18 @@ def pagerank(
         if not seeds:
             raise ValueError("pagerank: empty personalize list")
     nodes = frame.nodes.select("id")
-    n = len(frame)
+    if personalize is None:
+        n = len(frame)
+    else:
+        in_seeds = F.col("id").isin(seeds)
+        counts = nodes.agg(
+            F.count(F.lit(1)).alias("n"), F.count(F.when(in_seeds, 1)).alias("k")
+        ).first()
+        n, k = counts["n"], counts["k"]
     if n == 0:
         return nodes.select("id", F.lit(0.0).alias("pagerank"))
+    if personalize is not None and k == 0:
+        raise ValueError("pagerank: no personalize seed is in the node table")
     e = _rank_shares(frame, weight_col)
     # r16, measured mode-split (interleaved A/B at sf0.1): in WEIGHTED
     # mode, hash-partitioning the share table on the per-round join
@@ -1195,8 +1208,6 @@ def pagerank(
         base_col = F.lit((1.0 - damping) / n)
         init_col = F.lit(1.0 / n)
     else:
-        k = len(seeds)
-        in_seeds = F.col("id").isin(seeds)
         base_col = F.when(in_seeds, F.lit((1.0 - damping) / k)).otherwise(
             F.lit(0.0)
         )
@@ -2607,7 +2618,7 @@ def maximal_independent_set(
         eager=True
     )
     spark = und.sparkSession
-    mis = spark.createDataFrame([], "id " + dict(und.dtypes)["id"])
+    mis = local_table(spark, [], "id " + dict(und.dtypes)["id"])
     done = False
     for _ in range(max_rounds):
         cand = sym.join(

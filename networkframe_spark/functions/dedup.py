@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import shuffle_partitions
+from ..session import local_table, shuffle_partitions
 from ..store import (
     append_once,
     check_family,
@@ -973,7 +973,8 @@ def semantic_dedup(
         cents = ivf_fit_centroids(
             df, n_lists=n_clusters, id_col=id_col, emb_col=emb_col
         )
-        seeds = df.sparkSession.createDataFrame(
+        seeds = local_table(
+            df.sparkSession,
             [(i, list(map(float, c))) for i, c in enumerate(cents)],
             "__seed_id long, __seed_emb array<double>",
         )
@@ -1550,8 +1551,8 @@ def sorted_neighborhood_pairs(
     for r in counts:
         offsets[r["pid"]] = acc
         acc += r["n"]
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "pid int, part_offset long"
+    off_df = local_table(
+        spark, [(p, o) for p, o in offsets.items()], "pid int, part_offset long"
     )
     ranked = d.join(F.broadcast(off_df), on="pid").select(
         "id", (F.col("part_offset") + F.col("lrn") - 1).alias("rn")
@@ -1887,7 +1888,8 @@ def minhash_index_decontaminate(
         # corpus must get a string-typed empty frame, not a long one
         from pyspark.sql.types import DoubleType, StructField, StructType
 
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             StructType(
                 [
@@ -2028,7 +2030,8 @@ def minhash_index_duplicates(
             )
 
             id_t = delta_docs.schema[id_col].dataType
-            return spark.createDataFrame(
+            return local_table(
+                spark,
                 [],
                 StructType(
                     [

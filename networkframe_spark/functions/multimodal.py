@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_table
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -50,7 +52,7 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
                 16000 if mtype == "audio" else None,
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_table(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import shuffle_partitions
+from ..session import local_table, shuffle_partitions
 
 from .stats import _top_k
 from .text import tokens_col
@@ -330,8 +330,10 @@ def pack_token_sequences(
     for r in part_totals:
         offsets[r["pid"]] = acc
         acc += r["total"]
-    off_df = df.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "pid int, part_offset long"
+    off_df = local_table(
+        df.sparkSession,
+        [(p, o) for p, o in offsets.items()],
+        "pid int, part_offset long",
     )
     return (
         d.join(F.broadcast(off_df), on="pid")
@@ -808,7 +810,8 @@ def mix_domains(
     final pass is a map-side filter on the fact table.
     """
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_table(
+        spark,
         [(d, float(w)) for d, w in weights.items()],
         f"{domain_col} string, __w double",
     )
@@ -1725,8 +1728,10 @@ def select_under_budget(
     for r in part_totals:
         offsets[r["pid"]] = acc
         acc += r["total"]
-    off_df = df.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "pid int, part_offset long"
+    off_df = local_table(
+        df.sparkSession,
+        [(p, o) for p, o in offsets.items()],
+        "pid int, part_offset long",
     )
     return (
         d.join(F.broadcast(off_df), on="pid")

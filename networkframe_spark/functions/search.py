@@ -21,6 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from ..store import (
     check_family,
     delete,
@@ -80,8 +81,8 @@ def bm25_top_docs(
     ).collect()[0]
     n_docs = tot["n"]
     if n_docs == 0:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, score double, rank int"
+        return local_table(
+            df.sparkSession, [], f"{id_col} long, score double, rank int"
         )
     avgdl = tot["sdl"] / n_docs
     tf = (
@@ -214,8 +215,8 @@ def _expand_query_terms(spark, terms, tokenizer: str) -> list:
     phrase search depends on.  ``"ws"`` is the identity."""
     if tokenizer == "ws" or not terms:
         return list(terms)
-    tdf = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(terms)], "i int, term string"
+    tdf = local_table(
+        spark, [(i, t) for i, t in enumerate(terms)], "i int, term string"
     )
     rows = tdf.select(
         "i",
@@ -530,8 +531,8 @@ def text_index_search(
     n_kmod = int(meta["n_kmod"])
     n_docs = int(meta["n_docs"])
     if n_docs == 0 or not query_terms:
-        return spark.createDataFrame(
-            [], f"{id_col} {_text_id_type(spark, path)}, score double,"
+        return local_table(
+            spark, [], f"{id_col} {_text_id_type(spark, path)}, score double,"
             " rank int"
         )
     avgdl = int(meta["sdl"]) / n_docs
@@ -544,7 +545,7 @@ def text_index_search(
             )
         )
     )
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = local_table(spark, [(t,) for t in terms], "term string")
     kmods = sorted(
         {
             r["km"]
@@ -637,12 +638,12 @@ def text_index_phrase_search(
         spark, [t.lower() for t in phrase], meta.get("tokenizer", "ws")
     )
     if n_docs == 0 or not terms:
-        return spark.createDataFrame(
-            [], f"{id_col} {_text_id_type(spark, path)}, score double,"
+        return local_table(
+            spark, [], f"{id_col} {_text_id_type(spark, path)}, score double,"
             " rank int"
         )
     uniq = sorted(set(terms))
-    tdf = spark.createDataFrame([(t,) for t in uniq], "term string")
+    tdf = local_table(spark, [(t,) for t in uniq], "term string")
     kmods = sorted(
         {
             r["km"]
@@ -759,7 +760,8 @@ def text_index_search_batch(
         )
     qt = qt.distinct()
     if n_docs == 0:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             f"query_id {queries.schema[query_id_col].dataType.simpleString()},"
             f" {id_col} {_text_id_type(spark, path)}, score double, rank int",
@@ -776,7 +778,8 @@ def text_index_search_batch(
         .collect()
     )
     if not term_rows:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             f"query_id {queries.schema[query_id_col].dataType.simpleString()},"
             f" {id_col} {_text_id_type(spark, path)}, score double, rank int",

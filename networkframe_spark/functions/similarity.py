@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import store
-from ..session import shuffle_partitions
+from ..session import local_table, shuffle_partitions
 from .stats import _top_k
 
 
@@ -246,7 +246,7 @@ _MAX_RESIDUAL_LUT_ROWS = 40_000_000
 #: build n_queries × n_probe, so a legal 1M-query call with 4 tables
 #: and a 137-mask ball would construct ~548M driver tuples and OOM
 #: before ``_MAX_QUERY_BATCH`` ever fires.  Same 40M budget as the
-#: ADC-table guard (both ship through one spark.createDataFrame +
+#: ADC-table guard (both ship through one session.local_table +
 #: broadcast); past it, chunk via ``ann_search_batched``.
 _MAX_PROBE_ROWS = 40_000_000
 
@@ -316,7 +316,8 @@ def _probe_pairs(spark, qpdf, order, qid_type, where: str):
         for qid, lists in zip(qpdf["query_id"].tolist(), order)
         for li in lists
     ]
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         rows,
         T.StructType(
             [
@@ -1141,7 +1142,8 @@ def ivf_index_search(
         x = np.asarray(emb, dtype=np.float64)
         q_rows.append((qid, list(map(float, x)), float(np.linalg.norm(x))))
     qid_field = T.StructField("query_id", qid_type)
-    q = spark.createDataFrame(
+    q = local_table(
+        spark,
         q_rows,
         T.StructType(
             [
@@ -1357,7 +1359,8 @@ def ivf_sq_search(
     # the float summation order matches the SQL twin's sequential
     # list_dot_product exactly — numpy's pairwise summation can differ
     # in the 6th decimal on long vectors
-    q = spark.createDataFrame(
+    q = local_table(
+        spark,
         q_rows,
         T.StructType(
             [qid_field, T.StructField("q_emb", T.ArrayType(T.DoubleType()))]
@@ -1796,8 +1799,8 @@ def _pq_lut(
         for j in range(m)
         for c in range(kcent)
     ]
-    cb = spark.createDataFrame(
-        cb_rows, "j int, code int, cv array<double>"
+    cb = local_table(
+        spark, cb_rows, "j int, code int, cv array<double>"
     )
     qsub = queries.select(
         F.col(query_id_col),
@@ -2092,7 +2095,8 @@ def build_ivfpq_index(
         # DEPENDS on its cell, so cells cannot be re-split and batches
         # cannot be re-routed without re-encoding (the no-residual
         # mode keeps that freedom and the pq_search oracle identity).
-        cent = spark.createDataFrame(
+        cent = local_table(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "list_id int, __c array<double>",
         )
@@ -2243,7 +2247,7 @@ def ivfpq_search(
                 T.StructField("q_res", T.ArrayType(T.DoubleType())),
             ]
         )
-        pr = spark.createDataFrame(pr_rows, pr_schema)
+        pr = local_table(spark, pr_rows, pr_schema)
         lut = _pq_lut(pr, codebook, "query_id", "q_res", extra_cols=("list_id",))
     else:
         probes, wanted = _probe_pairs(
@@ -2328,7 +2332,8 @@ def ivfpq_index_add(
         emb_col="__emb",
     )
     if meta.get("residual", False):
-        cent = spark.createDataFrame(
+        cent = local_table(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "list_id int, __c array<double>",
         )
@@ -2756,7 +2761,8 @@ def cell_pruned_top_k(
         .select(id_col, emb_col)
         .collect()
     )
-    seeds = spark.createDataFrame(
+    seeds = local_table(
+        spark,
         [
             (int(r[id_col]), [float(x) for x in r[emb_col]])
             for r in seed_rows
@@ -3308,7 +3314,8 @@ def lsh_index_search(
     qid_field = T.StructField(
         "query_id", queries.schema[query_id_col].dataType
     )
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         probe_rows,
         T.StructType(
             [
@@ -3326,7 +3333,8 @@ def lsh_index_search(
         )
         for i in range(len(qids))
     ]
-    q = spark.createDataFrame(
+    q = local_table(
+        spark,
         q_rows,
         T.StructType(
             [
@@ -3837,7 +3845,9 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
                 for sub in store.INDEX_DATA_LAYOUT
                 if store.exists(spark, _os.path.join(path, sub))
             }
-        ids = spark.createDataFrame(ids, ["__rm_id"])
+        ids = local_table(
+            spark, ids, spark._inferSchemaFromList(ids, names=["__rm_id"])
+        )
     else:
         ids = ids.select(F.col(ids.columns[0]).alias("__rm_id"))
     ids = F.broadcast(ids.distinct())
@@ -3922,7 +3932,7 @@ def index_remove(spark, path: str, ids, id_col: str | None = None) -> dict:
                 data_schema = StructType(
                     [f for f in sdf.schema.fields if f.name not in part_cols]
                 )
-                spark.createDataFrame([], data_schema).write.mode(
+                local_table(spark, [], data_schema).write.mode(
                     "overwrite"
                 ).parquet(d0)
         report[sub] = {

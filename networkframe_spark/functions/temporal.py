@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from ..sources import normalize_event_time
 
 
@@ -285,8 +286,8 @@ def funnel_counts(
     n1 = a.select("u").distinct().count()
     nc = conv.count()
     spark = events.sparkSession
-    base = spark.createDataFrame(
-        [(n1, nc)], "n_step1_users long, n_converted long"
+    base = local_table(
+        spark, [(n1, nc)], "n_step1_users long, n_converted long"
     )
     # HALF_UP rounding via F.round — matches the SQL twin (Python's
     # round() is half-even and would drift on exact .5 boundaries)

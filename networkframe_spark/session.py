@@ -10,8 +10,10 @@ partition coalescing), and shuffle partitions should be overridden to
 from __future__ import annotations
 
 import os
+from typing import Iterable, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -55,6 +57,43 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(
+    spark: SparkSession, rows: Iterable[tuple], schema: Union[str, StructType]
+) -> DataFrame:
+    """A driver-built table of Python ``rows`` (tuples in ``schema``
+    order; ``schema`` a DDL string or a ``StructType``), shipped as ONE
+    Arrow table.
+
+    Every Python-row table the engine builds goes through here: id
+    lists, query terms, probe lists, partition offsets, manifests and
+    typed empty results.  A ``pa.Table`` plans as a ``LocalRelation``
+    that carries its real size, so Catalyst can broadcast it up front
+    and fold projections over it.  A list of rows would instead go
+    through ``parallelize`` and a JVM unpickle into a ``LogicalRDD``
+    with no statistics (``sizeInBytes`` = Long.MaxValue), and AQE
+    would first run its scan and every exchange above it as query
+    stages of their own.  An empty ``rows`` gives an empty
+    ``LocalRelation``; a table past Spark's own
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) is
+    scanned as an RDD of Arrow batches.  Values must already be of the
+    column's Python type (``str`` for a string column, ``float`` for a
+    double column): Arrow converts, it does not coerce.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    )
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

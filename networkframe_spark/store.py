@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_table
+
 #: Persisted-index data stores and their partition columns — the
 #: directories ``index_stats`` / ``index_compact`` / ``index_remove``
 #: know how to list, rewrite and retract.
@@ -70,7 +72,7 @@ def write_manifest(spark, path: str, name: str, obj, mode: str, **tags) -> None:
     col = _MANIFEST_COLUMN.get(name, name)
     schema = ", ".join(f"{c} string" for c in (col, *tags))
     (
-        spark.createDataFrame([(json.dumps(obj), *tags.values())], schema)
+        local_table(spark, [(json.dumps(obj), *tags.values())], schema)
         .coalesce(1)
         .write.mode(mode)
         .json(os.path.join(path, name))

@@ -519,8 +519,12 @@ def test_pagerank_personalized(spark):
 def test_pagerank_personalize_duplicates_collapse_and_empty_raises(spark):
     """A repeated seed is one seed: ``personalize=[s, s]`` gives the
     ranks of ``personalize=[s]`` (not half of them), and an empty seed
-    list raises ValueError like the batch's empty seed list."""
+    list raises ValueError like the batch's empty seed list.  A seed
+    absent from the node table is ignored, as in the batch:
+    ``[s, 999]`` gives the ranks of ``[s]`` and of
+    ``pagerank_personalized_batch`` for ``s``; no present seed raises."""
     from networkframe_spark import NetworkFrame
+    from networkframe_spark.algorithms import pagerank_personalized_batch
 
     nodes = spark.createDataFrame([(i,) for i in range(4)], "id long")
     edges = spark.createDataFrame(
@@ -534,9 +538,17 @@ def test_pagerank_personalize_duplicates_collapse_and_empty_raises(spark):
             for r in nf.pagerank(n_iter=5, personalize=seeds).collect()
         }
 
-    assert ranks([0, 0]) == ranks([0])
+    one = ranks([0])
+    assert ranks([0, 0]) == one
     with pytest.raises(ValueError):
         nf.pagerank(personalize=[])
+    assert ranks([0, 999]) == one
+    batch = pagerank_personalized_batch(nf, [0], n_iter=5).collect()
+    assert {r["id"]: r["pagerank"] for r in batch} == {
+        i: p for i, p in one.items() if p > 0
+    }
+    with pytest.raises(ValueError):
+        nf.pagerank(personalize=[998, 999])
 
 
 def test_local_clustering(spark):

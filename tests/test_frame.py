@@ -295,3 +295,44 @@ def test_group_names_guard_raises_on_high_cardinality(letter_frame, monkeypatch)
         gb.source_group_names
     monkeypatch.setattr(NodeGroupBy, "_MAX_GROUP_NAMES", 2)
     assert sorted(gb.source_group_names) == ["blue", "red"]
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("1",), ("b",), (None,)], "id string"),
+        ([(1,), (None,), (3,)], "id long"),
+        ([(7, [1.5, -2.0], b"\x00\xff")], "id long, v array<double>, b binary"),
+        ([(None, None, None)], "id long, v array<double>, b binary"),
+        ([], "id string, v array<double>"),
+    ],
+)
+def test_local_table_equals_row_path(spark, rows, schema):
+    """The Arrow-built driver table has the row path's schema and rows:
+    int/str/None values, ``array<double>``, ``binary``, one-row and empty
+    inputs alike."""
+    from networkframe_spark.session import local_table
+
+    got = local_table(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_as_id_df_matches_row_path_for_int_str_none(spark):
+    """``_as_id_df`` keeps its contract through Arrow: a string column
+    cast to the node-id type, ``str()`` of an int, str or ``None`` id
+    giving what the row path gave, and a scalar taken as a one-id list."""
+    from pyspark.sql import functions as F
+
+    from networkframe_spark.frame import _as_id_df
+
+    for id_type, ids in (("long", [3, "4", None]), ("string", ["A", 5, None])):
+        like = spark.createDataFrame([], f"id {id_type}")
+        got = _as_id_df(spark, ids, like)
+        want = spark.createDataFrame([(i,) for i in ids], "id string").select(
+            F.col("id").cast(id_type).alias("id")
+        )
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    assert _as_id_df(spark, 9, like).collect() == [("9",)]

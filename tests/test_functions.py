@@ -3896,6 +3896,9 @@ def test_index_remove_contract(spark, tmp_path):
         for r in lsh_index_search(spark, p, qs, k=4).collect()
     )
     assert srch(l1) == srch(l2)
+    # a Python id list removes like a one-column frame: one band row
+    # per id and table
+    assert index_remove(spark, l2, [1, 2])["bands"]["rows_removed"] == 2 * 2
 
     # ivf_sq: manifests are corpus-trained, so the contract is
     # candidate-set subtraction — post-remove exhaustive search ==

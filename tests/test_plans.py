@@ -689,6 +689,100 @@ def test_no_raw_shuffle_partitions_conf_reads():
     )
 
 
+def test_driver_id_lists_plan_as_local_relations(spark, tmp_path):
+    """A caller's id list (``loc``, ``remove_nodes``, ``reindex_nodes``)
+    and a query's term table (``text_index_search``) plan as a
+    ``LocalRelation`` with real statistics, never as a statistics-less
+    ``LogicalRDD`` of pickled driver rows: no ``LogicalRDD`` in the
+    optimized plans of the selections, and no ``ExistingRDD`` scan in
+    any query the search runs."""
+    from networkframe_spark.functions.search import (
+        build_text_index,
+        text_index_search,
+    )
+
+    from pyspark.sql import functions as F
+
+    from networkframe_spark import NetworkFrame
+
+    nf = NetworkFrame(
+        spark.range(8),
+        spark.range(8).select(
+            F.col("id").alias("source"), ((F.col("id") + 1) % 8).alias("target")
+        ),
+    )
+    selections = {
+        "loc": nf.loc[[0, 1, 2, 3], [2, 3, 4, 5]],
+        "remove_nodes": nf.remove_nodes([0, 1, 2]),
+        "reindex_nodes": nf.reindex_nodes([0, 1, 2, 10**9]),
+    }
+    for name, sub in selections.items():
+        for df in (sub.nodes, sub.edges):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" not in plan, (name, plan)
+            assert "LocalRelation" in plan, (name, plan)
+
+    docs = spark.createDataFrame(
+        [(1, "spark hash data"), (2, "vector data spark"), (3, "hash join")],
+        "doc_id long, text string",
+    )
+    tix = str(tmp_path / "tix")
+    build_text_index(docs, tix, n_kmod=2)
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsCount()
+    hits = text_index_search(spark, tix, ["Spark", "hash"], k=2).collect()
+    assert [r["doc_id"] for r in hits] == [1, 3]
+    runs = store.executionsList(seen, 1000)
+    plans = [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+    assert any("LocalTableScan" in p for p in plans)
+    assert not any("ExistingRDD" in p for p in plans)
+
+
+def test_python_rows_reach_spark_only_through_local_table():
+    """Repo lint: every driver-built table of Python rows goes through
+    ``session.local_table`` (one Arrow ``LocalRelation``).  The only
+    other ``createDataFrame`` calls allowed are pandas frames (already
+    Arrow-built) and the JVM-side call of ``_cut_lineage``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "networkframe_spark"
+
+    def allowed(call, helper):
+        recv, arg = call.func.value, (call.args or [None])[0]
+        if call.lineno in helper:
+            return True
+        if isinstance(recv, ast.Attribute) and recv.attr == "_jsparkSession":
+            return True
+        if isinstance(arg, ast.Call) and ast.unparse(arg.func) == "pd.DataFrame":
+            return True
+        return isinstance(arg, ast.Name) and arg.id.endswith("pdf")
+
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(py.read_text())
+        helper = {
+            line
+            for fn in tree.body
+            if py.name == "session.py"
+            and isinstance(fn, ast.FunctionDef)
+            and fn.name == "local_table"
+            for line in range(fn.lineno, fn.end_lineno + 1)
+        }
+        offenders += [
+            f"{py.name}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and not allowed(node, helper)
+        ]
+    assert not offenders, (
+        "Python rows handed to createDataFrame (use session.local_table): "
+        f"{offenders}"
+    )
+
+
 def _global_windows(df) -> list[bool]:
     """Execute ``df`` and return, per unpartitioned ``Window`` node of
     its final plan, whether it is bounded: every path from it down to

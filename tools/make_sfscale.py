@@ -38,7 +38,9 @@ SHIFTS = {
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf1"
+    )
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()

@@ -33,9 +33,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 OUT = os.path.join(REPO, "PLAN_FINGERPRINTS.json")
 #: session parallelism the committed fingerprints were written at
 CORES = 32

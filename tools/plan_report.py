@@ -1,13 +1,15 @@
 """Regenerate PLANS.md: executed physical plans of flagship operators.
 
-Usage: python tools/plan_report.py  (writes /root/repo/PLANS.md)
+Usage: python tools/plan_report.py  (writes PLANS.md at the repository root)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -582,7 +584,7 @@ def main() -> None:
                 f"\n{label} codes-scan pruning attribute (elided from "
                 f"the trimmed plan above):\n`{_m.group(0)}`\n"
             )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("".join(parts))
     print("wrote PLANS.md")
     spark.stop()
