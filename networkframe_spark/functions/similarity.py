@@ -1799,9 +1799,7 @@ def _pq_lut(
         for j in range(m)
         for c in range(kcent)
     ]
-    cb = local_table(
-        spark, cb_rows, "j int, code int, cv array<double>"
-    )
+    cb = local_table(spark, cb_rows, "j int, code int, cv array<double>")
     qsub = queries.select(
         F.col(query_id_col),
         *[F.col(c) for c in extra_cols],

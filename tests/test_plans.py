@@ -729,11 +729,15 @@ def test_driver_id_lists_plan_as_local_relations(spark, tmp_path):
     tix = str(tmp_path / "tix")
     build_text_index(docs, tix, n_kmod=2)
     store = spark._jsparkSession.sharedState().statusStore()
-    seen = store.executionsCount()
+
+    def runs():  # the retained SQL executions, oldest ones evicted
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    last = max((e.executionId() for e in runs()), default=-1)
     hits = text_index_search(spark, tix, ["Spark", "hash"], k=2).collect()
     assert [r["doc_id"] for r in hits] == [1, 3]
-    runs = store.executionsList(seen, 1000)
-    plans = [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+    plans = [e.physicalPlanDescription() for e in runs() if e.executionId() > last]
     assert any("LocalTableScan" in p for p in plans)
     assert not any("ExistingRDD" in p for p in plans)
 
