@@ -1312,5 +1312,6 @@ class LocIndexer:
         edges = nf.edges.join(
             rows.withColumnRenamed("id", "source"), on="source", how="left_semi"
         ).join(cols.withColumnRenamed("id", "target"), on="target", how="left_semi")
-        nodes = nf.nodes.join(rows.union(cols).distinct(), on="id", how="left_semi")
+        # a left-semi join emits each node at most once: no distinct needed
+        nodes = nf.nodes.join(rows.union(cols), on="id", how="left_semi")
         return nf._return(False, nodes=nodes, edges=edges)

@@ -11,6 +11,13 @@ Design for scale (SURVEY §7 phase 3 / BASELINE north star):
   runs on the (small) candidate set.
 - All hash functions are engine-portable (md5-derived), so the DuckDB
   oracle can reproduce signatures bit-for-bit.
+- Wide expressions (SimHash's per-bit votes and packing chain, MinHash's
+  per-permutation mins, signature array and band keys) are built as one
+  SQL string each through ``F.expr``.  Every PySpark ``Column`` call is
+  wrapped to record its Python call site, which costs about ten py4j
+  round trips per call; a 60-bit SimHash built op by op made ~10k round
+  trips before any action.  The SQL form is one wrapped call and one
+  call site per expression, with the same analyzed expression tree.
 """
 
 from __future__ import annotations
@@ -273,15 +280,32 @@ def minhash_signatures(
     hashed = sh.withColumn(
         "h", shingle_hash_col(F.col("sh")) % MINHASH_PRIME
     ).select("id", "h")
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = hashed.groupBy("id").agg(*aggs)
-    return sig.select(
-        F.col("id").alias(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(n_perm)]).alias("sig"),
+    sig = hashed.groupBy("id").agg(
+        *[
+            F.expr(f"min((({a} * h) + {b}) % {MINHASH_PRIME}) AS h{i}")
+            for i, (a, b) in enumerate(params)
+        ]
     )
+    hs = ", ".join(f"h{i}" for i in range(n_perm))
+    return sig.select(F.col("id").alias(id_col), F.expr(f"array({hs}) AS sig"))
+
+
+def _minhash_band_keys(n_perm: int, bands: int) -> Column:
+    """``bk``: the exploded ``(band, key)`` structs of a ``sig`` column,
+    ``key`` being the band's ``n_perm // bands`` signature values joined
+    by ``_`` — the one band layout of the table, fuzzy and index
+    paths."""
+    rows_per_band = n_perm // bands
+    structs = ", ".join(
+        f"struct({b} AS band, concat_ws('_'"
+        + "".join(
+            f", CAST(element_at(sig, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band)
+        )
+        + ") AS key)"
+        for b in range(bands)
+    )
+    return F.expr(f"explode(array({structs})) AS bk")
 
 
 def minhash_band_table(
@@ -303,27 +327,12 @@ def minhash_band_table(
     rows are a pure per-document function, so they can be computed for
     a micro-batch alone and unioned into a persisted band table.
     """
-    rows_per_band = n_perm // bands
     sigs = minhash_signatures(
         df, text_col, id_col, n_perm, shingle_n, max_df=max_df,
         tokenizer=tokenizer,
     )
     return sigs.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "_", *[F.element_at("sig", b * rows_per_band + r + 1).cast("string")
-                                   for r in range(rows_per_band)]
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
+        F.col(id_col).alias("id"), _minhash_band_keys(n_perm, bands)
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
@@ -434,29 +443,30 @@ def simhash_table(
     projection) → one hash aggregate with ``bits`` conditional sums →
     pack.  One shuffle keyed on the doc id with map-side partial
     aggregation.  (A naive per-bit array-aggregate would recompute the
-    md5 per bit — 60x the hash work.)
+    md5 per bit — 60x the hash work.)  ``bits`` is at most 60, the
+    width of the token hash.
     """
+    if not 1 <= bits <= 60:
+        raise ValueError(
+            f"simhash: bits must be in [1, 60] (the token hash has 60 bits), got {bits}"
+        )
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(tokens_col(text_col)).alias("w")
     )
-    hashed = toks.withColumn(
-        "h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-    ).select("id", "h")
+    hashed = toks.withColumn("h", shingle_hash_col(F.col("w"))).select("id", "h")
     votes = hashed.groupBy("id").agg(
         *[
-            F.sum(
-                F.when(F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{j}")
+            F.expr(
+                f"sum(CASE WHEN ((shiftright(h, {j}) & 1) = 1) THEN 1 ELSE -1 END) AS v{j}"
+            )
             for j in range(bits)
         ]
     )
-    packed = None
-    for j in range(bits):
-        term = F.when(F.col(f"v{j}") > 0, F.lit(2 ** j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        packed = term if packed is None else packed + term
-    return votes.select(F.col("id").alias(id_col), packed.alias("simhash"))
+    packed = " + ".join(
+        f"CASE WHEN (v{j} > 0) THEN CAST({2 ** j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for j in range(bits)
+    )
+    return votes.select(F.col("id").alias(id_col), F.expr(f"{packed} AS simhash"))
 
 
 def simhash_duplicates(
@@ -471,27 +481,22 @@ def simhash_duplicates(
     (pigeonhole: hamming <= bands-1 guarantees one exact band match),
     join on (band, chunk), verify with bit_count(xor) <= max_hamming.
 
-    Returns ``(id_a, id_b, hamming)``.
+    Returns ``(id_a, id_b, hamming)``.  ``bands`` is at most ``bits``:
+    a zero-bit band would put every document in one bucket.
     """
+    if not 1 <= bands <= bits:
+        raise ValueError(f"simhash_duplicates: bands must be in [1, bits], got {bands}")
     chunk = bits // bands
     mask = (1 << chunk) - 1
     hashed = simhash_table(df, text_col, id_col, bits).select(
         F.col(id_col).alias("id"), F.col("simhash").alias("sh")
     )
+    structs = ", ".join(
+        f"struct({b} AS band, (shiftright(sh, {b * chunk}) & {mask}) AS key)"
+        for b in range(bands)
+    )
     banded = hashed.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sh", b * chunk).bitwiseAND(F.lit(mask)).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
+        "id", "sh", F.expr(f"explode(array({structs})) AS bk")
     ).select("id", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     pairs = (
         banded.alias("a")
@@ -1225,7 +1230,6 @@ def fuzzy_decontaminate(
         .agg(F.count(F.lit(1)).alias("shared"))
     )
     if bands:
-        rows_per_band = n_perm // bands
 
         def banded(df: DataFrame, out: str) -> DataFrame:
             sigs = minhash_signatures(
@@ -1233,26 +1237,7 @@ def fuzzy_decontaminate(
                 tokenizer=tokenizer,
             )
             return sigs.select(
-                F.col(id_col).alias(out),
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(b).alias("band"),
-                                F.concat_ws(
-                                    "_",
-                                    *[
-                                        F.element_at(
-                                            "sig", b * rows_per_band + r + 1
-                                        ).cast("string")
-                                        for r in range(rows_per_band)
-                                    ],
-                                ).alias("key"),
-                            )
-                            for b in range(bands)
-                        ]
-                    )
-                ).alias("bk"),
+                F.col(id_col).alias(out), _minhash_band_keys(n_perm, bands)
             ).select(out, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
         cand = (
@@ -1703,32 +1688,13 @@ def _mh_band_rows(
     never drift.  ``kmod = pmod(xxhash64(key), n_kmod)`` folds the
     unbounded band-key space into a bounded partition-directory space
     (band × kmod dirs) so probes prune at file listing."""
-    rows_per_band = n_perm // bands
     sigs = minhash_signatures(
         df, text_col, id_col, n_perm, shingle_n, max_df=max_df
     )
     banded = sigs.select(
         F.col(id_col).alias("doc_id"),
         F.col("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.element_at(
-                                    "sig", b * rows_per_band + r + 1
-                                ).cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
+        _minhash_band_keys(n_perm, bands),
     )
     return banded.select(
         "doc_id",
