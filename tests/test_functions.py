@@ -21,7 +21,14 @@ from networkframe_spark.functions import (
     ngram_jaccard_duplicates,
     simhash_duplicates,
 )
-from networkframe_spark.functions.dedup import dedup_exact, minhash_signatures
+from networkframe_spark.functions.dedup import (
+    MINHASH_PRIME,
+    dedup_exact,
+    minhash_band_table,
+    minhash_params,
+    minhash_signatures,
+    simhash_table,
+)
 from networkframe_spark.functions.multimodal import (
     extract_image_features,
     resize_images,
@@ -153,8 +160,6 @@ def _py_simhash(text, bits):
 
 
 def _py_minhash(text, n_perm, shingle_n=3):
-    from networkframe_spark.functions.dedup import MINHASH_PRIME, minhash_params
-
     toks = text.strip().lower().split(" ")
     shingles = {
         " ".join(toks[i : i + shingle_n])
@@ -170,8 +175,6 @@ def _py_minhash(text, n_perm, shingle_n=3):
 
 
 def test_simhash_and_minhash_match_pure_python(spark):
-    from networkframe_spark.functions.dedup import minhash_band_table, simhash_table
-
     df = spark.createDataFrame(_PIN_DOCS, "doc_id long, text string")
     for bits in (60, 16):
         got = {r["doc_id"]: r["simhash"] for r in simhash_table(df, bits=bits).collect()}
@@ -196,8 +199,6 @@ def test_simhash_and_minhash_match_pure_python(spark):
 
 
 def test_simhash_argument_bounds(spark):
-    from networkframe_spark.functions.dedup import simhash_table
-
     df = spark.createDataFrame(_PIN_DOCS[:2], "doc_id long, text string")
     for bits in (0, 61, 64):
         with pytest.raises(ValueError, match="bits"):
@@ -215,10 +216,8 @@ def test_simhash_argument_bounds(spark):
 def test_dedup_wide_expressions_build_in_few_py4j_calls(spark, monkeypatch):
     """Building (no action) the 60-bit SimHash and the 32/8 MinHash band
     table stays under 1,000 py4j round trips each; Column-by-Column
-    builds of the same expressions took about 10,000 and 6,000."""
+    builds of the same expressions took about 8,400 and 4,100."""
     from py4j import protocol as proto
-
-    from networkframe_spark.functions.dedup import minhash_band_table, simhash_table
 
     df = spark.createDataFrame(_PIN_DOCS, "doc_id long, text string")
     client = spark.sparkContext._gateway._gateway_client
