@@ -34,6 +34,8 @@ from typing import Any, Callable, Iterable, Literal, Optional, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import algorithms as _alg
+from . import exports as _exp
 from .expr import to_sql_predicate
 from .session import local_table
 
@@ -187,6 +189,14 @@ class NetworkFrame:
         for k, v in kwargs.items():
             setattr(out, f"_{k}", v)
         return out
+
+    def _induced_subframe(
+        self, ids: DataFrame, inplace: bool = False
+    ) -> Optional["NetworkFrame"]:
+        """The subframe induced by the node ids in ``ids``: nodes
+        semi-joined against them, edges closed over those nodes."""
+        nodes = self._nodes.join(ids, on="id", how="left_semi")
+        return self._return(inplace, nodes=nodes, edges=closure_edges(self._edges, nodes))
 
     def __len__(self) -> int:
         if self._n_nodes_cache is None:
@@ -501,6 +511,42 @@ class NetworkFrame:
     # ------------------------------------------------------------------
     # graph algorithms (SURVEY §2.6) — implementations in algorithms.py
     # ------------------------------------------------------------------
+    # These methods ARE the algorithms functions, whose first parameter
+    # is the frame: their docstrings are the method docs.
+    component_labels = _alg.connected_component_labels
+    k_hop_pairs = _alg.k_hop_pair_table
+    pagerank = _alg.pagerank
+    pagerank_personalized_batch = _alg.pagerank_personalized_batch
+    triangle_counts = _alg.triangle_counts
+    hop_distances = _alg.hop_distances
+    approx_diameter = _alg.approx_diameter
+    k_core = _alg.k_core
+    k_truss = _alg.k_truss
+    edge_jaccard = _alg.edge_jaccard
+    core_numbers = _alg.core_numbers
+    shortest_paths = _alg.shortest_paths
+    label_propagation = _alg.label_propagation
+    modularity_refine = _alg.modularity_refine
+    louvain_communities = _alg.louvain_communities
+    leiden_communities = _alg.leiden_communities
+    link_prediction = _alg.link_prediction
+    local_clustering = _alg.local_clustering
+    hits = _alg.hits
+    harmonic_centrality = _alg.harmonic_centrality
+    attribute_mixing = _alg.attribute_mixing
+    attribute_assortativity = _alg.attribute_assortativity
+    bipartite_project = _alg.bipartite_project
+    neighbor_sample = _alg.neighbor_sample
+    degree_distribution = _alg.degree_distribution
+    community_quality = _alg.community_quality
+    betweenness_approx = _alg.betweenness_approx
+    random_walks = _alg.random_walks
+    node2vec_walks = _alg.node2vec_walks
+    topological_levels = _alg.topological_levels
+    maximal_independent_set = _alg.maximal_independent_set
+    sample_negative_edges = _alg.sample_negative_edges
+    metrics = _alg.graph_metrics
+
     def symmetrized_edges(self) -> DataFrame:
         """source/target edge list unioned with its reverse — the
         undirected view used by weak connectivity and k-hop with
@@ -509,13 +555,6 @@ class NetworkFrame:
         return e.union(
             e.select(F.col("target").alias("source"), F.col("source").alias("target"))
         )
-
-    def component_labels(
-        self, directed: bool = True, connection: str = "weak"
-    ) -> DataFrame:
-        from .algorithms import connected_component_labels
-
-        return connected_component_labels(self, directed=directed, connection=connection)
 
     def label_nodes_by_component(
         self,
@@ -576,17 +615,17 @@ class NetworkFrame:
                 "distributed labeling, or raise max_components explicitly"
             )
         for cid in comp_ids:
-            ids = labels.filter(F.col("component") == F.lit(cid)).select("id")
-            nodes = self._nodes.join(ids, on="id", how="left_semi")
-            edges = closure_edges(self._edges, nodes)
-            yield self._return(False, nodes=nodes, edges=edges)
+            yield self._induced_subframe(
+                labels.filter(F.col("component") == F.lit(cid)).select("id")
+            )
 
     def largest_connected_component(
         self, directed: bool = True, connection: str = "weak", inplace: bool = False,
         verbose: bool = False,
     ) -> Optional["NetworkFrame"]:
         """Top-1 component by node count (reference:
-        networkframe.py:732-783)."""
+        networkframe.py:732-783).  ``verbose`` is accepted for the
+        reference's signature and ignored."""
         labels = self.component_labels(directed=directed, connection=connection)
         top = (
             labels.groupBy("component")
@@ -596,43 +635,23 @@ class NetworkFrame:
             .select("component")
         )
         ids = labels.join(F.broadcast(top), on="component", how="left_semi").select("id")
-        nodes = self._nodes.join(ids, on="id", how="left_semi")
-        edges = closure_edges(self._edges, nodes)
-        return self._return(inplace, nodes=nodes, edges=edges)
+        return self._induced_subframe(ids, inplace)
 
     def select_component_from_node(
         self, node_id: Any, directed: bool = True, inplace: bool = False
     ) -> Optional["NetworkFrame"]:
         """Single-source reachability — avoids computing all components
         (reference: networkframe.py:962-998)."""
-        from .algorithms import reachable_from
-
-        ids = reachable_from(self, node_id, directed=directed)
-        nodes = self._nodes.join(ids, on="id", how="left_semi")
-        edges = closure_edges(self._edges, nodes)
-        return self._return(inplace, nodes=nodes, edges=edges)
+        ids = _alg.reachable_from(self, node_id, directed=directed)
+        return self._induced_subframe(ids, inplace)
 
     def k_hop_neighborhood(
         self, node_id: Any, k: int, directed: bool = False
     ) -> "NetworkFrame":
         """Induced subframe on nodes within k hops of ``node_id``
         (reference: networkframe.py:1241-1277)."""
-        from .algorithms import k_hop_reachable
-
-        ids = k_hop_reachable(self, node_id, k, directed=directed)
-        nodes = self._nodes.join(ids, on="id", how="left_semi")
-        edges = closure_edges(self._edges, nodes)
-        return self._return(False, nodes=nodes, edges=edges)
-
-    def k_hop_pairs(
-        self, k: int, directed: bool = False, drop_self: bool = True
-    ) -> DataFrame:
-        """All-pairs bounded reachability as a long (node, neighbor)
-        table — the scale-safe replacement for the reference's dense
-        n x n boolean mask (networkframe.py:1279-1307)."""
-        from .algorithms import k_hop_pair_table
-
-        return k_hop_pair_table(self, k, directed=directed, drop_self=drop_self)
+        ids = _alg.k_hop_reachable(self, node_id, k, directed=directed)
+        return self._induced_subframe(ids)
 
     def k_hop_mask(self, k: int, directed: bool = False) -> DataFrame:
         """Reference parity for the dense all-pairs k-hop mask
@@ -687,10 +706,7 @@ class NetworkFrame:
                 members = pairs.filter(F.col("node") == F.lit(ego)).select(
                     F.col("neighbor").alias("id")
                 )
-                nodes = self._nodes.join(members, on="id", how="left_semi")
-                yield ego, self._return(
-                    nodes=nodes, edges=closure_edges(self._edges, nodes)
-                )
+                yield ego, self._induced_subframe(members)
 
         return _gen()
 
@@ -706,10 +722,10 @@ class NetworkFrame:
     ) -> DataFrame:
         """Neighborhood feature aggregation (GNN-style); returns one row
         per node with ``{col}_neighbor_{agg}`` columns
-        (reference: networkframe.py:1332-1511)."""
-        from .algorithms import k_hop_aggregation
-
-        return k_hop_aggregation(
+        (reference: networkframe.py:1332-1511).  ``verbose`` and
+        ``engine`` are accepted for the reference's signature and
+        ignored."""
+        return _alg.k_hop_aggregation(
             self,
             k,
             aggregations=aggregations,
@@ -733,407 +749,11 @@ class NetworkFrame:
         ``max_iter`` rounds — use for bit-reproducible scores (the
         eigenvector sign remains ambiguous, as in the reference's
         eigsh; take ``abs`` for engine-portable comparisons)."""
-        from .algorithms import spectral_scores
-
-        scores = spectral_scores(
+        scores = _alg.spectral_scores(
             self, weight_col=weight_col, max_iter=max_iter, tol=tol
         )
         nodes = self._nodes.join(scores, on="id", how="left").orderBy("spectral_score")
         return self._return(inplace, nodes=nodes)
-
-    def pagerank(
-        self,
-        damping: float = 0.85,
-        n_iter: int = 10,
-        weight_col: Optional[str] = None,
-        personalize: Optional[list] = None,
-    ) -> DataFrame:
-        """Fixed-iteration (optionally personalized) PageRank
-        ``(id, pagerank)`` — scale-extension centrality beyond the
-        reference's surface; see
-        :func:`networkframe_spark.algorithms.pagerank`."""
-        from .algorithms import pagerank
-
-        return pagerank(
-            self,
-            damping=damping,
-            n_iter=n_iter,
-            weight_col=weight_col,
-            personalize=personalize,
-        )
-
-    def pagerank_personalized_batch(
-        self,
-        seeds: list,
-        damping: float = 0.85,
-        n_iter: int = 10,
-        weight_col: Optional[str] = None,
-    ) -> DataFrame:
-        """Batched per-seed personalized PageRank ``(seed, id,
-        pagerank)`` — k restart vectors in one set of rounds; see
-        :func:`networkframe_spark.algorithms.pagerank_personalized_batch`."""
-        from .algorithms import pagerank_personalized_batch
-
-        return pagerank_personalized_batch(
-            self,
-            seeds,
-            damping=damping,
-            n_iter=n_iter,
-            weight_col=weight_col,
-        )
-
-    def triangle_counts(self) -> DataFrame:
-        """Per-node triangle counts ``(id, triangles)`` over the
-        undirected simple projection; see
-        :func:`networkframe_spark.algorithms.triangle_counts`."""
-        from .algorithms import triangle_counts
-
-        return triangle_counts(self)
-
-    def hop_distances(
-        self, node_id, directed: bool = True, max_hops: Optional[int] = None
-    ) -> DataFrame:
-        """Single-source BFS hop distances ``(id, dist)`` — the
-        distance vector behind the reference's
-        ``select_component_from_node`` scipy shortest-path call
-        (networkframe.py:962-998); see
-        :func:`networkframe_spark.algorithms.hop_distances`."""
-        from .algorithms import hop_distances
-
-        return hop_distances(self, node_id, directed=directed, max_hops=max_hops)
-
-    def approx_diameter(
-        self, directed: bool = False, max_hops: Optional[int] = None
-    ) -> DataFrame:
-        """Double-sweep BFS diameter lower bound (one row); see
-        :func:`networkframe_spark.algorithms.approx_diameter`."""
-        from .algorithms import approx_diameter
-
-        return approx_diameter(self, directed=directed, max_hops=max_hops)
-
-    def k_core(self, k: int, max_iter: int = 50) -> DataFrame:
-        """k-core ``(id, core_degree)`` of the undirected simple
-        projection; see :func:`networkframe_spark.algorithms.k_core`."""
-        from .algorithms import k_core
-
-        return k_core(self, k, max_iter=max_iter)
-
-    def k_truss(self, k: int = 3, max_rounds: Optional[int] = None) -> DataFrame:
-        """k-truss edges ``(source, target, support)`` of the
-        undirected simple projection; see
-        :func:`networkframe_spark.algorithms.k_truss`."""
-        from .algorithms import k_truss
-
-        return k_truss(self, k, max_rounds=max_rounds)
-
-    def edge_jaccard(self, min_jaccard: float = 0.0) -> DataFrame:
-        """Neighborhood-similarity scores for existing edges
-        ``(source, target, n_common, jaccard)``; see
-        :func:`networkframe_spark.algorithms.edge_jaccard`."""
-        from .algorithms import edge_jaccard
-
-        return edge_jaccard(self, min_jaccard=min_jaccard)
-
-    def core_numbers(self, max_rounds: Optional[int] = None) -> DataFrame:
-        """Full core decomposition ``(id, core_number)`` via the
-        distributed h-index iteration; see
-        :func:`networkframe_spark.algorithms.core_numbers`."""
-        from .algorithms import core_numbers
-
-        return core_numbers(self, max_rounds=max_rounds)
-
-    def shortest_paths(
-        self,
-        node_id,
-        weight_col: str = "weight",
-        directed: bool = True,
-        max_rounds: int = 30,
-    ) -> DataFrame:
-        """Single-source weighted shortest-path distances ``(id,
-        dist)`` (synchronous Bellman-Ford); see
-        :func:`networkframe_spark.algorithms.shortest_paths`."""
-        from .algorithms import shortest_paths
-
-        return shortest_paths(
-            self,
-            node_id,
-            weight_col=weight_col,
-            directed=directed,
-            max_rounds=max_rounds,
-        )
-
-    def label_propagation(
-        self,
-        n_iter: int = 3,
-        directed: bool = False,
-        weight_col: Optional[str] = None,
-        self_weight: float = 0.0,
-    ) -> DataFrame:
-        """Deterministic synchronous label-propagation communities
-        ``(id, community)``, optionally weighted by ``weight_col``
-        (exact decimal vote sums); see
-        :func:`networkframe_spark.algorithms.label_propagation`."""
-        from .algorithms import label_propagation
-
-        return label_propagation(
-            self,
-            n_iter=n_iter,
-            directed=directed,
-            weight_col=weight_col,
-            self_weight=self_weight,
-        )
-
-    def modularity_refine(
-        self,
-        labels: DataFrame,
-        label_col: str = "community",
-        n_rounds: int = 1,
-    ) -> DataFrame:
-        """Louvain-style local-move refinement of a community
-        assignment, exact-integer gain test, round-level accept so
-        modularity never decreases; see
-        :func:`networkframe_spark.algorithms.modularity_refine`."""
-        from .algorithms import modularity_refine
-
-        return modularity_refine(
-            self, labels, label_col=label_col, n_rounds=n_rounds
-        )
-
-    def louvain_communities(
-        self,
-        n_levels: int = 2,
-        n_rounds: int = 2,
-        weight_col: Optional[str] = None,
-    ) -> DataFrame:
-        """Full multi-level Louvain community detection: local-move
-        phases alternated with graph aggregation, all-exact-integer
-        arithmetic (weights quantized to 1e-6 units when
-        ``weight_col`` is given); see
-        :func:`networkframe_spark.algorithms.louvain_communities`."""
-        from .algorithms import louvain_communities
-
-        return louvain_communities(
-            self, n_levels=n_levels, n_rounds=n_rounds, weight_col=weight_col
-        )
-
-    def leiden_communities(
-        self,
-        n_levels: int = 2,
-        n_rounds: int = 2,
-        weight_col: Optional[str] = None,
-    ) -> DataFrame:
-        """Leiden community detection (connectivity-guarantee form):
-        Louvain phases with a connected-component refinement after
-        each, so every output community induces a connected subgraph;
-        see :func:`networkframe_spark.algorithms.leiden_communities`."""
-        from .algorithms import leiden_communities
-
-        return leiden_communities(
-            self, n_levels=n_levels, n_rounds=n_rounds, weight_col=weight_col
-        )
-
-    def link_prediction(
-        self, min_common: int = 2, max_hub_degree: Optional[int] = None
-    ) -> DataFrame:
-        """Common-neighbor / Jaccard / Adamic-Adar link-prediction
-        scores for non-adjacent pairs; see
-        :func:`networkframe_spark.algorithms.link_prediction`."""
-        from .algorithms import link_prediction
-
-        return link_prediction(
-            self, min_common=min_common, max_hub_degree=max_hub_degree
-        )
-
-    def local_clustering(self) -> DataFrame:
-        """Per-node clustering coefficient ``(id, triangles,
-        clustering)``; see
-        :func:`networkframe_spark.algorithms.local_clustering`."""
-        from .algorithms import local_clustering
-
-        return local_clustering(self)
-
-    def hits(self, n_iter: int = 3, directed: bool = True) -> DataFrame:
-        """Fixed-iteration HITS hub/authority scores ``(id, hub,
-        authority)``; see :func:`networkframe_spark.algorithms.hits`."""
-        from .algorithms import hits
-
-        return hits(self, n_iter=n_iter, directed=directed)
-
-    def harmonic_centrality(
-        self,
-        sources: list,
-        directed: bool = False,
-        max_hops: Optional[int] = None,
-    ) -> DataFrame:
-        """Sampled harmonic centrality ``(id, harmonic)`` from a seed
-        sample; see
-        :func:`networkframe_spark.algorithms.harmonic_centrality`."""
-        from .algorithms import harmonic_centrality
-
-        return harmonic_centrality(
-            self, sources, directed=directed, max_hops=max_hops
-        )
-
-    def attribute_mixing(
-        self, attr_col: str, directed: bool = True
-    ) -> DataFrame:
-        """Categorical mixing matrix ``(attr_a, attr_b, n_edges,
-        fraction)``; see
-        :func:`networkframe_spark.algorithms.attribute_mixing`."""
-        from .algorithms import attribute_mixing
-
-        return attribute_mixing(self, attr_col, directed=directed)
-
-    def attribute_assortativity(
-        self, attr_col: str, directed: bool = True
-    ) -> DataFrame:
-        """Categorical assortativity coefficient ``(n_edges,
-        assortativity)``; see
-        :func:`networkframe_spark.algorithms.attribute_assortativity`."""
-        from .algorithms import attribute_assortativity
-
-        return attribute_assortativity(self, attr_col, directed=directed)
-
-    def bipartite_project(
-        self, side: str = "target", max_hub_degree: Optional[int] = None
-    ) -> DataFrame:
-        """Bipartite co-occurrence projection ``(a, b, n_shared)``;
-        see :func:`networkframe_spark.algorithms.bipartite_project`."""
-        from .algorithms import bipartite_project
-
-        return bipartite_project(self, side=side, max_hub_degree=max_hub_degree)
-
-    def neighbor_sample(
-        self,
-        seeds: list,
-        fanouts: Optional[list] = None,
-        directed: bool = True,
-        seed: int = 42,
-    ) -> DataFrame:
-        """GraphSAGE-style deterministic k-hop neighbor sampling
-        ``(hop, source, target)``; see
-        :func:`networkframe_spark.algorithms.neighbor_sample`."""
-        from .algorithms import neighbor_sample
-
-        return neighbor_sample(
-            self, seeds, fanouts=fanouts, directed=directed, seed=seed
-        )
-
-    def degree_distribution(
-        self, mode: str = "out", simple: bool = False
-    ) -> DataFrame:
-        """Degree histogram ``(degree, n_nodes)``; see
-        :func:`networkframe_spark.algorithms.degree_distribution`."""
-        from .algorithms import degree_distribution
-
-        return degree_distribution(self, mode=mode, simple=simple)
-
-    def community_quality(
-        self, labels: DataFrame, label_col: str = "community"
-    ) -> DataFrame:
-        """Per-community cut/volume/conductance + modularity terms for
-        a label assignment; see
-        :func:`networkframe_spark.algorithms.community_quality`."""
-        from .algorithms import community_quality
-
-        return community_quality(self, labels, label_col=label_col)
-
-    def betweenness_approx(
-        self,
-        sources: list,
-        directed: bool = False,
-        max_hops: int = 3,
-    ) -> DataFrame:
-        """Sampled Brandes betweenness ``(id, betweenness)`` from a
-        seed sample with bounded BFS depth; see
-        :func:`networkframe_spark.algorithms.betweenness_approx`."""
-        from .algorithms import betweenness_approx
-
-        return betweenness_approx(
-            self, sources, directed=directed, max_hops=max_hops
-        )
-
-    def random_walks(
-        self,
-        walk_length: int = 4,
-        walks_per_node: int = 2,
-        directed: bool = True,
-    ) -> DataFrame:
-        """Deterministic uniform random-walk corpus ``(start_id, rep,
-        step, id)``; see
-        :func:`networkframe_spark.algorithms.random_walks`."""
-        from .algorithms import random_walks
-
-        return random_walks(
-            self,
-            walk_length=walk_length,
-            walks_per_node=walks_per_node,
-            directed=directed,
-        )
-
-    def node2vec_walks(
-        self,
-        walk_length: int = 4,
-        walks_per_node: int = 1,
-        p: float = 1.0,
-        q: float = 1.0,
-        directed: bool = False,
-    ) -> DataFrame:
-        """Deterministic node2vec biased-walk corpus ``(start_id, rep,
-        step, id)`` with exact-integer return/in-out weighting; see
-        :func:`networkframe_spark.algorithms.node2vec_walks`."""
-        from .algorithms import node2vec_walks
-
-        return node2vec_walks(
-            self,
-            walk_length=walk_length,
-            walks_per_node=walks_per_node,
-            p=p,
-            q=q,
-            directed=directed,
-        )
-
-    def topological_levels(self, max_rounds: int = 64) -> DataFrame:
-        """DAG dependency levels ``(id, level)`` (longest path from
-        any source; raises on cycles); see
-        :func:`networkframe_spark.algorithms.topological_levels`."""
-        from .algorithms import topological_levels
-
-        return topological_levels(self, max_rounds=max_rounds)
-
-    def maximal_independent_set(
-        self,
-        directed: bool = False,
-        max_rounds: int = 64,
-        seed: int = 42,
-    ) -> DataFrame:
-        """Deterministic Luby MIS ``(id, in_mis)``; see
-        :func:`networkframe_spark.algorithms.maximal_independent_set`."""
-        from .algorithms import maximal_independent_set
-
-        return maximal_independent_set(
-            self, directed=directed, max_rounds=max_rounds, seed=seed
-        )
-
-    def sample_negative_edges(
-        self, per_node: int = 2, directed: bool = True, seed: int = 7
-    ) -> DataFrame:
-        """Deterministic non-edge samples ``(source, target, rep)``
-        for link-prediction training; see
-        :func:`networkframe_spark.algorithms.sample_negative_edges`."""
-        from .algorithms import sample_negative_edges
-
-        return sample_negative_edges(
-            self, per_node=per_node, directed=directed, seed=seed
-        )
-
-    def metrics(self) -> DataFrame:
-        """One-row graph-science summary ``(density, reciprocity,
-        assortativity, avg_degree)`` over the simple projection; see
-        :func:`networkframe_spark.algorithms.graph_metrics`."""
-        from .algorithms import graph_metrics
-
-        return graph_metrics(self)
 
     def describe(self) -> DataFrame:
         """One-row structural profile of the graph: ``n_nodes,
@@ -1186,6 +806,11 @@ class NetworkFrame:
     # ------------------------------------------------------------------
     # serde / exports (SURVEY §2.1) — implementations in exports.py
     # ------------------------------------------------------------------
+    # These methods ARE the exports functions (see graph algorithms).
+    to_adjacency = _exp.to_adjacency
+    to_networkx = _exp.to_networkx
+    to_torch_geometric = _exp.to_torch_geometric
+
     def to_dict(self, orient: str = "dict") -> dict:
         """Driver-side serialization (reference: networkframe.py:1156-1173).
         Collects both tables — small-graph escape hatch."""
@@ -1224,11 +849,6 @@ class NetworkFrame:
         edges = spark.createDataFrame(edges_pdf)
         return cls(nodes, edges, directed=d.get("directed", True))
 
-    def to_adjacency(self, weight_col: str = "weight", aggfunc: str = "sum"):
-        from .exports import to_adjacency
-
-        return to_adjacency(self, weight_col=weight_col, aggfunc=aggfunc)
-
     def to_sparse_adjacency(
         self,
         weight_col: Optional[str] = None,
@@ -1236,9 +856,10 @@ class NetworkFrame:
         verify_integrity: bool = True,
         format: str = "csr",
     ):
-        from .exports import to_sparse_adjacency
-
-        return to_sparse_adjacency(
+        """See :func:`networkframe_spark.exports.to_sparse_adjacency`;
+        ``verify_integrity`` is accepted for the reference's signature
+        and ignored."""
+        return _exp.to_sparse_adjacency(
             self, weight_col=weight_col, aggfunc=aggfunc, format=format
         )
 
@@ -1282,16 +903,6 @@ class NetworkFrame:
         return self._edges.groupBy("source", "target").agg(
             agg(weight_col).alias("weight")
         )
-
-    def to_networkx(self, create_using=None):
-        from .exports import to_networkx
-
-        return to_networkx(self, create_using=create_using)
-
-    def to_torch_geometric(self, directed: bool = True, weight_col: Optional[str] = None):
-        from .exports import to_torch_geometric
-
-        return to_torch_geometric(self, directed=directed, weight_col=weight_col)
 
 
 class LocIndexer:

@@ -294,7 +294,14 @@ def _minhash_band_keys(n_perm: int, bands: int) -> Column:
     """``bk``: the exploded ``(band, key)`` structs of a ``sig`` column,
     ``key`` being the band's ``n_perm // bands`` signature values joined
     by ``_`` — the one band layout of the table, fuzzy and index
-    paths."""
+    paths.  ``bands`` must divide ``n_perm``: more bands than
+    permutations give every document the same empty key (an all-pairs
+    candidate join), and a remainder would drop permutations."""
+    if not 1 <= bands <= n_perm or n_perm % bands:
+        raise ValueError(
+            f"MinHash bands must be in [1, n_perm] and divide n_perm={n_perm}, "
+            f"got {bands}"
+        )
     rows_per_band = n_perm // bands
     structs = ", ".join(
         f"struct({b} AS band, concat_ws('_'"
@@ -1743,8 +1750,6 @@ def build_minhash_index(
     """
     import os as _os
 
-    if n_perm % bands:
-        raise ValueError("build_minhash_index: n_perm must divide by bands")
     rows = _mh_band_rows(
         corpus, id_col, text_col, n_perm, bands, shingle_n, max_df, n_kmod
     )

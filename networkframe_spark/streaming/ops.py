@@ -288,13 +288,25 @@ def neardup_increment(
     bands2 = nb if bands is None else bands.unionByName(nb)
     if materialize:
         # independent jobs — overlap them (guide: actions are only
-        # sequential because the driver calls them sequentially)
+        # sequential because the driver calls them sequentially).  In
+        # pinned-thread mode a pool thread runs on a fresh JVM thread;
+        # inheritable_thread_target carries the caller's local
+        # properties (job group, description, SparkContext job tags)
+        # over to it.
+        import warnings
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            docs2, bands2 = pool.map(
-                lambda d: d.localCheckpoint(eager=True), (docs2, bands2)
+        from pyspark import inheritable_thread_target
+
+        with warnings.catch_warnings():
+            # "Tags will not be inherited" names SparkSession tags only;
+            # the wrapper's SparkSession form fails outside pinned mode
+            warnings.simplefilter("ignore", UserWarning)
+            checkpoint = inheritable_thread_target(
+                lambda d: d.localCheckpoint(eager=True)
             )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            docs2, bands2 = pool.map(checkpoint, (docs2, bands2))
         # the batch's band rows, re-sliced from the checkpointed band
         # table instead of re-hashing the batch: new ids were
         # anti-joined against the old docs, and band ids are a subset

@@ -336,3 +336,59 @@ def test_as_id_df_matches_row_path_for_int_str_none(spark):
         assert got.schema == want.schema
         assert got.collect() == want.collect()
     assert _as_id_df(spark, 9, like).collect() == [("9",)]
+
+
+def test_frame_methods_bind_module_functions_instead_of_wrapping():
+    """Repo lint: a ``NetworkFrame`` method whose body is only an import
+    and ``return f(self, <its own params>)`` declares the function's
+    signature and defaults a second time; bind the function instead
+    (``pagerank = _alg.pagerank``).  Each bound name is the module
+    function itself, whose first parameter is the frame."""
+    import ast
+    import inspect
+    import pathlib
+
+    from networkframe_spark import algorithms, exports, frame
+
+    tree = ast.parse(pathlib.Path(frame.__file__).read_text())
+    cls = next(
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "NetworkFrame"
+    )
+
+    def forwards(fn):
+        body = fn.body[1:] if ast.get_docstring(fn) else fn.body
+        if len(body) != 2 or not isinstance(body[0], ast.ImportFrom):
+            return False
+        call = body[1].value if isinstance(body[1], ast.Return) else None
+        if not isinstance(call, ast.Call) or not call.args:
+            return False
+        passed = [ast.unparse(a) for a in call.args] + [
+            k.arg for k in call.keywords if ast.unparse(k.value) == k.arg
+        ]
+        own = [a.arg for a in fn.args.args]
+        # groupby_nodes takes (and drops) **kwargs: not a pure forward
+        return passed == own and not (fn.args.vararg or fn.args.kwarg)
+
+    wrappers = [
+        fn.name for fn in cls.body
+        if isinstance(fn, ast.FunctionDef) and forwards(fn)
+    ]
+    assert not wrappers, f"pass-through wrappers (bind the function): {wrappers}"
+    modules = {"_alg": algorithms, "_exp": exports}
+    bound = {
+        node.targets[0].id: getattr(modules[node.value.value.id], node.value.attr)
+        for node in cls.body
+        if isinstance(node, ast.Assign)
+        and isinstance(node.value, ast.Attribute)
+        and ast.unparse(node.value.value) in modules
+    }
+    assert len(bound) == 36
+    for name, fn in bound.items():
+        assert NetworkFrame.__dict__[name] is fn, name
+        assert next(iter(inspect.signature(fn).parameters)) == "frame", name
+    assert NetworkFrame.pagerank is algorithms.pagerank
+    assert NetworkFrame.component_labels is algorithms.connected_component_labels
+    assert NetworkFrame.k_hop_pairs is algorithms.k_hop_pair_table
+    assert NetworkFrame.metrics is algorithms.graph_metrics
+    assert NetworkFrame.to_networkx is exports.to_networkx

@@ -24,6 +24,7 @@ from networkframe_spark.functions import (
 from networkframe_spark.functions.dedup import (
     MINHASH_PRIME,
     dedup_exact,
+    fuzzy_decontaminate,
     minhash_band_table,
     minhash_params,
     minhash_signatures,
@@ -211,6 +212,20 @@ def test_simhash_argument_bounds(spark):
     # the edges of the ranges still build
     assert len(simhash_duplicates(df, bits=16, bands=16, max_hamming=0).collect()) == 0
     assert {r["simhash"] for r in simhash_table(df, bits=1).collect()} <= {0, 1}
+    # MinHash bands must divide n_perm: 4/8 would band every document
+    # into one empty key (an all-pairs candidate join)
+    from networkframe_spark.streaming.ops import neardup_increment
+
+    for n_perm, bands in ((4, 8), (32, 6)):
+        with pytest.raises(ValueError, match="bands"):
+            minhash_band_table(df, n_perm=n_perm, bands=bands)
+        with pytest.raises(ValueError, match="bands"):
+            minhash_lsh_duplicates(df, n_perm=n_perm, bands=bands)
+    with pytest.raises(ValueError, match="bands"):
+        neardup_increment(df, None, None, None, n_perm=4, n_bands=8)
+    # bands=0 is fuzzy_decontaminate's exhaustive mode, not a banding
+    pairs = fuzzy_decontaminate(df, df, n_perm=4, bands=0, threshold=0.5).collect()
+    assert {(r["train_id"], r["eval_id"]) for r in pairs} >= {(0, 1), (1, 0)}
 
 
 def test_dedup_wide_expressions_build_in_few_py4j_calls(spark, monkeypatch):

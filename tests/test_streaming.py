@@ -1365,3 +1365,30 @@ def test_stream_index_add_maintain_cadence(spark, tmp_path):
         map(tuple, text_index_search(spark, p, terms, k=10).collect())
     )
     assert srch(inc) == srch(full)
+
+
+def test_neardup_materialize_jobs_keep_the_callers_job_group(spark):
+    """A materialized fold checkpoints ``docs`` and ``bands`` from
+    helper threads; every job it submits carries the caller's job
+    group, so none joins the jobs without a group."""
+    from networkframe_spark.streaming.ops import neardup_increment
+
+    sc = spark.sparkContext
+    batch = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy dog again")],
+        "doc_id long, text string",
+    )
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("neardup-fold", "one materialized fold")
+    try:
+        neardup_increment(
+            batch, None, None, None, n_perm=4, n_bands=2, threshold=0.3,
+            materialize=True,
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup("neardup-fold")
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
