@@ -39,6 +39,12 @@ Shared kernels carry the loops and joins that several operators need:
   by :func:`modularity_refine` and :func:`_louvain_phase`, whose
   :func:`_level_ladder` runs the phase / refine / aggregate levels of
   :func:`louvain_communities` and :func:`leiden_communities`.
+- :func:`_collect_local`, :func:`_dense_index` and :func:`_local_result`
+  — the driver-local twin kernel: one ``limit(N + 1)`` collect guarded
+  by the one bound ``_LOCAL_MAX_ROWS``, one sorted-unique id index and
+  one Arrow table back.  Used by the SCC Tarjan, :func:`hop_distances`,
+  :func:`shortest_paths` and :func:`spectral_scores`, each of which
+  runs its distributed loop past the bound.
 
 Not on :func:`_fixpoint`, which carries one table: :func:`hits` and
 :func:`maximal_independent_set` (two state tables), the distributed
@@ -232,6 +238,49 @@ def _fixpoint(
             return state, True
         sig = nxt
     return state, False
+
+
+# ---------------------------------------------------------------------------
+# driver-local twins
+# ---------------------------------------------------------------------------
+# The row bound of every table a driver-local twin collects: SCC's
+# distinct edges, the BFS pair table, Bellman-Ford's cheapest edges,
+# and spectral's symmetrized edges and node ids.
+_LOCAL_MAX_ROWS = 2_000_000
+
+
+def _collect_local(df: DataFrame, max_rows: int):
+    """``df`` as a pandas frame, or None past ``max_rows`` rows: one
+    ``limit(max_rows + 1)`` Arrow collect is the guard and the collect,
+    one job whatever the session's Arrow setting (a ``toPandas`` of a
+    limit can run Spark's incremental take, a job per batch of
+    partitions), so a tripped guard pulls at most ``max_rows + 1``
+    rows."""
+    table = df.limit(max_rows + 1).toArrow()
+    return None if table.num_rows > max_rows else table.to_pandas()
+
+
+def _dense_index(epdf, *extra):
+    """Sorted unique ids over a collected edge table's ``source`` and
+    ``target`` and the ``extra`` id lists, then the dense positions
+    (``searchsorted``) of each of those columns: ``(ids, src, dst,
+    *extra)``.  Vectorized, for int and string ids alike."""
+    import numpy as np
+
+    src = epdf["source"].to_numpy()
+    cols = [src, epdf["target"].to_numpy()]
+    cols += [np.asarray(x, dtype=src.dtype) for x in extra]
+    ids = np.unique(np.concatenate(cols))
+    return (ids, *(np.searchsorted(ids, c) for c in cols))
+
+
+def _local_result(frame, ids, name: str, values, ddl: str | None = None) -> DataFrame:
+    """``(id, name)`` from numpy columns as one Arrow ``LocalRelation``:
+    ``id`` typed as the node ids, ``name`` as the DDL type ``ddl`` (the
+    node id type when None)."""
+    idt = frame.nodes.schema["id"].dataType.simpleString()
+    schema = f"id {idt}, {name} {ddl or idt}"
+    return local_table(frame.spark, (), schema, columns=[ids, values])
 
 
 # ---------------------------------------------------------------------------
@@ -429,6 +478,25 @@ def _local_contract(edges: DataFrame) -> DataFrame:
     return edges.mapInPandas(uf, schema)
 
 
+def _coalesce_need(df: DataFrame, max_rows: int) -> int | None:
+    """The fewest partitions ``df`` may coalesce into with every merged
+    partition at most ``max_rows`` rows (None: no merge fits), sized by
+    one aggregate of the rows per partition.  Coalesce balances
+    partition counts, so a merge of k partitions holds at most the k
+    largest ones' rows: a hot partition counts as itself, not as the
+    average."""
+    import numpy as np
+
+    n_parts = df.rdd.getNumPartitions()
+    sizes = df.groupBy(F.spark_partition_id()).count().collect()
+    top = np.cumsum(sorted((r[1] for r in sizes), reverse=True))
+    # most partitions one group may take: its k largest fit the bound
+    k = int(np.searchsorted(top, max_rows, "right"))
+    if k == len(top):
+        return 1
+    return -(-n_parts // k) if k else None  # ceil
+
+
 def _weak_component_min_labels(frame) -> DataFrame:
     """(id, comp) where comp = min node id in the weak component.
 
@@ -476,15 +544,14 @@ def _weak_component_min_labels(frame) -> DataFrame:
     solved = False
     while parts > 1:
         step = max(1, parts // 8)
-        rows = mapping.count()
         # r17: jump straight to the SMALLEST partition count the
         # memory guard allows instead of fixed /8 levels — a mapping
         # that fits one partition solves in ONE contract pass (one
         # count + one materialization instead of a level per /8).
         # Union-find roots are component minima along any merge order,
         # so the labels are identical whichever ladder is walked.
-        need = max(1, -(-rows // _HIER_MAX_ROWS_PER_PART))  # ceil
-        if need > step:
+        need = _coalesce_need(mapping, _HIER_MAX_ROWS_PER_PART)
+        if need is None or need > step:
             break
         parts = max(1, min(step, need))
         pairs = mapping.select(
@@ -599,17 +666,15 @@ def _max_label_fixpoint(e: DataFrame, init: DataFrame, label: str) -> DataFrame:
     return state.select("id", label)
 
 
-_SCC_LOCAL_MAX_EDGES = 2_000_000
-
-
-def _scc_local(src, dst, node_ids):
-    """Driver-local iterative Tarjan over numpy-indexed edges — the
-    same role as the reference's direct scipy call
-    (networkframe.py:721-730).  Returns comp (min member id) per node
-    index.  Explicit stack (no recursion), O(V + E)."""
+def _scc_local(src, dst, n: int):
+    """Driver-local iterative Tarjan over the dense positions ``src``
+    and ``dst`` of ``n`` nodes — the same role as the reference's
+    direct scipy call (networkframe.py:721-730).  Returns, per node
+    position, the position of its component's first member: with
+    sorted ids (:func:`_dense_index`) that is the min member.
+    Explicit stack (no recursion), O(V + E)."""
     import numpy as np
 
-    n = len(node_ids)
     # CSR-style adjacency
     order = np.argsort(src, kind="stable")
     src_s, dst_s = src[order], dst[order]
@@ -647,32 +712,28 @@ def _scc_local(src, dst, node_ids):
                 continue
             work.pop()
             if low[v] == index[v]:
-                members = []
                 while True:
                     w = stack.pop()
                     on_stack[w] = False
                     comp[w] = n_comp
-                    members.append(w)
                     if w == v:
                         break
                 n_comp += 1
             if work:
                 p = work[-1][0]
                 low[p] = min(low[p], low[v])
-    # comp holds arbitrary scc numbers; relabel to min member id
-    min_member = {}
-    for i in range(n):
-        c = comp[i]
-        if c not in min_member or node_ids[i] < min_member[c]:
-            min_member[c] = node_ids[i]
-    return [min_member[comp[i]] for i in range(n)]
+    # comp holds Tarjan's scc numbers 0..n_comp-1; the first position
+    # of each number is its component's first member
+    _, first = np.unique(comp, return_index=True)
+    return first[comp]
 
 
 def _strong_component_min_labels(frame) -> DataFrame:
     """(id, comp) for strongly connected components, comp = min member.
 
-    Below ``_SCC_LOCAL_MAX_EDGES`` distinct edges the graph is
-    collected and solved with an iterative driver-local Tarjan —
+    Up to ``_LOCAL_MAX_ROWS`` distinct edges the edges are collected
+    and solved with an iterative driver-local Tarjan over their
+    endpoints (every other node is a singleton) —
     exactly the reference's own strategy (scipy.csgraph,
     networkframe.py:721-730): Tarjan is inherently sequential, and the
     data-parallel alternative below is diameter-bound.
@@ -689,22 +750,15 @@ def _strong_component_min_labels(frame) -> DataFrame:
        the remainder — rounds = DAG peeling depth, not #SCCs.
     """
     fwd = frame.edges.select("source", "target").distinct().cache()
-    if fwd.count() <= _SCC_LOCAL_MAX_EDGES:
-        import numpy as np
-        import pandas as pd
-
-        epdf = fwd.toPandas()
+    epdf = _collect_local(fwd, _LOCAL_MAX_ROWS)
+    if epdf is not None:
         fwd.unpersist()
-        ids = frame.nodes.select("id").toPandas()["id"].to_numpy()
-        pos = {v: i for i, v in enumerate(ids)}
-        src = np.fromiter(
-            (pos[v] for v in epdf["source"]), dtype=np.int64, count=len(epdf)
+        ids, src, dst = _dense_index(epdf)
+        comp = _local_result(frame, ids, "comp", ids[_scc_local(src, dst, len(ids))])
+        # a node on no edge is its own component
+        return frame.nodes.select("id").join(comp, on="id", how="left").select(
+            "id", F.coalesce("comp", "id").alias("comp")
         )
-        dst = np.fromiter(
-            (pos[v] for v in epdf["target"]), dtype=np.int64, count=len(epdf)
-        )
-        comp = _scc_local(src, dst, ids)
-        return frame.spark.createDataFrame(pd.DataFrame({"id": ids, "comp": comp}))
     remaining = frame.nodes.select("id").localCheckpoint(eager=True)
     results: list[DataFrame] = []
     for outer in range(_MAX_ITER):
@@ -937,25 +991,22 @@ def k_hop_aggregation(
 # ---------------------------------------------------------------------------
 # spectral ordering
 # ---------------------------------------------------------------------------
-def _spectral_scores_local(ids_pdf, edges_pdf, sigma, max_iter, tol):
+def _spectral_scores_local(node_ids, epdf, max_iter, tol):
     """Driver-local power iteration over a collected COO adjacency —
     the small-graph escape hatch (same role as the reference's direct
-    scipy ``eigsh`` call, networkframe.py:1546).  Identical update rule
-    to the distributed loop: v <- normalize(A·v + sigma·v)."""
+    scipy ``eigsh`` call, networkframe.py:1546).  Identical shift and
+    update rule to the distributed loop: v <- normalize(A·v + sigma·v).
+    Returns the sorted node ids and their scores."""
     import numpy as np
 
-    ids = ids_pdf["id"].to_numpy()
-    pos = {v: i for i, v in enumerate(ids)}
+    ids, src, dst, _ = _dense_index(epdf, node_ids)
     n = len(ids)
-    src = np.fromiter((pos[v] for v in edges_pdf["source"]), dtype=np.int64)
-    dst = np.fromiter((pos[v] for v in edges_pdf["target"]), dtype=np.int64)
-    w = edges_pdf["weight"].to_numpy(dtype=np.float64)
-    v = np.full(n, 1.0 / (n ** 0.5))
+    w = epdf["weight"].to_numpy(dtype=np.float64)
+    sigma = float(np.bincount(src, np.abs(w), n).max(initial=0.0)) or 1.0
+    v = np.full(n, 1.0 / max(n, 1) ** 0.5)
     prev_dot = None
     for _ in range(max_iter):
-        av = np.zeros(n)
-        np.add.at(av, src, w * v[dst])
-        av += sigma * v
+        av = np.bincount(src, w * v[dst], n) + sigma * v
         norm = float(np.sqrt((av * av).sum()))
         if norm == 0.0:
             v = np.zeros(n)
@@ -969,9 +1020,6 @@ def _spectral_scores_local(ids_pdf, edges_pdf, sigma, max_iter, tol):
     return ids, v
 
 
-_SPECTRAL_LOCAL_MAX_NODES = 100_000
-
-
 def spectral_scores(
     frame, weight_col: str = "weight", max_iter: int = 60, tol: float = 1e-7
 ) -> DataFrame:
@@ -979,12 +1027,13 @@ def spectral_scores(
     via power iteration (reference: networkframe.py:1540-1549 uses
     ``eigsh(adj + adj.T, k=1, "LM")``).
 
-    Below ``_SPECTRAL_LOCAL_MAX_NODES`` nodes the aggregated adjacency
-    is collected and iterated driver-side in numpy (per-iteration
-    driver/executor round-trips dominate at small n); above it, each
-    round is one join + hash aggregate (v <- A·v) and a scalar norm
-    collect.  Eigenvector sign is not pinned (matches the reference's
-    eigsh, which is also sign-ambiguous).
+    When the symmetrized edges and the node ids each fit
+    ``_LOCAL_MAX_ROWS`` rows they are collected and iterated
+    driver-side in numpy (per-iteration driver/executor round-trips
+    dominate at small n); past it, each round is one join + hash
+    aggregate (v <- A·v) and a scalar norm collect.  Eigenvector sign
+    is not pinned (matches the reference's eigsh, which is also
+    sign-ambiguous).
     """
     agg = frame.aggregated_edges(weight_col=weight_col)
     sym = (
@@ -998,7 +1047,14 @@ def spectral_scores(
         .groupBy("source", "target")
         .agg(F.sum("weight").alias("weight"))
     ).cache()
-    ids = frame.nodes.select("id").localCheckpoint(eager=True)
+    ids = frame.nodes.select("id")
+    epdf = _collect_local(sym, _LOCAL_MAX_ROWS)
+    ipdf = epdf if epdf is None else _collect_local(ids, _LOCAL_MAX_ROWS)
+    if ipdf is not None:
+        sym.unpersist()
+        node_ids, vec = _spectral_scores_local(ipdf["id"], epdf, max_iter, tol)
+        return _local_result(frame, node_ids, "spectral_score", vec, "double")
+    ids = ids.localCheckpoint(eager=True)
     n = ids.count()
     if n == 0:
         return ids.select("id", F.lit(0.0).alias("spectral_score"))
@@ -1010,16 +1066,6 @@ def spectral_scores(
         sym.groupBy("source").agg(F.sum(F.abs(F.col("weight"))).alias("s"))
         .agg(F.max("s")).collect()[0][0]
     ) or 1.0
-    if n <= _SPECTRAL_LOCAL_MAX_NODES:
-        import pandas as pd
-
-        node_ids, vec = _spectral_scores_local(
-            ids.toPandas(), sym.toPandas(), float(sigma), max_iter, tol
-        )
-        sym.unpersist()
-        return frame.spark.createDataFrame(
-            pd.DataFrame({"id": node_ids, "spectral_score": vec})
-        )
     v = ids.select("id", F.lit(1.0 / (n ** 0.5)).alias("v")).localCheckpoint(eager=True)
     prev_dot = None
     for it in range(max_iter):
@@ -1039,9 +1085,9 @@ def spectral_scores(
         if norm == 0.0:
             v = ids.select("id", F.lit(0.0).alias("v"))
             break
-        v_new = av.select("id", (F.col("av") / F.lit(norm)).alias("v")).localCheckpoint(
-            eager=True
-        )
+        # _cut_lineage, not a bare checkpoint: each round joins v twice,
+        # so preserved plan statistics would square every round
+        v_new = _cut_lineage(av.select("id", (F.col("av") / F.lit(norm)).alias("v")))
         dot = (
             v_new.withColumnRenamed("v", "v2")
             .join(v, on="id")
@@ -1342,38 +1388,20 @@ def triangle_counts(frame) -> DataFrame:
     )
 
 
-_BFS_LOCAL_MAX_EDGES = 2_000_000
-
-
-def _bfs_local(frame, pairs: DataFrame, node_id: Any, max_hops: int | None) -> DataFrame:
-    """Driver-local vectorized BFS over a collected pair table.
-
-    Ids map to dense positions via a sorted-unique table (works for
-    int and string ids alike); each hop gathers all frontier
-    adjacency ranges with one repeat/arange construction — no Python
-    per-node loop."""
+def _bfs_local(frame, epdf, node_id: Any, max_hops: int | None) -> DataFrame:
+    """Driver-local vectorized BFS over a collected pair table: each
+    hop gathers all frontier adjacency ranges with one repeat/arange
+    construction — no Python per-node loop."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql import types as T
-
-    epdf = pairs.toPandas()
-    seeds = np.asarray(
-        [r["id"] for r in _seed_df(frame, node_id).collect()]
-    )
-    ids = np.unique(
-        np.concatenate(
-            [epdf["source"].to_numpy(), epdf["target"].to_numpy(), seeds]
-        )
-    )
+    seeds = [r["id"] for r in _seed_df(frame, node_id).collect()]
+    ids, src, dst, seeds = _dense_index(epdf, seeds)
     n = len(ids)
-    src = np.searchsorted(ids, epdf["source"].to_numpy())
-    dst = np.searchsorted(ids, epdf["target"].to_numpy())
     order = np.argsort(src, kind="stable")
     ss, dd = src[order], dst[order]
     bounds = np.searchsorted(ss, np.arange(n + 1))
     dist = np.full(n, -1, dtype=np.int64)
-    frontier = np.unique(np.searchsorted(ids, seeds))
+    frontier = np.unique(seeds)
     dist[frontier] = 0
     limit = _MAX_ITER if max_hops is None else max_hops
     d = 0
@@ -1393,15 +1421,8 @@ def _bfs_local(frame, pairs: DataFrame, node_id: Any, max_hops: int | None) -> D
         dist[fresh] = d
         frontier = fresh
     mask = dist >= 0
-    pdf = pd.DataFrame({"id": ids[mask], "dist": dist[mask].astype("int32")})
-    schema = T.StructType(
-        [
-            T.StructField("id", frame.nodes.schema["id"].dataType),
-            # IntegerType matches the distributed loop's F.lit(d)
-            T.StructField("dist", T.IntegerType()),
-        ]
-    )
-    return frame.spark.createDataFrame(pdf, schema=schema)
+    # "int" matches the distributed loop's F.lit(d)
+    return _local_result(frame, ids[mask], "dist", dist[mask].astype("int32"), "int")
 
 
 def hop_distances(
@@ -1419,15 +1440,12 @@ def hop_distances(
     cached hash-partitioned on ``source`` once.
     """
     pairs = _edge_pairs(frame, directed, partition_by_source=True).cache()
-    if pairs.count() <= _BFS_LOCAL_MAX_EDGES:
-        # same guarded driver-local strategy as SCC/spectral (and the
-        # reference's own scipy shortest_path, networkframe.py:962-998):
-        # a frontier loop costs one fixed-overhead Spark job per hop
-        # (diameter x ~0.5s dominates small graphs), while a vectorized
-        # local BFS on the collected pair table is milliseconds.  The
-        # distributed loop below stays the path for genuinely large
-        # graphs.
-        out = _bfs_local(frame, pairs, node_id, max_hops)
+    epdf = _collect_local(pairs, _LOCAL_MAX_ROWS)
+    if epdf is not None:
+        # the reference's own strategy (scipy shortest_path,
+        # networkframe.py:962-998): a frontier loop costs a Spark job
+        # per hop, a vectorized local BFS milliseconds
+        out = _bfs_local(frame, epdf, node_id, max_hops)
     else:
         seed = _seed_df(frame, node_id).select("id", F.lit(0).alias("dist"))
         out = _bfs_waves(pairs, seed, [], directed, max_hops)
@@ -1699,29 +1717,17 @@ def _relax(e: DataFrame, state: DataFrame, col: str, cand, agg) -> DataFrame:
     )
 
 
-def _bellman_ford_local(
-    frame, e: DataFrame, node_id: Any, max_rounds: int
-) -> DataFrame:
-    """Driver-local synchronous relaxation over the collected minified
-    edge table; each round is one vectorized ``np.minimum.at`` scatter
-    — exact same bounded-round semantics as the distributed loop."""
+def _bellman_ford_local(frame, epdf, node_id: Any, max_rounds: int) -> DataFrame:
+    """Driver-local synchronous relaxation over the collected cheapest
+    edges; each round is one vectorized ``np.minimum.at`` scatter —
+    exact same bounded-round semantics as the distributed loop."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql import types as T
-
-    epdf = e.toPandas()
-    seeds = np.asarray([r["id"] for r in _seed_df(frame, node_id).collect()])
-    ids = np.unique(
-        np.concatenate(
-            [epdf["source"].to_numpy(), epdf["target"].to_numpy(), seeds]
-        )
-    )
-    src = np.searchsorted(ids, epdf["source"].to_numpy())
-    dst = np.searchsorted(ids, epdf["target"].to_numpy())
+    seeds = [r["id"] for r in _seed_df(frame, node_id).collect()]
+    ids, src, dst, seeds = _dense_index(epdf, seeds)
     w = epdf["w"].to_numpy(dtype=np.float64)
     dist = np.full(len(ids), np.inf)
-    dist[np.searchsorted(ids, seeds)] = 0.0
+    dist[seeds] = 0.0
     for _ in range(max_rounds):
         cand = dist[src] + w
         new = dist.copy()
@@ -1730,16 +1736,9 @@ def _bellman_ford_local(
             break
         dist = new
     mask = np.isfinite(dist)
-    pdf = pd.DataFrame({"id": ids[mask], "dist": dist[mask]})
-    schema = T.StructType(
-        [
-            T.StructField("id", frame.nodes.schema["id"].dataType),
-            T.StructField("dist", T.DoubleType()),
-        ]
-    )
     # F.round (HALF_UP) here, NOT np.round (half-even): must match the
     # distributed path and the SQL twin bit-for-bit
-    return frame.spark.createDataFrame(pdf, schema=schema).select(
+    return _local_result(frame, ids[mask], "dist", dist[mask], "double").select(
         "id", F.round("dist", 6).alias("dist")
     )
 
@@ -1788,20 +1787,16 @@ def shortest_paths(
             .unionByName(rev)
         )
     # parallel edges: keep the cheapest (shortest-path semantics)
-    e = (
-        e.groupBy("source", "target")
-        .agg(F.min("w").alias("w"))
-        .cache()
-    )
-    if e.count() <= _BFS_LOCAL_MAX_EDGES:
+    e = e.groupBy("source", "target").agg(F.min("w").alias("w")).cache()
+    epdf = _collect_local(e, _LOCAL_MAX_ROWS)
+    if epdf is not None:
         # guarded local twin (same policy as hop_distances/SCC): R
         # numpy scatter-min relaxation rounds are bit-equal to the
         # distributed sync rounds — min is order-independent and the
         # per-candidate float add is identical
-        out = _bellman_ford_local(frame, e, node_id, max_rounds)
         e.unpersist()
-        return out
-    e = e.repartition("source").cache()
+        return _bellman_ford_local(frame, epdf, node_id, max_rounds)
+    part = e.repartition("source").cache()
     dist = (
         _seed_df(frame, node_id)
         .select("id", F.lit(0.0).alias("dist"))
@@ -1809,10 +1804,11 @@ def shortest_paths(
     )
     dist, _ = _fixpoint(
         dist,
-        lambda d: _relax(e, d, "dist", F.col("dist") + F.col("w"), F.min),
+        lambda d: _relax(part, d, "dist", F.col("dist") + F.col("w"), F.min),
         lambda d: _fingerprint(d, "id", "dist"),
         max_rounds,
     )
+    part.unpersist()
     e.unpersist()
     return dist.select("id", F.round("dist", 6).alias("dist"))
 

@@ -674,7 +674,7 @@ class NetworkFrame:
         induced selection.  Small-graph parity surface — the scalable
         form is :meth:`k_hop_pairs` grouped by ego node; guarded at
         ``_DECOMP_LOCAL_MAX_EGOS`` like every other local twin
-        (``_SCC_LOCAL_MAX_EDGES`` policy).
+        (``algorithms._LOCAL_MAX_ROWS`` policy).
 
         The ego-count guard runs EAGERLY at call time (not at first
         iteration): this wrapper collects the distinct ego list once

@@ -10,7 +10,7 @@ partition coalescing), and shuffle partitions should be overridden to
 from __future__ import annotations
 
 import os
-from typing import Iterable, Union
+from typing import Iterable, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
@@ -60,11 +60,16 @@ def get_spark(
 
 
 def local_table(
-    spark: SparkSession, rows: Iterable[tuple], schema: Union[str, StructType]
+    spark: SparkSession,
+    rows: Iterable[tuple],
+    schema: Union[str, StructType],
+    columns: Sequence | None = None,
 ) -> DataFrame:
     """A driver-built table of Python ``rows`` (tuples in ``schema``
     order; ``schema`` a DDL string or a ``StructType``), shipped as ONE
-    Arrow table.
+    Arrow table.  ``columns``, one array per field (numpy arrays
+    included), replaces ``rows`` for a table built column-wise: each
+    array goes to Arrow as it is, with no Python loop over its rows.
 
     Every Python-row table the engine builds goes through here: id
     lists, query terms, probe lists, partition offsets, manifests and
@@ -88,9 +93,10 @@ def local_table(
         schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
     )
     arrow_schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    if columns is None:
+        columns = list(zip(*rows)) or [()] * len(struct.fields)
     table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema=struct)

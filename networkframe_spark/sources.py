@@ -43,7 +43,7 @@ TABLES = (
 def _tune(spark: SparkSession) -> None:
     """Runtime-settable safety pins for sessions we didn't build (the
     driver harness constructs its own): AQE gives broadcast-conversion
-    and partition coalescing at runtime sizes — the plans in PLANS.md
+    and partition coalescing at runtime sizes — the engine's plans
     assume it.
 
     SIDE EFFECT: mutates the CALLER's SparkSession conf globally (AQE

@@ -64,13 +64,13 @@ def test_strong_components_dag(spark):
 
 def test_strong_components_distributed_fb_path(spark, monkeypatch):
     """Force the distributed Forward-Backward SCC path (normally gated
-    behind _SCC_LOCAL_MAX_EDGES) on a graph that stresses its fixpoint:
+    behind _LOCAL_MAX_ROWS) on a graph that stresses its fixpoint:
     a 40-cycle (worst case for plain label propagation — pointer
     jumping must converge in ~log rounds, not 40), a DAG tail hanging
     off it, and a separate 2-cycle."""
     from networkframe_spark import algorithms
 
-    monkeypatch.setattr(algorithms, "_SCC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", 0)
     n = 40
     cycle = [(i, (i + 1) % n) for i in range(n)]
     tail = [(0, 100), (100, 101), (101, 102)]
@@ -86,6 +86,99 @@ def test_strong_components_distributed_fb_path(spark, monkeypatch):
     assert labels[200] == labels[201]
     # DAG tail nodes are singleton SCCs, all distinct
     assert len({labels[100], labels[101], labels[102], labels[0], labels[200]}) == 5
+
+
+def test_strong_components_local_collect_stays_bounded(spark, monkeypatch):
+    """The local Tarjan collects only the distinct edges, bounded by
+    ``_LOCAL_MAX_ROWS``: with the bound just above the edge count, no
+    collect of a graph with many isolated nodes pulls more than the
+    bound + 1 rows, and the labels (isolated nodes are singletons)
+    equal the forced-distributed path's."""
+    from networkframe_spark import algorithms
+
+    edge_rows = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3)]
+    nodes = spark.createDataFrame([(i,) for i in range(200)], "id long")
+    edges = spark.createDataFrame(edge_rows, "source long, target long")
+    nf = NetworkFrame(nodes, edges)
+
+    def labels():
+        return sorted(
+            tuple(r)
+            for r in algorithms._strong_component_min_labels(nf)
+            .select("id", "comp")
+            .collect()
+        )
+
+    bound = len(edge_rows) + 1
+    pulled = []
+
+    def recording(collect):
+        def wrapper(df):
+            out = collect(df)
+            pulled.append(len(out))
+            return out
+
+        return wrapper
+
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", bound)
+    for name in ("toPandas", "toArrow"):
+        monkeypatch.setattr(
+            type(nodes), name, recording(getattr(type(nodes), name))
+        )
+    local = labels()
+    monkeypatch.undo()
+    # every driver-side collect of the call, the local path taken
+    assert pulled and max(pulled) <= bound + 1, pulled
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", 0)
+    assert local == labels()
+    assert local[:6] == [(0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 5)]
+    assert len(local) == 200
+
+
+def test_weak_components_coalesce_bound_holds_on_a_hot_partition(spark, monkeypatch):
+    """The narrow union-find ladder sizes its coalesce from the largest
+    observed mapping partitions, not the average: one hot partition
+    cannot push a merged partition past ``_HIER_MAX_ROWS_PER_PART``.
+    The ladder starts at ``defaultParallelism`` partitions, patched to
+    64 here as on a 64-core cluster."""
+    from networkframe_spark import algorithms
+
+    # 64 edge partitions of 100 ids each: partition 0 holds a 100-edge
+    # path (101 mapping rows), every other partition one edge (2 rows)
+    edges = (
+        spark.range(0, 6400, 1, 64)
+        .filter((F.col("id") < 100) | (F.col("id") % 100 == 0))
+        .select(F.col("id").alias("source"), (F.col("id") + 1).alias("target"))
+    )
+    nodes = spark.range(0, 6402).select("id")
+    nf = NetworkFrame(nodes, edges)
+
+    def labels():
+        return sorted(
+            tuple(r)
+            for r in algorithms._weak_component_min_labels(nf).select("id", "comp").collect()
+        )
+
+    want = labels()
+    sc_type = type(spark.sparkContext)
+    coalesce = type(nodes).coalesce
+    merged = []
+
+    def recording(df, n):
+        out = coalesce(df, n)
+        merged.append(out)
+        return out
+
+    monkeypatch.setattr(algorithms, "_HIER_MAX_ROWS_PER_PART", 120)
+    monkeypatch.setattr(sc_type, "defaultParallelism", property(lambda sc: 64))
+    monkeypatch.setattr(type(nodes), "coalesce", recording)
+    got = labels()
+    monkeypatch.undo()
+    assert got == want
+    assert merged
+    for df in merged:
+        sizes = [r[1] for r in df.groupBy(F.spark_partition_id()).count().collect()]
+        assert max(sizes) <= 120, sizes
 
 
 def test_largest_connected_component(two_component_frame):
@@ -225,6 +318,72 @@ def test_sort_spectral(spark):
     # leaves all get equal scores
     leaf = [scores[i] for i in range(1, 5)]
     assert max(leaf) - min(leaf) < 1e-6
+
+
+def test_spectral_scores_distributed_path(spark, monkeypatch):
+    """The distributed power iteration (bound at 0) matches the
+    driver-local one on a graph with an isolated node, a bipartite
+    component (a path, where the unshifted iteration oscillates) and a
+    weighted triangle.  Fixed rounds (``tol=0``) on both sides."""
+    from networkframe_spark import algorithms
+
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 2.0), (2, 3, 1.0), (4, 5, 3.0), (5, 6, 1.0), (6, 4, 2.0)],
+        "source long, target long, weight double",
+    )
+    nf = NetworkFrame(nodes, edges)
+
+    def scores():
+        return {
+            r["id"]: abs(r["spectral_score"])
+            for r in algorithms.spectral_scores(nf, max_iter=25, tol=0.0).collect()
+        }
+
+    local = scores()
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", 0)
+    dist = scores()
+    assert local.keys() == dist.keys() == set(range(8))
+    for i in range(8):
+        assert dist[i] == pytest.approx(local[i], abs=1e-9), i
+    assert local[7] < local[4]  # the isolated node decays
+
+
+def test_local_twins_job_counts(spark):
+    """Spark jobs per call, result collected, on one small graph below
+    the local bound.  One guarded ``limit(N + 1)`` Arrow collect per
+    table replaced a count and a ``toPandas`` (SCC also collected every
+    node id; spectral ran a checkpoint, a node count and a Spark
+    ``sigma`` aggregate before its two collects): on this graph the
+    counts were SCC 7, ``hop_distances`` 6, ``shortest_paths`` 6 and
+    ``spectral_scores`` 12."""
+    from networkframe_spark import algorithms
+
+    nodes = spark.createDataFrame([(i,) for i in range(12)], "id long")
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 10, float(i + 1)) for i in range(10)] + [(3, 7, 2.0)],
+        "source long, target long, weight double",
+    )
+    nf = NetworkFrame(nodes, edges)
+    sc = spark.sparkContext
+    calls = {
+        "scc": lambda: algorithms._strong_component_min_labels(nf),
+        "hop_distances": lambda: algorithms.hop_distances(nf, 0),
+        "shortest_paths": lambda: algorithms.shortest_paths(nf, 0),
+        "spectral_scores": lambda: algorithms.spectral_scores(nf),
+    }
+    jobs = {}
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"twin-{name}", name)
+            call().collect()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"twin-{name}"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    pins = {"scc": 5, "hop_distances": 3, "shortest_paths": 3, "spectral_scores": 5}
+    assert all(jobs[k] <= pins[k] for k in pins), jobs
 
 
 # -- exports ---------------------------------------------------------------
@@ -380,7 +539,7 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
             r["id"]: r["dist"]
             for r in nf.hop_distances(0, directed=directed).collect()
         }
-        monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
+        monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", 0)
         dist = {
             r["id"]: r["dist"]
             for r in nf.hop_distances(0, directed=directed).collect()
@@ -388,7 +547,7 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
         monkeypatch.undo()
         assert dist == local, directed
     # sanity on the actual values (directed)
-    monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", 0)
     got = {r["id"]: r["dist"] for r in nf.hop_distances(0).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 5: 2, 3: 3, 4: 4}
     monkeypatch.undo()
@@ -416,7 +575,7 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
     }
     for guard in (None, 0):
         if guard is not None:
-            monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", guard)
+            monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", guard)
         for directed in (True, False):
             w, tag = want[directed], (guard, directed)
             pairs = {}
@@ -673,7 +832,7 @@ def test_shortest_paths_distributed_matches_local(spark, monkeypatch):
             (r["id"], r["dist"])
             for r in nf.shortest_paths(0, directed=directed).collect()
         )
-        monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
+        monkeypatch.setattr(algorithms, "_LOCAL_MAX_ROWS", 0)
         dist = sorted(
             (r["id"], r["dist"])
             for r in nf.shortest_paths(0, directed=directed).collect()

@@ -465,7 +465,7 @@ def test_k_hop_decomposition(spark):
 def test_k_hop_decomposition_guard(spark, monkeypatch):
     """The per-ego driver loop is loudly guarded past
     _DECOMP_LOCAL_MAX_EGOS, pointing at k_hop_pairs (the
-    _SCC_LOCAL_MAX_EDGES policy — no unguarded local path)."""
+    _LOCAL_MAX_ROWS policy — no unguarded local path)."""
     import pytest
 
     from networkframe_spark import NetworkFrame

@@ -47,7 +47,7 @@ def synthetic_graph(spark, n_nodes: int, n_edges: int) -> NetworkFrame:
 
 def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     """Exercise the distributed Forward-Backward SCC path ABOVE the
-    driver-local Tarjan guard (algorithms._SCC_LOCAL_MAX_EDGES = 2M)
+    driver-local Tarjan guard (algorithms._LOCAL_MAX_ROWS = 2M)
     on a graph with known ground truth: ``n_nodes/cycle_len`` disjoint
     directed cycles (each one SCC, comp = min member = block start),
     plus block-pair DAG edges (2k -> 2k+1) so the peel loop runs >= 2
@@ -57,7 +57,7 @@ def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     import numpy as np
 
     from networkframe_spark.algorithms import (
-        _SCC_LOCAL_MAX_EDGES,
+        _LOCAL_MAX_ROWS,
         _scc_local,
         _strong_component_min_labels,
     )
@@ -85,7 +85,7 @@ def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     )
     nf = NetworkFrame(nodes, cyc.union(dag))
     n_edges = nf.edges.distinct().count()
-    assert n_edges > _SCC_LOCAL_MAX_EDGES, (
+    assert n_edges > _LOCAL_MAX_ROWS, (
         f"{n_edges} edges does not exceed the local guard — "
         "the distributed path would not be exercised"
     )
@@ -99,7 +99,7 @@ def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     blk = np.arange(cycle_len, 2 * cycle_len, dtype=np.int64)
     src = blk - cycle_len  # positions 0..L-1
     dst = np.roll(src, -1)
-    tarjan = _scc_local(src, dst, blk)
+    tarjan = blk[_scc_local(src, dst, len(blk))]
     dist_blk = {
         r["id"]: r["comp"]
         for r in labels.filter(
