@@ -9811,7 +9811,7 @@ FROM perq LEFT JOIN hits USING (query_id)
     # left-to-right exactly like list_dot_product), bucket = sum of
     # (1<<j) sign bits, candidates = same-bucket pairs in any table,
     # then cosine top-5 and recall vs the brute-force truth.
-    from networkframe_spark.functions.similarity import _hyperplane_signs
+    from networkframe_spark.functions.similarity import _lsh_planes
 
     def _plane_lit(row):
         return "[" + ", ".join(f"{float(s):.1f}" for s in row) + "]"
@@ -9823,9 +9823,7 @@ FROM perq LEFT JOIN hits USING (query_id)
             for j, row in enumerate(planes)
         )
 
-    _lsh_tables = [
-        _hyperplane_signs(4, 64, seed=42 + 1000 * t) for t in range(2)
-    ]
+    _lsh_tables = _lsh_planes(4, 2, 64)
     _banded_cte = " UNION ALL ".join(
         f"SELECT vec_id, emb, {t} AS tbl, {_bucket_expr(planes)} AS bucket"
         " FROM e"

@@ -834,8 +834,11 @@ class NetworkFrame:
         index_dtype: str = "bigint",
     ) -> "NetworkFrame":
         """Deserialize from ``{nodes, edges, directed}``
-        (reference: networkframe.py:1193-1223)."""
+        (reference: networkframe.py:1193-1223).  Both tables ship to
+        Spark as Arrow tables: they plan as a ``LocalRelation`` with
+        real statistics, and a null attribute stays null."""
         import pandas as pd
+        import pyarrow as pa
 
         nodes_pdf = pd.DataFrame.from_dict(d["nodes"], orient=orient)
         nodes_pdf.index.name = "id"
@@ -845,8 +848,10 @@ class NetworkFrame:
         except (ValueError, TypeError):
             pass
         edges_pdf = pd.DataFrame.from_dict(d["edges"], orient=orient)
-        nodes = spark.createDataFrame(nodes_pdf)
-        edges = spark.createDataFrame(edges_pdf)
+        nodes, edges = (
+            spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False))
+            for pdf in (nodes_pdf, edges_pdf)
+        )
         return cls(nodes, edges, directed=d.get("directed", True))
 
     def to_sparse_adjacency(

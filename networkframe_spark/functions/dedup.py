@@ -587,7 +587,6 @@ def embedding_duplicates(
     n_planes: int | None = None,
     n_tables: int = 12,
     dim: int | None = None,
-    verify: str = "auto",
 ) -> DataFrame:
     """Near-duplicate pairs by cosine similarity >= threshold.
     Returns ``(id_a, id_b, cosine)`` with ``id_a < id_b``.
@@ -617,23 +616,9 @@ def embedding_duplicates(
     requested threshold.  Pass an int to pin the banding explicitly
     (every registered oracle does, for determinism across scale
     factors).
-
-    ``verify`` selects HOW the LSH path scores its candidate pairs
-    (the per-pair cosine): ``"expr"`` = JVM column expression (the
-    known-dim codegen unroll at dim <= 16, the interpreted
-    higher-order fold above); ``"arrow"`` = vectorized Arrow batch
-    verify (``mapInPandas``, one ``einsum`` per batch); ``"auto"`` =
-    expr — the Arrow default was A/B'd on the clustered 2M fixture at
-    dims 64/256 and REJECTED (wash at 500k, −10% at 2M: the verify is
-    bounded by the candidate join's shuffle width, which both modes
-    pay identically — SCALE.md r15).  Cosines are 6-dp rounded in
-    every mode (``round_half_up`` is F.round's exact twin), so the
-    mode changes cost, not answers.
     """
     if mode not in ("auto", "exact", "lsh"):
         raise ValueError("mode must be 'auto', 'exact' or 'lsh'")
-    if verify not in ("auto", "expr", "arrow"):
-        raise ValueError("verify must be 'auto', 'expr' or 'arrow'")
     if mode == "auto":
         n = df.limit(exact_max_rows + 1).count()
         mode = "exact" if n <= exact_max_rows else "lsh"
@@ -647,7 +632,7 @@ def embedding_duplicates(
     if n_planes is None:
         n_planes = auto_n_planes(df.count(), threshold, n_tables)
     return _embedding_duplicates_lsh(
-        df, emb_col, id_col, threshold, n_planes, n_tables, dim, verify
+        df, emb_col, id_col, threshold, n_planes, n_tables, dim
     )
 
 
@@ -706,66 +691,29 @@ def _embedding_duplicates_lsh(
     n_planes: int,
     n_tables: int,
     dim: int | None,
-    verify: str = "auto",
 ) -> DataFrame:
     """Banded self-join: explode each row into its ``n_tables`` bucket
     keys, equi-join on (table, bucket), dedupe candidate pairs, verify
     with exact cosine.  The only shuffles are the bucket join and the
     pair dedup — both keyed, both AQE-skew-splittable."""
     from .similarity import (
-        _hyperplane_signs,
+        _lsh_band,
+        _lsh_dim,
+        _lsh_planes,
         dot_expr,
         norm_expr,
         pair_score,
-        signature_col,
     )
 
-    if dim is None:
-        first = df.select(F.size(F.col(emb_col)).alias("d")).first()
-        dim = first["d"] if first else 0
-    else:
-        from .similarity import _validate_dim
-
-        _validate_dim(df, emb_col, dim, "embedding_duplicates")
-    if verify == "auto":
-        # A/B'd and REJECTED as a default (SCALE.md r15,
-        # tools/bench_arrow_verify.py, since removed; its recorded
-        # numbers stand): at dims 64/256 on the
-        # clustered 2M fixture the Arrow verify is a wash at 500k
-        # (0.99x / 1.02x) and LOSES 10% at 2M — the banded verify is
-        # bounded by the candidate join's shuffle width (2 x dim
-        # doubles per candidate), which both modes pay identically;
-        # Arrow only adds serialization.  The fold is the bottleneck
-        # ONLY below the unroll gate, where the unroll already wins.
-        verify = "expr"
-    tables = [
-        _hyperplane_signs(n_planes, dim, seed=42 + 1000 * t) for t in range(n_tables)
-    ]
+    dim = _lsh_dim(df, emb_col, dim, "embedding_duplicates")
+    tables = _lsh_planes(n_planes, n_tables, dim)
     n_part = shuffle_partitions(df.sparkSession)
-    banded = (
-        df.repartition(n_part)
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(emb_col).alias("emb"),
-            norm_expr(F.col(emb_col), dim).alias("norm"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            signature_col(F.col(emb_col), tables[t]).alias("bucket"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tb"),
-        )
-        .select(
-            "id", "emb", "norm",
-            F.col("tb.table").alias("table"),
-            F.col("tb.bucket").alias("bucket"),
-        )
-    )
+    carry = [
+        F.col(id_col).alias("id"),
+        F.col(emb_col).alias("emb"),
+        norm_expr(F.col(emb_col), dim).alias("norm"),
+    ]
+    banded = _lsh_band(df.repartition(n_part), carry, emb_col, tables)
     a = banded.select(
         "table", "bucket",
         F.col("id").alias("id_a"), F.col("emb").alias("emb_a"),
@@ -788,62 +736,6 @@ def _embedding_duplicates_lsh(
     cand = a.join(b, on=["table", "bucket"]).filter(
         F.col("id_a") < F.col("id_b")
     )
-    if verify == "arrow":
-        # Arrow batch verify (r15): above the unroll gate the JVM
-        # expression evaluates the dot as an INTERPRETED higher-order
-        # fold per candidate (the exact mechanism behind r14's 1.241
-        # superlinearity); one vectorized einsum per Arrow batch pays
-        # the Python transfer once and scores thousands of pairs per
-        # BLAS call.  Carried norms keep the division identical to the
-        # expr path; round_half_up is F.round's exact twin.
-        import pandas as pd
-
-        from pyspark.sql import types as T
-
-        from .similarity import round_half_up
-
-        id_type = df.schema[id_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField("id_a", id_type),
-                T.StructField("id_b", id_type),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-        thr = float(threshold)
-
-        def fn(batches):
-            import numpy as np
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                A = np.stack(pdf["emb_a"].to_numpy()).astype(np.float64)
-                B = np.stack(pdf["emb_b"].to_numpy()).astype(np.float64)
-                cos = round_half_up(
-                    np.einsum("ij,ij->i", A, B)
-                    / (
-                        pdf["norm_a"].to_numpy()
-                        * pdf["norm_b"].to_numpy()
-                    ),
-                    6,
-                )
-                keep = cos >= thr
-                if keep.any():
-                    yield pd.DataFrame(
-                        {
-                            "id_a": pdf["id_a"].to_numpy()[keep],
-                            "id_b": pdf["id_b"].to_numpy()[keep],
-                            "cosine": cos[keep],
-                        }
-                    )
-
-        scored = cand.select(
-            "id_a", "id_b", "emb_a", "emb_b", "norm_a", "norm_b"
-        ).mapInPandas(fn, schema)
-        return scored.groupBy("id_a", "id_b").agg(
-            F.max("cosine").alias("cosine")
-        )
     return (
         cand.select(
             "id_a",

@@ -13,6 +13,23 @@ per query, ties to the lower id, keep the first k).
   from deterministic Rademacher (+/-1) hyperplanes; only same-bucket
   pairs get exact scoring.  At 100 TB the bucket join replaces the
   corpus-size crossJoin with a shuffle keyed on the signature.
+
+One banding kernel serves every hyperplane-LSH path — :func:`lsh_top_k`,
+:func:`semantic_decontaminate` (``method="lsh"``), the persisted LSH
+index (:func:`build_lsh_index`, :func:`lsh_index_add`,
+:func:`lsh_index_search`) and ``dedup.embedding_duplicates``
+(``mode="lsh"``):
+
+- :func:`_lsh_planes` — every table's hyperplanes under the one seed
+  rule, and the ``n_planes`` range check; :func:`_lsh_dim` resolves
+  the dimension they span.
+- :func:`_lsh_signatures` — the per-table ``(table, bucket)`` signature
+  array of a vector, each :func:`signature_col` built once.
+- :func:`_lsh_band` — explodes a frame into ``(…, table, bucket)``
+  rows, fanning probe masks (:func:`_hamming_ball_masks`, which checks
+  ``n_probe_bits``) out behind the generate boundary.  The search of a
+  persisted index collects the same signature array for its queries,
+  so a query's home bucket is a stored bucket by construction.
 """
 
 from __future__ import annotations
@@ -216,6 +233,11 @@ def _hamming_ball_masks(n_planes: int, n_probe_bits: int) -> list[int]:
     the exact order the old full-range filter produced."""
     import itertools
 
+    if not 0 <= n_probe_bits <= n_planes:
+        raise ValueError(
+            f"LSH n_probe_bits must be in [0, n_planes={n_planes}], "
+            f"got {n_probe_bits}"
+        )
     masks = [
         sum(1 << j for j in combo)
         for r in range(n_probe_bits + 1)
@@ -372,6 +394,79 @@ def signature_col(emb: Column, planes: list[list[int]]) -> Column:
     return out.cast("long")
 
 
+# ---------------------------------------------------------------------------
+# the LSH banding kernel (see the module docstring)
+# ---------------------------------------------------------------------------
+def _lsh_dim(df: DataFrame, emb_col: str, dim: int | None, fn: str) -> int:
+    """The banding's vector dimension: a caller's ``dim``, checked
+    against one sampled row (:func:`_validate_dim`), or else the first
+    row's array length (0 on an empty frame)."""
+    if dim is not None:
+        _validate_dim(df, emb_col, dim, fn)
+        return dim
+    first = df.select(F.size(F.col(emb_col)).alias("d")).first()
+    return first["d"] if first else 0
+
+
+def _lsh_planes(n_planes: int, n_tables: int, dim: int) -> list[list[list[int]]]:
+    """The hyperplanes of each of ``n_tables`` LSH tables, table ``t``
+    seeded ``42 + 1000 * t`` — the one seed rule of every banding, the
+    persisted index's stored manifest included.  A signature is a
+    signed 64-bit long with one bit per plane, so ``n_planes`` must be
+    in [0, 63]; 0 is the exhaustive degenerate mode."""
+    if not 0 <= n_planes <= 63:
+        raise ValueError(
+            f"LSH n_planes must be in [0, 63] (one bit per plane of a "
+            f"signed 64-bit signature), got {n_planes}"
+        )
+    return [
+        _hyperplane_signs(n_planes, dim, seed=42 + 1000 * t) for t in range(n_tables)
+    ]
+
+
+def _lsh_signatures(emb: Column, tables) -> Column:
+    """``array<struct<table, bucket>>``: the home signature of ``emb``
+    in every table, each built once (:func:`signature_col`)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("table"),
+                signature_col(emb, planes).alias("bucket"),
+            )
+            for t, planes in enumerate(tables)
+        ]
+    )
+
+
+def _lsh_band(
+    df: DataFrame, carry: list, emb_col: str, tables, masks=(0,)
+) -> DataFrame:
+    """``carry`` (columns or names of ``df``) plus ``(table, bucket)``:
+    one row per (row, table), and per probe mask when ``masks`` (XOR
+    masks from :func:`_hamming_ball_masks`) holds more than the home
+    mask 0.  Signatures are built once per (row, table) and the masks
+    XOR the materialized bucket behind the generate boundary
+    (:func:`signature_col`'s caller contract)."""
+    tb = F.explode(_lsh_signatures(F.col(emb_col), tables)).alias("tb")
+    banded = (
+        df.select(*carry, tb)
+        .select(
+            "*",
+            F.col("tb.table").alias("table"),
+            F.col("tb.bucket").alias("bucket"),
+        )
+        .drop("tb")
+    )
+    if tuple(masks) == (0,):
+        return banded
+    probe = F.explode(F.array(*[F.lit(m) for m in masks])).alias("__m")
+    return (
+        banded.select("*", probe)
+        .withColumn("bucket", F.col("bucket").bitwiseXOR(F.col("__m")))
+        .drop("__m")
+    )
+
+
 def ivf_fit_centroids(
     corpus: DataFrame,
     n_lists: int = 16,
@@ -414,47 +509,35 @@ def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
     emb_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
-    """Add ``list_id`` = index of the nearest centroid (squared L2).
+    """Add ``list_id`` = index of the nearest centroid (squared L2):
+    one vectorized numpy ``argmin(|x|^2 - 2 x.C^T + |C|^2)`` per Arrow
+    batch — the k x dim centroid matrix rides in the task closure, no
+    shuffle, and the matmul replaces a k-deep codegen expression tree
+    (which gets slow and codegen-heavy past k ~ 64).  Deterministic;
+    ties break to the lowest centroid index."""
+    import numpy as np
 
-    ``method="arrow"`` (default): one vectorized numpy
-    ``argmin(|x|^2 - 2 x.C^T + |C|^2)`` per Arrow batch — the k x dim
-    centroid matrix rides in the task closure, no shuffle, and the
-    matmul replaces a k-deep codegen expression tree (which gets slow
-    and codegen-heavy past k ~ 64).  ``method="expr"`` keeps the pure
-    codegen'd projection (no Python at all) for small k.  Both are
-    deterministic; ties break to the lowest centroid index."""
-    if method == "arrow":
-        import numpy as np
-        import pandas as pd
+    from pyspark.sql import types as T
 
-        from pyspark.sql import types as T
+    C = np.asarray(centroids, dtype=np.float64)
+    c2 = (C * C).sum(axis=1)
+    out_schema = T.StructType(
+        list(df.schema) + [T.StructField("list_id", T.IntegerType())]
+    )
 
-        C = np.asarray(centroids, dtype=np.float64)
-        c2 = (C * C).sum(axis=1)
-        out_schema = T.StructType(
-            list(df.schema) + [T.StructField("list_id", T.IntegerType())]
-        )
+    def fn(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            # argmin of |x-c|^2 == argmin of -2x.c + |c|^2
+            d2 = c2[None, :] - 2.0 * (X @ C.T)
+            out = pdf.copy()
+            out["list_id"] = np.argmin(d2, axis=1).astype("int32")
+            yield out
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                # argmin of |x-c|^2 == argmin of -2x.c + |c|^2
-                d2 = c2[None, :] - 2.0 * (X @ C.T)
-                out = pdf.copy()
-                out["list_id"] = np.argmin(d2, axis=1).astype("int32")
-                yield out
-
-        return df.mapInPandas(fn, out_schema)
-    dist_structs = []
-    for i, c in enumerate(centroids):
-        d2 = l2_lit_expr(F.col(emb_col), c)
-        dist_structs.append(F.struct(d2.alias("d"), F.lit(i).alias("i")))
-    best = F.array_min(F.array(*dist_structs))
-    return df.withColumn("list_id", best["i"])
+    return df.mapInPandas(fn, out_schema)
 
 
 def ivf_top_k(
@@ -568,79 +651,25 @@ def lsh_top_k(
     brute force) — the degenerate mode the contract tests pin.
     """
     query_id_col = query_id_col or id_col
-    if dim is None:
-        first = corpus.select(F.size(F.col(emb_col)).alias("d")).first()
-        dim = first["d"] if first else 0
-    else:
-        _validate_dim(corpus, emb_col, dim, "lsh_top_k")
-    if not 0 <= n_probe_bits <= n_planes:
-        raise ValueError("lsh_top_k: 0 <= n_probe_bits <= n_planes")
-    tables = [
-        _hyperplane_signs(n_planes, dim, seed=42 + 1000 * t) for t in range(n_tables)
-    ]
     # Hamming-ball XOR masks, distance 0..n_probe_bits (mask 0 = the
     # home bucket); combinations-enumerated — ball-sized driver cost
     masks = _hamming_ball_masks(n_planes, n_probe_bits)
-
+    dim = _lsh_dim(corpus, emb_col, dim, "lsh_top_k")
+    tables = _lsh_planes(n_planes, n_tables, dim)
     n_part = shuffle_partitions(corpus.sparkSession)
-
-    def banded(
-        df: DataFrame,
-        idc: str,
-        embc: str,
-        out_id: str,
-        out_emb: str,
-        probe_masks: list[int] | None = None,
-    ) -> DataFrame:
-        # one signature per (row, table); probe masks XOR the
-        # materialized column behind the generate boundary — per-mask
-        # duplication of the unrolled signature tree OOMs codegen
-        # (signature_col's caller contract) and recomputed the dot
-        # n_masks times even interpreted
-        pm = probe_masks or [0]
-        sigd = df.repartition(n_part).select(
-            F.col(idc).alias(out_id),
-            F.col(embc).alias(out_emb),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            signature_col(F.col(embc), tables[t]).alias(
-                                "sig"
-                            ),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("ts"),
-        ).select(
-            out_id,
-            out_emb,
-            F.col("ts.table").alias("table"),
-            F.col("ts.sig").alias("__sig"),
-        )
-        if tuple(pm) == (0,):
-            return sigd.withColumnRenamed("__sig", "bucket")
-        return (
-            sigd.select(
-                "*",
-                F.explode(
-                    F.array(*[F.lit(int(m)) for m in pm])
-                ).alias("__m"),
-            )
-            .withColumn("bucket", F.col("__sig").bitwiseXOR(F.col("__m")))
-            .drop("__sig", "__m")
-        )
-
-    cb = banded(corpus, id_col, emb_col, "vec_id", "c_emb").withColumn(
-        "c_norm", norm_expr(F.col("c_emb"), dim)
-    )
-    qb = banded(
-        queries, query_id_col, emb_col, "query_id", "q_emb", probe_masks=masks
-    ).withColumn(
-        "q_norm", norm_expr(F.col("q_emb"), dim)
-    )
+    cb = _lsh_band(
+        corpus.repartition(n_part),
+        [F.col(id_col).alias("vec_id"), F.col(emb_col).alias("c_emb")],
+        emb_col,
+        tables,
+    ).withColumn("c_norm", norm_expr(F.col("c_emb"), dim))
+    qb = _lsh_band(
+        queries.repartition(n_part),
+        [F.col(query_id_col).alias("query_id"), F.col(emb_col).alias("q_emb")],
+        emb_col,
+        tables,
+        masks,
+    ).withColumn("q_norm", norm_expr(F.col("q_emb"), dim))
     cand = cb.join(qb, on=["table", "bucket"])
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("vec_id"))
@@ -959,58 +988,9 @@ def semantic_decontaminate(
             .select("train_id", "eval_id", _cos_expr())
         )
     elif method == "lsh":
-        first = train.select(F.size(F.col(emb_col)).alias("d")).first()
-        dim = first["d"] if first else 0
-        if not 0 <= n_probe_bits <= n_planes:
-            raise ValueError(
-                "semantic_decontaminate: 0 <= n_probe_bits <= n_planes"
-            )
         probe_masks = _hamming_ball_masks(n_planes, n_probe_bits)
-        tables = [
-            _hyperplane_signs(n_planes, dim, seed=42 + 1000 * t)
-            for t in range(n_tables)
-        ]
-
-        def banded(df: DataFrame, embc: str, masks=(0,)) -> DataFrame:
-            # one signature expression per (row, table); probe masks
-            # XOR the materialized column behind the generate boundary
-            # — per-mask duplication of the unrolled signature tree
-            # OOMs codegen (signature_col's caller contract) and
-            # recomputed the dot n_masks times even interpreted
-            sigd = df.select(
-                "*",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(t).alias("table"),
-                                signature_col(
-                                    F.col(embc), tables[t]
-                                ).alias("sig"),
-                            )
-                            for t in range(n_tables)
-                        ]
-                    )
-                ).alias("ts"),
-            ).select(
-                "*",
-                F.col("ts.table").alias("table"),
-                F.col("ts.sig").alias("__sig"),
-            ).drop("ts")
-            if tuple(masks) == (0,):
-                return sigd.withColumnRenamed("__sig", "bucket")
-            return (
-                sigd.select(
-                    "*",
-                    F.explode(
-                        F.array(*[F.lit(int(m)) for m in masks])
-                    ).alias("__m"),
-                )
-                .withColumn(
-                    "bucket", F.col("__sig").bitwiseXOR(F.col("__m"))
-                )
-                .drop("__sig", "__m")
-            )
+        dim = _lsh_dim(train, emb_col, None, "semantic_decontaminate")
+        tables = _lsh_planes(n_planes, n_tables, dim)
 
         # score-before-dedup, same reasoning as lsh_top_k: the cosine
         # is identical for every duplicate collision of a pair, so
@@ -1024,8 +1004,11 @@ def semantic_decontaminate(
         # (ATTRIBUTE_NOT_FOUND) when exceptAll rewrites a
         # filter-over-Deduplicate-over-aliased-projection plan
         scored = (
-            banded(te, "t_emb")
-            .join(banded(ee, "e_emb", masks=probe_masks), on=["table", "bucket"])
+            _lsh_band(te, ["*"], "t_emb", tables)
+            .join(
+                _lsh_band(ee, ["*"], "e_emb", tables, probe_masks),
+                on=["table", "bucket"],
+            )
             .select("train_id", "eval_id", _cos_expr())
             .filter(F.col("cosine") >= threshold)
             .groupBy("train_id", "eval_id")
@@ -3105,33 +3088,13 @@ def _band_rows(df, tables, id_col: str, emb_col: str):
     """One banded row per (vector, table): (vec_id, c_emb, c_norm,
     table, bucket) — the persisted-LSH storage layout, shared by
     build and incremental add so the two can never drift."""
-    return df.select(
+    dim = len(tables[0][0]) if tables and tables[0] else None
+    carry = [
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).alias("c_emb"),
-        norm_expr(
-            F.col(emb_col),
-            len(tables[0][0]) if tables and tables[0] else None,
-        ).alias("c_norm"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table"),
-                        signature_col(F.col(emb_col), tables[t]).alias(
-                            "bucket"
-                        ),
-                    )
-                    for t in range(len(tables))
-                ]
-            )
-        ).alias("tb"),
-    ).select(
-        "vec_id",
-        "c_emb",
-        "c_norm",
-        F.col("tb.table").alias("table"),
-        F.col("tb.bucket").alias("bucket"),
-    )
+        norm_expr(F.col(emb_col), dim).alias("c_norm"),
+    ]
+    return _lsh_band(df, carry, emb_col, tables)
 
 
 def build_lsh_index(
@@ -3164,11 +3127,7 @@ def build_lsh_index(
     """
     import os as _os
 
-    if dim is None:
-        first = corpus.select(F.size(F.col(emb_col)).alias("d")).first()
-        dim = first["d"] if first else 0
-    else:
-        _validate_dim(corpus, emb_col, dim, "build_lsh_index")
+    dim = _lsh_dim(corpus, emb_col, dim, "build_lsh_index")
     meta = {"n_planes": n_planes, "n_tables": n_tables, "dim": dim}
     banded = _band_rows(corpus, _lsh_tables(meta), id_col, emb_col)
     banded.write.mode(mode).partitionBy("table", "bucket").parquet(
@@ -3180,12 +3139,9 @@ def build_lsh_index(
 
 def _lsh_tables(meta: dict):
     """The stored plane manifest's hyperplanes, one list per table."""
-    return [
-        _hyperplane_signs(
-            int(meta["n_planes"]), int(meta["dim"]), seed=42 + 1000 * t
-        )
-        for t in range(int(meta["n_tables"]))
-    ]
+    return _lsh_planes(
+        int(meta["n_planes"]), int(meta["n_tables"]), int(meta["dim"])
+    )
 
 
 def lsh_index_add(
@@ -3239,9 +3195,10 @@ def lsh_index_search(
     probes every bucket, making the search provably exhaustive
     (equal to brute force: the oracle contract).
 
-    Scale design: query signatures are numpy sign-patterns over the
-    driver-sized batch (same loud ``_MAX_QUERY_BATCH`` guard as the
-    IVF probes); the bucket predicate lists LITERAL partition values,
+    Scale design: query signatures are the banding kernel's signature
+    array (:func:`_lsh_signatures`), collected with the driver-sized
+    batch (same loud ``_MAX_QUERY_BATCH`` guard as the IVF probes);
+    the bucket predicate lists LITERAL partition values,
     so pruning happens at file listing (``PartitionFilters`` —
     plan-guarded in tests); the probe pairs and the query embeddings
     broadcast SEPARATELY (each embedding ships once, not once per
@@ -3253,17 +3210,12 @@ def lsh_index_search(
 
     meta = store.read_manifest(spark, path, "meta")
     tables = _lsh_tables(meta)
-    n_planes = int(meta["n_planes"])
     n_tables = int(meta["n_tables"])
-    if not 0 <= n_probe_bits <= n_planes:
-        raise ValueError(
-            "lsh_index_search: 0 <= n_probe_bits <= n_planes"
-        )
-    masks = _hamming_ball_masks(n_planes, n_probe_bits)
+    masks = _hamming_ball_masks(int(meta["n_planes"]), n_probe_bits)
     # ONE bounded collect fetches ids, embeddings, norms AND the
-    # home signature of every table — computed with signature_col
-    # itself, so the query-side bucket is bit-identical to the
-    # stored banding by construction (a numpy re-implementation of
+    # home signature of every table — the banding kernel's own
+    # signature array, so the query-side bucket is bit-identical to
+    # the stored banding by construction (a numpy re-implementation of
     # the sign convention can disagree on dot==0 ULP boundaries and
     # route a query away from its own stored bucket; the JVM
     # expression cannot).  limit(cap+1) bounds the plan instead of a
@@ -3274,10 +3226,7 @@ def lsh_index_search(
             F.col(query_id_col).alias("query_id"),
             F.col(emb_col).alias("q_emb"),
             norm_expr(F.col(emb_col), dim).alias("q_norm"),
-            *[
-                signature_col(F.col(emb_col), tables[t]).alias(f"sig_{t}")
-                for t in range(n_tables)
-            ],
+            _lsh_signatures(F.col(emb_col), tables)["bucket"].alias("sigs"),
         )
         .limit(_MAX_QUERY_BATCH + 1)
         .toPandas()
@@ -3299,10 +3248,10 @@ def lsh_index_search(
     )
     probe_rows = []
     wanted: dict[int, set[int]] = {t: set() for t in range(n_tables)}
+    sigs = qpdf["sigs"].tolist()
     for t in range(n_tables):
-        sigs = qpdf[f"sig_{t}"].tolist()
         for i in range(len(qids)):
-            home = int(sigs[i])
+            home = int(sigs[i][t])
             for m in masks:
                 b = home ^ m
                 wanted[t].add(b)
@@ -3342,16 +3291,15 @@ def lsh_index_search(
             ]
         ),
     )
-    # empty batch: probe nothing (lit(False) prunes every partition)
-    # and fall through to an empty result with the right schema
-    pred = F.lit(False)
-    for t in range(n_tables):
-        if wanted[t]:
-            pred = pred | (
-                (F.col("table") == t)
-                & F.col("bucket").isin(sorted(wanted[t]))
-            )
-    bands = spark.read.parquet(_os.path.join(path, "bands")).filter(pred)
+    # one SQL predicate over the partition columns; an empty batch
+    # probes nothing (false prunes every partition) and falls through
+    # to an empty result with the right schema
+    pred = " OR ".join(
+        f"(`table` = {t} AND bucket IN ({', '.join(map(str, sorted(b)))}))"
+        for t, b in wanted.items()
+        if b
+    )
+    bands = spark.read.parquet(_os.path.join(path, "bands")).filter(pred or "false")
     scored = (
         bands.join(F.broadcast(probes), on=["table", "bucket"])
         .join(F.broadcast(q), on="query_id")

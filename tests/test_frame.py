@@ -175,6 +175,24 @@ def test_dict_roundtrip(spark, readme_frame):
     assert back == readme_frame
 
 
+def test_dict_roundtrip_keeps_null_doubles_as_local_tables(spark):
+    """A null double attribute comes back null (not NaN) on both
+    tables, and each table plans as a ``LocalRelation``, never a
+    statistics-less ``LogicalRDD`` of pickled rows."""
+    nf = NetworkFrame(
+        spark.createDataFrame([(1, 0.5), (2, None)], "id long, x double"),
+        spark.createDataFrame(
+            [(1, 2, None), (2, 1, 1.5)], "source long, target long, weight double"
+        ),
+    )
+    back = NetworkFrame.from_dict(nf.to_dict(), spark)
+    assert sorted(map(tuple, back.nodes.collect())) == [(1, 0.5), (2, None)]
+    assert sorted(map(tuple, back.edges.collect())) == [(1, 2, None), (2, 1, 1.5)]
+    for df in (back.nodes, back.edges):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
 def test_repr(letter_frame):
     assert "nodes=4" in repr(letter_frame)
     assert "directed=True" in repr(letter_frame)

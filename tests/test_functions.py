@@ -510,6 +510,59 @@ def test_embedding_duplicates_lsh_matches_exact(spark):
     assert set(exact) == set(lsh)
     assert all(abs(exact[k] - lsh[k]) < 1e-9 for k in exact)
     assert len(exact) >= 60  # every planted pair found
+    # wrong caller-supplied dim is rejected, never silently mis-scored
+    with pytest.raises(ValueError, match="does not match"):
+        embedding_duplicates(df, threshold=0.999, mode="lsh", n_planes=8, dim=8)
+
+
+def test_lsh_paths_range_check_planes_and_probe_bits(spark, tmp_path):
+    """Every hyperplane-LSH path bands with 0..63 planes (one bit each
+    of a signed 64-bit signature) and probes 0..n_planes bits; outside
+    those ranges it raises ValueError instead of failing inside Spark
+    (64 planes would need the literal 1 << 63)."""
+    import math
+
+    from networkframe_spark.functions.similarity import (
+        build_lsh_index,
+        lsh_index_search,
+        lsh_top_k,
+        semantic_decontaminate,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [math.sin(i + d) for d in range(4)]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    paths = {
+        "lsh_top_k": lambda p, b=0: lsh_top_k(
+            emb, emb, k=2, n_planes=p, n_tables=2, n_probe_bits=b
+        ).collect(),
+        "semantic_decontaminate": lambda p, b=0: semantic_decontaminate(
+            emb, emb, threshold=0.5, method="lsh", n_planes=p, n_tables=2,
+            n_probe_bits=b,
+        ).collect(),
+        "build_lsh_index": lambda p: build_lsh_index(
+            emb, str(tmp_path / f"lsh{p}"), n_planes=p, n_tables=2
+        ),
+        "embedding_duplicates": lambda p: embedding_duplicates(
+            emb, threshold=0.5, mode="lsh", n_planes=p, n_tables=2
+        ).collect(),
+    }
+    for name, run in paths.items():
+        with pytest.raises(ValueError, match="n_planes must be in"):
+            run(64)
+        with pytest.raises(ValueError, match="must be in"):
+            run(-1)
+        run(0)
+        run(63)
+    for name in ("lsh_top_k", "semantic_decontaminate"):
+        for bits in (-1, 5):
+            with pytest.raises(ValueError, match="n_probe_bits must be in"):
+                paths[name](4, bits)
+        paths[name](4, 4)
+    build_lsh_index(emb, str(tmp_path / "lsh4"), n_planes=4, n_tables=2)
+    with pytest.raises(ValueError, match="n_probe_bits must be in"):
+        lsh_index_search(spark, str(tmp_path / "lsh4"), emb, n_probe_bits=5)
 
 
 def test_embedding_duplicates_exact_guard(spark):
@@ -4233,44 +4286,6 @@ def test_index_maintain_compacts_only_breached(spark, tmp_path):
     assert got == want
     # idempotent: a second maintain right after finds nothing breached
     assert index_maintain(spark, path, max_files_per_partition=2) == {}
-
-
-def test_embedding_duplicates_arrow_verify_equals_expr(spark):
-    """verify='arrow' (mapInPandas einsum batch verify) must equal the
-    expression path pair-for-pair at 6 dp on planted near-dups — the
-    mode changes cost, never answers; 'auto' resolves to arrow above
-    the unroll gate and expr inside it."""
-    from networkframe_spark.functions.dedup import embedding_duplicates
-
-    # planted clusters of 3 near-identical 32-dim vectors (dim > the
-    # unroll gate, so 'auto' takes the arrow path)
-    import math
-
-    rows = []
-    for c in range(40):
-        base = [math.sin(1.0 + 7 * c + i) for i in range(32)]
-        for m in range(3):
-            rows.append(
-                (3 * c + m, [v + 0.001 * m * ((i % 5) - 2) for i, v in enumerate(base)])
-            )
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.99, mode="lsh", n_planes=4, n_tables=4)
-    e = sorted(
-        map(tuple, embedding_duplicates(emb, verify="expr", **kw).collect())
-    )
-    a = sorted(
-        map(tuple, embedding_duplicates(emb, verify="arrow", **kw).collect())
-    )
-    au = sorted(
-        map(tuple, embedding_duplicates(emb, verify="auto", **kw).collect())
-    )
-    assert len(e) > 0
-    assert e == a == au
-    # wrong caller-supplied dim is rejected, never silently mis-scored
-    import pytest
-
-    with pytest.raises(ValueError, match="does not match"):
-        embedding_duplicates(emb, dim=16, **kw)
 
 
 def test_index_recall_check_drift_duty_cycle(spark, tmp_path):

@@ -745,8 +745,10 @@ def test_driver_id_lists_plan_as_local_relations(spark, tmp_path):
 def test_python_rows_reach_spark_only_through_local_table():
     """Repo lint: every driver-built table of Python rows goes through
     ``session.local_table`` (one Arrow ``LocalRelation``).  The only
-    other ``createDataFrame`` calls allowed are pandas frames (already
-    Arrow-built) and the JVM-side call of ``_cut_lineage``."""
+    other ``createDataFrame`` calls allowed are Arrow tables built from
+    a pandas frame (``pa.Table.from_pandas``) and the JVM-side call of
+    ``_cut_lineage``.  A pandas frame handed over as it is would be
+    pickled row by row in a session without Arrow enabled."""
     import ast
     import pathlib
 
@@ -758,9 +760,10 @@ def test_python_rows_reach_spark_only_through_local_table():
             return True
         if isinstance(recv, ast.Attribute) and recv.attr == "_jsparkSession":
             return True
-        if isinstance(arg, ast.Call) and ast.unparse(arg.func) == "pd.DataFrame":
-            return True
-        return isinstance(arg, ast.Name) and arg.id.endswith("pdf")
+        return (
+            isinstance(arg, ast.Call)
+            and ast.unparse(arg.func) == "pa.Table.from_pandas"
+        )
 
     offenders = []
     for py in sorted(pkg.rglob("*.py")):
@@ -785,6 +788,39 @@ def test_python_rows_reach_spark_only_through_local_table():
         "Python rows handed to createDataFrame (use session.local_table): "
         f"{offenders}"
     )
+
+
+def test_lsh_planes_and_signatures_have_one_builder_each():
+    """Repo lint: the hyperplane seed rule and the signature expression
+    each have one caller in the package — ``_hyperplane_signs`` is
+    called only by ``_lsh_planes`` and ``signature_col`` only by
+    ``_lsh_signatures`` — so every LSH path (in-memory, persisted,
+    dedup, decontamination) bands through the one kernel and a query's
+    bucket cannot drift from a stored one."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "networkframe_spark"
+    callers: dict[str, set[str]] = {"_hyperplane_signs": set(), "signature_col": set()}
+
+    def visit(node, where):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, f"{where}.{child.name}")
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in callers:
+                    callers[name].add(where)
+            visit(child, where)
+
+    for py in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(py.read_text()), py.stem)
+    assert callers == {
+        "_hyperplane_signs": {"similarity._lsh_planes"},
+        "signature_col": {"similarity._lsh_signatures"},
+    }, callers
 
 
 def _global_windows(df) -> list[bool]:
