@@ -4288,6 +4288,40 @@ def test_index_maintain_compacts_only_breached(spark, tmp_path):
     assert index_maintain(spark, path, max_files_per_partition=2) == {}
 
 
+def test_embedding_duplicates_arrow_verify_equals_expr(spark):
+    """The Arrow (mapInPandas einsum) bucket verify has been removed;
+    the expression verify is the only one left, and ``verify=`` is no
+    longer accepted.  What the Arrow/expr comparison guarded still
+    holds: above the unroll gate the LSH path's verify equals the exact
+    path pair-for-pair at 6 dp on planted near-dups."""
+    import math
+
+    # planted clusters of 3 near-identical 32-dim vectors (dim > the
+    # unroll gate, where the Arrow verify used to take over)
+    rows = []
+    for c in range(40):
+        base = [math.sin(1.0 + 7 * c + i) for i in range(32)]
+        for m in range(3):
+            rows.append(
+                (3 * c + m, [v + 0.001 * m * ((i % 5) - 2) for i, v in enumerate(base)])
+            )
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(threshold=0.99, mode="lsh", n_planes=4, n_tables=4)
+
+    def pairs(out):
+        return sorted((a, b, round(c, 6)) for a, b, c in out.collect())
+
+    lsh = pairs(embedding_duplicates(emb, **kw))
+    exact = pairs(embedding_duplicates(emb, threshold=0.99, mode="exact"))
+    assert len(lsh) >= 120  # the 3 pairs of every planted cluster
+    assert lsh == exact
+    with pytest.raises(TypeError, match="verify"):
+        embedding_duplicates(emb, verify="arrow", **kw)
+    # wrong caller-supplied dim is rejected, never silently mis-scored
+    with pytest.raises(ValueError, match="does not match"):
+        embedding_duplicates(emb, dim=16, **kw)
+
+
 def test_index_recall_check_drift_duty_cycle(spark, tmp_path):
     """The r15-verdict recall-drift monitor: adds against FROZEN
     centroids silently degrade probe recall; index_recall_check trips
