@@ -30,6 +30,20 @@ index (:func:`build_lsh_index`, :func:`lsh_index_add`,
   ``n_probe_bits``) out behind the generate boundary.  The search of a
   persisted index collects the same signature array for its queries,
   so a query's home bucket is a stored bucket by construction.
+
+One probe kernel serves the four persisted ANN searches —
+:func:`ivf_index_search`, :func:`ivf_sq_search`, :func:`ivfpq_search`
+and :func:`lsh_index_search`:
+
+- :func:`_probe_batch` — the one bounded query collect (Arrow, guarded
+  by ``_MAX_QUERY_BATCH``), carrying the per-query terms Spark computes
+  before it (norms, self-terms, LSH signatures).
+- :func:`_probe_tables` — the one probe-table builder: the guarded
+  probe-pair table, the query table and the partition-pruned store;
+  :func:`_cell_probes` routes the IVF family's queries to cells first.
+- :func:`_probe_top_k` — the one scored tail: probe joins on the
+  partition keys, ``exclude_self``, the score (folded per pair for LSH
+  collisions and IVF-PQ sub-quantizers) and the ranked cut.
 """
 
 from __future__ import annotations
@@ -286,69 +300,134 @@ def _guard_probe_rows(n_rows: int, where: str, detail: str) -> None:
         )
 
 
-def _probe_assign(queries, query_id_col: str, emb_col: str, C, n_probe: int):
-    """Driver-side coarse-cell choice for a query batch: ONE
-    ``Q @ C.T`` float64 GEMM assigns every query's ``n_probe``
-    nearest centroids at once (argmin of ``|q-c|^2`` == row-stable
-    argsort of ``|c|^2 - 2 q.c``; ties break to the lowest list id).
-    Returns ``(qpdf, order)`` where ``qpdf`` has columns
-    ``(query_id, q_emb)`` and ``order[i]`` is query i's probe lists.
+# ---------------------------------------------------------------------------
+# the probe kernel of the persisted ANN searches (see the module docstring)
+# ---------------------------------------------------------------------------
+def _probe_batch(queries, query_id_col: str, emb_col: str, where: str, **cols):
+    """A persisted-index search's query batch, as ONE bounded Arrow
+    collect: ``query_id``, ``q_emb`` (``array<double>``) and each
+    ``cols`` column, computed by Spark before the collect so a
+    per-query term is the same expression as its stored twin.
 
     Raises loudly past :data:`_MAX_QUERY_BATCH` rows — the collect is
     bounded by ``limit(cap + 1)`` so the guard itself never
     materializes an unbounded batch."""
-    import numpy as np
-
-    qpdf = (
+    # SQL strings: one py4j round trip per column, not one per call
+    batch = (
         queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
+            F.expr(f"`{query_id_col}` AS query_id"),
+            F.expr(f"CAST(`{emb_col}` AS ARRAY<DOUBLE>) AS q_emb"),
+            *[c.alias(name) for name, c in cols.items()],
         )
         .limit(_MAX_QUERY_BATCH + 1)
-        .toPandas()
+        .toArrow()
     )
-    if len(qpdf) > _MAX_QUERY_BATCH:
+    if batch.num_rows > _MAX_QUERY_BATCH:
         raise ValueError(
-            f"index probe: query batch exceeds {_MAX_QUERY_BATCH} rows; "
-            "the probe-pair and ADC-table broadcasts are query-sized by "
-            "design — chunk the query set and probe per chunk"
+            f"{where}: query batch exceeds {_MAX_QUERY_BATCH} rows; the "
+            "probe-pair and ADC-table broadcasts are query-sized by "
+            "design — chunk the query set and probe per chunk "
+            "(ann_search_batched)"
         )
-    if not len(qpdf):
-        return qpdf, np.empty((0, 0), dtype=np.int64)
-    Q = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["q_emb"]])
-    c2 = (C * C).sum(axis=1)
-    d2 = c2[None, :] - 2.0 * (Q @ C.T)
+    return batch
+
+
+def _batch_matrix(batch, col: str, width: int):
+    """The fixed-width array column ``col`` of a :func:`_probe_batch`
+    batch as an ``(n_queries, width)`` numpy matrix."""
+    return batch[col].combine_chunks().flatten().to_numpy().reshape(
+        batch.num_rows, width
+    )
+
+
+def _probe_tables(spark, batch, where: str, detail: str, keys: dict, stored: str,
+                  masks=(0,)):
+    """The probe-pair table, the query table and the pruned store of
+    one search, from its :func:`_probe_batch` batch.
+
+    ``keys`` maps each partition column of the store to an
+    ``(n_queries, width)`` array of every query's probes, of the
+    column's type (int32 for ``int``, int64 for ``long``); ``masks``
+    (:func:`_hamming_ball_masks`) fan every probe out by XOR-ing its
+    last key.  The table is size-guarded by :func:`_guard_probe_rows`
+    before it is built.  Returns ``(probes, q, pruned)``:
+    ``(query_id, *keys)``, every batch column, and the parquet store
+    ``stored`` filtered by one SQL predicate on the probed partition
+    values — literals, so the scan prunes at file listing; an empty
+    batch probes nothing."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    n = batch.num_rows
+    *outer, last = keys.values()
+    width = last.shape[1]
+    _guard_probe_rows(n * width * len(masks), where, detail)
+    m = np.asarray(masks, dtype=last.dtype)
+    flat = [np.repeat(a, len(m)) for a in outer] + [(last[..., None] ^ m).ravel()]
+    probes = pa.table(
+        [batch["query_id"].take(np.repeat(np.arange(n), width * len(m))), *flat],
+        names=["query_id", *keys],
+    )
+    probes, q = (
+        local_table(spark, (), from_arrow_schema(t.schema), columns=t.columns)
+        for t in (probes, batch)
+    )
+    # the distinct probed partitions, grouped on all keys but the last
+    groups: dict[tuple, list] = {}
+    for *vals, v in np.unique(np.stack(flat, axis=1), axis=0).tolist():
+        groups.setdefault(tuple(vals), []).append(v)
+    pred = " OR ".join(
+        "(" + "".join(f"`{c}` = {v} AND " for c, v in zip(keys, vals))
+        + f"`{list(keys)[-1]}` IN ({', '.join(map(str, group))}))"
+        for vals, group in groups.items()
+    )
+    return probes, q, spark.read.parquet(stored).filter(pred or "false")
+
+
+def _cell_probes(spark, batch, centroids, n_probe: int, where: str, stored: str):
+    """:func:`_probe_tables` for the IVF family: ONE ``Q @ C.T``
+    float64 GEMM routes every query to its ``n_probe`` nearest
+    centroids at once (argmin of ``|q-c|^2`` == row-stable argsort of
+    ``|c|^2 - 2 q.c``; ties break to the lowest list id)."""
+    import numpy as np
+
+    C = np.asarray(centroids, dtype=np.float64)
+    Q = _batch_matrix(batch, "q_emb", C.shape[1])
+    d2 = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
     order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
-    return qpdf, order
-
-
-def _probe_pairs(spark, qpdf, order, qid_type, where: str):
-    """The ``(query_id, list_id)`` probe-pair frame for a routed query
-    batch (:func:`_probe_assign`'s ``qpdf`` and ``order``), and the set
-    of list ids it probes.  ``qid_type`` follows the caller's query-id
-    column (string and int ids alike).  The driver-built table is
-    size-guarded by :func:`_guard_probe_rows` before it is built."""
-    from pyspark.sql import types as T
-
-    _guard_probe_rows(
-        order.size, where, f"{len(qpdf)} queries × {order.shape[1]} probes"
+    return _probe_tables(
+        spark, batch, where,
+        f"{batch.num_rows} queries × {order.shape[1]} probes",
+        {"list_id": order.astype(np.int32)}, stored,
     )
-    rows = [
-        (qid, int(li))
-        for qid, lists in zip(qpdf["query_id"].tolist(), order)
-        for li in lists
-    ]
-    probes = local_table(
-        spark,
-        rows,
-        T.StructType(
-            [
-                T.StructField("query_id", qid_type),
-                T.StructField("list_id", T.IntegerType()),
-            ]
-        ),
+
+
+def _probe_top_k(stored, joins, k: int, pair, exclude_self: bool = False,
+                 fold=None) -> DataFrame:
+    """The scored tail of every persisted-index search: the pruned
+    ``stored`` rows joined to each broadcast ``(table, keys)`` of
+    ``joins`` in turn — the probe pairs on the partition keys, then the
+    query (or ADC lookup) table —, self-matches dropped under
+    ``exclude_self``, then scored with ``pair`` (``(name, score,
+    order)``, :func:`pair_score`'s triple) and cut to the top ``k`` per
+    query, ties to the lower ``vec_id``.  ``fold`` (an aggregate
+    function) folds the scores of each ``(query_id, vec_id)``: LSH's
+    max over the pair's collisions, IVF-PQ's sum over its
+    sub-quantizers.  Returns ``(query_id, vec_id, <name>, rank)``."""
+    name, score, order = pair
+    scored = stored
+    for table, keys in joins:
+        scored = scored.join(F.broadcast(table), on=keys)
+    if exclude_self:
+        scored = scored.filter("query_id != vec_id")
+    if fold is None:
+        scored = scored.withColumn(name, score)
+    else:
+        scored = scored.groupBy("query_id", "vec_id").agg(fold(score).alias(name))
+    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
+        "query_id", "vec_id", name, "rank"
     )
-    return probes, {li for _, li in rows}
 
 
 def _hyperplane_signs(n_planes: int, dim: int, seed: int = 42) -> list[list[int]]:
@@ -447,16 +526,15 @@ def _lsh_band(
     mask 0.  Signatures are built once per (row, table) and the masks
     XOR the materialized bucket behind the generate boundary
     (:func:`signature_col`'s caller contract)."""
-    tb = F.explode(_lsh_signatures(F.col(emb_col), tables)).alias("tb")
-    banded = (
-        df.select(*carry, tb)
-        .select(
-            "*",
-            F.col("tb.table").alias("table"),
-            F.col("tb.bucket").alias("bucket"),
-        )
-        .drop("tb")
+    # carry projected BELOW the explode: a carried per-row term (a
+    # norm) is evaluated once per row, not once per (row, table)
+    projected = df.select(
+        *carry, _lsh_signatures(F.col(emb_col), tables).alias("__tb")
     )
+    banded = projected.select(
+        *[c for c in projected.columns if c != "__tb"],
+        F.explode("__tb").alias("tb"),
+    ).select("*", "tb.table", "tb.bucket").drop("tb")
     if tuple(masks) == (0,):
         return banded
     probe = F.explode(F.array(*[F.lit(m) for m in masks])).alias("__m")
@@ -659,17 +737,25 @@ def lsh_top_k(
     n_part = shuffle_partitions(corpus.sparkSession)
     cb = _lsh_band(
         corpus.repartition(n_part),
-        [F.col(id_col).alias("vec_id"), F.col(emb_col).alias("c_emb")],
+        [
+            F.col(id_col).alias("vec_id"),
+            F.col(emb_col).alias("c_emb"),
+            norm_expr(F.col(emb_col), dim).alias("c_norm"),
+        ],
         emb_col,
         tables,
-    ).withColumn("c_norm", norm_expr(F.col("c_emb"), dim))
+    )
     qb = _lsh_band(
         queries.repartition(n_part),
-        [F.col(query_id_col).alias("query_id"), F.col(emb_col).alias("q_emb")],
+        [
+            F.col(query_id_col).alias("query_id"),
+            F.col(emb_col).alias("q_emb"),
+            norm_expr(F.col(emb_col), dim).alias("q_norm"),
+        ],
         emb_col,
         tables,
         masks,
-    ).withColumn("q_norm", norm_expr(F.col("q_emb"), dim))
+    )
     cand = cb.join(qb, on=["table", "bucket"])
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("vec_id"))
@@ -1101,59 +1187,30 @@ def ivf_index_search(
     """
     import os as _os
 
-    import numpy as np
-
-    from pyspark.sql import types as T
-
     centroids = store.read_manifest(spark, path, "centroids")
-    C = np.asarray(centroids, dtype=np.float64)
-    # one GEMM assigns all queries at once; batch loudly size-guarded
-    qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
+    # q_norm is the stored c_norm's own expression
+    batch = _probe_batch(
+        queries, query_id_col, emb_col, "ivf_index_search",
+        q_norm=norm_expr(F.col(emb_col)),
+    )
     # two NARROW broadcasts instead of one wide one: the probe pairs
     # (query_id, list_id) and the query vectors (query_id, q_emb,
     # q_norm) broadcast separately, so each embedding ships ONCE
     # instead of n_probe times — at 1M queries × 8 probes × 64-dim
     # doubles that is the difference between a 4 GB and a 0.5 GB
-    # exchange.  Joining both onto the pruned cells reproduces the
-    # exact same scored rows (same cosine expression tree).
-    qid_type = queries.schema[query_id_col].dataType
-    probes, wanted = _probe_pairs(
-        spark, qpdf, order, qid_type, "ivf_index_search"
+    # exchange.
+    probes, q, cells = _cell_probes(
+        spark, batch, centroids, n_probe, "ivf_index_search",
+        _os.path.join(path, "cells"),
     )
-    q_rows = []
-    for qid, emb in zip(qpdf["query_id"].tolist(), qpdf["q_emb"].tolist()):
-        x = np.asarray(emb, dtype=np.float64)
-        q_rows.append((qid, list(map(float, x)), float(np.linalg.norm(x))))
-    qid_field = T.StructField("query_id", qid_type)
-    q = local_table(
-        spark,
-        q_rows,
-        T.StructType(
-            [
-                qid_field,
-                T.StructField("q_emb", T.ArrayType(T.DoubleType())),
-                T.StructField("q_norm", T.DoubleType()),
-            ]
-        ),
-    )
-    cells = spark.read.parquet(_os.path.join(path, "cells")).filter(
-        F.col("list_id").isin(sorted(wanted))
-    )
-    _, score, order = pair_score(
+    pair = pair_score(
         # manifest dim -> codegen unroll (r14)
         dot_expr(F.col("q_emb"), F.col("c_emb"), len(centroids[0])),
         "q_norm",
         "c_norm",
     )
-    scored = (
-        cells.join(F.broadcast(probes), on="list_id")
-        .join(F.broadcast(q), on="query_id")
-        .withColumn("cosine", score)
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
-        "query_id", "vec_id", "cosine", "rank"
+    return _probe_top_k(
+        cells, [(probes, "list_id"), (q, "query_id")], k, pair, exclude_self
     )
 
 
@@ -1320,35 +1377,21 @@ def ivf_sq_search(
     """
     import os as _os
 
-    import numpy as np
-
-    from pyspark.sql import types as T
-
     if metric not in ("cosine", "l2"):
         raise ValueError("ivf_sq_search: metric must be 'cosine' or 'l2'")
     centroids = store.read_manifest(spark, path, "centroids")
-    C = np.asarray(centroids, dtype=np.float64)
-    qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
-    qid_type = queries.schema[query_id_col].dataType
-    probes, wanted = _probe_pairs(
-        spark, qpdf, order, qid_type, "ivf_sq_search"
-    )
-    q_rows = [
-        (qid, list(map(float, emb)))
-        for qid, emb in zip(qpdf["query_id"].tolist(), qpdf["q_emb"].tolist())
-    ]
-    qid_field = T.StructField("query_id", qid_type)
     # q_self computed as a Spark expression (not driver-side numpy) so
     # the float summation order matches the SQL twin's sequential
     # list_dot_product exactly — numpy's pairwise summation can differ
     # in the 6th decimal on long vectors
-    q = local_table(
-        spark,
-        q_rows,
-        T.StructType(
-            [qid_field, T.StructField("q_emb", T.ArrayType(T.DoubleType()))]
-        ),
-    ).withColumn("q_self", self_term(F.col("q_emb"), metric))
+    batch = _probe_batch(
+        queries, query_id_col, emb_col, "ivf_sq_search",
+        q_self=self_term(F.col(emb_col).cast("array<double>"), metric),
+    )
+    probes, q, cells = _cell_probes(
+        spark, batch, centroids, n_probe, "ivf_sq_search",
+        _os.path.join(path, "cells"),
+    )
     deq = F.transform(
         F.col("qembedding"), lambda v: v.cast("double") * F.col("scale")
     )
@@ -1357,24 +1400,14 @@ def ivf_sq_search(
     # its self-dot ONCE, not p times — per-pair work drops to the
     # single query·deq dot, same as the raw-cell index (measured: the
     # pair-side transform was a 1.4-1.7x probe-wall tax at 500k)
-    cells = (
-        spark.read.parquet(_os.path.join(path, "cells"))
-        .filter(F.col("list_id").isin(sorted(wanted)))
-        .withColumn("deq", deq)
-        .withColumn("c_self", self_term(F.col("deq"), metric))
+    cells = cells.withColumn("deq", deq).withColumn(
+        "c_self", self_term(F.col("deq"), metric)
     )
-    score_col, score, order = pair_score(
+    pair = pair_score(
         dot_expr(F.col("q_emb"), F.col("deq")), "q_self", "c_self", metric
     )
-    scored = (
-        cells.join(F.broadcast(probes), on="list_id")
-        .join(F.broadcast(q), on="query_id")
-        .withColumn(score_col, score)
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
-        "query_id", "vec_id", score_col, "rank"
+    return _probe_top_k(
+        cells, [(probes, "list_id"), (q, "query_id")], k, pair, exclude_self
     )
 
 
@@ -1970,6 +2003,34 @@ def opq_rotation(
     return [[float(v) for v in row] for row in R]
 
 
+def _residuals(df: DataFrame, centroids, id_col: str, emb_col: str, out_col: str):
+    """``(id_col, list_id, out_col)``: each row's ``emb_col`` minus the
+    centroid of its ``list_id`` cell, as ``array<double>`` — the
+    residual IVF-PQ encodes (build, add) and scores (search)."""
+    from pyspark.sql import types as T
+
+    cent = local_table(
+        df.sparkSession,
+        (),
+        T.StructType(
+            [
+                T.StructField("list_id", T.IntegerType()),
+                T.StructField("__c", T.ArrayType(T.DoubleType())),
+            ]
+        ),
+        columns=[range(len(centroids)), centroids],
+    )
+    # one SQL expression: one py4j round trip instead of one per call
+    return df.join(F.broadcast(cent), on="list_id").select(
+        id_col,
+        "list_id",
+        F.expr(
+            f"zip_with(CAST(`{emb_col}` AS ARRAY<DOUBLE>), __c, (x, y) -> x - y)"
+            f" AS `{out_col}`"
+        ),
+    )
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -2076,20 +2137,7 @@ def build_ivfpq_index(
         # DEPENDS on its cell, so cells cannot be re-split and batches
         # cannot be re-routed without re-encoding (the no-residual
         # mode keeps that freedom and the pq_search oracle identity).
-        cent = local_table(
-            spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "list_id int, __c array<double>",
-        )
-        enc_src = assigned_full.join(F.broadcast(cent), on="list_id").select(
-            "vec_id",
-            "list_id",
-            F.zip_with(
-                F.col("__emb").cast("array<double>"),
-                F.col("__c"),
-                lambda x, y: x - y,
-            ).alias("__res"),
-        )
+        enc_src = _residuals(assigned_full, centroids, "vec_id", "__emb", "__res")
         # enc_src feeds the codebook training, the encode, AND the
         # list_id join — pin it once (lazy checkpoint materializes at
         # the first training action) so the full-corpus assignment
@@ -2176,10 +2224,6 @@ def ivfpq_search(
     """
     import os as _os
 
-    import numpy as np
-
-    from pyspark.sql import types as T
-
     centroids = store.read_manifest(spark, path, "centroids")
     codebook = store.read_manifest(spark, path, "codebook")
     meta = _read_ivfpq_meta(spark, path)
@@ -2191,16 +2235,9 @@ def ivfpq_search(
         queries = rotate_embeddings(
             queries, meta["rotation"], emb_col=emb_col
         )
-    C = np.asarray(centroids, dtype=np.float64)
-    # one GEMM assigns all queries at once; batch loudly size-guarded
-    qpdf, order = _probe_assign(queries, query_id_col, emb_col, C, n_probe)
-    qid_type = queries.schema[query_id_col].dataType
+    batch = _probe_batch(queries, query_id_col, emb_col, "ivfpq_search")
     if residual:
-        # IVFADC: each probed cell sees the query's residual against
-        # THAT cell's centroid, so the ADC table is keyed by
-        # (query_id, list_id) — n_queries × n_probe × m × k rows,
-        # still probe-pair-sized and broadcastable
-        lut_rows = len(qpdf) * n_probe * len(codebook) * len(codebook[0])
+        lut_rows = batch.num_rows * n_probe * len(codebook) * len(codebook[0])
         if lut_rows > _MAX_RESIDUAL_LUT_ROWS:
             raise ValueError(
                 f"ivfpq_search: residual ADC table would be {lut_rows} "
@@ -2210,61 +2247,33 @@ def ivfpq_search(
                 "residual probing pays the n_probe factor the "
                 "no-residual mode doesn't)"
             )
-        wanted: set[int] = set()
-        pr_rows = []
-        qids = qpdf["query_id"].tolist()
-        qembs = qpdf["q_emb"].tolist()
-        for i in range(len(qpdf)):
-            x = np.asarray(qembs[i], dtype=np.float64)
-            for li in order[i]:
-                wanted.add(int(li))
-                pr_rows.append(
-                    (qids[i], int(li), [float(v) for v in x - C[li]])
-                )
-        pr_schema = T.StructType(
-            [
-                T.StructField("query_id", qid_type),
-                T.StructField("list_id", T.IntegerType()),
-                T.StructField("q_res", T.ArrayType(T.DoubleType())),
-            ]
-        )
-        pr = local_table(spark, pr_rows, pr_schema)
-        lut = _pq_lut(pr, codebook, "query_id", "q_res", extra_cols=("list_id",))
-    else:
-        probes, wanted = _probe_pairs(
-            spark, qpdf, order, qid_type, "ivfpq_search"
-        )
-        lut = _pq_lut(
-            queries.select(
-                F.col(query_id_col).alias("query_id"), F.col(emb_col)
-            ),
-            codebook,
-            "query_id",
-            emb_col,
-        )
-    codes = spark.read.parquet(_os.path.join(path, "codes")).filter(
-        F.col("list_id").isin(sorted(wanted))
+    probes, q, codes = _cell_probes(
+        spark, batch, centroids, n_probe, "ivfpq_search",
+        _os.path.join(path, "codes"),
     )
     exploded = codes.select(
         "vec_id", "list_id", F.posexplode("codes").alias("j", "code")
     )
     if residual:
-        scored = (
-            exploded.join(F.broadcast(lut), on=["list_id", "j", "code"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("__d").cast("double").alias("approx_d2"))
+        # IVFADC: each probed cell sees the query's residual against
+        # THAT cell's centroid, so the ADC table is keyed by
+        # (query_id, list_id) — n_queries × n_probe × m × k rows,
+        # still probe-pair-sized and broadcastable
+        res = _residuals(
+            probes.join(F.broadcast(q), on="query_id"),
+            centroids, "query_id", "q_emb", "q_res",
         )
+        lut = _pq_lut(res, codebook, "query_id", "q_res", extra_cols=("list_id",))
+        joins = [(lut, ["list_id", "j", "code"])]
     else:
-        scored = (
-            exploded.join(F.broadcast(probes), on="list_id")
-            .join(F.broadcast(lut), on=["query_id", "j", "code"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("__d").cast("double").alias("approx_d2"))
-        )
-    order = [F.col("approx_d2").asc(), F.col("vec_id").asc()]
-    return _top_k(scored, k, ["query_id"], order).select(
-        "query_id", "vec_id", "rank", "approx_d2"
-    )
+        # the lookup table comes from the collected batch, so the
+        # query input (and any OPQ rotation) runs once
+        lut = _pq_lut(q, codebook, "query_id", "q_emb")
+        joins = [(probes, "list_id"), (lut, ["query_id", "j", "code"])]
+    return _probe_top_k(
+        exploded, joins, k, ("approx_d2", F.col("__d"), F.asc("approx_d2")),
+        fold=lambda d: F.sum(d).cast("double"),
+    ).select("query_id", "vec_id", "rank", "approx_d2")
 
 
 def ivfpq_index_add(
@@ -2313,20 +2322,7 @@ def ivfpq_index_add(
         emb_col="__emb",
     )
     if meta.get("residual", False):
-        cent = local_table(
-            spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "list_id int, __c array<double>",
-        )
-        enc_src = assigned.join(F.broadcast(cent), on="list_id").select(
-            "vec_id",
-            "list_id",
-            F.zip_with(
-                F.col("__emb").cast("array<double>"),
-                F.col("__c"),
-                lambda x, y: x - y,
-            ).alias("__enc"),
-        )
+        enc_src = _residuals(assigned, centroids, "vec_id", "__emb", "__enc")
     else:
         enc_src = assigned.select(
             "vec_id", "list_id", F.col("__emb").alias("__enc")
@@ -3197,7 +3193,7 @@ def lsh_index_search(
 
     Scale design: query signatures are the banding kernel's signature
     array (:func:`_lsh_signatures`), collected with the driver-sized
-    batch (same loud ``_MAX_QUERY_BATCH`` guard as the IVF probes);
+    batch by the probe kernel (the IVF probes' collect and guard);
     the bucket predicate lists LITERAL partition values,
     so pruning happens at file listing (``PartitionFilters`` —
     plan-guarded in tests); the probe pairs and the query embeddings
@@ -3208,117 +3204,46 @@ def lsh_index_search(
     """
     import os as _os
 
+    import numpy as np
+
     meta = store.read_manifest(spark, path, "meta")
     tables = _lsh_tables(meta)
     n_tables = int(meta["n_tables"])
     masks = _hamming_ball_masks(int(meta["n_planes"]), n_probe_bits)
-    # ONE bounded collect fetches ids, embeddings, norms AND the
-    # home signature of every table — the banding kernel's own
-    # signature array, so the query-side bucket is bit-identical to
-    # the stored banding by construction (a numpy re-implementation of
-    # the sign convention can disagree on dot==0 ULP boundaries and
-    # route a query away from its own stored bucket; the JVM
-    # expression cannot).  limit(cap+1) bounds the plan instead of a
-    # separate count() job — the _probe_assign pattern.
+    # the query batch carries the home signature of every table — the
+    # banding kernel's own signature array, so the query-side bucket is
+    # bit-identical to the stored banding by construction (a numpy
+    # re-implementation of the sign convention can disagree on dot==0
+    # ULP boundaries and route a query away from its own stored
+    # bucket; the JVM expression cannot)
     dim = len(tables[0][0]) if tables and tables[0] else None
-    qpdf = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            norm_expr(F.col(emb_col), dim).alias("q_norm"),
-            _lsh_signatures(F.col(emb_col), tables)["bucket"].alias("sigs"),
-        )
-        .limit(_MAX_QUERY_BATCH + 1)
-        .toPandas()
+    batch = _probe_batch(
+        queries, query_id_col, emb_col, "lsh_index_search",
+        q_norm=norm_expr(F.col(emb_col), dim),
+        sigs=_lsh_signatures(F.col(emb_col), tables)["bucket"],
     )
-    if len(qpdf) > _MAX_QUERY_BATCH:
-        raise ValueError(
-            f"lsh_index_search: query batch exceeds {_MAX_QUERY_BATCH} "
-            "rows; chunk the batch (ann_search_batched) — probe "
-            "assignment collects it"
-        )
-    qids = qpdf["query_id"].tolist()
+    n = batch.num_rows
+    sigs = _batch_matrix(batch, "sigs", n_tables)
     # fanout-aware guard: the probe table is queries × tables × ball,
     # not just queries — cap the PRODUCT (ADVICE r12)
-    _guard_probe_rows(
-        len(qids) * n_tables * len(masks),
-        "lsh_index_search",
-        f"{len(qids)} queries × {n_tables} tables × {len(masks)} "
-        "Hamming-ball masks",
+    probes, q, bands = _probe_tables(
+        spark, batch.drop_columns("sigs"), "lsh_index_search",
+        f"{n} queries × {n_tables} tables × {len(masks)} Hamming-ball masks",
+        {
+            "table": np.broadcast_to(np.arange(n_tables, dtype=np.int32), sigs.shape),
+            "bucket": sigs,
+        },
+        _os.path.join(path, "bands"), masks,
     )
-    probe_rows = []
-    wanted: dict[int, set[int]] = {t: set() for t in range(n_tables)}
-    sigs = qpdf["sigs"].tolist()
-    for t in range(n_tables):
-        for i in range(len(qids)):
-            home = int(sigs[i][t])
-            for m in masks:
-                b = home ^ m
-                wanted[t].add(b)
-                probe_rows.append((qids[i], t, b))
-    from pyspark.sql import types as T
-
-    qid_field = T.StructField(
-        "query_id", queries.schema[query_id_col].dataType
-    )
-    probes = local_table(
-        spark,
-        probe_rows,
-        T.StructType(
-            [
-                qid_field,
-                T.StructField("table", T.IntegerType()),
-                T.StructField("bucket", T.LongType()),
-            ]
-        ),
-    )
-    q_rows = [
-        (
-            qids[i],
-            [float(v) for v in qpdf["q_emb"].iloc[i]],
-            float(qpdf["q_norm"].iloc[i]),
-        )
-        for i in range(len(qids))
-    ]
-    q = local_table(
-        spark,
-        q_rows,
-        T.StructType(
-            [
-                qid_field,
-                T.StructField("q_emb", T.ArrayType(T.DoubleType())),
-                T.StructField("q_norm", T.DoubleType()),
-            ]
-        ),
-    )
-    # one SQL predicate over the partition columns; an empty batch
-    # probes nothing (false prunes every partition) and falls through
-    # to an empty result with the right schema
-    pred = " OR ".join(
-        f"(`table` = {t} AND bucket IN ({', '.join(map(str, sorted(b)))}))"
-        for t, b in wanted.items()
-        if b
-    )
-    bands = spark.read.parquet(_os.path.join(path, "bands")).filter(pred or "false")
-    scored = (
-        bands.join(F.broadcast(probes), on=["table", "bucket"])
-        .join(F.broadcast(q), on="query_id")
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    _, score, order = pair_score(
+    pair = pair_score(
         # stored-plane dim -> codegen unroll (r14)
         dot_expr(F.col("q_emb"), F.col("c_emb"), dim),
         "q_norm",
         "c_norm",
     )
-    scored = (
-        scored.select("query_id", "vec_id", score.alias("cosine"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    return _top_k(scored, k, ["query_id"], [order, F.asc("vec_id")]).select(
-        "query_id", "vec_id", "cosine", "rank"
+    return _probe_top_k(
+        bands, [(probes, ["table", "bucket"]), (q, "query_id")], k, pair,
+        exclude_self, fold=F.max,
     )
 
 

@@ -119,7 +119,8 @@ def _top_k(
         return top.withColumn(rank_col, F.row_number().over(w))
     w = Window.partitionBy(*by).orderBy(*order)
     ranked = df.withColumn(rank_col, F.row_number().over(w))
-    return ranked if k is None else ranked.filter(F.col(rank_col) <= k)
+    # a SQL string: one py4j round trip, the same plan as a Column
+    return ranked if k is None else ranked.filter(f"`{rank_col}` <= {int(k)}")
 
 
 def robust_outliers(

@@ -6,7 +6,9 @@ This module owns the storage decisions every family used to repeat:
 
 - the manifest format: a one-row JSON directory ``<path>/<name>``
   whose string column holds ``json.dumps(obj)``, plus optional string
-  tag columns (the IVF-SQ centroid manifest's ``quantize="sq8"``);
+  tag columns (the IVF-SQ centroid manifest's ``quantize="sq8"``),
+  written uncompressed and read back without a Spark job (one file
+  read through the store's ``FileSystem``);
 - how a path reaches its Hadoop ``FileSystem``, so ``s3://``,
   ``hdfs://`` and ``file://`` resolve the way the executor-side reader
   will (a driver-local ``os.path`` check is always false for a remote
@@ -75,22 +77,44 @@ def write_manifest(spark, path: str, name: str, obj, mode: str, **tags) -> None:
         local_table(spark, [(json.dumps(obj), *tags.values())], schema)
         .coalesce(1)
         .write.mode(mode)
+        .option("compression", "none")
         .json(os.path.join(path, name))
     )
 
 
 def read_manifest(spark, path: str, name: str, tags: bool = False):
-    """Read the manifest :func:`write_manifest` wrote.  Returns the
-    object, or ``(obj, {tag: value})`` when ``tags`` is set."""
-    col = _MANIFEST_COLUMN.get(name, name)
-    row = spark.read.json(os.path.join(path, name)).collect()[0].asDict()
-    obj = json.loads(row.pop(col))
+    """Read the manifest :func:`write_manifest` wrote: the first line
+    of its first ``part-*`` file, read through the store's
+    ``FileSystem`` — no Spark job.  Returns the object, or
+    ``(obj, {tag: value})`` when ``tags`` is set."""
+    fs, glob = _fs(spark, os.path.join(path, name, "part-*"))
+    found = fs.globStatus(glob)
+    if not found:
+        raise FileNotFoundError(f"no manifest under {os.path.join(path, name)}")
+    stream = fs.open(found[0].getPath())
+    try:
+        text = bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+    row = json.loads(text.splitlines()[0])
+    obj = json.loads(row.pop(_MANIFEST_COLUMN.get(name, name)))
     return (obj, row) if tags else obj
+
+
+def _hpath(spark, path: str):
+    """A Hadoop ``Path``.  The ``JavaClass`` handle costs no py4j round
+    trip; the chain ``spark._jvm.org.apache.hadoop.fs.Path`` costs one
+    per name."""
+    from py4j.java_gateway import JavaClass
+
+    return JavaClass("org.apache.hadoop.fs.Path", spark._sc._gateway._gateway_client)(
+        path
+    )
 
 
 def _fs(spark, path: str):
     """``(FileSystem, Path)`` for ``path``, resolved through Hadoop."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = _hpath(spark, path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
@@ -127,13 +151,12 @@ def swap_dir(spark, data: str, tmp: str) -> None:
     store's ``FileSystem`` (atomic on HDFS and local filesystems); a
     failed second rename rolls the original back."""
     fs, d = _fs(spark, data)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    old = HPath(data + ".__compact_old__")
+    old = _hpath(spark, data + ".__compact_old__")
     if fs.exists(old):
         fs.delete(old, True)
     if not fs.rename(d, old):
         raise IOError(f"index_compact: could not move {data} aside")
-    if not fs.rename(HPath(tmp), d):
+    if not fs.rename(_hpath(spark, tmp), d):
         fs.rename(old, d)  # roll back, store intact
         raise IOError(f"index_compact: swap failed for {data}")
     fs.delete(old, True)

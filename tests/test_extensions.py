@@ -1486,6 +1486,7 @@ def test_hybrid_search_batch_vector_leg_dispatch(spark, tmp_path):
     )
     before = last_job()
     assert index_family(spark, pq) == "ivfpq"
+    assert index_family(spark, sq) == "ivf_sq"  # reads its manifest
     assert last_job() == before
 
     with _pytest.raises(ValueError, match="exclude_self"):

@@ -870,10 +870,17 @@ def test_probe_query_batch_guard(spark, tmp_path, monkeypatch):
         sim.ivfpq_search(spark, path, qs, k=3, n_probe=2).collect()
     ipath = str(tmp_path / "ivf_guard")
     sim.build_ivf_index(emb, ipath, n_lists=4, n_iter=1)
-    with pytest.raises(ValueError, match="query batch exceeds"):
-        sim.ivf_index_search(
-            spark, ipath, qs, k=3, n_probe=2, query_id_col="query_id"
-        ).collect()
+    spath = str(tmp_path / "sq_guard")
+    sim.build_ivf_sq_index(emb, spath, n_lists=4, n_iter=1)
+    lpath = str(tmp_path / "lsh_guard")
+    sim.build_lsh_index(emb, lpath, n_planes=4, n_tables=2)
+    for search, p in (
+        (sim.ivf_index_search, ipath),
+        (sim.ivf_sq_search, spath),
+        (sim.lsh_index_search, lpath),
+    ):
+        with pytest.raises(ValueError, match="query batch exceeds"):
+            search(spark, p, qs, k=3, query_id_col="query_id").collect()
     # residual ADC table guard: n_q x n_probe x m x k must broadcast —
     # fail loudly up front, not mid-BroadcastExchange (maxResultSize)
     monkeypatch.setattr(sim, "_MAX_QUERY_BATCH", 1_000_000)
@@ -3768,20 +3775,91 @@ def test_ann_search_batched_composes_with_ivf_sq(spark, tmp_path):
 
 def test_ivf_sq_search_empty_query_batch(spark, tmp_path):
     """An empty query batch returns an empty result with the search
-    schema (probing nothing) — matching the lsh/ivf/ivfpq probe paths,
-    not a numpy shape crash."""
+    schema (probing nothing) — for IVF-SQ and, through the same probe
+    kernel, IVF and IVF-PQ in both code modes — not a numpy shape
+    crash."""
     from networkframe_spark.functions.similarity import (
+        build_ivf_index,
         build_ivf_sq_index,
+        build_ivfpq_index,
+        ivf_index_search,
         ivf_sq_search,
+        ivfpq_search,
     )
     from networkframe_spark.sources import read_embeddings
 
     emb = read_embeddings(spark, "/root/testdata/sf0.001").limit(50)
+    empty = emb.filter("vec_id < 0")
     path = str(tmp_path / "sqe")
     build_ivf_sq_index(emb, path, n_lists=4, n_iter=1)
-    out = ivf_sq_search(spark, path, emb.filter("vec_id < 0"), k=3, n_probe=2)
+    out = ivf_sq_search(spark, path, empty, k=3, n_probe=2)
     assert out.count() == 0
     assert out.columns == ["query_id", "vec_id", "d2", "rank"]
+    ipath = str(tmp_path / "ivfe")
+    build_ivf_index(emb, ipath, n_lists=4, n_iter=1)
+    out = ivf_index_search(spark, ipath, empty, k=3, n_probe=2)
+    assert out.count() == 0
+    assert out.columns == ["query_id", "vec_id", "cosine", "rank"]
+    for residual in (False, True):
+        ppath = str(tmp_path / f"pqe{residual}")
+        build_ivfpq_index(
+            emb, ppath, n_lists=4, m=4, k_codes=8, n_iter=1,
+            codebook_init="first_ids", residual=residual,
+        )
+        out = ivfpq_search(
+            spark, ppath, empty, k=3, n_probe=2, query_id_col="vec_id"
+        )
+        assert out.count() == 0
+        assert out.columns == ["query_id", "vec_id", "rank", "approx_d2"]
+
+
+def test_probe_searches_job_counts(spark, tmp_path):
+    """Spark jobs per call, result collected, of the four persisted
+    searches (40 queries).  Manifests are read through the store's
+    FileSystem with no job (each ``spark.read.json`` read ran 2), and
+    the non-residual IVF-PQ lookup table comes from the collected
+    batch instead of a second run of the query input: the counts
+    were IVF 8, IVF-SQ 8, IVF-PQ 14 raw and 13 residual, LSH 9."""
+    from networkframe_spark import store
+    from networkframe_spark.functions import similarity as sim
+    from networkframe_spark.sources import read_embeddings
+
+    emb = read_embeddings(spark, "/root/testdata/sf0.001").limit(200).cache()
+    qs = emb.filter("vec_id % 5 = 0").limit(40).cache()
+    qs.count()
+    p = {n: str(tmp_path / n) for n in ("ivf", "sq", "raw", "res", "lsh")}
+    sim.build_ivf_index(emb, p["ivf"], n_lists=8, n_iter=1)
+    sim.build_ivf_sq_index(emb, p["sq"], n_lists=8, n_iter=1)
+    for n in ("raw", "res"):
+        sim.build_ivfpq_index(
+            emb, p[n], n_lists=8, m=4, k_codes=8, n_iter=1,
+            codebook_init="first_ids", residual=n == "res",
+        )
+    sim.build_lsh_index(emb, p["lsh"], n_planes=4, n_tables=3)
+    sc = spark.sparkContext
+    calls = {
+        "manifest": lambda: store.read_manifest(spark, p["res"], "codebook"),
+        "ivf": lambda: sim.ivf_index_search(spark, p["ivf"], qs, n_probe=3).collect(),
+        "sq": lambda: sim.ivf_sq_search(spark, p["sq"], qs, n_probe=3).collect(),
+        "raw": lambda: sim.ivfpq_search(
+            spark, p["raw"], qs, n_probe=3, query_id_col="vec_id").collect(),
+        "res": lambda: sim.ivfpq_search(
+            spark, p["res"], qs, n_probe=3, query_id_col="vec_id").collect(),
+        "lsh": lambda: sim.lsh_index_search(
+            spark, p["lsh"], qs, n_probe_bits=1).collect(),
+    }
+    jobs = {}
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"probe-{name}", name)
+            call()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"probe-{name}"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    pins = {"manifest": 0, "ivf": 6, "sq": 6, "raw": 8, "res": 9, "lsh": 7}
+    assert all(jobs[k] <= pins[k] for k in pins), jobs
 
 
 def test_minhash_index_lifecycle(spark, tmp_path):

@@ -823,6 +823,85 @@ def test_lsh_planes_and_signatures_have_one_builder_each():
     }, callers
 
 
+def test_probe_kernel_has_one_collect_one_builder_one_tail():
+    """Repo lint: the persisted ANN searches share one probe kernel.
+    One function reads ``_MAX_QUERY_BATCH`` (the bounded query
+    collect), one calls ``_guard_probe_rows`` (the probe-table
+    builder), and among the four searches and their kernel only the
+    scored tail calls ``_top_k``: every search collects, builds and
+    scores through the same code."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "networkframe_spark"
+    searches = {"ivf_index_search", "ivf_sq_search", "ivfpq_search", "lsh_index_search"}
+    users: dict[str, set[str]] = {
+        "_MAX_QUERY_BATCH": set(), "_guard_probe_rows": set(), "_top_k": set()
+    }
+    calls: dict[str, set[str]] = {}
+
+    def visit(node, where):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name if where is None else f"{where}.{child.name}")
+                continue
+            if where is not None and isinstance(child, ast.Name):
+                if child.id in users:
+                    users[child.id].add(where)
+                calls.setdefault(where, set()).add(child.id)
+            visit(child, where)
+
+    for py in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(py.read_text()), None)
+    kernel = {f for f in calls if f.startswith("_probe_") or f == "_cell_probes"}
+    assert users["_MAX_QUERY_BATCH"] == {"_probe_batch"}, users
+    assert users["_guard_probe_rows"] == {"_probe_tables"}, users
+    assert users["_top_k"] & (searches | kernel) == {"_probe_top_k"}, users
+    for name in searches:
+        assert {"_probe_batch", "_probe_top_k"} <= calls[name], (name, calls[name])
+
+
+def test_lsh_norms_sit_below_the_signature_generate(spark):
+    """A norm carried through an LSH banding is computed once per row:
+    no ``SQRT`` sits above a ``Generate`` in the optimized plans of the
+    persisted banding, ``lsh_top_k`` and ``embedding_duplicates`` (at
+    dim 64 the norm is an interpreted fold, so one per (row, table)
+    would multiply its cost by the table count)."""
+    from networkframe_spark.functions.dedup import embedding_duplicates
+    from networkframe_spark.functions.similarity import (
+        _band_rows,
+        _lsh_planes,
+        lsh_top_k,
+    )
+    from networkframe_spark.sources import read_embeddings
+
+    emb = read_embeddings(spark, SF_DIR).limit(40)
+    plans = {
+        "_band_rows": _band_rows(emb, _lsh_planes(4, 3, 64), "vec_id", "embedding"),
+        "lsh_top_k": lsh_top_k(emb, emb, k=3, n_planes=4, n_tables=3, n_probe_bits=1),
+        "embedding_duplicates": embedding_duplicates(
+            emb, threshold=0.9, mode="lsh", n_planes=4, n_tables=3
+        ),
+    }
+
+    def sqrt_above_generate(node) -> list[str]:
+        kids = node.children()
+        kids = [kids.apply(i) for i in range(kids.size())]
+        below, found = False, []
+        for kid in kids:
+            gen, bad = sqrt_above_generate(kid)
+            below, found = below or gen, found + bad
+        own = node.expressions().toString()
+        if below and "SQRT(" in own.upper():
+            found.append(node.nodeName())
+        return below or node.nodeName() == "Generate", found
+
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert "Generate" in plan.toString(), name
+        assert sqrt_above_generate(plan)[1] == [], (name, plan.toString())
+
+
 def _global_windows(df) -> list[bool]:
     """Execute ``df`` and return, per unpartitioned ``Window`` node of
     its final plan, whether it is bounded: every path from it down to
